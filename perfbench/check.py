@@ -14,6 +14,7 @@ import shutil
 from collections import Counter
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
@@ -72,10 +73,12 @@ def dlq_reasons(out_dir: str) -> Counter:
 
 
 def check_output(out_dir: str, ref: dict, sink_format: str,
-                 n_slices: int, run_id: str = "run0",
-                 unique_pairs: bool = False) -> list[str]:
+                 n_slices: int, run_id: str = "run0") -> list[str]:
+    """Mismatches between one output and the reference. Rows written
+    twice (a committed slice redone on resume) add records to a sink
+    but no distinct (doc_id, tag) pairs, so both counts are checked."""
     errors: list[str] = []
-    cols = ["n_tok", "source"] + (["doc_id", "tag"] if unique_pairs else [])
+    cols = ["n_tok", "source", "doc_id", "tag"]
     for sink, want in ref["sinks"].items():
         path = os.path.join(out_dir, "sinks", sink)
         if not os.path.isdir(path):
@@ -84,18 +87,14 @@ def check_output(out_dir: str, ref: dict, sink_format: str,
             continue
         t = _read_sink(path, sink_format, cols)
         got = {"records": t.num_rows,
-               "sum_n_tok": sum(v for v in t.column("n_tok").to_pylist()
-                                if v is not None),
-               "distinct_sources": len(set(t.column("source").to_pylist()))}
+               "sum_n_tok": pc.sum(t.column("n_tok")).as_py() or 0,
+               "distinct_sources": pc.count_distinct(
+                   t.column("source"), mode="all").as_py(),
+               "distinct_pairs": t.group_by(["doc_id", "tag"])
+                                  .aggregate([]).num_rows}
         for k, v in want.items():
             if got[k] != v:
                 errors.append(f"{sink}.{k}: got {got[k]}, want {v}")
-        if unique_pairs:
-            pairs = Counter(zip(t.column("doc_id").to_pylist(),
-                                t.column("tag").to_pylist()))
-            dup = sum(1 for n in pairs.values() if n > 1)
-            if dup:
-                errors.append(f"{sink}: {dup} (doc_id, tag) pairs repeated")
     reasons = dlq_reasons(out_dir)
     for k, v in ref["dlq"].items():
         if reasons.get(k, 0) != v:

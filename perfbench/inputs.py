@@ -66,7 +66,8 @@ def tokens_table(root: str, seed: int, rows: int, files: int) -> str:
                                                      n_files=files))
 
 
-def _decode_lines(tokens: pa.ChunkedArray, vocab: pa.Array) -> pa.Array:
+def decode_lines(tokens: pa.ChunkedArray, vocab: pa.Array) -> pa.Array:
+    """Each row's token ids mapped through ``vocab`` and concatenated."""
     arr = tokens.combine_chunks()
     pieces = vocab.take(arr.flatten())
     return pc.binary_join(pa.ListArray.from_arrays(arr.offsets, pieces), "")
@@ -81,7 +82,7 @@ def text_tree(root: str, seed: int, rows: int, files: int) -> str:
     def make(p: str) -> None:
         vocab = pa.array(fx.vocab(), type=pa.string())
         tbl = pq.read_table(tokens, columns=["tokens", "source"])
-        lines = _decode_lines(tbl.column("tokens"), vocab).to_pylist()
+        lines = decode_lines(tbl.column("tokens"), vocab).to_pylist()
         sources = tbl.column("source").to_pylist()
         buckets: dict[tuple[int, str], list[str]] = {}
         for j, (line, src) in enumerate(zip(lines, sources)):

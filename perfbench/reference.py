@@ -6,10 +6,12 @@ tagged, rewritten and routed by the pipeline spec the benchmark runs
 err.$TAG[1]`` keep=True rule). It shares no code with the engine's
 parsers or router, so agreement between the two means something.
 
-The result holds, per sink, ``records``, ``sum_n_tok`` and
-``distinct_sources``; the DLQ ``parse_fail`` / ``no_route`` counts; and
-``emitted``, the number of tagged records (input rows plus rewrite
-copies). It is cached as JSON per input.
+The result holds, per sink, ``records``, ``sum_n_tok``,
+``distinct_sources`` and ``distinct_pairs`` (distinct (input record,
+tag) pairs: the tokens ``doc_id``, or the text file and line); the DLQ
+``parse_fail`` / ``no_route`` counts; and ``emitted``, the number of
+tagged records (input rows plus rewrite copies). It is cached as JSON
+per input.
 """
 
 from __future__ import annotations
@@ -18,7 +20,10 @@ import json
 import os
 import re
 
+import pyarrow as pa
 import pyarrow.parquet as pq
+
+from inputs import decode_lines
 
 APACHE = re.compile(
     r'^\d+\.\d+\.\d+\.\d+ - \S+ \[[^\]]+\] '
@@ -65,7 +70,8 @@ class Reference:
                       if mt == "glob"]
         if len(self.rules) != len(routes):
             raise ValueError("the reference implements glob routes only")
-        self.agg = {s: [0, 0, set()] for s in self.sinks}
+        # records, sum_n_tok, sources, hashes of (record key, tag)
+        self.agg = {s: [0, 0, set(), set()] for s in self.sinks}
         self.parse_fail = 0
         self.no_route = 0
         self.emitted = 0
@@ -79,7 +85,8 @@ class Reference:
             self._route_cache[tag] = hit
         return hit
 
-    def add(self, line: str, source: str, n_tok: int) -> None:
+    def add(self, line: str, source: str, n_tok: int, key) -> None:
+        """One input row; ``key`` identifies the record it came from."""
         kind, level = parse(line)
         tags = [(f"app.{source}.{kind or 'raw'}", kind is not None)]
         if level == "error":
@@ -97,11 +104,13 @@ class Reference:
                 a[0] += 1
                 a[1] += n_tok
                 a[2].add(source)
+                a[3].add(hash((key, tag)))
 
     def result(self) -> dict:
         return {
             "sinks": {s: {"records": a[0], "sum_n_tok": a[1],
-                          "distinct_sources": len(a[2])}
+                          "distinct_sources": len(a[2]),
+                          "distinct_pairs": len(a[3])}
                       for s, a in self.agg.items()},
             "dlq": {"parse_fail": self.parse_fail, "no_route": self.no_route},
             "emitted": self.emitted,
@@ -115,11 +124,14 @@ def from_tokens(path: str, vocab: list[str], routes) -> dict:
         if not name.endswith(".parquet"):
             continue
         tbl = pq.read_table(os.path.join(path, name),
-                            columns=["tokens", "n_tok", "source"])
-        for toks, n_tok, src in zip(tbl.column("tokens").to_pylist(),
-                                    tbl.column("n_tok").to_pylist(),
-                                    tbl.column("source").to_pylist()):
-            ref.add("".join([vocab[t] for t in toks]), src, n_tok)
+                            columns=["doc_id", "tokens", "n_tok", "source"])
+        lines = decode_lines(tbl.column("tokens"),
+                             pa.array(vocab, type=pa.string()))
+        for line, n_tok, src, doc in zip(lines.to_pylist(),
+                                         tbl.column("n_tok").to_pylist(),
+                                         tbl.column("source").to_pylist(),
+                                         tbl.column("doc_id").to_pylist()):
+            ref.add(line, src, n_tok, doc)
     return ref.result()
 
 
@@ -132,10 +144,11 @@ def from_text(path: str, routes) -> dict:
             if not name.endswith(".log"):
                 continue
             src = name[:-len(".log")]
+            file = os.path.relpath(os.path.join(d, name), path)
             with open(os.path.join(d, name), encoding="utf-8") as f:
                 for raw in f:
                     line = raw.rstrip("\n")
-                    ref.add(line, src, len(line.split(" ")))
+                    ref.add(line, src, len(line.split(" ")), (file, line))
     return ref.result()
 
 

@@ -16,23 +16,26 @@ metrics of a traced replay with ``--trace 1``.
 Workloads:
 
 - ``tokens_bulk``: tokens parquet, many files, two large slices, parquet
-  sinks partitioned by ``source``.
-- ``slices_resume``: small files, one slice each: per-slice fixed cost
-  dominates.
-- ``text_tail_jsonl``: the same rows as ``tokens_bulk`` decoded into
-  ``<source>.log`` files over several directories; text input,
-  json_lines sinks. It reads text instead of parquet, parses through
-  the ``with_parsed`` pandas UDF instead of the fused ``mapInArrow``
-  and writes serialized text, so a detok change should leave it alone
-  and a serializer change should move only it.
+  sinks partitioned by ``source``. A clean run: no slice may be
+  skipped. Most of its time is the fused detok+parse, the route/enrich
+  plan and the sink fan-out.
+- ``slices_resume``: a small ``<source>.log`` tree over several
+  directories, four slices, text input and json_lines sinks. The job
+  crashes after half its slices (``fail_after_slice``) and is resumed;
+  the resume must skip exactly the committed slices. Per-slice fixed
+  cost dominates. It reads text instead of parquet, parses through the
+  ``with_parsed`` pandas UDF instead of the fused ``mapInArrow`` and
+  serializes its sink rows, so a detok change should leave it alone and
+  a serializer change should move only it.
+- ``text_tail_jsonl``: the ``tokens_bulk`` rows as a ``.log`` tree,
+  text input, json_lines sinks, a clean run. BENCHMARK.json does not
+  list it: with every run paying about 30 s of cold set-up, a third
+  workload does not fit the benchmark's run budget. Run it by hand
+  with the same command.
 
-Each timed job crashes after half its slices (``fail_after_slice``)
-and is then resumed to completion, so every workload reports
-``resume_s``; the crash costs no extra work, the job is split in two
-calls. BENCHMARK.json lists the first two workloads, with why each
-exists. Every run pays about 20 s of cold JVM set-up, so the third
-does not fit the benchmark's run budget; run it by hand with the same
-command.
+On a clean workload, ``resume_s`` is the time to redo its last slice
+after a crash before that slice's commit; the wall time behind
+``rows_per_s`` is the clean call alone.
 
 Everything the benchmark writes (inputs, reference cache, job outputs,
 Spark local and temp dirs, traces) stays under ``.perfbench_work/`` in
@@ -63,26 +66,31 @@ class Workload:
     rows: int
     files: int                 # tokens parquet files the input comes from
     slices: int
+    crash: bool                # crash after half the slices, then resume
 
     @property
-    def crash_after(self) -> int:
-        """``fail_after_slice`` of the crash run: half the slices."""
-        return self.slices // 2 - 1
+    def crash_after(self) -> int | None:
+        """``fail_after_slice`` of the first call."""
+        return self.slices // 2 - 1 if self.crash else None
 
 
+# tokens_bulk: two 160k-row slices. Warm, on 4 cores, a tokens slice
+# costs ~4.3 s whatever its size plus ~22 us a row, so rows are ~45% of
+# a slice; by the traced self times parse, route and the sink fan-out
+# take ~75% of the job, much of the fan-out being per slice (5 sinks x
+# 20 source partitions). The 1M-row, 4-slice shape takes ~50 s a job
+# and does not fit a run.
 WORKLOADS = {
-    "tokens_bulk": Workload("tokens", "parquet", rows=120_000, files=8,
-                            slices=2),
-    "slices_resume": Workload("tokens", "parquet", rows=8_000, files=4,
-                              slices=4),
-    "text_tail_jsonl": Workload("text", "json_lines", rows=120_000, files=8,
-                                slices=2),
+    "tokens_bulk": Workload("tokens", "parquet", rows=320_000, files=16,
+                            slices=2, crash=False),
+    "slices_resume": Workload("text", "json_lines", rows=8_000, files=4,
+                              slices=4, crash=True),
+    "text_tail_jsonl": Workload("text", "json_lines", rows=320_000,
+                                files=16, slices=2, crash=False),
 }
-# Warm-up job input: same shape as the workload, tiny, one slice.
-WARM_ROWS, WARM_FILES = 2_000, 2
-# Set-ups per run: the first starts the JVM, the others restart the
-# session inside it; setup_s is their median.
-SETUPS = 3
+# Warm-up job input: same shape as the workload, small, one slice. Big
+# enough that the timed job does not pay most of the JIT warm-up.
+WARM_ROWS, WARM_FILES = 20_000, 4
 # A job still running after this long is cancelled and counted failed.
 JOB_TIMEOUT_S = 120.0
 RUN_ID = "run0"
@@ -277,18 +285,14 @@ class Bench:
                 proc.kill()
                 proc.wait(timeout=10)
 
-    def setup(self) -> list[float]:
-        """``SETUPS`` × (get_spark + the untimed warm-up job)."""
-        times = []
-        for k in range(SETUPS):
-            if k:
-                self.stop_session()
-            t = time.perf_counter()
-            self.start_session()
-            out = self.fresh_dir("warm")
-            self._pipeline(self.warm_path, out, 1)
-            times.append(time.perf_counter() - t)
-        return times
+    def setup(self) -> tuple[float, float]:
+        """get_spark in a new JVM, then the untimed warm-up job, as
+        ``jobs/run_pipeline.py`` pays them once per process. Returns the
+        session start time and the whole set-up time."""
+        t = time.perf_counter()
+        start_s = self.start_session()
+        self._pipeline(self.warm_path, self.fresh_dir("warm"), 1)
+        return start_s, time.perf_counter() - t
 
     # -- jobs -------------------------------------------------------------
 
@@ -312,60 +316,82 @@ class Bench:
         finally:
             timer.cancel()
 
-    def job(self, out: str) -> dict:
-        """One timed job into the fresh directory ``out``: a run that
-        crashes after half the slices, then the resume to completion.
+    def _run(self, out: str, skip: int) -> dict:
+        """One call that must skip exactly ``skip`` committed slices."""
+        stats = self._pipeline(self.input_path, out, self.w.slices)
+        if stats["slices_skipped"] != skip:
+            raise RuntimeError(f"the run skipped {stats['slices_skipped']} "
+                               f"slices, want {skip}")
+        return stats
 
-        Returns the wall time of both calls, of the resume alone, and
-        the slice commit gaps. ``out`` is new, so the crash run starts
-        from nothing (a reused directory would resume and read as a
-        phantom speed-up); the resume must skip exactly the slices
-        committed before the crash."""
+    @staticmethod
+    def _commit_gaps(out: str, start: float) -> list[float]:
+        """Gaps between the commits stamped after ``start``, the first
+        measured from ``start``."""
         import check
-        w = self.w
-        t0 = time.time()
-        try:
-            self._pipeline(self.input_path, out, w.slices,
-                           fail_after=w.crash_after)
-            raise RuntimeError("the injected crash did not happen")
-        except RuntimeError as e:
-            if "injected failure" not in str(e):
-                raise
-        t1 = time.time()
-        committed = len(check.read_manifests(out, RUN_ID))
-        if committed != w.crash_after + 1:
-            raise RuntimeError(f"{committed} slices committed before the "
-                               f"crash, want {w.crash_after + 1}")
-        stats = self._pipeline(self.input_path, out, w.slices)
-        t2 = time.time()
-        if stats["slices_skipped"] != committed:
-            raise RuntimeError(f"resume skipped {stats['slices_skipped']} "
-                               f"slices, want {committed}")
-        gaps, prev = [], t0
-        for ts in sorted(m["ts"]
-                         for m in check.read_manifests(out, RUN_ID)):
-            if prev < t1 < ts:      # first commit of the resume call
-                prev = t1
+        gaps, prev = [], start
+        for ts in sorted(m["ts"] for m in check.read_manifests(out, RUN_ID)
+                         if m["ts"] > start):
             gaps.append(ts - prev)
             prev = ts
-        return {"wall": t2 - t0, "resume": t2 - t1, "gaps": gaps,
-                "slices": stats["slices_total"]}
+        return gaps
+
+    def job(self, out: str) -> dict:
+        """One timed job into the fresh directory ``out``. ``out`` is
+        new, so the job starts from nothing (a reused directory would
+        resume and read as a phantom speed-up).
+
+        A crash workload crashes after half the slices and resumes; the
+        wall time covers both calls. A clean workload runs every slice
+        in one call; then its last manifest is deleted, as by a crash
+        after the slice's writes and before its commit, and the resume
+        redoes that slice. Either resume must skip exactly the slices
+        still committed. Returns the wall time, the resume time and the
+        slice commit gaps."""
+        from fluent_bit_spark.plans import fsio
+        w = self.w
+        t0 = time.time()
+        if w.crash:
+            try:
+                self._pipeline(self.input_path, out, w.slices,
+                               fail_after=w.crash_after)
+                raise RuntimeError("the injected crash did not happen")
+            except RuntimeError as e:
+                if "injected failure" not in str(e):
+                    raise
+        else:
+            self._run(out, 0)
+        t1 = time.time()
+        gaps = self._commit_gaps(out, t0)
+        committed = len(gaps)
+        if w.crash and committed != w.crash_after + 1:
+            raise RuntimeError(f"{committed} slices committed before the "
+                               f"crash, want {w.crash_after + 1}")
+        if not w.crash:
+            committed -= 1
+            fsio.delete(self.spark, os.path.join(
+                out, "_checkpoints", RUN_ID, f"slice_{committed}.json"))
+        t2 = time.time()
+        self._run(out, committed)
+        t3 = time.time()
+        gaps += self._commit_gaps(out, t2)
+        return {"wall": (t3 if w.crash else t1) - t0, "resume": t3 - t2,
+                "gaps": gaps}
 
     def verify(self, out: str) -> list[str]:
         import check
-        return check.check_output(
-            out, self.ref, self.w.sink_format, self.w.slices, RUN_ID,
-            # text doc_ids hash (file, line): repeated lines share one
-            unique_pairs=self.w.input_format == "tokens")
+        return check.check_output(out, self.ref, self.w.sink_format,
+                                  self.w.slices, RUN_ID)
 
     @staticmethod
     def _room_for_another(res: dict, window_end: float,
                           deadline: float) -> bool:
-        """Start a job only if one more, as long as the median so far,
-        still ends inside the window (and before ``deadline``)."""
+        """Start a job only if one more, as long as the median so far
+        (with its resume and check), still ends inside the window (and
+        before ``deadline``)."""
         if not res["walls"]:
             return False
-        ends = time.time() + statistics.median(res["walls"])
+        ends = time.time() + statistics.median(res["lengths"])
         return ends <= window_end and ends <= deadline
 
     def timed(self, seconds: float, deadline: float) -> dict:
@@ -373,7 +399,8 @@ class Bench:
         in ``seconds``."""
         import check
         res = {"walls": [], "resumes": [], "gaps": [], "bytes": [],
-               "errors": [], "attempted": 0, "failed": 0, "selftest": None}
+               "lengths": [], "errors": [], "attempted": 0, "failed": 0,
+               "selftest": None}
         kept = None
         with RssSampler() as rss:
             t_start = time.time()
@@ -381,6 +408,7 @@ class Bench:
                     res, t_start + seconds, deadline):
                 out = self.fresh_dir("job")
                 res["attempted"] += 1
+                t_job = time.time()
                 try:
                     r = self.job(out)
                 except Exception as e:  # a failed job is counted, not fatal
@@ -393,6 +421,7 @@ class Bench:
                 res["gaps"].extend(r["gaps"])
                 res["bytes"].append(output_bytes(out))
                 res["errors"].extend(self.verify(out))
+                res["lengths"].append(time.time() - t_job)
                 if kept is None:
                     kept = out
                 else:
@@ -405,44 +434,50 @@ class Bench:
                                     self.w.sink_format, self.w.slices)
             res["selftest"] = found
             shutil.rmtree(kept, ignore_errors=True)
+        log(f"timed loop and self-test: {time.time() - t_start:.1f}s")
         return res
 
 
-def end_to_end(b: Bench, setups: list[float], res: dict) -> dict:
+def end_to_end(b: Bench, setup_s: float, res: dict) -> dict:
     rows = b.w.rows
     return {
         "rows_per_s": (statistics.median(rows / t for t in res["walls"]),
                        "1/s"),
         "slice_commit_p50_s": (statistics.median(res["gaps"]), "s"),
         "resume_s": (statistics.median(res["resumes"]), "s"),
-        "setup_s": (statistics.median(setups), "s"),
+        "setup_s": (setup_s, "s"),
         "peak_rss_mb": (res["peak_rss"] / (1 << 20), "MB"),
         "sink_bytes_per_row": (statistics.median(res["bytes"]) / rows,
                                "B/row"),
     }
 
 
-def traced(b: Bench, untraced_wall: float) -> dict:
-    """Per-layer metrics from one traced pipeline call and one replay."""
+def traced(b: Bench, start_s: float, untraced_wall: float) -> dict:
+    """Per-layer metrics from one traced job and one replay.
+    ``start_s`` is the cold session start of the set-up."""
     import check
     import tracing
 
-    start_s = b.start_session({"spark.ui.enabled": "true",
-                               "spark.ui.port": "0"})
+    b.start_session({"spark.ui.enabled": "true", "spark.ui.port": "0"})
     sc = b.spark.sparkContext
     rest = tracing.RestApi(sc)
     tracer = tracing.Tracer(sc, f"{b.name}-s{b.seed}-p{os.getpid()}")
     w = b.w
     out = b.fresh_dir("traced")
     with tracer.span("plans.pipeline.run_pipeline") as root:
-        r = b.job(out)
+        # one pass over every slice, so that the REST counts are per
+        # input row: a clean workload's redo is left out
+        if w.crash:
+            b.job(out)
+        else:
+            b._run(out, 0)
     groups = {tracer.group(root["id"])}
     errors = b.verify(out)
     manifests = check.read_manifests(out, RUN_ID)
     parse_fail = check.dlq_reasons(out)["parse_fail"]
     shutil.rmtree(out, ignore_errors=True)
     replay_out = b.fresh_dir("replay")
-    with tracer.span("replay"):
+    with tracer.span("replay") as replay_span:
         tracing.replay(b.spark, tracer, b.spec, b.input_path, replay_out,
                      w.input_format, w.slices, crash_after=w.crash_after,
                      run_id=RUN_ID)
@@ -451,7 +486,8 @@ def traced(b: Bench, untraced_wall: float) -> dict:
     rest.settle()
     selfs = tracing.self_times(tracer)
     covered = sum(selfs.get(n, 0.0) for n in tracing.COVERING)
-    traced_wall = r["wall"]
+    log("share of the spans' self time: " + ", ".join(
+        f"{n} {selfs.get(n, 0.0) / covered:.0%}" for n in tracing.COVERING))
     m = {
         "sources.scan_s": selfs["sources.scan"],
         "functions.parsers.self_s": selfs["functions.parsers"],
@@ -464,15 +500,18 @@ def traced(b: Bench, untraced_wall: float) -> dict:
         "plans.pipeline.sink_write_s": selfs["plans.pipeline.sink_write"],
         "plans.pipeline.dlq_write_s": selfs["plans.pipeline.dlq_write"],
         "operators.aggregate.self_s": selfs["operators.aggregate"],
-        "functions.serialize.self_s": selfs["functions.serialize"],
+        # 0 for parquet sinks: the job does not serialize
+        "functions.serialize.self_s": selfs.get("functions.serialize", 0.0),
         "plans.fsio.commit_s": selfs["plans.fsio.commit"],
         "plans.pipeline.completed_slices_s":
             selfs["plans.pipeline.completed_slices"],
         "session.start_s": start_s,
         "trace.span_coverage": covered / untraced_wall,
-        "trace.overhead_s": traced_wall - untraced_wall,
+        # forced prefixes and UI on, against the untraced job
+        "trace.overhead_s": tracing.Tracer.duration(replay_span)
+                            - untraced_wall,
     }
-    m.update(tracing.pipeline_counts(rest, groups, w.rows, r["slices"]))
+    m.update(tracing.pipeline_counts(rest, groups, w.rows, w.slices))
     m.update(tracing.aggregate_stage_counts(rest, tracer, w.rows))
     os.makedirs(os.path.join(WORK, "traces"), exist_ok=True)
     path = os.path.join(WORK, "traces", f"{tracer.run_id}.json")
@@ -523,8 +562,8 @@ def main() -> int:
     b = Bench(args.workload, args.seed, conf)
     log(f"inputs ready in {time.time() - t_proc:.1f}s")
     try:
-        setups = b.setup()
-        log(f"set-ups: {', '.join(f'{t:.2f}s' for t in setups)}")
+        start_s, setup_s = b.setup()
+        log(f"set-up: {setup_s:.2f}s (session start {start_s:.2f}s)")
         # leave room for the traced replay and shutdown within 180 s
         deadline = t_proc + (60 if args.trace else 120)
         res = b.timed(args.seconds, deadline)
@@ -532,11 +571,11 @@ def main() -> int:
         if not res["walls"]:
             log("every timed job failed")
             return 1
-        e2e = end_to_end(b, setups, res)
+        e2e = end_to_end(b, setup_s, res)
         tr = None
         if args.trace:
             b.stop_session()
-            tr = traced(b, statistics.median(res["walls"]))
+            tr = traced(b, start_s, statistics.median(res["walls"]))
     finally:
         b.shutdown()
         shutil.rmtree(b.runs_dir, ignore_errors=True)

@@ -146,6 +146,15 @@ def node_metric(nodes: list[dict], names: tuple[str, ...],
 PYTHON_NODES = ("MapInArrow", "ArrowEvalPython")
 
 
+def scan_bytes(nodes: list[dict]) -> float:
+    """Bytes the file scans read. Reads of the persisted routed frame are
+    ``InMemoryTableScan`` nodes and do not count."""
+    return sum(metric_value(m["value"]) for n in nodes
+               if n["nodeName"].startswith("Scan ")
+               for m in n.get("metrics", [])
+               if m["name"] == "size of files read")
+
+
 def pipeline_counts(rest: RestApi, groups: set[str], input_rows: int,
                     slices: int) -> dict[str, float]:
     """Per-layer counts of a run_pipeline call made under ``groups``."""
@@ -159,8 +168,7 @@ def pipeline_counts(rest: RestApi, groups: set[str], input_rows: int,
                            "data returned from Python workers"))
     bcast = node_metric(nodes, ("BroadcastExchange",), "data size")
     return {
-        "sources.bytes_read_per_row":
-            sum(s.get("inputBytes", 0) for s in stages) / input_rows,
+        "sources.bytes_read_per_row": scan_bytes(nodes) / input_rows,
         "functions.parsers.python_rows_per_input_row": py_rows / input_rows,
         "functions.parsers.python_sent_bytes_per_row": sent / input_rows,
         "functions.parsers.python_returned_bytes_per_row":
@@ -182,12 +190,13 @@ PAYLOAD_DROP = ("sinks", "routes_mask", "dlq_reason", "_lineage")
 
 
 def replay(spark, tracer: Tracer, spec, input_path: str, output_dir: str,
-           input_format: str, n_slices: int, crash_after: int,
+           input_format: str, n_slices: int, crash_after: int | None,
            run_id: str = "run0") -> None:
     """Replay run_pipeline's steps under spans (parquet or json_lines
     sinks, tokens or text input). ``crash_after`` reproduces a crash
     after that slice and the resume listing that follows it."""
     text = input_format == "text"
+    json_lines = spec.sink_format == "json_lines"
 
     def list_inputs() -> list[list[str]]:
         with tracer.span("plans.pipeline.list_inputs"):
@@ -230,20 +239,24 @@ def replay(spark, tracer: Tracer, spec, input_path: str, output_dir: str,
                 good = routed.filter(F.col("dlq_reason").isNull())
                 payload = [c for c in good.columns if c not in PAYLOAD_DROP]
                 part = spec.sink_partition_by
-                with tracer.span("functions.serialize.base"):
-                    for s in sinks:
-                        _force(good.filter(F.array_contains("sinks", s))
-                               .select(*payload))
-                with tracer.span("functions.serialize"):
-                    for s in sinks:
-                        _force(to_json_lines(
-                            good.filter(F.array_contains("sinks", s)),
-                            payload).select("value", *part))
+                if json_lines:
+                    # the sink writes serialize inside their own jobs;
+                    # forcing the sink rows without, then with, the
+                    # serializer isolates its time
+                    with tracer.span("functions.serialize.base"):
+                        for s in sinks:
+                            _force(good.filter(F.array_contains("sinks", s))
+                                   .select(*payload))
+                    with tracer.span("functions.serialize"):
+                        for s in sinks:
+                            _force(to_json_lines(
+                                good.filter(F.array_contains("sinks", s)),
+                                payload).select("value", *part))
                 with tracer.span("plans.pipeline.sink_write"):
                     for s in sinks:
                         sel = good.filter(F.array_contains("sinks", s))
                         dest = f"{output_dir}/sinks/{s}/batch_id={i}"
-                        if text:
+                        if json_lines:
                             (to_json_lines(sel, payload)
                              .select("value", *part).write.mode("overwrite")
                              .partitionBy(*part).text(dest))
@@ -282,7 +295,7 @@ def replay(spark, tracer: Tracer, spec, input_path: str, output_dir: str,
 
 # Spans whose self time, summed, stands for the job's wall time. The
 # serialize pair is a side measurement: the job serializes inside its
-# sink writes (text sinks) or not at all (parquet sinks).
+# json_lines sink writes, and parquet sinks do not serialize at all.
 COVERING = ("plans.pipeline.list_inputs", "plans.pipeline.completed_slices",
             "sources.scan", "functions.parsers", "operators.route",
             "plans.pipeline.persist", "plans.pipeline.sink_write",
