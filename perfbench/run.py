@@ -35,7 +35,8 @@ Workloads:
 
 On a clean workload, ``resume_s`` is the time to redo its last slice
 after a crash before that slice's commit; the wall time behind
-``rows_per_s`` is the clean call alone.
+``rows_per_s`` and the commits behind ``slice_commit_p50_s`` are the
+clean call's alone.
 
 Everything the benchmark writes (inputs, reference cache, job outputs,
 Spark local and temp dirs, traces) stays under ``.perfbench_work/`` in
@@ -347,7 +348,13 @@ class Bench:
         after the slice's writes and before its commit, and the resume
         redoes that slice. Either resume must skip exactly the slices
         still committed. Returns the wall time, the resume time and the
-        slice commit gaps."""
+        slice commit gaps: of both calls of a crash workload, of the
+        clean call alone on a clean workload. The redo's commit is left
+        out: the first clean commit is slower by the job's start and the
+        redo faster on warmer code, so with it the median would be the
+        second clean slice alone, which spreads more from run to run
+        than the two slices together; the redo is what ``resume_s``
+        reports."""
         from fluent_bit_spark.plans import fsio
         w = self.w
         t0 = time.time()
@@ -374,7 +381,8 @@ class Bench:
         t2 = time.time()
         self._run(out, committed)
         t3 = time.time()
-        gaps += self._commit_gaps(out, t2)
+        if w.crash:
+            gaps += self._commit_gaps(out, t2)
         return {"wall": (t3 if w.crash else t1) - t0, "resume": t3 - t2,
                 "gaps": gaps}
 
@@ -567,7 +575,8 @@ def main() -> int:
         # leave room for the traced replay and shutdown within 180 s
         deadline = t_proc + (60 if args.trace else 120)
         res = b.timed(args.seconds, deadline)
-        log(f"timed jobs: {', '.join(f'{t:.2f}s' for t in res['walls'])}")
+        log(f"timed jobs: {', '.join(f'{t:.2f}s' for t in res['walls'])}; "
+            f"slice commit gaps: {', '.join(f'{g:.2f}s' for g in res['gaps'])}")
         if not res["walls"]:
             log("every timed job failed")
             return 1
