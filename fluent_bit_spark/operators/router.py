@@ -116,41 +116,33 @@ def apply_rewrite_tag(df: DataFrame, rules: list[RewriteTagRule],
 
     keep=False → the row's tag is replaced in place.
     keep=True  → the original row is kept AND a re-tagged copy is emitted
-    (in_emitter re-injection ≈ unionByName). Single-pass semantics: the
-    rewritten tag is NOT re-run through the rules (we forbid rewrite
-    cycles; the reference re-enters its router — document as 1-pass).
+    (in_emitter re-injection): one ``explode`` over
+    ``array(original, rewritten)`` on matched rows and ``array(original)``
+    otherwise, so the plan below stays a single branch and everything
+    under it (scan, parse, joins) runs once per input row. Single-pass
+    semantics: the rewritten tag is NOT re-run through the rules (we
+    forbid rewrite cycles; the reference re-enters its router — document
+    as 1-pass).
     """
     if not rules:
         return df
-
-    def first_match(sub_rules: list[RewriteTagRule]) -> Column | None:
-        expr = None
-        for r in sub_rules:
-            cond = F.col(r.key).cast("string").rlike(r.pattern)
-            tag_expr = compile_tag_template(r.new_tag, r.key, r.pattern,
-                                            tag_col)
-            expr = (F.when(cond, tag_expr) if expr is None
-                    else expr.when(cond, tag_expr))
-        return expr
-
-    # matched-by-any-rule predicate, in rule order, with the winning rule's
-    # keep flag and template
-    keep_rules = [r for r in rules if r.keep]
-    # winning rule resolution must respect global order, so build both the
-    # replacement tag and the keep flag as ordered CASE expressions
-    tag_case = first_match(rules)
-    keep_case = None
+    # the winning rule's template and keep flag, as ordered CASE
+    # expressions so resolution respects the global rule order
+    tag_case = keep_case = None
     for r in rules:
         cond = F.col(r.key).cast("string").rlike(r.pattern)
+        tag_expr = compile_tag_template(r.new_tag, r.key, r.pattern,
+                                        tag_col)
+        tag_case = (F.when(cond, tag_expr) if tag_case is None
+                    else tag_case.when(cond, tag_expr))
         keep_case = (F.when(cond, F.lit(r.keep)) if keep_case is None
                      else keep_case.when(cond, F.lit(r.keep)))
 
     matched = tag_case.isNotNull()
-    replaced = df.withColumn(
-        tag_col,
-        F.when(matched & ~keep_case, tag_case).otherwise(F.col(tag_col)))
-    if not keep_rules:
-        return replaced
-    emitted = (df.filter(matched & keep_case)
-                 .withColumn(tag_col, tag_case))
-    return replaced.unionByName(emitted)
+    if not any(r.keep for r in rules):
+        return df.withColumn(
+            tag_col, F.when(matched, tag_case).otherwise(F.col(tag_col)))
+    return df.withColumn(tag_col, F.explode(
+        F.when(matched & keep_case, F.array(F.col(tag_col), tag_case))
+         .when(matched, F.array(tag_case))
+         .otherwise(F.array(F.col(tag_col)))))

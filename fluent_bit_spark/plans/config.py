@@ -104,8 +104,8 @@ Supported sections / properties (the subset with a batch meaning here):
   template mode). ``msgpack`` lands PackedForward chunk files — the
   out_forward / buffer-chunk byte format (sources/forward.py).
 - ``[SERVICE]`` / ``service:`` — engine tuning extensions:
-  ``salt_buckets``, ``fanout_mode``, ``keep_decoded``,
-  ``sink_partition_by`` (comma-separated).
+  ``salt_buckets``, ``keep_decoded``, ``sink_partition_by``
+  (comma-separated).
 
 Unknown section names raise (a silently-ignored output is a data-loss
 foot-gun); unknown properties within a known section are ignored like
@@ -1130,7 +1130,6 @@ def spec_from_tree(tree: dict[str, Any],
             str(service.get("sink_partition_by", "source")).split(",")
             if s.strip()],
         salt_buckets=int(service.get("salt_buckets", 32)),
-        fanout_mode=str(service.get("fanout_mode", "persist")),
         sink_format=sink_format or "parquet",
         sink_template=sink_template,
         gelf_keys=gelf_keys,

@@ -91,9 +91,18 @@ def delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
     return bool(fs.delete(p, recursive))
 
 
+def mkdirs(spark: SparkSession, path: str) -> None:
+    fs, p = _fs_path(spark, path)
+    fs.mkdirs(p)
+
+
 def rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` onto ``dst``, creating ``dst``'s parent (HDFS
+    rename fails without it). ``dst`` must not exist: onto an existing
+    directory, Hadoop moves ``src`` inside it."""
     fs, s = _fs_path(spark, src)
     _, d = _fs_path(spark, dst)
+    fs.mkdirs(d.getParent())
     if not fs.rename(s, d):
         raise IOError(f"rename {src} -> {dst} failed")
 

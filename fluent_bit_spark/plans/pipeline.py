@@ -6,17 +6,22 @@ filters synchronously per chunk with msgpack re-serialization between
 every filter (upstream:src/flb_filter.c) and routes chunk-by-chunk
 (upstream:src/flb_engine.c, flb_task.c). Here the whole chain is ONE
 lazy Catalyst plan per slice — filters fuse into a single whole-stage
-codegen span around one Arrow round-trip (detokenize+parse), the routed
-DataFrame is persisted once, and the N sink writes + metrics reuse it
-(manual common-subplan reuse; Catalyst does not dedupe across actions).
+codegen span around one Arrow round-trip (detokenize+parse), and
+rewrite_tag copies are emitted by an explode, so each input row crosses
+into Python once. The routed DataFrame is persisted once and read by
+three writes (manual common-subplan reuse; Catalyst does not dedupe
+across actions): one write for every sink (rows exploded over their
+routes mask, the flb_routes_mask fan-out), the DLQ write, whose
+Observation also counts the slice's rows, and the per-tag metrics.
 
 Checkpoint/resume (upstream:plugins/in_tail/tail_db.c offset DB →
 per-slice manifest, BASELINE.json north_rule "resumable from
 per-partition checkpoints with lineage + metrics"): input files are
-grouped into slices; each slice's sink writes land under
-``batch_id=<i>`` directories (idempotent overwrite), and a manifest
-JSON marks the slice done only after all sinks + metrics commit. A
-re-run skips completed slices and reproduces identical outputs.
+grouped into slices; each slice's sink rows land under
+``sinks/<sink>/batch_id=<i>`` directories (staged, then renamed over
+the previous attempt), and a manifest JSON marks the slice done only
+after all sinks + metrics commit. A re-run skips completed slices and
+reproduces identical outputs.
 """
 
 from __future__ import annotations
@@ -25,7 +30,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -82,7 +87,6 @@ class PipelineSpec:
     tag_expr: str | None = None             # SQL expr for the tag column
     sink_partition_by: list[str] = field(default_factory=lambda: ["source"])
     salt_buckets: int = 32
-    fanout_mode: str = "persist"            # 'persist' | 'explode'
     # sink payload format: columnar parquet (default) or an out_file
     # text serializer (functions/serialize.py): newline-delimited JSON,
     # RFC-4180 csv, or tab-separated ltsv — complex columns as JSON
@@ -540,6 +544,83 @@ def _commit_slice(spark: SparkSession, output_dir: str, run_id: str,
     fsio.write_json_atomic(spark, f"{d}/slice_{i}.json", payload)
 
 
+LINE_FORMATS = ("json_lines", "csv", "ltsv", "template", "gelf")
+
+
+def _line_serializer(spec: PipelineSpec):
+    """``(df, payload_cols) -> df`` adding the out_file text line as
+    ``value`` (functions/serialize.py) for a LINE_FORMATS sink."""
+    from ..functions.serialize import (to_csv_line, to_gelf, to_json_lines,
+                                       to_ltsv_line, to_template)
+    if spec.sink_format == "template":
+        return lambda d, cols: to_template(d, spec.sink_template or "")
+    if spec.sink_format == "gelf":
+        # out_gelf posture: fixed keys from gelf_keys, every other
+        # payload column as a _-prefixed extra
+        gk = spec.gelf_keys or {}
+        host = gk.get("host", "host")
+        msg = gk.get("message", "short_message")
+        tsc = gk.get("ts", "timestamp")
+        lvl = gk.get("level")
+        named = {host, msg, tsc} | ({lvl} if lvl else set())
+        return lambda d, cols: to_gelf(
+            d, host, msg, tsc, level_col=lvl,
+            extra_cols=[c for c in cols if c not in named])
+    return {"json_lines": to_json_lines, "csv": to_csv_line,
+            "ltsv": to_ltsv_line}[spec.sink_format]
+
+
+def _write_sinks(spark: SparkSession, good: DataFrame, spec: PipelineSpec,
+                 output_dir: str, i: int, sinks: list[str]) -> None:
+    """Every sink of slice ``i`` in one write job: each row is exploded
+    over its routes mask (fluent-bit flushes a chunk to every matching
+    output) and partitioned by sink under ``_stage/batch_id=<i>``, then
+    published. Parquet or an out_file text format (LINE_FORMATS), the
+    line serialized once per row before the explode."""
+    stage = f"{output_dir}/_stage/batch_id={i}"
+    part = spec.sink_partition_by
+    if spec.sink_format in LINE_FORMATS:
+        payload_cols = [c for c in good.columns
+                        if c not in ("sinks", "routes_mask",
+                                     "dlq_reason", "_lineage")]
+        (_line_serializer(spec)(good, payload_cols)
+         .select("value", F.explode("sinks").alias("__sink"), *part)
+         .write.mode("overwrite").partitionBy("__sink", *part).text(stage))
+    else:
+        (good.withColumn("__sink", F.explode("sinks"))
+         .write.mode("overwrite").partitionBy("__sink", *part)
+         .parquet(stage))
+    _publish(spark, output_dir, i, sinks)
+
+
+def _publish(spark: SparkSession, output_dir: str, i: int,
+             sinks: list[str]) -> None:
+    """Move each sink's rows from slice ``i``'s stage onto
+    ``sinks/<sink>/batch_id=<i>``, replacing what an earlier attempt
+    left there, then delete the stage.
+
+    This runs before the manifest commit, so a crash anywhere in here
+    leaves the slice uncommitted and the resume redoes it: the stage is
+    written again and every sink replaced again. A sink with no rows
+    gets an empty directory, as a filtered write of no rows leaves.
+    Renames are cheap on HDFS and local disks; on object stores (s3a) a
+    rename is a copy plus a delete, so there publishing copies the
+    slice's sink bytes once more."""
+    stage = f"{output_dir}/_stage/batch_id={i}"
+    # the partition directory name Spark's writer gave each sink value
+    escape = (spark._jvm.org.apache.spark.sql.catalyst.catalog
+              .ExternalCatalogUtils.escapePathName)
+    for s in sinks:
+        dst = f"{output_dir}/sinks/{s}/batch_id={i}"
+        src = f"{stage}/__sink={escape(s)}"
+        fsio.delete(spark, dst)
+        if fsio.exists(spark, src):
+            fsio.rename(spark, src, dst)
+        else:
+            fsio.mkdirs(spark, dst)
+    fsio.delete(spark, f"{output_dir}/_stage")
+
+
 def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
                  output_dir: str, run_id: str = "run0",
                  n_slices: int = 1,
@@ -577,9 +658,8 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
     for i, files in enumerate(slices):
         if i in done:
             continue
-        # lineage must be stamped on the RAW scan: input_file_name()
-        # cannot be evaluated above the rewrite-tag re-injection union
-        # (MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION)
+        # lineage is stamped on the RAW scan, where input_file_name()
+        # is the row's own file
         lineage = F.struct(F.lit(i).alias("batch_id"),
                            F.input_file_name().alias("input_file"))
         if input_format == "text":
@@ -755,55 +835,7 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
         routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             good = routed.filter(F.col("dlq_reason").isNull())
-            if spec.fanout_mode == "explode":
-                # single-pass fast path: duplicates multi-routed rows under
-                # each sink dir — exactly fluent-bit's per-output flush
-                (good.withColumn("sink", F.explode("sinks"))
-                     .write.mode("overwrite")
-                     .partitionBy("sink", *spec.sink_partition_by)
-                     .parquet(f"{output_dir}/sinks_by_dir/"
-                              f"batch_id={i}"))
-            elif spec.sink_format in ("json_lines", "csv", "ltsv",
-                                      "template", "gelf"):
-                # out_file text formats: sinks are newline-delimited
-                # text files (the serializer rides the same fan-out)
-                from ..functions.serialize import (to_csv_line, to_gelf,
-                                                   to_json_lines,
-                                                   to_ltsv_line,
-                                                   to_template)
-                if spec.sink_format == "template":
-                    def ser(d, cols, _t=spec.sink_template or ""):
-                        return to_template(d, _t)
-                elif spec.sink_format == "gelf":
-                    # out_gelf posture: fixed keys from gelf_keys,
-                    # every other payload column as a _-prefixed extra
-                    gk = spec.gelf_keys or {}
-                    host = gk.get("host", "host")
-                    msg = gk.get("message", "short_message")
-                    tsc = gk.get("ts", "timestamp")
-                    lvl = gk.get("level")
-
-                    def ser(d, cols, _h=host, _m=msg, _t=tsc, _l=lvl):
-                        named = {_h, _m, _t} | ({_l} if _l else set())
-                        return to_gelf(
-                            d, _h, _m, _t, level_col=_l,
-                            extra_cols=[c for c in cols
-                                        if c not in named])
-                else:
-                    ser = {"json_lines": to_json_lines,
-                           "csv": to_csv_line,
-                           "ltsv": to_ltsv_line}[spec.sink_format]
-                payload_cols = [c for c in good.columns
-                                if c not in ("sinks", "routes_mask",
-                                             "dlq_reason", "_lineage")]
-                for s in sinks:
-                    (ser(good.filter(F.array_contains("sinks", s)),
-                         payload_cols)
-                     .select("value", *spec.sink_partition_by)
-                     .write.mode("overwrite")
-                     .partitionBy(*spec.sink_partition_by)
-                     .text(f"{output_dir}/sinks/{s}/batch_id={i}"))
-            elif spec.sink_format == "http":
+            if spec.sink_format == "http":
                 # out_http payload subset (sources/http.py): each sink
                 # dir lands request-body lines — deterministic
                 # (tag, order_key) batches of batch_records records per
@@ -994,12 +1026,7 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
                     write_forward_chunks(
                         chunks, f"{output_dir}/sinks/{s}/batch_id={i}")
             else:
-                for s in sinks:
-                    (good.filter(F.array_contains("sinks", s))
-                         .write.mode("overwrite")
-                         .partitionBy(*spec.sink_partition_by)
-                         .parquet(f"{output_dir}/sinks/{s}/"
-                                  f"batch_id={i}"))
+                _write_sinks(spark, good, spec, output_dir, i, sinks)
             # [FILTER] log_to_metrics side outputs: the batch analogue
             # of re-emitting metric records under a new tag — each
             # slice writes the metric frame per block
@@ -1023,20 +1050,20 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
             dlq_cols = [c for c in ("doc_id", "tokens", "n_tok", "source",
                                     "decoded", "tag", "dlq_reason",
                                     "_lineage") if c in routed.columns]
-            (routed.filter(F.col("dlq_reason").isNotNull())
+            # the slice totals ride the DLQ write as an Observation: one
+            # pass over the persisted frame, no extra action
+            counts = Observation()
+            (routed.observe(counts, F.count(F.lit(1)).alias("rows_in"),
+                            F.count("dlq_reason").alias("rows_dlq"))
+                   .filter(F.col("dlq_reason").isNotNull())
                    .select(*dlq_cols)
                    .write.mode("overwrite")
                    .parquet(f"{output_dir}/dlq/batch_id={i}"))
-            m = slice_metrics(routed, spec.salt_buckets) \
-                .withColumn("batch_id", F.lit(i))
-            m.write.mode("overwrite").parquet(
-                f"{output_dir}/_metrics/b{i}")
-            # derive run totals from the already-computed metrics rows —
-            # no extra scan of the routed frame
-            tot = (m.agg(F.sum("records").alias("r"),
-                         F.sum(F.col("parse_fail") + F.col("no_route"))
-                          .alias("d")).collect()[0])
-            rows_in, rows_dlq = int(tot["r"] or 0), int(tot["d"] or 0)
+            (slice_metrics(routed, spec.salt_buckets)
+             .withColumn("batch_id", F.lit(i))
+             .write.mode("overwrite")
+             .parquet(f"{output_dir}/_metrics/b{i}"))
+            rows_in, rows_dlq = counts.get["rows_in"], counts.get["rows_dlq"]
             stats["rows_in"] += rows_in
             stats["rows_dlq"] += rows_dlq
             _commit_slice(spark, output_dir, run_id, i, {

@@ -17,6 +17,22 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 10_000
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap default: half of the machine's RAM (``MemTotal``), at
+    least 1 GB, leaving the rest to the Python workers and the OS. In
+    local mode the driver JVM also runs every executor thread. Falls
+    back to 4g where ``/proc/meminfo`` is unreadable."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{max(1024, total_mb // 2)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "fluent_bit_spark",
     master: str | None = None,
@@ -54,7 +70,8 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         # Local sandbox has no Iceberg runtime jar; in production add:
         #   spark.jars.packages=org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver>
         #   spark.sql.catalog.logpipe=org.apache.iceberg.spark.SparkCatalog

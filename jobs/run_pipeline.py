@@ -5,7 +5,7 @@ Usage (BASELINE.json north_rule packaging):
     zip -r engine.zip fluent_bit_spark
     spark-submit --master local[32] --py-files engine.zip \
         jobs/run_pipeline.py --input /path/tokens.parquet \
-        --output /path/out --slices 8 [--gen-rows N] [--fanout explode]
+        --output /path/out --slices 8 [--gen-rows N]
 
 With ``--gen-rows N`` the job first synthesizes the deterministic F1
 tokens table at the input path (sandbox mode — no external data).
@@ -27,8 +27,6 @@ def main() -> int:
     ap.add_argument("--output", required=True, help="output dir")
     ap.add_argument("--run-id", default="run0")
     ap.add_argument("--slices", type=int, default=1)
-    ap.add_argument("--fanout", choices=["persist", "explode"],
-                    default="persist")
     ap.add_argument("--sink-format", choices=["parquet", "json_lines"],
                     default="parquet",
                     help="sink payload format (out_file Format analogue)")
@@ -90,7 +88,6 @@ def main() -> int:
                 key="fields.level", pattern="^error$",
                 new_tag="err.$TAG[1]", keep=True)],
             lookup_path=lookup,
-            fanout_mode=args.fanout,
             sink_format=args.sink_format,
         )
     stats = run_pipeline(spark, spec, args.input, args.output,

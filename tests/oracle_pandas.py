@@ -106,7 +106,7 @@ def run_oracle(tokens_path: str, vocab: list[str],
                         if any(match(t, p, mt) for ss, p, mt in routes
                                if ss == s)))
     good = df[df["ok"] & (df["sinks"].map(len) > 0)]
-    out = {"sinks": {}, "dlq": {}}
+    out = {"sinks": {}, "dlq": {}, "emitted": int(len(df))}
     for s in sink_order:
         sub = good[good["sinks"].map(lambda x: s in x)]
         out["sinks"][s] = {
@@ -114,6 +114,7 @@ def run_oracle(tokens_path: str, vocab: list[str],
             "sum_n_tok": int(sub["n_tok"].sum()),
             "distinct_sources": int(sub["source"].nunique()),
             "doc_ids": sorted(sub["doc_id"].tolist()),
+            "pairs": sorted(zip(sub["doc_id"], sub["tag"])),
         }
     bad = df[~df["ok"]]
     norout = df[df["ok"] & (df["sinks"].map(len) == 0)]

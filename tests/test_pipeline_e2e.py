@@ -32,6 +32,23 @@ def _spec(fixture_paths) -> PipelineSpec:
     )
 
 
+def _sink_pairs(spark, out: str, sink: str,
+                sink_format: str = "parquet") -> list[tuple[str, str]]:
+    """One sink's (doc_id, tag) rows, sorted, duplicates kept."""
+    df = (spark.read.json(f"{out}/sinks/{sink}")
+          if sink_format == "json_lines" else read_sink(spark, out, sink))
+    return sorted((r.doc_id, r.tag)
+                  for r in df.select("doc_id", "tag").collect())
+
+
+def _split_input(spark, fixture_paths, tmp_path) -> str:
+    """The fixture rows as two parquet files, so a run can have 2 slices."""
+    split_dir = str(tmp_path / "split")
+    spark.read.parquet(fixture_paths["tokens"]).repartition(2) \
+        .write.parquet(split_dir)
+    return split_dir
+
+
 @pytest.fixture(scope="module")
 def pipeline_out(spark, fixture_paths):
     shutil.rmtree(OUT, ignore_errors=True)
@@ -105,10 +122,7 @@ def test_resume_is_idempotent_and_skips_done(spark, fixture_paths,
     (the s3a://hdfs:// deployment shape) must behave identically."""
     out1, out2 = scheme + str(tmp_path / "a"), scheme + str(tmp_path / "b")
     spec = _spec(fixture_paths)
-    # two-file input so we can have 2 slices
-    src = spark.read.parquet(fixture_paths["tokens"])
-    split_dir = str(tmp_path / "split")
-    src.repartition(2).write.parquet(split_dir)
+    split_dir = _split_input(spark, fixture_paths, tmp_path)
 
     with pytest.raises(RuntimeError, match="injected failure"):
         run_pipeline(spark, spec, split_dir, out1, n_slices=2,
@@ -124,24 +138,103 @@ def test_resume_is_idempotent_and_skips_done(spark, fixture_paths,
         assert a == b, sink
 
 
-def test_explode_fanout_matches_persist_fanout(spark, fixture_paths,
-                                               tmp_path):
-    """The single-pass exploded writer (partitionBy sink) routes the same
-    row sets as the persist+N-filtered-writes path."""
+@pytest.mark.parametrize("sink_format", ["parquet", "json_lines"])
+def test_sinks_match_oracle(spark, fixture_paths, golden, tmp_path,
+                            sink_format):
+    """The one-job fan-out (rows exploded over their routes mask, staged,
+    renamed per sink) lands each sink's (doc_id, tag) pairs exactly as
+    the oracle routes them, once each, and leaves no stage behind. The
+    slice totals from the DLQ write's Observation count every emitted
+    row, rewrite copies included."""
     spec = _spec(fixture_paths)
-    spec2 = _spec(fixture_paths)
-    spec2.fanout_mode = "explode"
-    o1, o2 = str(tmp_path / "p"), str(tmp_path / "e")
-    run_pipeline(spark, spec, fixture_paths["tokens"], o1)
-    run_pipeline(spark, spec2, fixture_paths["tokens"], o2)
-    exploded = spark.read.parquet(os.path.join(o2, "sinks_by_dir"))
-    for sink in ("sink_web", "sink_errors", "sink_kv"):
-        a = sorted(r.doc_id for r in
-                   read_sink(spark, o1, sink).select("doc_id").collect())
-        b = sorted(r.doc_id for r in
-                   exploded.filter(F.col("sink") == sink)
-                   .select("doc_id").collect())
-        assert a == b, sink
+    spec.sink_format = sink_format
+    out = str(tmp_path / "o")
+    stats = run_pipeline(spark, spec, fixture_paths["tokens"], out)
+    for sink, g in golden["sinks"].items():
+        if g["records"]:
+            assert _sink_pairs(spark, out, sink, sink_format) \
+                == g["pairs"], sink
+    assert stats["rows_in"] == golden["emitted"]
+    assert stats["rows_dlq"] == sum(golden["dlq"].values())
+    assert not os.path.exists(os.path.join(out, "_stage"))
+
+
+def test_publish_crash_then_resume_lands_each_pair_once(
+        spark, fixture_paths, golden, tmp_path, monkeypatch):
+    """A crash inside the staged publish — slice 0 committed, slice 1's
+    first sink already renamed into place — then a resume leaves every
+    sink equal to a clean run and to the oracle: no pair twice, none
+    lost, no stage left behind."""
+    from fluent_bit_spark.plans import fsio
+
+    split_dir = _split_input(spark, fixture_paths, tmp_path)
+    spec = _spec(fixture_paths)
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    rename, published = fsio.rename, []
+
+    def flaky_rename(spark_, src, dst):
+        if dst.endswith("batch_id=1") and published:
+            raise IOError("injected rename failure")
+        rename(spark_, src, dst)
+        if dst.endswith("batch_id=1"):
+            published.append(dst)
+
+    monkeypatch.setattr(fsio, "rename", flaky_rename)
+    with pytest.raises(IOError, match="injected rename failure"):
+        run_pipeline(spark, spec, split_dir, crashed, n_slices=2)
+    monkeypatch.setattr(fsio, "rename", rename)
+    assert len(published) == 1
+    assert os.path.isdir(os.path.join(crashed, "_stage", "batch_id=1"))
+
+    stats = run_pipeline(spark, spec, split_dir, crashed, n_slices=2)
+    assert stats["slices_skipped"] == 1
+    run_pipeline(spark, spec, split_dir, clean, n_slices=2)
+    assert not os.path.exists(os.path.join(crashed, "_stage"))
+    for sink, g in golden["sinks"].items():
+        if not g["records"]:
+            continue
+        got = _sink_pairs(spark, crashed, sink)
+        assert len(set(got)) == len(got), sink
+        assert got == _sink_pairs(spark, clean, sink) == g["pairs"], sink
+
+
+def test_empty_sink_slice_replaces_stale_attempt(spark, fixture_paths,
+                                                 golden, tmp_path):
+    """A slice that routes no rows to a sink, redone over that sink's
+    directory from an earlier attempt, leaves no stale rows there, and
+    read_sink behaves as after a filtered write of no rows: an empty
+    batch directory is skipped, and a sink with no rows at all has no
+    schema to read."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    # slice 0 holds every source but src1, slice 1 only src1: sink_src1
+    # gets no rows in slice 0, sink_none none in either
+    tok = pq.read_table(fixture_paths["tokens"])
+    is_src1 = pc.equal(tok["source"], "src1")
+    inp = tmp_path / "inp"
+    inp.mkdir()
+    pq.write_table(tok.filter(pc.invert(is_src1)), str(inp / "a.parquet"))
+    pq.write_table(tok.filter(is_src1), str(inp / "b.parquet"))
+    spec = _spec(fixture_paths)
+    spec.routes = spec.routes + [Route("sink_none", "nomatch.*")]
+    out = str(tmp_path / "o")
+    stale = spark.createDataFrame(
+        [("stale-0", "src1", "app.src1.json")],
+        "doc_id string, source string, tag string")
+    for sink in ("sink_src1", "sink_none"):
+        for b in (0, 1):
+            stale.write.partitionBy("source").parquet(
+                f"{out}/sinks/{sink}/batch_id={b}")
+
+    run_pipeline(spark, spec, str(inp), out, n_slices=2)
+    for sink in ("sink_src1", "sink_none"):
+        assert os.listdir(f"{out}/sinks/{sink}/batch_id=0") == [], sink
+    assert _sink_pairs(spark, out, "sink_src1") \
+        == golden["sinks"]["sink_src1"]["pairs"]
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        read_sink(spark, out, "sink_none")
 
 
 def test_every_row_lands_somewhere(spark, fixture_paths):

@@ -14,15 +14,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from fluent_bit_spark import fixtures as fx
-from fluent_bit_spark.operators.router import Route
+from fluent_bit_spark.operators.router import RewriteTagRule, Route
 from fluent_bit_spark.plans.pipeline import PipelineSpec, build_stages
 
 
-@pytest.fixture(scope="module")
-def routed_plan(spark, fixture_paths):
+def _routed_plan(spark, fixture_paths, rewrite_rules=()) -> str:
     spec = PipelineSpec(
         vocab=fx.vocab(),
         routes=[Route(*r) for r in fx.DEFAULT_ROUTES],
+        rewrite_rules=list(rewrite_rules),
         lookup_path=fixture_paths["lookup"],
     )
     df = spark.read.parquet(fixture_paths["tokens"])
@@ -30,15 +30,33 @@ def routed_plan(spark, fixture_paths):
     return routed._jdf.queryExecution().executedPlan().toString()
 
 
+def _python_boundaries(plan: str) -> int:
+    return (plan.count("ArrowEvalPython") + plan.count("MapInArrow")
+            + plan.count("PythonMapInArrow"))
+
+
+@pytest.fixture(scope="module")
+def routed_plan(spark, fixture_paths):
+    return _routed_plan(spark, fixture_paths)
+
+
 def test_single_arrow_udf_pass(routed_plan):
     """detokenize + parse fuse into ONE Python/Arrow boundary — one
     Arrow round-trip for the whole parse stage (§4.2 item 3). The
     fused stage plans as a MapInArrow node; any ArrowEvalPython on top
     of it would mean a second pass of the corpus through Python."""
-    boundaries = (routed_plan.count("ArrowEvalPython")
-                  + routed_plan.count("MapInArrow")
-                  + routed_plan.count("PythonMapInArrow"))
-    assert boundaries == 1, routed_plan
+    assert _python_boundaries(routed_plan) == 1, routed_plan
+
+
+def test_rewrite_keep_copies_parse_once(spark, fixture_paths):
+    """The default keep=True rewrite rule (level=error → err.$TAG[1])
+    emits its copies with an explode above the parse. A union of two
+    branches of the plan would scan, parse and join every row twice."""
+    plan = _routed_plan(spark, fixture_paths, [RewriteTagRule(
+        key="fields.level", pattern="^error$", new_tag="err.$TAG[1]",
+        keep=True)])
+    assert _python_boundaries(plan) == 1, plan
+    assert "Union" not in plan, plan
 
 
 def test_lookup_join_is_broadcast(routed_plan):

@@ -13,6 +13,12 @@ if [ "${1:-}" != "quick" ]; then
   SF_DIR=/root/testdata/sf0.1  python tools/check_oracles.py
 fi
 
+# end-to-end benchmark workload: fails unless its outputs match the
+# independent reference ("correct": true on the result line)
+python perfbench/run.py --workload slices_resume --seed 1 --seconds 20 \
+  | tail -1 | tee /tmp/smoke_perfbench.json
+grep -q '"correct": true' /tmp/smoke_perfbench.json
+
 python bench.py | tail -1 > /tmp/smoke_bench.json
 python tools/bench_compare.py /tmp/smoke_bench.json   # fails on >1.5x regression
 
