@@ -120,7 +120,7 @@ from typing import Any
 
 from ..operators.filters import GrepRule
 from ..operators.router import RewriteTagRule, Route
-from .pipeline import ParserFilterSpec, PipelineSpec
+from .pipeline import SINK_WRITERS, SOURCES, ParserFilterSpec, PipelineSpec
 
 _KNOWN_FILTERS = {"grep", "rewrite_tag", "lookup", "parser", "modify",
                   "record_modifier", "nest", "throttle", "type_converter",
@@ -504,10 +504,8 @@ def spec_from_tree(tree: dict[str, Any],
                            else "text" if inp_name == "tail"
                            and str(inp.get("path", "")).endswith(".log")
                            else "tokens")).lower()
-    if input_format not in ("tokens", "text", "forward", "http",
-                            "syslog", "kafka", "systemd"):
-        raise ValueError(f"input format must be tokens|text|forward|"
-                         f"http|syslog|kafka|systemd, "
+    if input_format not in SOURCES:
+        raise ValueError(f"input format must be {'|'.join(SOURCES)}, "
                          f"got {input_format!r}")
     if inp_name == "syslog":
         # upstream:plugins/in_syslog — Mode tcp is the octet-framed
@@ -1071,13 +1069,9 @@ def spec_from_tree(tree: dict[str, Any],
                                      "body rendering (Format/"
                                      "Batch_Records/Json_Date_*)")
                 http_output = ho
-            if fmt not in ("parquet", "json_lines", "csv", "ltsv",
-                           "template", "msgpack", "gelf", "http",
-                           "es", "loki", "kafka"):
-                raise ValueError(f"output format must be parquet|"
-                                 f"json_lines|csv|ltsv|template|"
-                                 f"msgpack|gelf|http|es|loki|kafka, "
-                                 f"got {fmt!r}")
+            if fmt not in SINK_WRITERS:
+                raise ValueError(f"output format must be "
+                                 f"{'|'.join(SINK_WRITERS)}, got {fmt!r}")
             if sink_format is not None and fmt != sink_format:
                 raise ValueError("all outputs must share one format "
                                  "(the fan-out writes one payload shape)")

@@ -1,5 +1,6 @@
-"""The end-to-end pipeline: parse → filter → enrich → tag → route →
-fan-out → aggregate, with checkpointed resume and lineage metrics.
+"""The end-to-end pipeline: read → parse → filter → enrich → tag →
+route → fan-out → aggregate, with checkpointed resume and lineage
+metrics.
 
 Reference lifecycle re-expressed (SURVEY.md §3.1): fluent-bit runs
 filters synchronously per chunk with msgpack re-serialization between
@@ -8,33 +9,53 @@ every filter (upstream:src/flb_filter.c) and routes chunk-by-chunk
 lazy Catalyst plan per slice — filters fuse into a single whole-stage
 codegen span around one Arrow round-trip (detokenize+parse), and
 rewrite_tag copies are emitted by an explode, so each input row crosses
-into Python once. The routed DataFrame is persisted once and read by
-three writes (manual common-subplan reuse; Catalyst does not dedupe
-across actions): one write for every sink (rows exploded over their
-routes mask, the flb_routes_mask fan-out), the DLQ write, whose
-Observation also counts the slice's rows, and the per-tag metrics.
+into Python once.
+
+Formats plug in the way fluent-bit's input and output plugins do (one
+struct of callbacks each, driven by one generic loop;
+upstream:src/flb_input.c, src/flb_output.c):
+
+- ``SOURCES`` has one adapter per input format. It lists the input,
+  reads a slice's files into the frame the stages take (``_lineage``
+  stamped on the raw scan) and names the stage builder, the decoder's
+  default tag column and its ok column. ``read_routed`` applies the
+  default tag and sends the decoder's rejects to the DLQ as
+  ``parse_fail``; ``read_tagged`` feeds ``[STREAM_TASK]`` SQL the same
+  adapter.
+- ``SINK_WRITERS`` has one writer per sink format. parquet and the
+  out_file text formats write every sink of a slice in one job (rows
+  exploded over their routes mask, the flb_routes_mask fan-out, staged
+  and renamed into place); http/es/loki/kafka/msgpack write one
+  filtered job per sink.
+- ``write_slice`` is the slice body, shared by the batch job and the
+  streaming fan-out: the routed frame is persisted once and read by
+  the sink writer, the log_to_metrics side outputs, the DLQ write
+  (whose Observation counts the slice's rows) and the per-tag metrics.
 
 Checkpoint/resume (upstream:plugins/in_tail/tail_db.c offset DB →
 per-slice manifest, BASELINE.json north_rule "resumable from
 per-partition checkpoints with lineage + metrics"): input files are
 grouped into slices; each slice's sink rows land under
-``sinks/<sink>/batch_id=<i>`` directories (staged, then renamed over
-the previous attempt), and a manifest JSON marks the slice done only
-after all sinks + metrics commit. A re-run skips completed slices and
-reproduces identical outputs.
+``sinks/<sink>/batch_id=<i>`` directories, and a manifest JSON marks
+the slice done only after all sinks + metrics commit. A re-run skips
+completed slices and reproduces identical outputs; it fails if a
+committed slice would now get other files.
 """
 
 from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from . import fsio
+from ..functions.serialize import (to_csv_line, to_gelf, to_json_lines,
+                                   to_ltsv_line, to_template)
 from ..operators.enrich import lookup_join
 from ..operators.filters import GrepRule, grep_predicate
 from ..operators.router import RewriteTagRule, Route, apply_rewrite_tag, \
@@ -490,6 +511,213 @@ def build_stages_text(spark: SparkSession, df_text: DataFrame,
     return _post_parse_stages(spark, out, spec)
 
 
+# ---------------------------------------------------------------------------
+# Source adapters: one entry per input format
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Source:
+    """One input format (a fluent-bit input plugin's file subset).
+
+    ``scan`` reads a list of paths, for the listing; ``read`` turns
+    slice ``i``'s files into the frame ``stages`` takes, ``_lineage`` stamped on the raw
+    scan. ``tag_col`` is the decoder's own tag, used unless the spec
+    sets ``tag_expr``. ``ok_col`` flags the records the decoder
+    accepted: the rest go to the DLQ as ``parse_fail``."""
+
+    scan: Callable[[SparkSession, list], DataFrame]
+    read: Callable[[SparkSession, list, int, PipelineSpec], DataFrame]
+    stages: Callable[[SparkSession, DataFrame, PipelineSpec], DataFrame]
+    tag_col: str | None = None
+    ok_col: str | None = None
+
+
+def _lineage(i: int, input_file: Column) -> Column:
+    return F.struct(F.lit(i).alias("batch_id"),
+                    input_file.alias("input_file"))
+
+
+def _scan_tokens(spark: SparkSession, paths: list) -> DataFrame:
+    return spark.read.schema(TOKENS_SCHEMA).parquet(*paths)
+
+
+def _scan_text(spark: SparkSession, paths: list) -> DataFrame:
+    return spark.read.text(paths)
+
+
+def _scan_binary(spark: SparkSession, paths: list) -> DataFrame:
+    return spark.read.format("binaryFile").load(paths)
+
+
+def _read_tokens(spark, files, i, spec):
+    # lineage is stamped on the RAW scan, where input_file_name() is
+    # the row's own file
+    return _scan_tokens(spark, files).withColumn(
+        "_lineage", _lineage(i, F.input_file_name()))
+
+
+def _read_text(spark, files, i, spec):
+    reader = (read_text_ordered(spark, files) if spec.multiline_parser
+              else _scan_text(spark, files))
+    return reader.withColumn("_lineage", _lineage(i, F.input_file_name()))
+
+
+def _read_forward(spark, files, i, spec):
+    """in_forward file subset: another pipeline's (or a fluent-bit
+    sender's) chunk files. The transmitted tag is kept (in_forward
+    keeps the sender's tag, unlike tail's tag-from-path). Lineage rides
+    the decoder's path passthrough (input_file_name() dies at the
+    Python boundary)."""
+    from ..sources.forward import TOKEN_FIELDS, read_forward_files
+    fdf = read_forward_files(spark, files, TOKEN_FIELDS, with_path=True)
+    return (fdf.withColumnRenamed("tag", "fwd_tag")
+            .withColumn("_lineage", _lineage(i, F.col("_input_file")))
+            .drop("_input_file", "sec", "nsec"))
+
+
+def _read_http(spark, files, i, spec):
+    """in_http file subset (sources/http.py): each line is one POST
+    body; records explode out, and the conventional "log" field (or
+    the whole record, re-rendered) becomes the raw line. A malformed
+    body keeps the raw body as the line: upstream answers 400 and
+    never ingests it, a batch replay keeps the bytes for the
+    dead-letter audit."""
+    from ..sources.http import decode_http_json
+    hp = spec.http_input or {}
+    raw = (_scan_text(spark, files)
+           .filter(F.length(F.trim("value")) > 0)
+           .withColumnRenamed("value", "body")
+           .withColumn("_lineage", _lineage(i, F.input_file_name())))
+    dec = decode_http_json(raw, tag=hp.get("tag", "http.0"),
+                           tag_key=hp.get("tag_key"),
+                           keep_cols=("body", "_lineage"))
+    return dec.select(
+        F.when(F.col("parse_ok"),
+               F.coalesce(F.col("record")["log"], F.to_json("record")))
+         .otherwise(F.col("body")).alias("value"),
+        F.col("tag").alias("http_tag"),
+        F.col("parse_ok").alias("__http_ok"),
+        "_lineage")
+
+
+def _read_syslog(spark, files, i, spec):
+    """in_syslog TCP file subset (sources/syslog_frames.py): each
+    capture file is one connection's octet-framed byte stream (RFC
+    6587). The configured [FILTER] parser applies the syslog preset
+    (upstream in_syslog's Parser property). Upstream drops a connection
+    on a framing error; a batch replay keeps the bytes."""
+    from ..sources.syslog_frames import decode_octet_frames
+    raw = _scan_binary(spark, files).select("path", "content")
+    dec = decode_octet_frames(raw, "content", group_col="path")
+    return dec.select(
+        F.col("msg").alias("value"),
+        F.col("group").alias("_input_file"),
+        F.col("frame_ok").alias("__frame_ok"),
+        _lineage(i, F.col("group")).alias("_lineage"))
+
+
+def _read_kafka(spark, files, i, spec):
+    """in_kafka file subset (sources/kafka_batches.py): each capture
+    file is a run of RecordBatch v2 batches, and the topic is the tag
+    (upstream in_kafka tags by topic). A CRC-failed batch decodes to
+    one sentinel row (upstream's consumer aborts the fetch)."""
+    from ..sources.kafka_batches import read_kafka_segments
+    kdf = read_kafka_segments(spark, files, with_path=True)
+    return kdf.select(
+        F.coalesce(F.col("value").cast("string"), F.lit("")).alias("value"),
+        F.col("topic").alias("kafka_tag"),
+        F.col("crc_ok").alias("__crc_ok"),
+        F.col("_input_file"),
+        _lineage(i, F.col("_input_file")).alias("_lineage"))
+
+
+def _read_systemd(spark, files, i, spec):
+    """in_systemd file subset (sources/journal_export.py): Journal
+    Export Format streams (journalctl -o export). MESSAGE is the line,
+    and the tag is systemd.<_SYSTEMD_UNIT>. A malformed entry keeps its
+    partial fields."""
+    from ..sources.journal_export import decode_export, with_journal_tag
+    raw = _scan_binary(spark, files).select("path", "content")
+    dec = with_journal_tag(
+        decode_export(raw, "content", passthrough=["path"]))
+    return dec.select(
+        F.coalesce(F.element_at("fields", "MESSAGE"),
+                   F.lit("")).alias("value"),
+        F.col("tag").alias("journal_tag"),
+        F.col("entry_ok").alias("__entry_ok"),
+        F.col("path").alias("_input_file"),
+        _lineage(i, F.col("path")).alias("_lineage"))
+
+
+SOURCES: dict[str, Source] = {
+    "tokens": Source(_scan_tokens, _read_tokens, build_stages),
+    "text": Source(_scan_text, _read_text, build_stages_text),
+    "forward": Source(_scan_binary, _read_forward, build_stages,
+                      tag_col="fwd_tag"),
+    "http": Source(_scan_text, _read_http, build_stages_text,
+                   "http_tag", "__http_ok"),
+    "syslog": Source(_scan_binary, _read_syslog, build_stages_text,
+                     ok_col="__frame_ok"),
+    "kafka": Source(_scan_binary, _read_kafka, build_stages_text,
+                    "kafka_tag", "__crc_ok"),
+    "systemd": Source(_scan_binary, _read_systemd, build_stages_text,
+                      "journal_tag", "__entry_ok"),
+}
+
+
+def _source(input_format: str) -> Source:
+    if input_format not in SOURCES:
+        raise ValueError(f"input format must be {'|'.join(SOURCES)}, "
+                         f"got {input_format!r}")
+    return SOURCES[input_format]
+
+
+def _list_inputs(spark: SparkSession, input_format: str,
+                input_path: str) -> list[str]:
+    """The input files, sorted: the order slices are cut from."""
+    return sorted(_source(input_format).scan(spark, [input_path])
+                  .inputFiles())
+
+
+def _decoded(spark: SparkSession, spec: PipelineSpec, input_format: str,
+             files: list[str], i: int):
+    src = _source(input_format)
+    if src.tag_col and not spec.tag_expr:
+        spec = replace(spec, tag_expr=src.tag_col)
+    return src, src.read(spark, files, i, spec), spec
+
+
+def read_routed(spark: SparkSession, spec: PipelineSpec, input_format: str,
+                files: list[str], i: int) -> DataFrame:
+    """Slice ``i``'s files through their adapter and the stages: the
+    routed frame the slice writer takes. A record the decoder rejected
+    is forced to the DLQ as ``parse_fail``, kept for the dead-letter
+    audit; the decoder's tag and ok columns are dropped."""
+    src, df, spec = _decoded(spark, spec, input_format, files, i)
+    out = src.stages(spark, df, spec)
+    if src.ok_col:
+        ok = F.col(src.ok_col)
+        out = (out.withColumn("parse_ok", F.col("parse_ok") & ok)
+                  .withColumn("dlq_reason",
+                              F.when(~ok, F.lit("parse_fail"))
+                               .otherwise(F.col("dlq_reason"))))
+    helpers = [c for c in (src.ok_col, src.tag_col) if c]
+    return out.drop(*helpers) if helpers else out
+
+
+def read_tagged(spark: SparkSession, spec: PipelineSpec, input_format: str,
+                input_path: str) -> DataFrame:
+    """The whole input through the same adapter, for the
+    ``[STREAM_TASK]`` SQL: records the decoder rejected are dropped
+    before the stages, and there is no ``_lineage`` column."""
+    files = _list_inputs(spark, input_format, input_path)
+    src, df, spec = _decoded(spark, spec, input_format, files, 0)
+    if src.ok_col:
+        df = df.filter(F.col(src.ok_col)).drop(src.ok_col)
+    return src.stages(spark, df, spec).drop("_lineage")
+
+
 def sink_names(spec: PipelineSpec) -> list[str]:
     seen: list[str] = []
     for r in spec.routes:
@@ -515,81 +743,20 @@ def slice_metrics(routed: DataFrame, salt_buckets: int) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Checkpointed runner
+# Sink writers: one entry per sink format
 # ---------------------------------------------------------------------------
 
 
-def _manifest_dir(output_dir: str, run_id: str) -> str:
-    # plain '/' join, NOT os.path.join — output_dir may be a URI
-    # (s3a://bucket/out); the separator is '/' on every Hadoop FS
-    return f"{output_dir}/_checkpoints/{run_id}"
-
-
-def completed_slices(spark: SparkSession, output_dir: str,
-                     run_id: str) -> set[int]:
-    """Slice ids with a committed manifest — via the Hadoop FS API, so
-    resume works against s3a://, hdfs:// and file: alike."""
-    out = set()
-    for f in fsio.list_names(spark, _manifest_dir(output_dir, run_id)):
-        if f.startswith("slice_") and f.endswith(".json"):
-            out.add(int(f[6:-5]))
-    return out
-
-
-def _commit_slice(spark: SparkSession, output_dir: str, run_id: str,
-                  i: int, payload: dict) -> None:
-    d = _manifest_dir(output_dir, run_id)
-    # dot-temp + rename through the path's own filesystem (fsio docstring
-    # covers the per-FS atomicity contract)
-    fsio.write_json_atomic(spark, f"{d}/slice_{i}.json", payload)
-
-
-LINE_FORMATS = ("json_lines", "csv", "ltsv", "template", "gelf")
-
-
-def _line_serializer(spec: PipelineSpec):
-    """``(df, payload_cols) -> df`` adding the out_file text line as
-    ``value`` (functions/serialize.py) for a LINE_FORMATS sink."""
-    from ..functions.serialize import (to_csv_line, to_gelf, to_json_lines,
-                                       to_ltsv_line, to_template)
-    if spec.sink_format == "template":
-        return lambda d, cols: to_template(d, spec.sink_template or "")
-    if spec.sink_format == "gelf":
-        # out_gelf posture: fixed keys from gelf_keys, every other
-        # payload column as a _-prefixed extra
-        gk = spec.gelf_keys or {}
-        host = gk.get("host", "host")
-        msg = gk.get("message", "short_message")
-        tsc = gk.get("ts", "timestamp")
-        lvl = gk.get("level")
-        named = {host, msg, tsc} | ({lvl} if lvl else set())
-        return lambda d, cols: to_gelf(
-            d, host, msg, tsc, level_col=lvl,
-            extra_cols=[c for c in cols if c not in named])
-    return {"json_lines": to_json_lines, "csv": to_csv_line,
-            "ltsv": to_ltsv_line}[spec.sink_format]
-
-
-def _write_sinks(spark: SparkSession, good: DataFrame, spec: PipelineSpec,
-                 output_dir: str, i: int, sinks: list[str]) -> None:
-    """Every sink of slice ``i`` in one write job: each row is exploded
-    over its routes mask (fluent-bit flushes a chunk to every matching
-    output) and partitioned by sink under ``_stage/batch_id=<i>``, then
-    published. Parquet or an out_file text format (LINE_FORMATS), the
-    line serialized once per row before the explode."""
-    stage = f"{output_dir}/_stage/batch_id={i}"
-    part = spec.sink_partition_by
-    if spec.sink_format in LINE_FORMATS:
-        payload_cols = [c for c in good.columns
-                        if c not in ("sinks", "routes_mask",
-                                     "dlq_reason", "_lineage")]
-        (_line_serializer(spec)(good, payload_cols)
-         .select("value", F.explode("sinks").alias("__sink"), *part)
-         .write.mode("overwrite").partitionBy("__sink", *part).text(stage))
-    else:
-        (good.withColumn("__sink", F.explode("sinks"))
-         .write.mode("overwrite").partitionBy("__sink", *part)
-         .parquet(stage))
+def _stage_and_publish(spark: SparkSession, rows: DataFrame, fmt: str,
+                       spec: PipelineSpec, output_dir: str, i: int,
+                       sinks: list[str]) -> None:
+    """Every sink of slice ``i`` in one write job: ``rows`` carry one
+    ``__sink`` per route hit (fluent-bit flushes a chunk to every
+    matching output) and are partitioned by sink under
+    ``_stage/batch_id=<i>``, then published."""
+    (rows.write.mode("overwrite")
+         .partitionBy("__sink", *spec.sink_partition_by).format(fmt)
+         .save(f"{output_dir}/_stage/batch_id={i}"))
     _publish(spark, output_dir, i, sinks)
 
 
@@ -621,6 +788,305 @@ def _publish(spark: SparkSession, output_dir: str, i: int,
     fsio.delete(spark, f"{output_dir}/_stage")
 
 
+def _write_parquet(spark, good, payload_cols, spec, output_dir, i, sinks):
+    _stage_and_publish(spark, good.withColumn("__sink", F.explode("sinks")),
+                       "parquet", spec, output_dir, i, sinks)
+
+
+def _line_sinks(serialize):
+    """An out_file text format (functions/serialize.py): the line is
+    serialized once per row, before the explode over its sinks."""
+    def write(spark, good, payload_cols, spec, output_dir, i, sinks):
+        lines = (serialize(good, payload_cols, spec)
+                 .select("value", F.explode("sinks").alias("__sink"),
+                         *spec.sink_partition_by))
+        _stage_and_publish(spark, lines, "text", spec, output_dir, i, sinks)
+    return write
+
+
+def _to_gelf(d, cols, spec):
+    # out_gelf posture: fixed keys from gelf_keys, every other payload
+    # column as a _-prefixed extra
+    gk = spec.gelf_keys or {}
+    host = gk.get("host", "host")
+    msg = gk.get("message", "short_message")
+    tsc = gk.get("ts", "timestamp")
+    lvl = gk.get("level")
+    named = {host, msg, tsc} | ({lvl} if lvl else set())
+    return to_gelf(d, host, msg, tsc, level_col=lvl,
+                   extra_cols=[c for c in cols if c not in named])
+
+
+def _each_sink(write_one):
+    """A format with its own framing (request bodies, chunk or segment
+    files): one filtered job per sink, ``write_one(rows_for_sink,
+    payload_cols, spec, i, dest)``. Their record bodies leave out the
+    tag (http, kafka and msgpack carry it in their framing)."""
+    def write(spark, good, payload_cols, spec, output_dir, i, sinks):
+        cols = [c for c in payload_cols if c != "tag"]
+        for s in sinks:
+            write_one(good.filter(F.array_contains("sinks", s)), cols, spec,
+                      i, f"{output_dir}/sinks/{s}/batch_id={i}")
+    return write
+
+
+def _order_key(opts: dict, rows: DataFrame) -> str | None:
+    return opts.get("order_key") or (
+        "doc_id" if "doc_id" in rows.columns else None)
+
+
+def _http_sink(rows, payload_cols, spec, i, dest):
+    """out_http payload subset (sources/http.py): request-body lines,
+    deterministic (tag, order_key) batches of batch_records records per
+    POST body, flb_pack json/json_lines/json_stream rendering. One
+    exchange keyed by (tag, batch_no)."""
+    from ..sources.http import encode_http_json
+    ho = spec.http_output or {}
+    bodies = encode_http_json(
+        rows, payload_cols, fmt=ho.get("format", "json"),
+        batch_records=int(ho.get("batch_records", 100)),
+        order_col=_order_key(ho, rows), tag_col="tag",
+        ts_col=ho.get("ts_key"),
+        json_date_key=ho.get("json_date_key", "date"),
+        json_date_format=ho.get("json_date_format", "double"))
+    bodies.select(F.col("body").alias("value")).write.mode("overwrite") \
+        .text(dest)
+
+
+def _es_sink(rows, payload_cols, spec, i, dest):
+    """out_es payload subset (functions/serialize.py to_es_bulk): _bulk
+    request bodies, action+source NDJSON pairs in deterministic (index,
+    order_key) batches. Transport (HTTP client, auth, 429 retry) is a
+    connector concern."""
+    from ..functions.serialize import to_es_bulk
+    eo = spec.es_output or {}
+    id_col = eo.get("id_key")
+    if eo.get("generate_id"):
+        # upstream Generate_ID: content-hash _id — idempotent
+        # re-delivery dedupes server-side
+        rows = rows.withColumn("__gen_id", F.md5(F.to_json(
+            F.struct(*[F.col(c) for c in payload_cols]))))
+        id_col = "__gen_id"
+    bodies = to_es_bulk(
+        rows, payload_cols,
+        index=eo.get("index", "fluent-bit"),
+        logstash_format=bool(eo.get("logstash_format")),
+        logstash_prefix=eo.get("logstash_prefix", "logstash"),
+        logstash_dateformat=eo.get("logstash_dateformat", "yyyy.MM.dd"),
+        ts_col=eo.get("ts_key"),
+        time_key=eo.get("time_key", "@timestamp"),
+        id_col=id_col,
+        write_op=eo.get("write_operation", "create"),
+        batch_records=int(eo.get("batch_records", 500)),
+        order_col=_order_key(eo, rows))
+    bodies.select(F.col("body").alias("value")).write.mode("overwrite") \
+        .text(dest)
+
+
+def _loki_sink(rows, payload_cols, spec, i, dest):
+    """out_loki payload subset (functions/serialize.py to_loki_push):
+    one stream object per line (labels + ordered ["<ns>","<line>"]
+    values); a push connector wraps lines into {"streams":[...]}.
+    Without Ts_Key the batch id stands in for flush time
+    (deterministic replay beats wall clock)."""
+    from ..functions.serialize import to_key_value_line, to_loki_push
+    lo = spec.loki_output or {}
+    label_cols: list[str] = []
+    for k, v in (lo.get("labels") or {"job": "fluent-bit"}).items():
+        rows = rows.withColumn(k, F.lit(v))
+        label_cols.append(k)
+    for k in lo.get("label_keys") or []:
+        if k not in label_cols:
+            label_cols.append(k)
+    line_cols = [c for c in payload_cols if c not in label_cols]
+    if lo.get("line_format", "json") == "key_value":
+        rows = to_key_value_line(rows, line_cols, out="__line")
+    else:
+        rows = rows.withColumn("__line", F.to_json(
+            F.struct(*[F.col(c) for c in line_cols])))
+    ts_key = lo.get("ts_key")
+    if ts_key is None:
+        rows = rows.withColumn("__ts", F.timestamp_seconds(F.lit(i)))
+        ts_key = "__ts"
+    streams = to_loki_push(rows, label_cols, "__line", ts_key,
+                           order_col=_order_key(lo, rows))
+    streams.select(F.col("stream_body").alias("value")) \
+        .write.mode("overwrite").text(dest)
+
+
+def _kafka_sink(rows, payload_cols, spec, i, dest):
+    """out_kafka posture (upstream:plugins/out_kafka, librdkafka
+    transport scoped out): records render to JSON (the default Format
+    json), fold into RecordBatch v2 segments per topic per task, and
+    land as .log files a real consumer (or in_kafka here) can replay.
+    Topic = tag, or Topic_Key lifts it from a record column;
+    Message_Key_Field sets the record key; Timestamp_Key stamps
+    CreateTime from a record timestamp column."""
+    from ..sources.kafka_batches import (pack_record_batches,
+                                         write_kafka_segments)
+    ko = spec.kafka_output or {}
+    topic = (F.col(ko["topic_key"]).cast("string")
+             if ko.get("topic_key") else F.col("tag"))
+    kcols = [F.to_json(F.struct(*[F.col(c) for c in payload_cols]))
+             .alias("__body"), topic.alias("__topic")]
+    kf = ko.get("message_key_field")
+    if kf:
+        kcols.append(F.col(kf).cast("string").alias("__key"))
+    ts_key = ko.get("ts_key")
+    if ts_key:
+        kcols.append(F.col(ts_key).alias("__ts"))
+    chunks = pack_record_batches(
+        rows.select(*kcols), topic_col="__topic",
+        ts_col="__ts" if ts_key else None,
+        key_col="__key" if kf else None, value_col="__body")
+    write_kafka_segments(chunks, dest)
+
+
+def _msgpack_sink(rows, payload_cols, spec, i, dest):
+    """out_forward posture: per-task PackedForward chunk files, the
+    bytes fluent-bit's forward consumers and buffer chunks carry
+    (sources/forward.py). The tag frames each chunk; the record map is
+    walked off the frame's own schema (token arrays ride as msgpack int
+    arrays — the per-row invariant survives the sink bytes,
+    tests/test_forward.py)."""
+    from ..sources.forward import (pack_chunks, pack_chunks_arrow,
+                                   record_entries, write_forward_chunks)
+    try:
+        # vectorized fast path (byte-identical; 3-6×) for
+        # string/int/int-array payloads; it rejects other types here,
+        # while the plan is built
+        chunks = pack_chunks_arrow(rows, "tag", payload_cols)
+    except ValueError:
+        chunks = pack_chunks(record_entries(rows, payload_cols),
+                             "tag", "entry")
+    write_forward_chunks(chunks, dest)
+
+
+# writer(spark, good, payload_cols, spec, output_dir, i, sinks) per sink
+# format: every sink of slice i lands under sinks/<sink>/batch_id=<i>
+SINK_WRITERS = {
+    "parquet": _write_parquet,
+    "json_lines": _line_sinks(lambda d, cols, spec: to_json_lines(d, cols)),
+    "csv": _line_sinks(lambda d, cols, spec: to_csv_line(d, cols)),
+    "ltsv": _line_sinks(lambda d, cols, spec: to_ltsv_line(d, cols)),
+    "template": _line_sinks(
+        lambda d, cols, spec: to_template(d, spec.sink_template or "")),
+    "msgpack": _each_sink(_msgpack_sink),
+    "gelf": _line_sinks(_to_gelf),
+    "http": _each_sink(_http_sink),
+    "es": _each_sink(_es_sink),
+    "loki": _each_sink(_loki_sink),
+    "kafka": _each_sink(_kafka_sink),
+}
+
+
+def write_slice(spark: SparkSession, routed: DataFrame, spec: PipelineSpec,
+                output_dir: str, i: int, sinks: list[str]) -> tuple[int, int]:
+    """Write slice ``i`` of a routed frame: every sink, the
+    log_to_metrics side outputs, the DLQ and the per-tag ``_metrics``.
+    The batch job calls it per slice, the streaming fan-out per
+    micro-batch. The frame is persisted once and read by each write.
+    Returns ``(rows_in, rows_dlq)``, counted by an Observation on the
+    DLQ write: one pass over the persisted frame, no extra action."""
+    if spec.sink_format not in SINK_WRITERS:
+        raise ValueError(f"sink format must be {'|'.join(SINK_WRITERS)}, "
+                         f"got {spec.sink_format!r}")
+    routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        good = routed.filter(F.col("dlq_reason").isNull())
+        payload_cols = [c for c in good.columns if c not in
+                        ("sinks", "routes_mask", "dlq_reason", "_lineage")]
+        SINK_WRITERS[spec.sink_format](spark, good, payload_cols, spec,
+                                       output_dir, i, sinks)
+        # [FILTER] log_to_metrics side outputs: the batch analogue of
+        # re-emitting metric records under a new tag — each slice
+        # writes the metric frame per block
+        # (upstream:plugins/filter_log_to_metrics). Derived from the
+        # routed GOOD frame (the filter sits after parsing), optionally
+        # pre-filtered by the block's regex/exclude.
+        for ms in spec.metrics_specs:
+            from ..operators.aggregate import log_to_metrics
+            src = good
+            if ms.get("grep_rules"):
+                src = src.filter(grep_predicate(
+                    ms["grep_rules"], ms.get("grep_op", "AND")))
+            mdf = log_to_metrics(
+                src, ms["mode"], ms.get("labels", []),
+                value_field=ms.get("value_field"),
+                buckets=ms.get("buckets"),
+                gauge_mode=ms.get("gauge_mode", "avg"))
+            mdf.write.mode("overwrite").parquet(
+                f"{output_dir}/metrics_out/{ms['name']}/batch_id={i}")
+        dlq_cols = [c for c in ("doc_id", "tokens", "n_tok", "source",
+                                "decoded", "tag", "dlq_reason",
+                                "_lineage") if c in routed.columns]
+        counts = Observation()
+        (routed.observe(counts, F.count(F.lit(1)).alias("rows_in"),
+                        F.count("dlq_reason").alias("rows_dlq"))
+               .filter(F.col("dlq_reason").isNotNull())
+               .select(*dlq_cols)
+               .write.mode("overwrite")
+               .parquet(f"{output_dir}/dlq/batch_id={i}"))
+        (slice_metrics(routed, spec.salt_buckets)
+         .withColumn("batch_id", F.lit(i))
+         .write.mode("overwrite")
+         .parquet(f"{output_dir}/_metrics/b{i}"))
+        return counts.get["rows_in"], counts.get["rows_dlq"]
+    finally:
+        routed.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# Checkpointed runner
+# ---------------------------------------------------------------------------
+
+
+def _manifest_dir(output_dir: str, run_id: str) -> str:
+    # plain '/' join, NOT os.path.join — output_dir may be a URI
+    # (s3a://bucket/out); the separator is '/' on every Hadoop FS
+    return f"{output_dir}/_checkpoints/{run_id}"
+
+
+def completed_slices(spark: SparkSession, output_dir: str,
+                     run_id: str) -> set[int]:
+    """Slice ids with a committed manifest — via the Hadoop FS API, so
+    resume works against s3a://, hdfs:// and file: alike."""
+    out = set()
+    for f in fsio.list_names(spark, _manifest_dir(output_dir, run_id)):
+        if f.startswith("slice_") and f.endswith(".json"):
+            out.add(int(f[6:-5]))
+    return out
+
+
+def _check_resume_plan(spark: SparkSession, output_dir: str, run_id: str,
+                       done: set[int], slices: list[list[str]]) -> None:
+    """Each committed slice must get the same files now as when it was
+    committed. Slices are cut from the sorted listing by position, so a
+    file added or removed, or another ``n_slices``, moves files between
+    slices: skipping a committed slice would then lose some rows and
+    redo others. Fail before any write instead."""
+    d = _manifest_dir(output_dir, run_id)
+    for i in sorted(done):
+        was = fsio.read_json(spark, f"{d}/slice_{i}.json")["files"]
+        now = slices[i] if i < len(slices) else []
+        if was != now:
+            raise ValueError(
+                f"run {run_id!r}: committed slice {i} had {len(was)} "
+                f"input files, the current listing gives it {len(now)} "
+                f"(added {sorted(set(now) - set(was))}, gone "
+                f"{sorted(set(was) - set(now))}). The input or n_slices "
+                f"changed since the run started; resume with the same "
+                f"ones, or start a new run_id.")
+
+
+def _commit_slice(spark: SparkSession, output_dir: str, run_id: str,
+                  i: int, payload: dict) -> None:
+    d = _manifest_dir(output_dir, run_id)
+    # dot-temp + rename through the path's own filesystem (fsio docstring
+    # covers the per-FS atomicity contract)
+    fsio.write_json_atomic(spark, f"{d}/slice_{i}.json", payload)
+
+
 def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
                  output_dir: str, run_id: str = "run0",
                  n_slices: int = 1,
@@ -640,17 +1106,11 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
     """
     t0 = time.time()
     tune_scan_partitions(spark, input_path)
-    if input_format in ("text", "http"):
-        all_files = sorted(spark.read.text(input_path).inputFiles())
-    elif input_format in ("forward", "syslog", "kafka", "systemd"):
-        all_files = sorted(spark.read.format("binaryFile")
-                           .load(input_path).inputFiles())
-    else:
-        all_files = sorted(spark.read.schema(TOKENS_SCHEMA)
-                           .parquet(input_path).inputFiles())
+    all_files = _list_inputs(spark, input_format, input_path)
     slices = [all_files[i::n_slices] for i in range(n_slices)]
     slices = [s for s in slices if s]
     done = completed_slices(spark, output_dir, run_id)
+    _check_resume_plan(spark, output_dir, run_id, done, slices)
     sinks = sink_names(spec)
     stats = {"slices_total": len(slices), "slices_skipped": len(done),
              "rows_in": 0, "rows_dlq": 0}
@@ -658,419 +1118,14 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
     for i, files in enumerate(slices):
         if i in done:
             continue
-        # lineage is stamped on the RAW scan, where input_file_name()
-        # is the row's own file
-        lineage = F.struct(F.lit(i).alias("batch_id"),
-                           F.input_file_name().alias("input_file"))
-        if input_format == "text":
-            reader = (read_text_ordered(spark, files)
-                      if spec.multiline_parser
-                      else spark.read.text(files))
-            df = reader.withColumn("_lineage", lineage)
-            routed = build_stages_text(spark, df, spec)
-        elif input_format == "http":
-            # in_http file subset (sources/http.py): each line is one
-            # POST body; records explode out, the conventional "log"
-            # field (or the whole record, re-rendered) becomes the raw
-            # line for the shared text stages, and the body-supplied
-            # tag wins unless the config sets an explicit tag_expr
-            # (the in_forward precedent). Malformed bodies keep the raw
-            # body as the line and are FORCED to the DLQ below —
-            # upstream answers 400 and never ingests them; a batch
-            # replay keeps the bytes for the dead-letter audit.
-            import dataclasses
-
-            from ..sources.http import decode_http_json
-            hp = spec.http_input or {}
-            raw = (spark.read.text(files)
-                   .filter(F.length(F.trim("value")) > 0)
-                   .withColumnRenamed("value", "body")
-                   .withColumn("_lineage", lineage))
-            dec = decode_http_json(raw, tag=hp.get("tag", "http.0"),
-                                   tag_key=hp.get("tag_key"),
-                                   keep_cols=("body", "_lineage"))
-            df = dec.select(
-                F.when(F.col("parse_ok"),
-                       F.coalesce(F.col("record")["log"],
-                                  F.to_json("record")))
-                 .otherwise(F.col("body")).alias("value"),
-                F.col("tag").alias("http_tag"),
-                F.col("parse_ok").alias("__http_ok"),
-                "_lineage")
-            hspec = (spec if spec.tag_expr
-                     else dataclasses.replace(spec, tag_expr="http_tag"))
-            routed = (build_stages_text(spark, df, hspec)
-                      .withColumn("parse_ok",
-                                  F.col("parse_ok") & F.col("__http_ok"))
-                      .withColumn("dlq_reason",
-                                  F.when(~F.col("__http_ok"),
-                                         F.lit("parse_fail"))
-                                   .otherwise(F.col("dlq_reason")))
-                      .drop("__http_ok", "http_tag"))
-        elif input_format == "syslog":
-            # in_syslog TCP file subset (sources/syslog_frames.py):
-            # each capture file is one connection's octet-framed byte
-            # stream (RFC 6587); frames walk out sequentially in the
-            # Arrow kernel and each message rides the shared text
-            # stages (the configured [FILTER] parser applies the
-            # syslog preset, upstream in_syslog's Parser property).
-            # Framing errors are FORCED to the DLQ as parse_fail
-            # (the reason class the metrics contract counts — same
-            # posture as malformed http bodies); upstream drops the
-            # connection, a batch replay keeps the bytes for the
-            # dead-letter audit.
-            from ..sources.syslog_frames import decode_octet_frames
-            raw = (spark.read.format("binaryFile").load(files)
-                   .select("path", "content"))
-            dec = decode_octet_frames(raw, "content", group_col="path")
-            df = dec.select(
-                F.col("msg").alias("value"),
-                F.col("group").alias("_input_file"),
-                F.col("frame_ok").alias("__frame_ok"),
-                F.struct(F.lit(i).alias("batch_id"),
-                         F.col("group").alias("input_file"))
-                 .alias("_lineage"))
-            routed = (build_stages_text(spark, df, spec)
-                      .withColumn("parse_ok",
-                                  F.col("parse_ok") & F.col("__frame_ok"))
-                      .withColumn("dlq_reason",
-                                  F.when(~F.col("__frame_ok"),
-                                         F.lit("parse_fail"))
-                                   .otherwise(F.col("dlq_reason")))
-                      .drop("__frame_ok"))
-        elif input_format == "kafka":
-            # in_kafka file subset (sources/kafka_batches.py): each
-            # capture file is a concatenation of RecordBatch v2
-            # batches; record values ride the shared text stages and
-            # the topic becomes the tag by default (upstream in_kafka
-            # tags by topic) — an explicit tag_expr overrides. A
-            # CRC-failed batch decodes to one sentinel row that is
-            # FORCED to the DLQ as parse_fail (upstream's consumer
-            # aborts the fetch; a batch replay keeps the evidence).
-            import dataclasses
-
-            from ..sources.kafka_batches import read_kafka_segments
-            kdf = read_kafka_segments(spark, files, with_path=True)
-            df = kdf.select(
-                F.coalesce(F.col("value").cast("string"), F.lit(""))
-                 .alias("value"),
-                F.col("topic").alias("kafka_tag"),
-                F.col("crc_ok").alias("__crc_ok"),
-                F.col("_input_file"),
-                F.struct(F.lit(i).alias("batch_id"),
-                         F.col("_input_file").alias("input_file"))
-                 .alias("_lineage"))
-            kspec = (spec if spec.tag_expr
-                     else dataclasses.replace(spec,
-                                              tag_expr="kafka_tag"))
-            routed = (build_stages_text(spark, df, kspec)
-                      .withColumn("parse_ok",
-                                  F.col("parse_ok") & F.col("__crc_ok"))
-                      .withColumn("dlq_reason",
-                                  F.when(~F.col("__crc_ok"),
-                                         F.lit("parse_fail"))
-                                   .otherwise(F.col("dlq_reason")))
-                      .drop("__crc_ok", "kafka_tag"))
-        elif input_format == "systemd":
-            # in_systemd file subset (sources/journal_export.py):
-            # each capture file is a Journal Export Format stream
-            # (journalctl -o export / systemd-journal-remote). The
-            # MESSAGE field rides the shared text stages; the tag
-            # derives from _SYSTEMD_UNIT (systemd.<unit>) unless the
-            # config sets tag_expr. Malformed entries are FORCED to
-            # the DLQ as parse_fail with their partial fields kept.
-            import dataclasses
-
-            from ..sources.journal_export import (decode_export,
-                                                  with_journal_tag)
-            raw = (spark.read.format("binaryFile").load(files)
-                   .select("path", "content"))
-            dec = with_journal_tag(
-                decode_export(raw, "content", passthrough=["path"]))
-            df = dec.select(
-                F.coalesce(F.element_at("fields", "MESSAGE"),
-                           F.lit("")).alias("value"),
-                F.col("tag").alias("journal_tag"),
-                F.col("entry_ok").alias("__entry_ok"),
-                F.col("path").alias("_input_file"),
-                F.struct(F.lit(i).alias("batch_id"),
-                         F.col("path").alias("input_file"))
-                 .alias("_lineage"))
-            jspec = (spec if spec.tag_expr
-                     else dataclasses.replace(spec,
-                                              tag_expr="journal_tag"))
-            routed = (build_stages_text(spark, df, jspec)
-                      .withColumn("parse_ok",
-                                  F.col("parse_ok")
-                                  & F.col("__entry_ok"))
-                      .withColumn("dlq_reason",
-                                  F.when(~F.col("__entry_ok"),
-                                         F.lit("parse_fail"))
-                                   .otherwise(F.col("dlq_reason")))
-                      .drop("__entry_ok", "journal_tag"))
-        elif input_format == "forward":
-            # in_forward file subset: decode another pipeline's (or
-            # fluent-bit sender's) chunk files; the transmitted tag is
-            # PRESERVED by default (in_forward keeps the sender's tag,
-            # unlike tail's tag-from-path) — an explicit tag_expr still
-            # overrides. Lineage rides the decoder's path passthrough
-            # (input_file_name() dies at the Python boundary).
-            import dataclasses
-
-            from ..sources.forward import TOKEN_FIELDS, read_forward_files
-            fdf = read_forward_files(spark, files, TOKEN_FIELDS,
-                                     with_path=True)
-            df = (fdf.withColumnRenamed("tag", "fwd_tag")
-                  .withColumn("_lineage", F.struct(
-                      F.lit(i).alias("batch_id"),
-                      F.col("_input_file").alias("input_file")))
-                  .drop("_input_file", "sec", "nsec"))
-            fspec = (spec if spec.tag_expr
-                     else dataclasses.replace(spec, tag_expr="fwd_tag"))
-            routed = build_stages(spark, df, fspec).drop("fwd_tag")
-        else:
-            df = (spark.read.schema(TOKENS_SCHEMA).parquet(*files)
-                  .withColumn("_lineage", lineage))
-            routed = build_stages(spark, df, spec)
-        routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            good = routed.filter(F.col("dlq_reason").isNull())
-            if spec.sink_format == "http":
-                # out_http payload subset (sources/http.py): each sink
-                # dir lands request-body lines — deterministic
-                # (tag, order_key) batches of batch_records records per
-                # POST body, flb_pack json/json_lines/json_stream
-                # rendering. One exchange keyed by (tag, batch_no).
-                from ..sources.http import encode_http_json
-                ho = spec.http_output or {}
-                payload_cols = [c for c in good.columns
-                                if c not in ("sinks", "routes_mask",
-                                             "dlq_reason", "_lineage",
-                                             "tag")]
-                order_key = ho.get("order_key") or (
-                    "doc_id" if "doc_id" in good.columns else None)
-                for s in sinks:
-                    bodies = encode_http_json(
-                        good.filter(F.array_contains("sinks", s)),
-                        payload_cols, fmt=ho.get("format", "json"),
-                        batch_records=int(ho.get("batch_records", 100)),
-                        order_col=order_key, tag_col="tag",
-                        ts_col=ho.get("ts_key"),
-                        json_date_key=ho.get("json_date_key", "date"),
-                        json_date_format=ho.get("json_date_format",
-                                                "double"))
-                    (bodies.select(F.col("body").alias("value"))
-                           .write.mode("overwrite")
-                           .text(f"{output_dir}/sinks/{s}/batch_id={i}"))
-            elif spec.sink_format == "es":
-                # out_es payload subset (functions/serialize.py
-                # to_es_bulk): each sink dir lands _bulk request
-                # bodies — action+source NDJSON pairs in deterministic
-                # (index, order_key) batches. Transport (HTTP client,
-                # auth, 429 retry) is a connector concern.
-                from ..functions.serialize import to_es_bulk
-                eo = spec.es_output or {}
-                payload_cols = [c for c in good.columns
-                                if c not in ("sinks", "routes_mask",
-                                             "dlq_reason", "_lineage",
-                                             "tag")]
-                order_key = eo.get("order_key") or (
-                    "doc_id" if "doc_id" in good.columns else None)
-                for s in sinks:
-                    sel = good.filter(F.array_contains("sinks", s))
-                    if eo.get("generate_id"):
-                        # upstream Generate_ID: content-hash _id —
-                        # idempotent re-delivery dedupes server-side
-                        sel = sel.withColumn("__gen_id", F.md5(
-                            F.to_json(F.struct(*[F.col(c) for c
-                                                 in payload_cols]))))
-                        id_col = "__gen_id"
-                    else:
-                        id_col = eo.get("id_key")
-                    bodies = to_es_bulk(
-                        sel, payload_cols,
-                        index=eo.get("index", "fluent-bit"),
-                        logstash_format=bool(eo.get("logstash_format")),
-                        logstash_prefix=eo.get("logstash_prefix",
-                                               "logstash"),
-                        logstash_dateformat=eo.get("logstash_dateformat",
-                                                   "yyyy.MM.dd"),
-                        ts_col=eo.get("ts_key"),
-                        time_key=eo.get("time_key", "@timestamp"),
-                        id_col=id_col,
-                        write_op=eo.get("write_operation", "create"),
-                        batch_records=int(eo.get("batch_records", 500)),
-                        order_col=order_key)
-                    (bodies.select(F.col("body").alias("value"))
-                           .write.mode("overwrite")
-                           .text(f"{output_dir}/sinks/{s}/batch_id={i}"))
-            elif spec.sink_format == "loki":
-                # out_loki payload subset (functions/serialize.py
-                # to_loki_push): each sink dir lands one stream object
-                # per line (labels + ordered ["<ns>","<line>"] values);
-                # a push connector wraps lines into {"streams":[...]}.
-                # Without Ts_Key the batch id stands in for flush time
-                # (deterministic replay beats wall clock).
-                from ..functions.serialize import (to_key_value_line,
-                                                   to_loki_push)
-                lo = spec.loki_output or {}
-                base_payload = [c for c in good.columns
-                                if c not in ("sinks", "routes_mask",
-                                             "dlq_reason", "_lineage",
-                                             "tag")]
-                for s in sinks:
-                    sel = good.filter(F.array_contains("sinks", s))
-                    label_cols: list[str] = []
-                    for k, v in (lo.get("labels")
-                                 or {"job": "fluent-bit"}).items():
-                        sel = sel.withColumn(k, F.lit(v))
-                        label_cols.append(k)
-                    for k in lo.get("label_keys") or []:
-                        if k not in label_cols:
-                            label_cols.append(k)
-                    line_cols = [c for c in base_payload
-                                 if c not in label_cols]
-                    if lo.get("line_format", "json") == "key_value":
-                        sel = to_key_value_line(sel, line_cols,
-                                                out="__line")
-                    else:
-                        sel = sel.withColumn("__line", F.to_json(
-                            F.struct(*[F.col(c) for c in line_cols])))
-                    ts_key = lo.get("ts_key")
-                    if ts_key is None:
-                        sel = sel.withColumn(
-                            "__ts", F.timestamp_seconds(F.lit(i)))
-                        ts_key = "__ts"
-                    order_key = lo.get("order_key") or (
-                        "doc_id" if "doc_id" in sel.columns else None)
-                    streams = to_loki_push(sel, label_cols, "__line",
-                                           ts_key, order_col=order_key)
-                    (streams.select(F.col("stream_body").alias("value"))
-                            .write.mode("overwrite")
-                            .text(f"{output_dir}/sinks/{s}/batch_id={i}"))
-            elif spec.sink_format == "kafka":
-                # out_kafka posture (upstream:plugins/out_kafka with
-                # the librdkafka transport scoped out): records render
-                # to JSON (the default Format json), fold into
-                # RecordBatch v2 segments per topic per task, and land
-                # as .log files a real consumer (or in_kafka here)
-                # can replay. Topic = tag, or Topic_Key lifts it from
-                # a record column; Message_Key_Field sets the record
-                # key; Timestamp_Key stamps CreateTime from a record
-                # timestamp column.
-                from ..sources.kafka_batches import (
-                    pack_record_batches, write_kafka_segments)
-                ko = spec.kafka_output or {}
-                payload_cols = [c for c in good.columns
-                                if c not in ("sinks", "routes_mask",
-                                             "dlq_reason", "_lineage",
-                                             "tag")]
-                topic = (F.col(ko["topic_key"]).cast("string")
-                         if ko.get("topic_key") else F.col("tag"))
-                kcols = [F.to_json(F.struct(*[F.col(c)
-                                              for c in payload_cols]))
-                         .alias("__body"),
-                         topic.alias("__topic"), F.col("sinks")]
-                kf = ko.get("message_key_field")
-                if kf:
-                    kcols.append(F.col(kf).cast("string")
-                                 .alias("__key"))
-                ts_key = ko.get("ts_key")
-                if ts_key:
-                    kcols.append(F.col(ts_key).alias("__ts"))
-                body_all = good.select(*kcols)
-                for s in sinks:
-                    sel = body_all.filter(
-                        F.array_contains("sinks", s))
-                    chunks = pack_record_batches(
-                        sel, topic_col="__topic",
-                        ts_col="__ts" if ts_key else None,
-                        key_col="__key" if kf else None,
-                        value_col="__body")
-                    write_kafka_segments(
-                        chunks, f"{output_dir}/sinks/{s}/batch_id={i}")
-            elif spec.sink_format == "msgpack":
-                # out_forward posture: per-task PackedForward chunk
-                # files — the bytes fluent-bit's forward consumers and
-                # buffer chunks carry (sources/forward.py). The tag
-                # column frames each chunk; the record map is walked
-                # off the frame's own schema (token arrays ride as
-                # msgpack int arrays — the per-row invariant survives
-                # the sink bytes, tests/test_forward.py).
-                from ..sources.forward import (pack_chunks,
-                                               pack_chunks_arrow,
-                                               record_entries,
-                                               write_forward_chunks)
-                payload_cols = [c for c in good.columns
-                                if c not in ("sinks", "routes_mask",
-                                             "dlq_reason", "_lineage",
-                                             "tag")]
-                try:
-                    # vectorized fast path (byte-identical; 3-6×) for
-                    # string/int/int-array payloads — probe types once
-                    pack_chunks_arrow(good.limit(0), "tag", payload_cols)
-                    fast = True
-                except ValueError:
-                    fast = False
-                    ent_all = record_entries(good, payload_cols)
-                for s in sinks:
-                    sel = good.filter(F.array_contains("sinks", s))
-                    if fast:
-                        chunks = pack_chunks_arrow(sel, "tag",
-                                                   payload_cols)
-                    else:
-                        chunks = pack_chunks(
-                            ent_all.filter(
-                                F.array_contains("sinks", s)),
-                            "tag", "entry")
-                    write_forward_chunks(
-                        chunks, f"{output_dir}/sinks/{s}/batch_id={i}")
-            else:
-                _write_sinks(spark, good, spec, output_dir, i, sinks)
-            # [FILTER] log_to_metrics side outputs: the batch analogue
-            # of re-emitting metric records under a new tag — each
-            # slice writes the metric frame per block
-            # (upstream:plugins/filter_log_to_metrics). Derived from
-            # the routed GOOD frame (the filter sits after parsing),
-            # optionally pre-filtered by the block's regex/exclude.
-            for ms in spec.metrics_specs:
-                from ..operators.aggregate import log_to_metrics
-                src = good
-                if ms.get("grep_rules"):
-                    src = src.filter(grep_predicate(
-                        ms["grep_rules"], ms.get("grep_op", "AND")))
-                mdf = log_to_metrics(
-                    src, ms["mode"], ms.get("labels", []),
-                    value_field=ms.get("value_field"),
-                    buckets=ms.get("buckets"),
-                    gauge_mode=ms.get("gauge_mode", "avg"))
-                mdf.write.mode("overwrite").parquet(
-                    f"{output_dir}/metrics_out/{ms['name']}/"
-                    f"batch_id={i}")
-            dlq_cols = [c for c in ("doc_id", "tokens", "n_tok", "source",
-                                    "decoded", "tag", "dlq_reason",
-                                    "_lineage") if c in routed.columns]
-            # the slice totals ride the DLQ write as an Observation: one
-            # pass over the persisted frame, no extra action
-            counts = Observation()
-            (routed.observe(counts, F.count(F.lit(1)).alias("rows_in"),
-                            F.count("dlq_reason").alias("rows_dlq"))
-                   .filter(F.col("dlq_reason").isNotNull())
-                   .select(*dlq_cols)
-                   .write.mode("overwrite")
-                   .parquet(f"{output_dir}/dlq/batch_id={i}"))
-            (slice_metrics(routed, spec.salt_buckets)
-             .withColumn("batch_id", F.lit(i))
-             .write.mode("overwrite")
-             .parquet(f"{output_dir}/_metrics/b{i}"))
-            rows_in, rows_dlq = counts.get["rows_in"], counts.get["rows_dlq"]
-            stats["rows_in"] += rows_in
-            stats["rows_dlq"] += rows_dlq
-            _commit_slice(spark, output_dir, run_id, i, {
-                "files": files, "rows_in": rows_in, "rows_dlq": rows_dlq,
-                "sinks": sinks, "ts": time.time()})
-        finally:
-            routed.unpersist()
+        routed = read_routed(spark, spec, input_format, files, i)
+        rows_in, rows_dlq = write_slice(spark, routed, spec, output_dir,
+                                        i, sinks)
+        stats["rows_in"] += rows_in
+        stats["rows_dlq"] += rows_dlq
+        _commit_slice(spark, output_dir, run_id, i, {
+            "files": files, "rows_in": rows_in, "rows_dlq": rows_dlq,
+            "sinks": sinks, "ts": time.time()})
         if fail_after_slice is not None and i >= fail_after_slice:
             raise RuntimeError(f"injected failure after slice {i}")
     stats["wall_sec"] = time.time() - t0

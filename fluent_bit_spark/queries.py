@@ -5423,7 +5423,7 @@ est AS (
   SELECT source, v_zero,
          (CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE)
             + CAST(1.079 AS DOUBLE) / 1024))
-           * 1048576 * power(CAST(2.0 AS DOUBLE), 52) / s AS raw
+           * 1048576 * power(CAST(2.0 AS DOUBLE), 51) / s AS raw
   FROM agg),
 fin AS (
   SELECT source, v_zero,

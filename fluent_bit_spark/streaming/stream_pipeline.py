@@ -17,8 +17,8 @@ live-tail re-expression on Structured Streaming:
   reference (fluent-bit aggregates whatever sits in the buffer at flush;
   it has no late-data story, SURVEY.md §2.7);
 - multi-sink fan-out runs in ``foreachBatch`` (the flush-timer analogue):
-  each micro-batch is persisted once and written to N sink dirs + DLQ,
-  exactly the batch fan-out applied per micro-batch;
+  each micro-batch goes through the batch job's slice writer
+  (``plans.pipeline.write_slice``) and lands in the same layout;
 - ``throttle_stateful`` implements filter_throttle's sliding rate limit
   (upstream:plugins/filter_throttle/throttle.c) as a genuinely stateful
   per-tag operator with ``applyInPandasWithState`` — state is the
@@ -41,10 +41,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.storagelevel import StorageLevel
 
 from ..plans.pipeline import PipelineSpec, TOKENS_SCHEMA, build_stages, \
-    sink_names
+    sink_names, write_slice
 
 # ---------------------------------------------------------------------------
 # Source
@@ -127,33 +126,19 @@ def windowed_tag_counts(routed: DataFrame, ts_col: str = "event_ts",
 
 
 def foreach_batch_fanout(spec: PipelineSpec, output_dir: str):
-    """Per-micro-batch multi-sink writer: persist once, N filtered writes
-    + DLQ + per-epoch lineage metrics, append mode, batch_id in the path
-    for idempotent re-runs (Spark re-delivers a failed epoch; same
-    batch_id → same dirs, overwrite makes the retry exactly-once)."""
-    from ..plans.pipeline import slice_metrics
+    """Per-micro-batch writer: the batch job's slice body
+    (``plans.pipeline.write_slice``), with the micro-batch id as the
+    slice id. Output lands in the batch layout: every sink in the
+    spec's ``sink_format`` under ``sinks/<sink>/batch_id=<id>`` (rows
+    partitioned by ``sink_partition_by``), ``dlq/batch_id=<id>``,
+    ``_metrics/b<id>`` and ``metrics_out/<name>/batch_id=<id>``. Spark
+    re-delivers a failed micro-batch with the same id, and the rewrite
+    replaces that id's directories, so the retry is exactly-once."""
     sinks = sink_names(spec)
 
     def write_batch(routed: DataFrame, batch_id: int) -> None:
-        routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            good = routed.filter(F.col("dlq_reason").isNull())
-            for s in sinks:
-                (good.filter(F.array_contains("sinks", s))
-                     .write.mode("overwrite")
-                     .parquet(os.path.join(output_dir, "sinks", s,
-                                           f"epoch={batch_id}")))
-            (routed.filter(F.col("dlq_reason").isNotNull())
-                   .write.mode("overwrite")
-                   .parquet(os.path.join(output_dir, "dlq",
-                                         f"epoch={batch_id}")))
-            (slice_metrics(routed, spec.salt_buckets)
-             .withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite")
-             .parquet(os.path.join(output_dir, "_metrics",
-                                   f"e{batch_id}")))
-        finally:
-            routed.unpersist()
+        write_slice(routed.sparkSession, routed, spec, output_dir,
+                    batch_id, sinks)
 
     return write_batch
 

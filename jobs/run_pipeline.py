@@ -22,6 +22,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
+    from fluent_bit_spark.plans.pipeline import SOURCES
+
     ap = argparse.ArgumentParser(description="fluent_bit_spark pipeline")
     ap.add_argument("--input", required=True, help="tokens parquet path")
     ap.add_argument("--output", required=True, help="output dir")
@@ -30,9 +32,7 @@ def main() -> int:
     ap.add_argument("--sink-format", choices=["parquet", "json_lines"],
                     default="parquet",
                     help="sink payload format (out_file Format analogue)")
-    ap.add_argument("--input-format",
-                    choices=["tokens", "text", "forward", "http",
-                             "syslog", "kafka", "systemd"],
+    ap.add_argument("--input-format", choices=list(SOURCES),
                     default="tokens",
                     help="tokens parquet (north-star schema), raw "
                          ".log text files (in_tail posture), "
@@ -99,102 +99,9 @@ def main() -> int:
     # engine's tagged record stream), one parquet dir per task.
     tasks = (io.get("stream_tasks") or []) if args.config else []
     if tasks:
-        from fluent_bit_spark.plans.pipeline import (
-            TOKENS_SCHEMA, build_stages, build_stages_text,
-            read_text_ordered,
-        )
+        from fluent_bit_spark.plans.pipeline import read_tagged
         from fluent_bit_spark.plans.sql_shim import StreamProcessor
-        if input_format == "text":
-            rdr = (read_text_ordered(spark, args.input)
-                   if spec.multiline_parser
-                   else spark.read.text(args.input))
-            tagged = build_stages_text(spark, rdr, spec)
-        elif input_format == "forward":
-            import dataclasses
-
-            from fluent_bit_spark.sources.forward import (
-                TOKEN_FIELDS, read_forward_files)
-            fdf = (read_forward_files(spark, args.input, TOKEN_FIELDS)
-                   .withColumnRenamed("tag", "fwd_tag")
-                   .drop("sec", "nsec"))
-            fspec = (spec if spec.tag_expr else
-                     dataclasses.replace(spec, tag_expr="fwd_tag"))
-            tagged = build_stages(spark, fdf, fspec)
-        elif input_format == "syslog":
-            from pyspark.sql import functions as F
-
-            from fluent_bit_spark.sources.syslog_frames import (
-                decode_octet_frames)
-            raw = (spark.read.format("binaryFile").load(args.input)
-                   .select("path", "content"))
-            dec = decode_octet_frames(raw, "content",
-                                      group_col="path")
-            tagged = build_stages_text(
-                spark,
-                dec.filter("frame_ok").select(
-                    F.col("msg").alias("value"),
-                    F.col("group").alias("_input_file")),
-                spec)
-        elif input_format == "kafka":
-            import dataclasses
-
-            from pyspark.sql import functions as F
-
-            from fluent_bit_spark.sources.kafka_batches import (
-                read_kafka_segments)
-            kdf = read_kafka_segments(spark, args.input)
-            kspec = (spec if spec.tag_expr else
-                     dataclasses.replace(spec, tag_expr="kafka_tag"))
-            tagged = build_stages_text(
-                spark,
-                kdf.filter("crc_ok").select(
-                    F.col("value").cast("string").alias("value"),
-                    F.col("topic").alias("kafka_tag"),
-                    F.lit("").alias("_input_file")),
-                kspec)
-        elif input_format == "systemd":
-            import dataclasses
-
-            from pyspark.sql import functions as F
-
-            from fluent_bit_spark.sources.journal_export import (
-                decode_export, with_journal_tag)
-            raw = (spark.read.format("binaryFile").load(args.input)
-                   .select("path", "content"))
-            dec = with_journal_tag(
-                decode_export(raw, "content", passthrough=["path"]))
-            jspec = (spec if spec.tag_expr else
-                     dataclasses.replace(spec, tag_expr="journal_tag"))
-            tagged = build_stages_text(
-                spark,
-                dec.filter("entry_ok").select(
-                    F.coalesce(F.element_at("fields", "MESSAGE"),
-                               F.lit("")).alias("value"),
-                    F.col("tag").alias("journal_tag"),
-                    F.col("path").alias("_input_file")),
-                jspec)
-        elif input_format == "http":
-            import dataclasses
-
-            from pyspark.sql import functions as F
-
-            from fluent_bit_spark.sources.http import read_http_json
-            hp = spec.http_input or {}
-            dec = read_http_json(spark, args.input,
-                                 tag=hp.get("tag", "http.0"),
-                                 tag_key=hp.get("tag_key"))
-            hdf = dec.filter("parse_ok").select(
-                F.coalesce(F.col("record")["log"],
-                           F.to_json("record")).alias("value"),
-                F.col("tag").alias("http_tag"))
-            hspec = (spec if spec.tag_expr else
-                     dataclasses.replace(spec, tag_expr="http_tag"))
-            tagged = build_stages_text(spark, hdf, hspec)
-        else:
-            tagged = build_stages(
-                spark,
-                spark.read.schema(TOKENS_SCHEMA).parquet(args.input),
-                spec)
+        tagged = read_tagged(spark, spec, input_format, args.input)
         sp = StreamProcessor(spark, tagged=tagged, tag_col="tag")
         for name, sql in tasks:
             (sp.sql(sql).write.mode("overwrite")

@@ -384,6 +384,37 @@ def test_hll_estimate_accuracy_and_merge(spark):
     assert merged["est_distinct"] == whole["est_distinct"]
 
 
+def test_hll_distinct_query_matches_duckdb_oracle(spark, tmp_path):
+    """The ``hll_distinct`` query and its DuckDB oracle agree row for
+    row on both estimator branches: source ``big`` has 6000 distinct
+    doc_ids (raw estimate, past 2.5·m = 2560), ``small`` has 300
+    (linear counting)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fluent_bit_spark.queries import ORACLE_SQL, QUERIES
+    ids = [f"d{i}" for i in range(6300)]
+    pq.write_table(pa.table({
+        "doc_id": ids + ids[:50],             # duplicates count once
+        "source": ["big"] * 6000 + ["small"] * 300 + ["big"] * 50}),
+        str(tmp_path / "documents.parquet"))
+    cols = ["source", "est_distinct", "v_zero", "exact_distinct",
+            "abs_err_permille"]
+    got = sorted(tuple(r[c] for c in cols) for r in
+                 QUERIES["hll_distinct"](spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{tmp_path / 'documents.parquet'}')")
+    want = sorted(tuple(r) for r in con.execute(
+        f"SELECT {', '.join(cols)} FROM ({ORACLE_SQL['hll_distinct']})"
+    ).fetchall())
+    assert got == want
+    est = {r[0]: r[1] for r in got}
+    assert abs(est["big"] - 6000) / 6000 < 5 * 1.04 / (1024 ** 0.5)
+    assert {r[0]: r[3] for r in got} == {"big": 6000, "small": 300}
+
+
 def test_hll_rejects_bad_p(spark):
     from fluent_bit_spark.operators.aggregate import hll_register_table
     df = spark.createDataFrame([("a",)], "k string")

@@ -138,6 +138,51 @@ def test_resume_is_idempotent_and_skips_done(spark, fixture_paths,
         assert a == b, sink
 
 
+def test_resume_fails_when_the_file_plan_changed(spark, fixture_paths,
+                                                tmp_path):
+    """Slices are cut from the sorted file listing by position, so a
+    file added before a resume, or another n_slices, would hand a
+    committed slice's files to other slices: some rows lost, others
+    written twice. The resume fails before any write instead, naming
+    the slice; an unchanged resume still skips the committed slice."""
+    import pyarrow.parquet as pq
+    tok = pq.read_table(fixture_paths["tokens"]).slice(0, 400)
+    inp = tmp_path / "inp"
+    inp.mkdir()
+    for k, name in enumerate("acde"):
+        pq.write_table(tok.slice(100 * k, 100), str(inp / f"{name}.parquet"))
+    spec = _spec(fixture_paths)
+    out = str(tmp_path / "o")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, spec, str(inp), out, n_slices=2,
+                     fail_after_slice=0)
+    with pytest.raises(ValueError, match="slice 0"):
+        run_pipeline(spark, spec, str(inp), out, n_slices=3)
+    pq.write_table(tok.slice(0, 10), str(inp / "b.parquet"))
+    with pytest.raises(ValueError, match="slice 0"):
+        run_pipeline(spark, spec, str(inp), out, n_slices=2)
+    assert not os.path.exists(f"{out}/sinks/sink_web/batch_id=1")
+    os.remove(inp / "b.parquet")
+    stats = run_pipeline(spark, spec, str(inp), out, n_slices=2)
+    assert stats["slices_skipped"] == 1 and stats["slices_total"] == 2
+
+
+def test_unknown_formats_fail_before_any_write(spark, fixture_paths,
+                                              tmp_path):
+    """An input or sink format outside the adapter and writer tables is
+    an error, not a silent fall-back to the tokens reader or the
+    parquet writer."""
+    spec = _spec(fixture_paths)
+    out = str(tmp_path / "o")
+    with pytest.raises(ValueError, match="input format must be tokens"):
+        run_pipeline(spark, spec, fixture_paths["tokens"], out,
+                     input_format="nope")
+    spec.sink_format = "nope"
+    with pytest.raises(ValueError, match="sink format must be parquet"):
+        run_pipeline(spark, spec, fixture_paths["tokens"], out)
+    assert not os.path.exists(out)
+
+
 @pytest.mark.parametrize("sink_format", ["parquet", "json_lines"])
 def test_sinks_match_oracle(spark, fixture_paths, golden, tmp_path,
                             sink_format):
@@ -235,6 +280,48 @@ def test_empty_sink_slice_replaces_stale_attempt(spark, fixture_paths,
         == golden["sinks"]["sink_src1"]["pairs"]
     with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
         read_sink(spark, out, "sink_none")
+
+
+def _text_input(fixture_paths, tmp_path, n_files: int = 2) -> str:
+    """The first 2000 fixture rows decoded to lines, as ``n_files``
+    .log files (one slice each)."""
+    import pyarrow.parquet as pq
+
+    from tests.oracle_pandas import decode_row
+    tok = pq.read_table(fixture_paths["tokens"]).slice(0, 2000)
+    lines = [decode_row(t, fx.vocab()) for t in tok["tokens"].to_pylist()]
+    d = tmp_path / "logs"
+    d.mkdir()
+    for k in range(n_files):
+        (d / f"part{k}.log").write_text("\n".join(lines[k::n_files]) + "\n")
+    return str(d)
+
+
+@pytest.mark.parametrize("input_format,sink_format,jobs_per_slice", [
+    ("tokens", "parquet", 11),
+    ("text", "json_lines", 11)])
+def test_spark_jobs_per_slice_do_not_grow(spark, fixture_paths, tmp_path,
+                                          input_format, sink_format,
+                                          jobs_per_slice):
+    """A two-slice run starts no more Spark jobs per slice than the
+    counts written here, measured when the slice body was last
+    changed. An extra action in the slice body fails this test."""
+    inp = (_split_input(spark, fixture_paths, tmp_path)
+           if input_format == "tokens"
+           else _text_input(fixture_paths, tmp_path))
+    spec = _spec(fixture_paths)
+    spec.sink_format = sink_format
+    sc = spark.sparkContext
+    group = f"jobs-per-slice-{input_format}"
+    sc.setJobGroup(group, group)
+    try:
+        stats = run_pipeline(spark, spec, inp, str(tmp_path / "o"),
+                             n_slices=2, input_format=input_format)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats["slices_total"] == 2
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) / 2 <= jobs_per_slice
 
 
 def test_every_row_lands_somewhere(spark, fixture_paths):
@@ -636,12 +723,101 @@ def test_syslog_input_end_to_end(spark, tmp_path):
             base.format(m="    Mode udp\n")), vocab=["x"])
 
 
-def test_run_pipeline_cli_syslog_stream_task(spark, tmp_path,
-                                             monkeypatch):
-    """jobs/run_pipeline.py CLI with --config over a syslog capture
-    dir: the [STREAM_TASK] path decodes frames through the syslog
-    reader (it must not fall through to the tokens parquet reader) and
-    the task output matches a direct count over the decoded frames."""
+def _logfmt(prefix: str, n: int, level: str = "info") -> list[str]:
+    return [f'level={level} msg="{prefix}{i}" code=200 dur_ms={i}'
+            for i in range(n)]
+
+
+def _octet_frames(msgs: list[str]) -> bytes:
+    return b"".join(str(len(m.encode())).encode() + b" " + m.encode()
+                    for m in msgs)
+
+
+def _stream_task_input(spark, fmt: str, d) -> tuple[str, dict, int]:
+    """Write a small ``fmt`` input under ``d``. Returns the [INPUT]
+    section, the per-tag counts of its decoder-ok records, and the
+    number of decoder-rejected records (one where the format has a
+    decoder that can reject)."""
+    d.mkdir()
+    a, b = _logfmt("a", 3), _logfmt("b", 2, "error")
+    if fmt == "tokens":
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        rows = [(f"doc{i}", src, line) for i, (src, line) in
+                enumerate([("srcA", x) for x in a]
+                          + [("srcB", x) for x in b])]
+        pq.write_table(pa.table({
+            "doc_id": [r[0] for r in rows],
+            "tokens": pa.array([[ord(c) for c in r[2]] for r in rows],
+                               pa.list_(pa.int32())),
+            "n_tok": pa.array([len(r[2]) for r in rows], pa.int32()),
+            "source": [r[1] for r in rows]}), str(d / "t.parquet"))
+        return ("[INPUT]\n    Name tail\n    Format tokens\n",
+                {"app.srcA.logfmt": 3, "app.srcB.logfmt": 2}, 0)
+    if fmt == "text":
+        (d / "web.log").write_text("\n".join(a) + "\n")
+        (d / "db.log").write_text("\n".join(b) + "\n")
+        return ("[INPUT]\n    Name tail\n    Format text\n",
+                {"app.web.logfmt": 3, "app.db.logfmt": 2}, 0)
+    if fmt == "forward":
+        from fluent_bit_spark.sources import forward as fwd
+        rows = [(f"doc{i}", [ord(c) for c in line], len(line), src, tag)
+                for i, (src, tag, line) in enumerate(
+                    [("srcA", "fw.a", x) for x in a]
+                    + [("srcB", "fw.b", x) for x in b])]
+        df = spark.createDataFrame(
+            rows, "doc_id string, tokens array<int>, n_tok int, "
+                  "source string, tag string")
+        fwd.write_forward_chunks(
+            fwd.pack_chunks_arrow(df, "tag", ["doc_id", "tokens", "n_tok",
+                                              "source"]), str(d))
+        return ("[INPUT]\n    Name forward\n",
+                {"fw.a": 3, "fw.b": 2}, 0)
+    if fmt == "syslog":
+        (d / "conn1.log").write_bytes(_octet_frames(a))
+        # a truncated length head: one framing error
+        (d / "conn2.log").write_bytes(_octet_frames(b) + b"junk tail")
+        return ("[INPUT]\n    Name syslog\n",
+                {"app.conn1.logfmt": 3, "app.conn2.logfmt": 2}, 1)
+    if fmt == "kafka":
+        from fluent_bit_spark.functions import kafka_codec as kc
+        mk = lambda msgs: kc.encode_batch(
+            0, [(1700000000000 + i, None, m.encode(), [])
+                for i, m in enumerate(msgs)])
+        (d / "web-aaaaaaaaaaaa.log").write_bytes(mk(a))
+        corrupt = bytearray(mk(["level=info msg=x code=200 dur_ms=1"]))
+        corrupt[-1] ^= 0xFF
+        (d / "app-bbbbbbbbbbbb.log").write_bytes(mk(b) + bytes(corrupt))
+        return ("[INPUT]\n    Name kafka\n", {"web": 3, "app": 2}, 1)
+    if fmt == "systemd":
+        from fluent_bit_spark.sources.journal_export import py_encode_entry
+        ent = lambda unit, msg: py_encode_entry([
+            ("MESSAGE", msg), ("PRIORITY", "6"), ("_SYSTEMD_UNIT", unit),
+            ("__REALTIME_TIMESTAMP", "1700000000123456")])
+        buf = b"".join([ent("nginx.service", m) for m in a]
+                       + [ent("db.service", m) for m in b])
+        (d / "host1.export").write_bytes(buf + b"???not a field\n\n")
+        return ("[INPUT]\n    Name systemd\n",
+                {"systemd.nginx.service": 3, "systemd.db.service": 2}, 1)
+    assert fmt == "http"
+    import json
+    bodies = [json.dumps({"log": x}) for x in a]
+    bodies.append(json.dumps([{"log": x, "tag": "web.b"} for x in b]))
+    bodies.append("{not json")
+    (d / "listener.log").write_text("\n".join(bodies) + "\n")
+    return ("[INPUT]\n    Name http\n    Tag web.a\n    Tag_Key tag\n",
+            {"web.a": 3, "web.b": 2}, 1)
+
+
+@pytest.mark.parametrize("fmt", ["tokens", "text", "forward", "syslog",
+                                 "kafka", "systemd", "http"])
+def test_run_pipeline_cli_stream_task(spark, tmp_path, monkeypatch, fmt):
+    """jobs/run_pipeline.py CLI with --config: the [STREAM_TASK] path
+    reads the input through the configured format's decoder (never the
+    tokens parquet reader for another format). Per-tag task counts
+    equal a direct count over the decoder-ok records: a rejected record
+    reaches the DLQ but no stream task, and a task sees no lineage
+    column or another source than the sinks."""
     import json
     import sys
 
@@ -650,44 +826,44 @@ def test_run_pipeline_cli_syslog_stream_task(spark, tmp_path,
         "jobs"))
     import run_pipeline as rp
 
-    cap = tmp_path / "captures"
-    cap.mkdir()
-
-    def frame(msgs):
-        return b"".join(
-            str(len(m.encode())).encode() + b" " + m.encode()
-            for m in msgs)
-
-    (cap / "conn1.log").write_bytes(frame(
-        [f'level=info msg="m{i}" code=200 dur_ms={i}' for i in range(4)]))
-    (cap / "conn2.log").write_bytes(frame(
-        ['level=error msg="boom" code=500 dur_ms=9'] * 2))
-
+    inp, want, rejected = _stream_task_input(spark, fmt, tmp_path / "in")
     streams = tmp_path / "tasks.streams"
     streams.write_text(
         "[STREAM_TASK]\n    Name by_tag\n"
         "    Exec SELECT RECORD_TAG() AS tag, COUNT(*) AS c "
-        "FROM TAG:'app.*' GROUP BY RECORD_TAG();\n")
+        "FROM TAG:'*' GROUP BY RECORD_TAG();\n"
+        "[STREAM_TASK]\n    Name all\n"
+        "    Exec SELECT * FROM TAG:'*';\n")
     conf = tmp_path / "pipe.conf"
     conf.write_text(
         "[SERVICE]\n"
         f"    Streams_File {streams}\n"
-        "[INPUT]\n    Name syslog\n"
+        + inp +
         "[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
 
     out = str(tmp_path / "out")
     monkeypatch.setattr(sys, "argv", [
-        "run_pipeline.py", "--input", str(cap), "--output", out,
-        "--config", str(conf)])
+        "run_pipeline.py", "--input", str(tmp_path / "in"),
+        "--output", out, "--config", str(conf)])
     printed = []
     monkeypatch.setattr("builtins.print", lambda s: printed.append(s))
     assert rp.main() == 0
     rep = json.loads(printed[-1])
-    assert rep["rows_in"] == 6 and rep["rows_dlq"] == 0
+    n_ok = sum(want.values())
+    assert rep["rows_in"] == n_ok + rejected
+    assert rep["rows_dlq"] == rejected
 
-    task = {(r.tag, r.c) for r in
+    task = {r.tag: r.c for r in
             spark.read.parquet(f"{out}/stream_tasks/by_tag").collect()}
-    assert task == {("app.conn1.logfmt", 4), ("app.conn2.logfmt", 2)}
+    assert task == want
+    every = spark.read.parquet(f"{out}/stream_tasks/all")
+    assert "_lineage" not in every.columns
+    assert every.count() == n_ok
+    # the tasks and the sinks see each record with the same source (an
+    # empty source reads back from the sink's partition path as null)
+    sources = lambda df: sorted(r.source or "" for r in
+                                df.select("source").distinct().collect())
+    assert sources(every) == sources(read_sink(spark, out, "s"))
 
 
 def test_kafka_input_end_to_end(spark, tmp_path):

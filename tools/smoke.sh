@@ -13,11 +13,15 @@ if [ "${1:-}" != "quick" ]; then
   SF_DIR=/root/testdata/sf0.1  python tools/check_oracles.py
 fi
 
-# end-to-end benchmark workload: fails unless its outputs match the
-# independent reference ("correct": true on the result line)
-python perfbench/run.py --workload slices_resume --seed 1 --seconds 20 \
-  | tail -1 | tee /tmp/smoke_perfbench.json
-grep -q '"correct": true' /tmp/smoke_perfbench.json
+# end-to-end benchmark workloads: each fails unless its outputs match
+# the independent reference ("correct": true on the result line).
+# slices_resume covers the text adapter and a line-format writer,
+# tokens_bulk the tokens adapter and the parquet writer.
+for w in slices_resume tokens_bulk; do
+  python perfbench/run.py --workload "$w" --seed 1 --seconds 20 \
+    | tail -1 | tee "/tmp/smoke_perfbench_$w.json"
+  grep -q '"correct": true' "/tmp/smoke_perfbench_$w.json"
+done
 
 python bench.py | tail -1 > /tmp/smoke_bench.json
 python tools/bench_compare.py /tmp/smoke_bench.json   # fails on >1.5x regression
