@@ -107,6 +107,108 @@ def rename(spark: SparkSession, src: str, dst: str) -> None:
         raise IOError(f"rename {src} -> {dst} failed")
 
 
+def has_glob(path: str) -> bool:
+    """True if Hadoop would expand ``path`` as a glob (the characters
+    Spark's ``SparkHadoopUtil.isGlobPath`` checks)."""
+    return any(c in "{}[]*?\\" for c in path)
+
+
+def _hidden(name: str) -> bool:
+    """Spark's hidden-file rule (``HadoopFSUtils.shouldFilterOutPathName``):
+    a ``_`` name that is no ``k=v`` partition, a dot name, or a copy in
+    flight; parquet's ``_metadata`` summaries are listed."""
+    exclude = ((name.startswith("_") and "=" not in name)
+               or name.startswith(".") or name.endswith("._COPYING_"))
+    return exclude and not name.startswith(("_common_metadata",
+                                             "_metadata"))
+
+
+_SEP = "\0"     # joins path strings across py4j: no path holds a NUL
+
+
+def list_files(spark: SparkSession, pattern: str) -> list[str]:
+    """The files a file source reads for ``pattern`` (a file, a
+    directory or a glob), sorted, as ``DataFrame.inputFiles()`` gives
+    them (``file:///…`` URIs on a local path), but listed on the driver:
+    Spark lists in a job once a glob matches more than 32 paths.
+
+    Spark's rules: each match of the glob is listed recursively, and a
+    hidden name (:func:`_hidden`) is skipped, directory or file. Files
+    below a matched directory's own files count only when some
+    directory under it is a ``k=v`` partition. There is one
+    ``listStatus`` call per directory level, each passing whole arrays
+    across py4j, so the number of py4j calls does not grow with the
+    number of files. Raises ``FileNotFoundError`` when nothing
+    matches."""
+    jvm = spark._jvm
+    fs, p = _fs_path(spark, pattern)
+    matches = fs.globStatus(fs.makeQualified(p))
+    if not matches:
+        raise FileNotFoundError(f"Path does not exist: {pattern}")
+
+    def names(statuses) -> list[str]:
+        # py4j matches no Path[] to an Object[] parameter: copy first
+        paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(statuses)
+        objs = spark.sparkContext._gateway.new_array(jvm.java.lang.Object,
+                                                     len(paths))
+        jvm.System.arraycopy(paths, 0, objs, 0, len(objs))
+        return [s for s in jvm.org.apache.commons.lang3.StringUtils
+                .join(objs, _SEP).split(_SEP) if s]
+
+    def to_paths(strings: list[str]):
+        return jvm.org.apache.hadoop.util.StringUtils.stringToPath(
+            jvm.org.apache.commons.lang3.StringUtils.split(
+                _SEP.join(strings), _SEP))
+
+    # listStatus of a file returns the file itself, of a directory its
+    # children: an entry equal to one listed path is a file
+    roots = names(matches)
+    frontier, files = roots, []
+    while frontier:
+        listed = [s for s in names(fs.listStatus(to_paths(frontier)))
+                  if not _hidden(s.rsplit("/", 1)[1])]
+        was = set(frontier)
+        files += [s for s in listed if s in was]
+        frontier = [s for s in listed if s not in was]
+    dir_roots = set(roots) - set(files)
+
+    def dirs_below_root(f: str) -> list[str]:
+        """Names of the directories between f and its matched directory
+        ([] for a matched file)."""
+        dirs, d = [], f.rpartition("/")[0]
+        while d not in dir_roots:
+            if "/" not in d:
+                return []
+            d, _, name = d.rpartition("/")
+            dirs.append(name)
+        return dirs
+
+    if not any("=" in d for f in files for d in dirs_below_root(f)):
+        roots_set = set(roots)
+        files = [f for f in files
+                 if f in roots_set or f.rpartition("/")[0] in dir_roots]
+    if not files:
+        return []
+    # A Path string is scheme:[//authority]/decoded-path; Spark returns
+    # scheme://authority/quoted-path. One URI over the NUL-joined paths
+    # quotes them all (a '%' in a name becomes %25, so '%00' only ever
+    # stands for a NUL).
+    fs_uri = fs.getUri()
+    quoted = jvm.java.net.URI(
+        None, None, _SEP.join(_bare_path(f) for f in files),
+        None, None).getRawPath().split("%00")
+    prefix = f"{fs_uri.getScheme()}://{fs_uri.getRawAuthority() or ''}"
+    return sorted(prefix + q for q in quoted)
+
+
+def _bare_path(path_str: str) -> str:
+    """The path of a Hadoop ``Path.toString()``, without scheme and
+    authority."""
+    rest = path_str.split(":", 1)[1]
+    return "/" + rest[2:].split("/", 1)[1] if rest.startswith("//") \
+        else rest
+
+
 def count_files(spark: SparkSession, dir_path: str,
                 suffix: str = ".parquet") -> int:
     """Recursive count of data files under a directory tree."""

@@ -15,13 +15,16 @@ Formats plug in the way fluent-bit's input and output plugins do (one
 struct of callbacks each, driven by one generic loop;
 upstream:src/flb_input.c, src/flb_output.c):
 
-- ``SOURCES`` has one adapter per input format. It lists the input,
-  reads a slice's files into the frame the stages take (``_lineage``
-  stamped on the raw scan) and names the stage builder, the decoder's
-  default tag column and its ok column. ``read_routed`` applies the
-  default tag and sends the decoder's rejects to the DLQ as
-  ``parse_fail``; ``read_tagged`` feeds ``[STREAM_TASK]`` SQL the same
-  adapter.
+- ``SOURCES`` has one adapter per input format. It reads a slice's
+  files into the frame the stages take (``_lineage`` stamped on the raw
+  scan) and names the stage builder, the decoder's default tag column
+  and its ok column. ``read_routed`` applies the default tag and sends
+  the decoder's rejects to the DLQ as ``parse_fail``; ``read_tagged``
+  feeds ``[STREAM_TASK]`` SQL the same adapter. The input is listed
+  once per call on the driver (``fsio.list_files``, the strings
+  ``inputFiles()`` gives, no Spark job), and the lookup dim and
+  checklist lists are read once per call: every slice joins the same
+  frames.
 - ``SINK_WRITERS`` has one writer per sink format. parquet and the
   out_file text formats write every sink of a slice in one job (rows
   exploded over their routes mask, the flb_routes_mask fan-out, staged
@@ -30,7 +33,8 @@ upstream:src/flb_input.c, src/flb_output.c):
 - ``write_slice`` is the slice body, shared by the batch job and the
   streaming fan-out: the routed frame is persisted once and read by
   the sink writer, the log_to_metrics side outputs, the DLQ write
-  (whose Observation counts the slice's rows) and the per-tag metrics.
+  (whose Observation counts the slice's rows) and the per-tag metrics
+  (one group-by on tag, ``slice_metrics``).
 
 Checkpoint/resume (upstream:plugins/in_tail/tail_db.c offset DB →
 per-slice manifest, BASELINE.json north_rule "resumable from
@@ -77,7 +81,10 @@ def tune_scan_partitions(spark: SparkSession, input_path: str,
     at 8 cores and ~1.7× at 32 (tools/bench_scaling.py).
 
     Sizing goes through the Hadoop FileSystem API (fsio), so ``s3a://``
-    and ``hdfs://`` inputs size identically to local paths."""
+    and ``hdfs://`` inputs size identically to local paths. A glob is
+    not sized: the split size stays as it is."""
+    if fsio.has_glob(input_path):
+        return
     try:
         total = fsio.total_bytes(spark, input_path)
     except Exception:
@@ -107,6 +114,8 @@ class PipelineSpec:
     lookup_ttl: float | None = None
     tag_expr: str | None = None             # SQL expr for the tag column
     sink_partition_by: list[str] = field(default_factory=lambda: ["source"])
+    # [SERVICE] salt_buckets: still parsed, no longer used by the slice
+    # metrics (one group-by); goes when perfbench's replay does
     salt_buckets: int = 32
     # sink payload format: columnar parquet (default) or an out_file
     # text serializer (functions/serialize.py): newline-delimited JSON,
@@ -268,12 +277,14 @@ def default_tag_expr() -> str:
     return "concat('app.', source, '.', coalesce(fields.kind, 'raw'))"
 
 
-def build_stages(spark: SparkSession, df: DataFrame,
-                 spec: PipelineSpec) -> DataFrame:
+def build_stages(spark: SparkSession, df: DataFrame, spec: PipelineSpec,
+                 *, side_tables: dict | None = None) -> DataFrame:
     """Compose the lazy plan: input → routed (with sinks + dlq_reason).
 
     ``tokens`` passes through untouched end-to-end (token-equality
-    invariant) — every stage only adds columns or filters rows."""
+    invariant) — every stage only adds columns or filters rows.
+    ``side_tables`` holds the lookup dim and checklist lists already
+    read (:func:`_read_once`); without it they are read here."""
     from ..functions.parsers import fused_detok_parse
     keep = spec.keep_decoded
     if keep == "auto":
@@ -292,11 +303,26 @@ def build_stages(spark: SparkSession, df: DataFrame,
                 "carry decoded=NULL for parsed rows. Set "
                 "keep_decoded='always' to retain it.", stacklevel=2)
     out = fused_detok_parse(df, spark, spec.vocab, keep_decoded=keep)
-    return _post_parse_stages(spark, out, spec)
+    return _post_parse_stages(spark, out, spec, side_tables)
 
 
-def _apply_checklist(spark: SparkSession, out: DataFrame,
-                     ck: dict) -> DataFrame:
+def _read_once(side_tables: dict | None, key: tuple,
+               read: Callable[[], DataFrame]) -> DataFrame:
+    """A side table from ``side_tables``, read on first use (read every
+    time without it). ``run_pipeline`` passes one dict per call, so the
+    lookup dim and the checklist lists are read (and a parquet schema
+    inferred, one Spark job) once per call, and every slice joins the
+    same frame. A lookup with a ``Cache_TTL`` is not kept here: its
+    DimCache decides per slice whether to re-read."""
+    if side_tables is None:
+        return read()
+    if key not in side_tables:
+        side_tables[key] = read()
+    return side_tables[key]
+
+
+def _apply_checklist(spark: SparkSession, out: DataFrame, ck: dict,
+                     side_tables: dict | None) -> DataFrame:
     """One [FILTER] checklist block (upstream:plugins/filter_checklist):
     the value list is a one-value-per-line text file (or parquet with a
     ``value`` / lookup-key column) broadcast against ``lookup_key``.
@@ -306,13 +332,10 @@ def _apply_checklist(spark: SparkSession, out: DataFrame,
     from ..operators.enrich import checklist_flag, checklist_keep
     path, key = ck["path"], ck["lookup_key"]
     action = ck.get("action", "flag")
-    if str(path).endswith(".parquet"):
-        values = spark.read.parquet(path)
-        list_key = ("value" if "value" in values.columns
-                    else values.columns[0])
-    else:  # upstream list format: one value per line
-        values = spark.read.text(path)
-        list_key = "value"
+    values = _read_once(side_tables, ("checklist", path), lambda: (
+        spark.read.parquet(path) if str(path).endswith(".parquet")
+        else spark.read.text(path)))     # upstream: one value per line
+    list_key = "value" if "value" in values.columns else values.columns[0]
     join_key, tmp = key, False
     if ck.get("ignore_case"):
         values = values.select(
@@ -340,7 +363,8 @@ def _apply_checklist(spark: SparkSession, out: DataFrame,
 
 
 def _post_parse_stages(spark: SparkSession, out: DataFrame,
-                       spec: PipelineSpec) -> DataFrame:
+                       spec: PipelineSpec,
+                       side_tables: dict | None = None) -> DataFrame:
     """[parser filters →] grep → enrich → tag → rewrite → route →
     dlq_reason — shared by the tokens path (fused detok+parse) and the
     raw-text path."""
@@ -395,10 +419,11 @@ def _post_parse_stages(spark: SparkSession, out: DataFrame,
             dim = dim_cache_for(spec.lookup_path,
                                 spec.lookup_ttl).resolve(spark)
         else:
-            dim = spark.read.parquet(spec.lookup_path)
+            dim = _read_once(side_tables, ("lookup", spec.lookup_path),
+                             lambda: spark.read.parquet(spec.lookup_path))
         out = lookup_join(out, dim, spec.lookup_key)
     for ck in spec.checklist_specs:
-        out = _apply_checklist(spark, out, ck)
+        out = _apply_checklist(spark, out, ck, side_tables)
     if spec.split_spec:
         from ..operators.filters import stratified_split
         sp = spec.split_spec
@@ -447,7 +472,8 @@ def read_text_ordered(spark: SparkSession, path) -> DataFrame:
 
 def build_stages_text(spark: SparkSession, df_text: DataFrame,
                       spec: PipelineSpec,
-                      source_regex: str = r"([^/]+)\.log") -> DataFrame:
+                      source_regex: str = r"([^/]+)\.log", *,
+                      side_tables: dict | None = None) -> DataFrame:
     """The RAW-TEXT ingestion path — what a fluent-bit user actually
     tails (`spark.read.text` over .log files), sharing every stage
     after the parse with the tokens path:
@@ -464,6 +490,8 @@ def build_stages_text(spark: SparkSession, df_text: DataFrame,
       path gets it from the input schema);
     - the SAME vectorized parser as the fused path (one Arrow-batched
       pandas UDF — no per-row Python).
+
+    ``side_tables`` is as for :func:`build_stages`.
     """
     from ..functions.parsers import with_parsed
     extra = [c for c in df_text.columns
@@ -508,7 +536,7 @@ def build_stages_text(spark: SparkSession, df_text: DataFrame,
            .drop("_input_file", *(["line_no"] if "line_no" in out.columns
                                   else [])))
     out = with_parsed(out, "decoded")
-    return _post_parse_stages(spark, out, spec)
+    return _post_parse_stages(spark, out, spec, side_tables)
 
 
 # ---------------------------------------------------------------------------
@@ -520,15 +548,14 @@ def build_stages_text(spark: SparkSession, df_text: DataFrame,
 class Source:
     """One input format (a fluent-bit input plugin's file subset).
 
-    ``scan`` reads a list of paths, for the listing; ``read`` turns
-    slice ``i``'s files into the frame ``stages`` takes, ``_lineage`` stamped on the raw
-    scan. ``tag_col`` is the decoder's own tag, used unless the spec
-    sets ``tag_expr``. ``ok_col`` flags the records the decoder
-    accepted: the rest go to the DLQ as ``parse_fail``."""
+    ``read`` turns slice ``i``'s files into the frame ``stages`` takes,
+    ``_lineage`` stamped on the raw scan. ``tag_col`` is the decoder's
+    own tag, used unless the spec sets ``tag_expr``. ``ok_col`` flags
+    the records the decoder accepted: the rest go to the DLQ as
+    ``parse_fail``."""
 
-    scan: Callable[[SparkSession, list], DataFrame]
     read: Callable[[SparkSession, list, int, PipelineSpec], DataFrame]
-    stages: Callable[[SparkSession, DataFrame, PipelineSpec], DataFrame]
+    stages: Callable[..., DataFrame]
     tag_col: str | None = None
     ok_col: str | None = None
 
@@ -651,18 +678,14 @@ def _read_systemd(spark, files, i, spec):
 
 
 SOURCES: dict[str, Source] = {
-    "tokens": Source(_scan_tokens, _read_tokens, build_stages),
-    "text": Source(_scan_text, _read_text, build_stages_text),
-    "forward": Source(_scan_binary, _read_forward, build_stages,
-                      tag_col="fwd_tag"),
-    "http": Source(_scan_text, _read_http, build_stages_text,
-                   "http_tag", "__http_ok"),
-    "syslog": Source(_scan_binary, _read_syslog, build_stages_text,
-                     ok_col="__frame_ok"),
-    "kafka": Source(_scan_binary, _read_kafka, build_stages_text,
-                    "kafka_tag", "__crc_ok"),
-    "systemd": Source(_scan_binary, _read_systemd, build_stages_text,
-                      "journal_tag", "__entry_ok"),
+    "tokens": Source(_read_tokens, build_stages),
+    "text": Source(_read_text, build_stages_text),
+    "forward": Source(_read_forward, build_stages, tag_col="fwd_tag"),
+    "http": Source(_read_http, build_stages_text, "http_tag", "__http_ok"),
+    "syslog": Source(_read_syslog, build_stages_text, ok_col="__frame_ok"),
+    "kafka": Source(_read_kafka, build_stages_text, "kafka_tag", "__crc_ok"),
+    "systemd": Source(_read_systemd, build_stages_text, "journal_tag",
+                      "__entry_ok"),
 }
 
 
@@ -675,9 +698,13 @@ def _source(input_format: str) -> Source:
 
 def _list_inputs(spark: SparkSession, input_format: str,
                 input_path: str) -> list[str]:
-    """The input files, sorted: the order slices are cut from."""
-    return sorted(_source(input_format).scan(spark, [input_path])
-                  .inputFiles())
+    """The input files, sorted: the order slices are cut from. Every
+    format reads files the same way, so the listing is the file
+    sources' own, made on the driver (``fsio.list_files``): no Spark
+    job, and the same strings as ``inputFiles()``, which the
+    committed manifests hold."""
+    _source(input_format)   # an unknown format fails before any write
+    return fsio.list_files(spark, input_path)
 
 
 def _decoded(spark: SparkSession, spec: PipelineSpec, input_format: str,
@@ -689,13 +716,14 @@ def _decoded(spark: SparkSession, spec: PipelineSpec, input_format: str,
 
 
 def read_routed(spark: SparkSession, spec: PipelineSpec, input_format: str,
-                files: list[str], i: int) -> DataFrame:
+                files: list[str], i: int,
+                side_tables: dict | None = None) -> DataFrame:
     """Slice ``i``'s files through their adapter and the stages: the
     routed frame the slice writer takes. A record the decoder rejected
     is forced to the DLQ as ``parse_fail``, kept for the dead-letter
     audit; the decoder's tag and ok columns are dropped."""
     src, df, spec = _decoded(spark, spec, input_format, files, i)
-    out = src.stages(spark, df, spec)
+    out = src.stages(spark, df, spec, side_tables=side_tables)
     if src.ok_col:
         ok = F.col(src.ok_col)
         out = (out.withColumn("parse_ok", F.col("parse_ok") & ok)
@@ -727,19 +755,23 @@ def sink_names(spec: PipelineSpec) -> list[str]:
 
 
 def slice_metrics(routed: DataFrame, salt_buckets: int) -> DataFrame:
-    """Per-tag lineage metrics for one slice: records, token sums, distinct
-    sources, parse failures — the cmetrics/flb_metrics analogue
-    (upstream:src/flb_metrics.c), derived from the persisted routed DF so
-    it costs no extra scan of the input."""
-    from ..operators.aggregate import salted_sink_aggregates
-    per_tag = salted_sink_aggregates(
-        routed, ["tag"], salt_buckets=salt_buckets)
-    dlq = (routed.groupBy("tag")
-                 .agg(F.sum(F.when(F.col("dlq_reason") == "parse_fail", 1)
-                            .otherwise(0)).alias("parse_fail"),
-                      F.sum(F.when(F.col("dlq_reason") == "no_route", 1)
-                            .otherwise(0)).alias("no_route")))
-    return per_tag.join(dlq, "tag", "left")
+    """Per-tag lineage metrics for one slice: records, token sums,
+    distinct sources and DLQ rows by reason — the cmetrics/flb_metrics
+    analogue (upstream:src/flb_metrics.c), counted in one group-by over
+    the persisted routed frame, so it costs no extra scan of the input.
+    Partial aggregation collapses a hot tag on the map side, so a salt
+    would only add a shuffle; ``salt_buckets`` is unused. A NULL tag is
+    one group like any other."""
+    reason = F.col("dlq_reason")
+    return routed.groupBy("tag").agg(
+        F.count("*").alias("records"),
+        F.sum("n_tok").alias("sum_n_tok"),
+        F.size(F.collect_set("source")).cast("bigint")
+         .alias("distinct_sources"),
+        F.sum(F.when(reason == "parse_fail", 1).otherwise(0))
+         .alias("parse_fail"),
+        F.sum(F.when(reason == "no_route", 1).otherwise(0))
+         .alias("no_route"))
 
 
 # ---------------------------------------------------------------------------
@@ -1100,9 +1132,10 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
     Scale shape: each slice is an independent bounded job whose sink
     writes are partition-local (no shuffle — routing is a map-side
     expression); the only shuffle per slice is the metrics aggregation,
-    which is salted two-phase. On a 1000-executor cluster slices become
-    much larger file groups; the manifest bounds re-work on failure to
-    one slice.
+    one group-by on tag. The input is listed on the driver, and the
+    lookup dim and checklist lists are read once per call, not per
+    slice. On a 1000-executor cluster slices become much larger file
+    groups; the manifest bounds re-work on failure to one slice.
     """
     t0 = time.time()
     tune_scan_partitions(spark, input_path)
@@ -1114,11 +1147,12 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
     sinks = sink_names(spec)
     stats = {"slices_total": len(slices), "slices_skipped": len(done),
              "rows_in": 0, "rows_dlq": 0}
-
+    side_tables: dict = {}
     for i, files in enumerate(slices):
         if i in done:
             continue
-        routed = read_routed(spark, spec, input_format, files, i)
+        routed = read_routed(spark, spec, input_format, files, i,
+                             side_tables)
         rows_in, rows_dlq = write_slice(spark, routed, spec, output_dir,
                                         i, sinks)
         stats["rows_in"] += rows_in

@@ -9,6 +9,7 @@ the Spark code paths, so agreement is meaningful.
 from __future__ import annotations
 
 import fnmatch
+import os
 import re
 
 import pandas as pd
@@ -61,28 +62,68 @@ def parse_row(line: str) -> dict:
     return out
 
 
+def default_tag(source: str, kind: str | None) -> str:
+    """app.<source>.<kind>, the pipeline's default tag."""
+    return f"app.{source}.{kind or 'raw'}"
+
+
+def token_records(tokens_path: str, vocab: list[str]) -> list[tuple]:
+    """(doc_id, source, n_tok, line) per row of a tokens parquet."""
+    tbl = pq.read_table(tokens_path).to_pandas()
+    return [(r.doc_id, r.source, int(r.n_tok), decode_row(r.tokens, vocab))
+            for r in tbl.itertuples(index=False)]
+
+
+def text_records(log_dir: str) -> list[tuple]:
+    """(doc_id, source, n_tok, line) per line of the ``.log`` files in
+    ``log_dir``, as the text input derives them: source is the file
+    name without ``.log``, n_tok the number of space-separated pieces.
+    The doc_id here is file:line, not the engine's content hash."""
+    out = []
+    for name in sorted(os.listdir(log_dir)):
+        if not name.endswith(".log"):
+            continue
+        with open(os.path.join(log_dir, name), encoding="utf-8",
+                  newline="") as fh:
+            text = fh.read()
+        lines = re.split(r"\r\n|\r|\n", text)
+        if lines and lines[-1] == "":
+            lines.pop()
+        out += [(f"{name}:{k}", name[:-4], len(line.split(" ")), line)
+                for k, line in enumerate(lines)]
+    return out
+
+
 def run_oracle(tokens_path: str, vocab: list[str],
                routes: list[tuple[str, str, str]],
                rewrite_errors_keep: bool = True) -> dict:
-    """Run the reference pipeline row-at-a-time; return per-sink golden
-    aggregates and routed doc_id sets."""
-    tbl = pq.read_table(tokens_path).to_pandas()
+    """Run the reference pipeline row-at-a-time over a tokens parquet;
+    see :func:`route_records`."""
+    return route_records(token_records(tokens_path, vocab), routes,
+                         rewrite_errors_keep)
+
+
+def route_records(records: list[tuple], routes: list[tuple[str, str, str]],
+                  rewrite_errors_keep: bool = True,
+                  tag_fn=default_tag) -> dict:
+    """Parse, tag (``tag_fn(source, kind)``), rewrite and route
+    ``(doc_id, source, n_tok, line)`` records; return per-sink golden
+    aggregates and routed doc_id sets, DLQ counts by reason and per-tag
+    metrics over every emitted row."""
     rows = []
-    for r in tbl.itertuples(index=False):
-        line = decode_row(r.tokens, vocab)
+    for doc_id, source, n_tok, line in records:
         p = parse_row(line)
-        kind = p["kind"] or "raw"
-        tag = f"app.{r.source}.{kind}"
+        tag = tag_fn(source, p["kind"])
         emitted = [(tag, p["kind"] is not None)]
         if p["level"] == "error":
-            # rewrite_tag rule: level=error → err.<source>, keep=True
-            err_tag = f"err.{r.source}"
+            # rewrite_tag rule: level=error → err.$TAG[1], keep=True
+            err_tag = f"err.{tag.split('.')[1]}"
             if rewrite_errors_keep:
                 emitted.append((err_tag, True))
             else:
                 emitted = [(err_tag, True)]
         for t, ok in emitted:
-            rows.append((r.doc_id, r.source, int(r.n_tok), t, ok))
+            rows.append((doc_id, source, n_tok, t, ok))
     df = pd.DataFrame(rows,
                       columns=["doc_id", "source", "n_tok", "tag", "ok"])
 
@@ -116,7 +157,14 @@ def run_oracle(tokens_path: str, vocab: list[str],
             "doc_ids": sorted(sub["doc_id"].tolist()),
             "pairs": sorted(zip(sub["doc_id"], sub["tag"])),
         }
-    bad = df[~df["ok"]]
-    norout = df[df["ok"] & (df["sinks"].map(len) == 0)]
-    out["dlq"] = {"parse_fail": int(len(bad)), "no_route": int(len(norout))}
+    no_sink = df["ok"] & (df["sinks"].map(len) == 0)
+    out["dlq"] = {"parse_fail": int((~df["ok"]).sum()),
+                  "no_route": int(no_sink.sum())}
+    out["tags"] = {
+        tag: {"records": int(len(g)),
+              "sum_n_tok": int(g["n_tok"].sum()),
+              "distinct_sources": int(g["source"].nunique()),
+              "parse_fail": int((~g["ok"]).sum()),
+              "no_route": int(no_sink[g.index].sum())}
+        for tag, g in df.groupby("tag")}
     return out

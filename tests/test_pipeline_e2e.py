@@ -112,6 +112,68 @@ def test_metrics_lineage_totals(spark, pipeline_out, golden):
     assert "batch_id" in m.columns  # lineage: which slice produced what
 
 
+# a tag shared by every source, so distinct_sources > 1; the default
+# tag app.<source>.<kind> has exactly one source per tag
+KIND_TAG = "concat('k.', coalesce(fields.kind, 'raw'))"
+
+
+@pytest.mark.parametrize("input_format,tag_expr", [
+    ("tokens", None), ("tokens", KIND_TAG), ("text", KIND_TAG)],
+    ids=["tokens-default_tag", "tokens-kind_tag", "text-kind_tag"])
+def test_metrics_match_oracle(spark, fixture_paths, tmp_path, input_format,
+                              tag_expr):
+    """Every ``_metrics`` row (records, sum_n_tok, distinct_sources,
+    parse_fail, no_route per tag) equals the row-at-a-time oracle's,
+    rewrite copies included, for tokens and text input."""
+    from tests.oracle_pandas import (default_tag, route_records,
+                                     text_records, token_records)
+    if input_format == "tokens":
+        inp = fixture_paths["tokens"]
+        records = token_records(inp, fx.vocab())
+    else:
+        inp = _text_input(fixture_paths, tmp_path)
+        records = text_records(inp)
+    spec = _spec(fixture_paths)
+    spec.tag_expr = tag_expr
+    tag_fn = (default_tag if tag_expr is None
+              else lambda source, kind: f"k.{kind or 'raw'}")
+    want = route_records(records, fx.DEFAULT_ROUTES, tag_fn=tag_fn)["tags"]
+    out = str(tmp_path / "o")
+    run_pipeline(spark, spec, inp, out, input_format=input_format)
+    cols = ("records", "sum_n_tok", "distinct_sources", "parse_fail",
+            "no_route")
+    got = {r.tag: {c: r[c] for c in cols}
+           for r in read_metrics(spark, out).collect()}
+    assert got == want
+    if tag_expr:
+        assert max(g["distinct_sources"] for g in got.values()) > 1
+
+
+def test_metrics_reconcile_with_dlq_for_a_null_tag(spark, fixture_paths,
+                                                   tmp_path):
+    """A NULL tag is counted like any other: per tag, ``_metrics``
+    parse_fail and no_route equal the DLQ rows with that tag and
+    reason, and the records sum to the slice's row count."""
+    spec = _spec(fixture_paths)
+    spec.tag_expr = ("CASE WHEN source = 'src3' THEN NULL ELSE "
+                     "concat('app.', source, '.', "
+                     "coalesce(fields.kind, 'raw')) END")
+    out = str(tmp_path / "o")
+    stats = run_pipeline(spark, spec, fixture_paths["tokens"], out)
+    got = {r.tag: (r.parse_fail, r.no_route, r.records)
+           for r in read_metrics(spark, out).collect()}
+    reason = F.col("dlq_reason")
+    dlq = {r.tag: (r.pf, r.nr) for r in read_dlq(spark, out).groupBy("tag")
+           .agg(F.sum((reason == "parse_fail").cast("long")).alias("pf"),
+                F.sum((reason == "no_route").cast("long")).alias("nr"))
+           .collect()}
+    assert dlq[None][0] > 0 and dlq[None][1] > 0
+    assert set(dlq) <= set(got)
+    assert {t: g[:2] for t, g in got.items()} \
+        == {t: dlq.get(t, (0, 0)) for t in got}
+    assert sum(g[2] for g in got.values()) == stats["rows_in"]
+
+
 @pytest.mark.parametrize("scheme", ["", "file:"])
 def test_resume_is_idempotent_and_skips_done(spark, fixture_paths,
                                              tmp_path, scheme):
@@ -297,31 +359,40 @@ def _text_input(fixture_paths, tmp_path, n_files: int = 2) -> str:
     return str(d)
 
 
-@pytest.mark.parametrize("input_format,sink_format,jobs_per_slice", [
-    ("tokens", "parquet", 11),
-    ("text", "json_lines", 11)])
+@pytest.mark.parametrize(
+    "input_format,sink_format,jobs_per_slice,jobs_per_call",
+    [("tokens", "parquet", 6, 1), ("text", "json_lines", 6, 1)],
+    ids=["tokens-parquet", "text-json_lines"])
 def test_spark_jobs_per_slice_do_not_grow(spark, fixture_paths, tmp_path,
                                           input_format, sink_format,
-                                          jobs_per_slice):
-    """A two-slice run starts no more Spark jobs per slice than the
-    counts written here, measured when the slice body was last
-    changed. An extra action in the slice body fails this test."""
+                                          jobs_per_slice, jobs_per_call):
+    """A run starts no more Spark jobs per slice, and no more once per
+    call, than the counts written here, measured when the slice body
+    was last changed. A one-slice and a two-slice run of the same input
+    tell the two apart. An extra action in the slice body fails this
+    test, and so does a per-call step moved into the slice (the lookup
+    dim's schema inference is the one job per call; the listing starts
+    none)."""
     inp = (_split_input(spark, fixture_paths, tmp_path)
            if input_format == "tokens"
            else _text_input(fixture_paths, tmp_path))
     spec = _spec(fixture_paths)
     spec.sink_format = sink_format
     sc = spark.sparkContext
-    group = f"jobs-per-slice-{input_format}"
-    sc.setJobGroup(group, group)
-    try:
-        stats = run_pipeline(spark, spec, inp, str(tmp_path / "o"),
-                             n_slices=2, input_format=input_format)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert stats["slices_total"] == 2
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) / 2 <= jobs_per_slice
+    jobs = {}
+    for n in (1, 2):
+        group = f"jobs-per-slice-{input_format}-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            stats = run_pipeline(spark, spec, inp, str(tmp_path / f"o{n}"),
+                                 n_slices=n, input_format=input_format)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert stats["slices_total"] == n
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    per_slice = jobs[2] - jobs[1]
+    assert per_slice <= jobs_per_slice
+    assert jobs[1] - per_slice <= jobs_per_call
 
 
 def test_every_row_lands_somewhere(spark, fixture_paths):
