@@ -36,7 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Representative of SURVEY.md §2 operator families: parse, filter,
 # enrich-join, route+agg (flagship), salted skew agg, windows, dedup,
-# similarity, text analysis.
+# text analysis.
 HEADLINE = [
     "route_agg",
     "parse_json_props",
@@ -50,10 +50,6 @@ HEADLINE = [
     "dedup_minhash_lsh",
     "dedup_lsh_verified",
     "dedup_resolve_groups",
-    "embedding_neardup",
-    "ann_topk_bruteforce",
-    "ann_ivf",
-    "ann_lsh_multiprobe",
     "multiline_join",
     "multiline_cri",
     "decoder_escaped",
@@ -74,27 +70,16 @@ HEADLINE = [
     # r3 token-sequence training-data ops (operators/tokens.py)
     "pack_sequences",
     "line_dedup_c4",
-    # r4 product-quantization ANN (operators/similarity.py pq_topk)
-    "ann_pq",
     # r4 quality pipeline (operators/tokens.py unigram_surprisal)
     "unigram_surprisal",
-    # r4 late: substring-span dedup + k-means/SemDeDup
+    # r4 late: substring-span dedup
     "substring_dedup",
-    "kmeans_embeddings",
-    "semdedup_drop",
-    # r5: composed ANN serving path, order-3 surprisal, sink payload
+    # r5: order-3 surprisal, sink payload
     # codecs (window+agg shapes), framed-source decode (Arrow kernel)
-    "ann_ivf_pq",
     "trigram_surprisal",
     "serialize_es_bulk",
     "serialize_loki_push",
     "syslog_octet_roundtrip",
-    # r5 late: compressed-codec structural probes (map-only Arrow
-    # kernels over real mp3 frame chains / H.264 Annex B streams)
-    "multimodal_mp3_probe",
-    "multimodal_h264_probe",
-    "multimodal_aac_probe",
-    "multimodal_mp4_probe",
     # r5 late: WARC crawl-archive ingestion (1:N record explode)
     "warc_ingest",
     "crawl_to_pack",
@@ -127,14 +112,12 @@ HEADLINE = [
     # bounded broadcasts) and the HLL distinct sketch (K-bounded agg)
     "kn_surprisal",
     "hll_distinct",
-    "export_shards",
     "span_corrupt",
     "ul2_mixture",
     "render_chat",
     "remap_vocab",
     "sft_render_pack",
     "decontaminate_spans",
-    "shard_by_order",
     "ngram_repetition",
     "unigram_lm_encode",
     "corpus_drift",

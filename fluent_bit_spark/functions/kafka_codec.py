@@ -39,8 +39,7 @@ CRC is CRC32C (Castagnoli, reflected poly 0x82F63B78) over everything
 AFTER the crc field — NOT zlib's CRC32; using the wrong polynomial is
 the classic interop bug and the known-answer tests pin it. Compression
 codecs: none and gzip (stdlib); snappy/lz4/zstd are absent from this
-container and raise loudly (strict-mode plug-point, the multimodal
-mp3/h264 posture — operators/multimodal.py:72).
+container and raise loudly (strict-mode plug-point).
 
 Decoder tolerance: a truncated final batch or a CRC mismatch yields
 the batch's rows with ``crc_ok=false`` (when parseable) or a single

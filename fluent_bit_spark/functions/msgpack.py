@@ -26,8 +26,7 @@ other:
   codec (stdlib only). The encoder exists to byte-oracle the Catalyst
   encoder in tests; the decoder is the executor-side kernel for
   reading chunk files (Arrow-batched per FILE in sources/forward.py —
-  binary cursor parsing has no vectorized form, the same posture as
-  the PNG/JPEG codecs in functions/png.py).
+  binary cursor parsing has no vectorized form).
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
 """Vectorized Arrow/numpy twin of the Catalyst msgpack entry encoder
 (functions/msgpack.py) — the throughput path for the forward sink.
 
-Same posture as the PQ ADC encode (operators/similarity.py): the pure
-Catalyst form is the oracle-able reference; this kernel produces
+The pure Catalyst form is the oracle-able reference; this kernel produces
 BIT-IDENTICAL bytes (equivalence-gated in tests/test_forward.py) by
 vectorizing every variable-width decision:
 

@@ -213,8 +213,7 @@ def compressed_size(col: str | Column, level: int = 6) -> Column:
     garbage, near-0 ratios flag degenerate repetition; natural prose
     sits ~0.3-0.5. No Catalyst form exists for DEFLATE, so this is an
     Arrow-batched pandas UDF over ``zlib`` (C speed, one python
-    boundary per batch — the multimodal-codec posture, never per-row
-    Python). Deterministic for a fixed zlib build and ``level``;
+    boundary per batch, never per-row Python). Deterministic for a fixed zlib build and ``level``;
     pytest pins it against a direct driver-side ``zlib`` replay.
     Because the byte count is a library artifact rather than portable
     arithmetic, queries built on it carry a rows-only driver check

@@ -712,8 +712,7 @@ def dedup_vs_corpus(new: DataFrame, id_col: str, text_col: str,
                  .drop("__h"))
     # consumed by BOTH the signature chain and the final anti-join —
     # Catalyst does not dedupe the subtree, so without this persist the
-    # exact-stage anti-join runs twice per action (batch-sized frame;
-    # same fix class as semdedup's assigned persist)
+    # exact-stage anti-join runs twice per action (batch-sized frame)
     from pyspark import StorageLevel
     survivors = survivors.persist(StorageLevel.MEMORY_AND_DISK)
     sig_new = minhash_signature(survivors, id_col, text_col,

@@ -982,7 +982,7 @@ def tfidf_topk(df: DataFrame, k: int = 3, tokens_col: str = "tokens",
     tf = ex.groupBy(id_col, "tok").agg(F.count("*").alias("tf"))
     # tf feeds BOTH the document-frequency agg and the scoring join;
     # without a persist the explode + (doc,tok) agg runs twice per
-    # action (same fix class as semdedup/dedup_vs_corpus). tf is the
+    # action (same fix class as dedup_vs_corpus). tf is the
     # REDUCED frame (unique (doc,tok) rows), far narrower than the
     # exploded tokens — MEMORY_AND_DISK keeps the big expansion
     # un-persisted while halving the heavy path.

@@ -21,7 +21,6 @@ from pyspark.sql import types as T
 from .functions import text as TX
 from .functions.parsers import ltsv_parser, logfmt_parser
 from .operators import dedup as DD
-from .operators import similarity as SIM
 from .operators.aggregate import (
     hopping, log_histogram, salted_sink_aggregates, timeseries_forecast,
     tumbling,
@@ -747,170 +746,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                             max_hamming=3)
 
 
-def _banded_neardup_oracle(dim: int = 64, n_planes: int = 8,
-                           n_bands: int = 4,
-                           threshold: float = 0.4) -> str:
-    """DuckDB oracle reproducing lsh_banded_pairs exactly: per-band
-    bucket expressions with the identical md5-derived plane literals,
-    UNION ALL entry table, band equi-join candidates, cosine verify."""
-    def bucket_expr(b: int) -> str:
-        planes = SIM.portable_planes(dim, n_planes, f"band{b}")
-        return " + ".join(
-            "(CASE WHEN list_dot_product(v, ["
-            + ", ".join(repr(c) for c in planes[p])
-            + f"]) > 0 THEN {1 << p} ELSE 0 END)"
-            for p in range(n_planes))
-    entries = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {b} AS band, {bucket_expr(b)} AS bk FROM e"
-        for b in range(n_bands))
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-ent AS ({entries}),
-cand AS (SELECT DISTINCT a.vec_id AS id1, c.vec_id AS id2
-         FROM ent a JOIN ent c
-           ON a.band = c.band AND a.bk = c.bk AND a.vec_id < c.vec_id)
-SELECT id1, id2, round(list_cosine_similarity(e1.v, e2.v), 4) AS cos
-FROM cand JOIN e e1 ON cand.id1 = e1.vec_id
-          JOIN e e2 ON cand.id2 = e2.vec_id
-WHERE list_cosine_similarity(e1.v, e2.v) >= {threshold}
-"""
-
-
-@q("embedding_neardup", _banded_neardup_oracle())
-def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup on the SCALE path: OR-amplified banded
-    hyperplane LSH candidates + exact cosine verify — the registered
-    operator contains no cross join (plan-shape-tested); the O(n²)
-    ``pairwise_neardup`` survives only as the documented verify/oracle
-    baseline."""
-    emb = t(spark, sf_dir, "embeddings")
-    out = SIM.lsh_banded_pairs(emb, "vec_id", "embedding", dim=64,
-                               n_planes=8, n_bands=4, threshold=0.4)
-    return out.select("id1", "id2", F.round("cos", 4).alias("cos"))
-
-
-# ===========================================================================
-# Similarity search
-# ===========================================================================
-
-
-def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
-    row = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0) \
-        .select("embedding").collect()[0]
-    return [float(x) for x in row.embedding]
-
-
-@q("ann_topk_bruteforce", """
-SELECT b.vec_id,
-       round(list_cosine_similarity(
-         (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0),
-         b.embedding::DOUBLE[]), 5) AS cos
-FROM embeddings b WHERE b.vec_id != 0
-ORDER BY list_cosine_similarity(
-         (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0),
-         b.embedding::DOUBLE[]) DESC, b.vec_id
-LIMIT 10
-""")
-def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir)
-    out = SIM.brute_force_topk(emb.filter(F.col("vec_id") != 0),
-                               "vec_id", "embedding", qv, 10)
-    return out.select("vec_id", F.round("cos", 5).alias("cos"))
-
-
-def _lsh_bucketed_oracle(dim: int = 64, n_planes: int = 6,
-                         threshold: float = 0.3) -> str:
-    """DuckDB oracle for hyperplane-LSH candidates: the identical
-    md5-derived plane constants are inlined as SQL literals."""
-    planes = SIM.portable_planes(dim, n_planes)
-    bucket = " + ".join(
-        "(CASE WHEN list_dot_product(v, ["
-        + ", ".join(repr(c) for c in planes[p])
-        + f"]) > 0 THEN {1 << p} ELSE 0 END)"
-        for p in range(n_planes))
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-b AS (SELECT vec_id, v, {bucket} AS bucket FROM e),
-cand AS (SELECT a.vec_id AS id1, c.vec_id AS id2, a.v AS v1, c.v AS v2
-         FROM b a JOIN b c
-           ON a.bucket = c.bucket AND a.vec_id < c.vec_id)
-SELECT id1, id2, round(list_cosine_similarity(v1, v2), 5) AS cos
-FROM cand WHERE list_cosine_similarity(v1, v2) >= {threshold}
-"""
-
-
-@q("ann_lsh_bucketed", _lsh_bucketed_oracle())
-def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH candidate generation + cosine verify —
-    plane constants are portable literals, so the bucket assignment,
-    candidate join and verify are all DuckDB-oracle-checked."""
-    emb = t(spark, sf_dir, "embeddings")
-    out = SIM.lsh_candidate_pairs(emb, "vec_id", "embedding", dim=64,
-                                  n_planes=6, threshold=0.3)
-    return out.select("id1", "id2", F.round("cos", 5).alias("cos"))
-
-
-def _lsh_multiprobe_oracle(dim: int = 64, n_planes: int = 6,
-                           n_probe: int = 3, k: int = 10) -> str:
-    """DuckDB oracle for multi-probe LSH top-k: identical plane
-    literals; the probe set (base bucket + lowest-|margin| Hamming-1
-    flips) is computed with the same rank-by-margin arithmetic the
-    Spark expression uses (operators/similarity.py
-    lsh_probes_from_dots_sql)."""
-    planes = SIM.portable_planes(dim, n_planes)
-
-    def bucket(v: str) -> str:
-        return "(" + " + ".join(
-            f"(CASE WHEN list_dot_product({v}, ["
-            + ", ".join(repr(c) for c in planes[p])
-            + f"]) > 0 THEN {1 << p} ELSE 0 END)"
-            for p in range(n_planes)) + ")"
-
-    dots = ("[" + ", ".join(
-        f"list_dot_product(qv, ["
-        + ", ".join(repr(c) for c in planes[p]) + "])"
-        for p in range(n_planes)) + "]")
-    rank = (f"len(list_filter(range(0, {n_planes}), "
-            f"q -> q != p AND (abs(d[q + 1]) < abs(d[p + 1]) "
-            f"OR (abs(d[q + 1]) = abs(d[p + 1]) AND q < p))))")
-    probes = (f"list_concat([base], "
-              f"list_transform(list_filter(range(0, {n_planes}), "
-              f"p -> {rank} < {n_probe - 1}), "
-              f"p -> xor(base, CAST(1 << p AS BIGINT))))")
-    return f"""
-WITH allv AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-              FROM embeddings),
-q AS (SELECT v AS qv FROM allv WHERE id = 0),
-qd AS (SELECT qv, {dots} AS d FROM q),
-qb AS (SELECT qv, d, CAST({bucket('qv')} AS BIGINT) AS base FROM qd),
-qp AS (SELECT qv, {probes} AS pl FROM qb),
-assign AS (SELECT b.id, b.v, CAST({bucket('b.v')} AS BIGINT) AS bk
-           FROM allv b WHERE b.id != 0),
-cand AS (SELECT a.id, a.v, p.qv FROM assign a, qp p
-         WHERE list_contains(p.pl, a.bk))
-SELECT id AS vec_id, round(list_cosine_similarity(v, qv), 5) AS cos
-FROM cand
-ORDER BY list_cosine_similarity(v, qv) DESC, id
-LIMIT {k}
-"""
-
-
-@q("ann_lsh_multiprobe", _lsh_multiprobe_oracle())
-def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe LSH top-k (query vec_id=0, probe 3 buckets): fixes
-    single-probe's ≈0 recall (ann_recall_at_k) by also scanning the
-    query's two lowest-margin Hamming-1 neighbor buckets — candidate
-    share ×~n_probe, base side unchanged (map-only bucket expr +
-    pushable IN filter + TakeOrderedAndProject)."""
-    emb = t(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir)
-    out = SIM.ann_multiprobe_topk(
-        emb.filter(F.col("vec_id") != 0), "vec_id", "embedding",
-        dim=64, query_vec=qv, k=10, n_planes=6, n_probe=3)
-    return out.select("vec_id", F.round("cos", 5).alias("cos"))
-
-
 # ===========================================================================
 # Text analysis (training-data extensions)
 # ===========================================================================
@@ -978,70 +813,6 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (docs.select("source", TX.fingerprint("text").alias("fp"))
             .groupBy("source")
             .agg(F.count_distinct("fp").alias("n_fingerprints")))
-
-
-# ===========================================================================
-# Multimodal plumbing (binary payloads)
-# ===========================================================================
-
-
-@q("multimodal_binary_meta", """
-SELECT count(*) AS n,
-       CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes,
-       count(DISTINCT sha256(text)) AS distinct_payloads
-FROM documents
-""")
-def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.multimodal import with_media_meta
-    docs = t(spark, sf_dir, "documents") \
-        .withColumn("payload", F.encode("text", "UTF-8"))
-    meta = with_media_meta(docs, "payload", "text/plain")
-    return meta.agg(F.count("*").alias("n"),
-                    F.sum("byte_len").alias("total_bytes"),
-                    F.count_distinct("sha256").alias("distinct_payloads"))
-
-
-@q("multimodal_resize", """
-SELECT doc_id,
-       CAST(CASE WHEN L = 0 THEN 0
-            ELSE LEAST(64, CAST(ceil(L * 1.0 / GREATEST(1, L // 64))
-                               AS INT)) END AS INT) AS thumb_bytes,
-       CAST(8 AS INT) AS thumb_w, CAST(8 AS INT) AS thumb_h
-FROM (SELECT doc_id, octet_length(encode(text)) AS L FROM documents)
-""")
-def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize plumbing (operators/multimodal.py resize_images): the
-    stubbed byte-downsample runs through the REAL Arrow mapInPandas
-    path; the oracle value-checks the output cardinality, dims, and
-    the stride-slicing length arithmetic (content is the documented
-    codec stub)."""
-    from .operators.multimodal import resize_images
-    docs = t(spark, sf_dir, "documents") \
-        .select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    out = resize_images(docs, "payload", width=8, height=8)
-    return out.select("doc_id",
-                      F.octet_length("thumb").alias("thumb_bytes"),
-                      "thumb_w", "thumb_h")
-
-
-_MM_FEAT_TERMS = " + ".join(
-    f"(('0x' || substr(h, {2 * i + 1}, 2))::INT / 255.0)::FLOAT::DOUBLE"
-    for i in range(8))
-
-
-@q("multimodal_features", f"""
-SELECT doc_id, round({_MM_FEAT_TERMS}, 5) AS feat_sum
-FROM (SELECT doc_id, sha256(text) AS h FROM documents)
-""")
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.multimodal import decode_features
-    docs = t(spark, sf_dir, "documents") \
-        .select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    feats = decode_features(docs, "payload")
-    return feats.select(
-        "doc_id",
-        F.round(F.aggregate("features", F.lit(0.0),
-                            lambda a, v: a + v), 5).alias("feat_sum"))
 
 
 # ===========================================================================
@@ -1185,76 +956,6 @@ def sp_sql_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sp.sql(
         "SELECT event_type, COUNT(*) AS n FROM STREAM:events "
         "WINDOW TUMBLING (1 HOUR) GROUP BY event_type;")
-
-
-@q("ann_ivf", """
-WITH q AS (SELECT embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id = 0),
-cent AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-         FROM embeddings WHERE vec_id != 0 ORDER BY vec_id LIMIT 16),
-assign AS (
-  SELECT e.vec_id, e.embedding::DOUBLE[] AS v,
-         (SELECT c.cid FROM cent c
-          ORDER BY list_cosine_similarity(c.cvec, e.embedding::DOUBLE[])
-            DESC, c.cid LIMIT 1) AS cid
-  FROM embeddings e WHERE e.vec_id != 0),
-probe AS (SELECT cid FROM cent, q
-          ORDER BY list_cosine_similarity(cvec, q.v) DESC, cid LIMIT 4),
-bucket AS (SELECT a.* FROM assign a JOIN probe p USING (cid))
-SELECT b.vec_id, round(list_cosine_similarity(q.v, b.v), 5) AS cos
-FROM bucket b, q
-ORDER BY list_cosine_similarity(q.v, b.v) DESC, b.vec_id
-LIMIT 10
-""")
-def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate nearest neighbours (operators/similarity.py
-    ivf_topk): deterministic coarse quantizer (first 16 ids), probe the
-    4 nearest buckets, exact-rank inside — the 10^12-row scale path the
-    brute-force scan cannot be."""
-    emb = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    qv = _query_vec(spark, sf_dir)
-    out = SIM.ivf_topk(emb, "vec_id", "embedding", qv, k=10,
-                       n_centroids=16, n_probe=4)
-    return out.select("vec_id", F.round("cos", 5).alias("cos"))
-
-
-def _ann_pq_oracle(m: int = 8, sub: int = 8, n_codes: int = 32,
-                   cand: int = 80) -> str:
-    """DuckDB reproduction of pq_topk: per subspace a scalar subquery
-    picks the codebook entry nearest the vector's sub-vector (the
-    encode argmin, ties to lower j) and returns that entry's squared
-    distance to the QUERY's sub-vector (the ADC lookup) — the per-
-    subspace terms sum in fixed s order, matching the Spark plan's
-    literal '+' chain."""
-    def d2(a: str, b: str) -> str:
-        return (f"list_sum(list_transform({a}, "
-                f"(x, i) -> (x - {b}[i]) * (x - {b}[i])))")
-
-    terms = []
-    for s in range(m):
-        lo, hi = s * sub + 1, s * sub + sub
-        csub = f"cent.cvec[{lo}:{hi}]"
-        terms.append(
-            f"(SELECT {d2(f'q.v[{lo}:{hi}]', csub)} "
-            f"FROM cent, q "
-            f"ORDER BY {d2(f'b.v[{lo}:{hi}]', csub)}, cent.j "
-            f"LIMIT 1)")
-    d2_sum = " + ".join(terms)
-    return f"""
-WITH q AS (SELECT embedding::DOUBLE[] AS v FROM embeddings
-           WHERE vec_id = 0),
-cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j,
-                embedding::DOUBLE[] AS cvec
-         FROM embeddings WHERE vec_id != 0
-         ORDER BY vec_id LIMIT {n_codes}),
-base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         WHERE vec_id != 0),
-scored AS (SELECT b.vec_id, b.v, ({d2_sum}) AS d2 FROM base b),
-c AS (SELECT vec_id FROM scored ORDER BY d2, vec_id LIMIT {cand})
-SELECT b.vec_id, round(list_cosine_similarity(q.v, b.v), 5) AS cos
-FROM base b JOIN c USING (vec_id), q
-ORDER BY list_cosine_similarity(q.v, b.v) DESC, b.vec_id
-LIMIT 10
-"""
 
 
 @q("parse_http_json", """
@@ -1490,94 +1191,6 @@ def parse_otlp_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "trace_id", "span_id", "scope_name",
         F.col("resource")["service.name"].alias("service"),
         F.col("attributes")["user"].alias("user_attr"))
-
-
-def _ann_ivf_pq_oracle(n_centroids: int = 16, n_probe: int = 4,
-                       m: int = 8, sub: int = 8, n_codes: int = 32,
-                       cand: int = 80) -> str:
-    """DuckDB reproduction of ivf_pq_topk: the ann_ivf assign/probe
-    CTEs select the probed-cell population, then the ann_pq encode +
-    ADC terms score ONLY that population; candidate cut and exact
-    refine follow. Composing the two proven oracles keeps every
-    tie-break (asc cid, asc j, asc vec_id) aligned with the plan."""
-    def d2(a: str, b: str) -> str:
-        return (f"list_sum(list_transform({a}, "
-                f"(x, i) -> (x - {b}[i]) * (x - {b}[i])))")
-
-    terms = []
-    for s in range(m):
-        lo, hi = s * sub + 1, s * sub + sub
-        csub = f"cb.cvec[{lo}:{hi}]"
-        terms.append(
-            f"(SELECT {d2(f'q.v[{lo}:{hi}]', csub)} "
-            f"FROM cb, q "
-            f"ORDER BY {d2(f'b.v[{lo}:{hi}]', csub)}, cb.j "
-            f"LIMIT 1)")
-    d2_sum = " + ".join(terms)
-    return f"""
-WITH q AS (SELECT embedding::DOUBLE[] AS v FROM embeddings
-           WHERE vec_id = 0),
-cent AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-         FROM embeddings WHERE vec_id != 0
-         ORDER BY vec_id LIMIT {n_centroids}),
-cb AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j,
-              embedding::DOUBLE[] AS cvec
-       FROM embeddings WHERE vec_id != 0
-       ORDER BY vec_id LIMIT {n_codes}),
-assign AS (
-  SELECT e.vec_id, e.embedding::DOUBLE[] AS v,
-         (SELECT c.cid FROM cent c
-          ORDER BY list_cosine_similarity(c.cvec, e.embedding::DOUBLE[])
-            DESC, c.cid LIMIT 1) AS cid
-  FROM embeddings e WHERE e.vec_id != 0),
-probe AS (SELECT cid FROM cent, q
-          ORDER BY list_cosine_similarity(cvec, q.v) DESC, cid
-          LIMIT {n_probe}),
-bucket AS (SELECT a.vec_id, a.v FROM assign a JOIN probe p USING (cid)),
-scored AS (SELECT b.vec_id, b.v, ({d2_sum}) AS d2 FROM bucket b),
-c AS (SELECT vec_id FROM scored ORDER BY d2, vec_id LIMIT {cand})
-SELECT b.vec_id, round(list_cosine_similarity(q.v, b.v), 5) AS cos
-FROM bucket b JOIN c USING (vec_id), q
-ORDER BY list_cosine_similarity(q.v, b.v) DESC, b.vec_id
-LIMIT 10
-"""
-
-
-@q("ann_ivf_pq", _ann_ivf_pq_oracle())
-def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF×PQ composed ANN (operators/similarity.py ivf_pq_topk — the
-    IVFADC serving path): 16-cell coarse quantizer, probe the 4 cells
-    nearest the query, ADC-scan only the probed cells' 8×1-byte codes
-    (32-entry codebooks), refine the top-80 exactly. On a deployed
-    corpus the probe filter is partition pruning over cell-partitioned
-    code files and the scan reads ~3%% of the vector bytes — the
-    composition is what serves 10^12 vectors. Recall@10 measured vs
-    brute force at sf0.01: 0.5 at n_probe=4, 0.7 at n_probe=8 — equal
-    to exact IVF at the same probes, so the PQ stage costs zero recall
-    at refine=8 (test_kmeans.py::test_ivf_pq_recall_two_probes)."""
-    emb = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    qv = _query_vec(spark, sf_dir)
-    out = SIM.ivf_pq_topk(emb, "vec_id", "embedding", qv, k=10, dim=64,
-                          n_centroids=16, n_probe=4, m=8, n_codes=32,
-                          refine=8)
-    return out.select("vec_id", F.round("cos", 5).alias("cos"))
-
-
-@q("ann_pq", _ann_pq_oracle())
-def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (operators/similarity.py pq_topk): 8
-    sub-spaces × 32 deterministic codebook entries (first-ids quantizer,
-    the ivf_topk trick), asymmetric-distance scan, top-80 candidates,
-    exact cosine refine to top-10. The memory-bound 10^12-vector scale
-    path — a deployed corpus stores 8 one-byte codes per vector instead
-    of 256 vector bytes; the plan is one map-only scan feeding
-    TakeOrderedAndProject. Measured recall@10 = 0.8 at these knobs
-    (1.0 at refine=16) on the sf0.01 corpus."""
-    emb = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    qv = _query_vec(spark, sf_dir)
-    out = SIM.pq_topk(emb, "vec_id", "embedding", qv, k=10, dim=64,
-                      m=8, n_codes=32, refine=8)
-    return out.select("vec_id", F.round("cos", 5).alias("cos"))
 
 
 @q("serialize_json_lines", """
@@ -1967,175 +1580,6 @@ def deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # ANN recall@k: approximation quality of the IVF / LSH paths (SURVEY §9)
 # ===========================================================================
-
-
-def _ann_recall_oracle(dim: int = 64, nq: int = 8, k: int = 10,
-                       n_cent: int = 16, n_probe: int = 4,
-                       n_planes: int = 6) -> str:
-    """DuckDB oracle reproducing the FULL recall pipeline: query split,
-    coarse quantizer, IVF probe lists, LSH buckets (identical portable
-    plane literals), per-query brute/approx top-k, and the recall join."""
-    planes = SIM.portable_planes(dim, n_planes)
-
-    def bucket(v: str) -> str:
-        return "(" + " + ".join(
-            f"(CASE WHEN list_dot_product({v}, ["
-            + ", ".join(repr(c) for c in planes[p])
-            + f"]) > 0 THEN {1 << p} ELSE 0 END)"
-            for p in range(n_planes)) + ")"
-
-    return f"""
-WITH allv AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-qs AS (SELECT id AS query_id, v AS qv FROM allv ORDER BY id LIMIT {nq}),
-base AS (SELECT * FROM allv
-         WHERE id NOT IN (SELECT query_id FROM qs)),
-cent AS (SELECT id AS cid, v AS cvec FROM base ORDER BY id LIMIT {n_cent}),
-assign AS (
-  SELECT b.id, b.v,
-         (SELECT c.cid FROM cent c
-          ORDER BY list_cosine_similarity(c.cvec, b.v) DESC, c.cid
-          LIMIT 1) AS cid,
-         {bucket('b.v')} AS bk
-  FROM base b),
-probe AS (
-  SELECT q.query_id, c.cid,
-         row_number() OVER (PARTITION BY q.query_id
-           ORDER BY list_cosine_similarity(c.cvec, q.qv) DESC, c.cid) AS pr
-  FROM qs q CROSS JOIN cent c),
-scored AS (
-  SELECT q.query_id, a.id, a.cid, a.bk, {bucket('q.qv')} AS qbucket,
-         list_cosine_similarity(q.qv, a.v) AS cos
-  FROM qs q CROSS JOIN assign a),
-brute_k AS (
-  SELECT query_id, id FROM (
-    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-             ORDER BY cos DESC, id) AS rk FROM scored) WHERE rk <= {k}),
-ivf_cand AS (
-  SELECT s.* FROM scored s JOIN probe p
-    ON p.query_id = s.query_id AND p.cid = s.cid AND p.pr <= {n_probe}),
-ivf_k AS (
-  SELECT query_id, id FROM (
-    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-             ORDER BY cos DESC, id) AS rk FROM ivf_cand) WHERE rk <= {k}),
-lsh_cand AS (SELECT * FROM scored WHERE bk = qbucket),
-lsh_k AS (
-  SELECT query_id, id FROM (
-    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-             ORDER BY cos DESC, id) AS rk FROM lsh_cand) WHERE rk <= {k}),
-rec AS (
-  SELECT b.query_id,
-         round(sum(CASE WHEN i.id IS NOT NULL THEN 1 ELSE 0 END)
-               * 1.0 / {k}, 4) AS recall_ivf,
-         round(sum(CASE WHEN l.id IS NOT NULL THEN 1 ELSE 0 END)
-               * 1.0 / {k}, 4) AS recall_lsh
-  FROM brute_k b
-  LEFT JOIN ivf_k i ON i.query_id = b.query_id AND i.id = b.id
-  LEFT JOIN lsh_k l ON l.query_id = b.query_id AND l.id = b.id
-  GROUP BY b.query_id),
-nci AS (SELECT query_id, count(*) AS n_cand_ivf FROM ivf_cand
-        GROUP BY query_id),
-ncl AS (SELECT query_id, count(*) AS n_cand_lsh FROM lsh_cand
-        GROUP BY query_id)
-SELECT r.query_id, r.recall_ivf, r.recall_lsh,
-       coalesce(nci.n_cand_ivf, 0) AS n_cand_ivf,
-       coalesce(ncl.n_cand_lsh, 0) AS n_cand_lsh
-FROM rec r LEFT JOIN nci USING (query_id) LEFT JOIN ncl USING (query_id)
-ORDER BY r.query_id
-"""
-
-
-@q("ann_recall_at_k", _ann_recall_oracle())
-def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of ann_ivf (16 centroids, probe 4) and single-bucket
-    hyperplane LSH (6 planes) against exact brute force, batched over
-    the 8 lowest-id query vectors (operators/similarity.py ann_recall).
-    Quantifies the approximation-quality knobs SURVEY §9 claims:
-    raising n_probe / lowering n_planes trades candidate volume
-    (n_cand_*) for recall."""
-    emb = t(spark, sf_dir, "embeddings")
-    return SIM.ann_recall(emb, "vec_id", "embedding", dim=64,
-                          n_queries=8, k=10, n_centroids=16,
-                          n_probe=4, n_planes=6)
-
-
-@q("multimodal_png_roundtrip", """
-WITH d AS (SELECT doc_id, CAST(8 + doc_id % 5 AS INT) AS img_w,
-                  CAST(8 + doc_id % 7 AS INT) AS img_h FROM documents),
-img AS (
-  SELECT d.doc_id, d.img_w, d.img_h,
-         CAST(sum((d.doc_id * 31 + x.g * 7 + y.g * 13) % 256) AS BIGINT)
-           AS img_sum
-  FROM d, generate_series(0, 11) AS x(g), generate_series(0, 13) AS y(g)
-  WHERE x.g < d.img_w AND y.g < d.img_h
-  GROUP BY 1, 2, 3),
-th AS (
-  SELECT d.doc_id,
-         CAST(sum((d.doc_id * 31 + ((x.g * d.img_w) // 4) * 7
-                   + ((y.g * d.img_h) // 4) * 13) % 256) AS BIGINT)
-           AS thumb_sum
-  FROM d, generate_series(0, 3) AS x(g), generate_series(0, 3) AS y(g)
-  GROUP BY 1)
-SELECT img.doc_id, img.img_w, img.img_h, img.img_sum,
-       CAST(4 AS INT) AS thumb_w, CAST(4 AS INT) AS thumb_h, th.thumb_sum
-FROM img JOIN th USING (doc_id)
-""")
-def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image pixels through the multimodal path (r3 — upgrades the
-    component from stub): per doc, a formula-keyed greyscale image is
-    PNG-ENCODED (functions/png.py, scanline filters 0..4 cycled),
-    DECODED back (zlib + unfilter), nearest-neighbour RESIZED on the
-    decoded pixels, RE-ENCODED, and decoded again — dims and pixel sums
-    of both generations are value-checked against a DuckDB oracle that
-    recomputes every pixel arithmetically (no decoder on the oracle
-    side, so the check is independent). All four mapInPandas hops are
-    Arrow-batched; at scale this is one map-only pass, no shuffle."""
-    from .operators.multimodal import (
-        decode_images, encode_fixture_pngs, resize_images,
-    )
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    pngs = encode_fixture_pngs(docs)
-    dec = decode_images(pngs)
-    r = (resize_images(dec, "payload", width=4, height=4)
-         .drop("payload", "thumb_w", "thumb_h")
-         .withColumnRenamed("width", "img_w")
-         .withColumnRenamed("height", "img_h")
-         .withColumnRenamed("pixel_sum", "img_sum"))
-    out = decode_images(r, "thumb")
-    return out.select("doc_id", "img_w", "img_h", "img_sum",
-                      F.col("width").alias("thumb_w"),
-                      F.col("height").alias("thumb_h"),
-                      F.col("pixel_sum").alias("thumb_sum"))
-
-
-@q("multimodal_jpeg_roundtrip", """
-WITH d AS (SELECT doc_id, CAST(8 + doc_id % 9 AS INT) AS img_w,
-                  CAST(8 + doc_id % 11 AS INT) AS img_h FROM documents)
-SELECT d.doc_id, d.img_w, d.img_h,
-       CAST(sum((d.doc_id * 37 + (x.g // 8) * 11 + (y.g // 8) * 17)
-                % 256) AS BIGINT) AS img_sum
-FROM d, generate_series(0, 15) AS x(g), generate_series(0, 17) AS y(g)
-WHERE x.g < d.img_w AND y.g < d.img_h
-GROUP BY 1, 2, 3
-""")
-def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL JPEG bitstream through the multimodal path (r4 — clears the
-    JPEG stub): per doc, a BLOCK-CONSTANT greyscale fixture is
-    JPEG-ENCODED at quality 100 (functions/jpeg.py — Annex K tables,
-    canonical huffman, DC prediction, byte stuffing, edge-block
-    padding) and DECODED back (marker parse, huffman decode, dequant,
-    IDCT); dims and pixel sums are value-checked against a DuckDB
-    oracle that recomputes every pixel arithmetically. Constant 8×8
-    blocks make the lossy codec EXACT here (DC-only blocks at
-    quality 100), so the check is bit-precise; the AC/lossy path is
-    tolerance-bounded in tests/test_multimodal.py. Both hops are
-    Arrow-batched mapInPandas — map-only, no shuffle."""
-    from .operators.multimodal import decode_images, encode_fixture_jpegs
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    dec = decode_images(encode_fixture_jpegs(docs))
-    return dec.select("doc_id",
-                      F.col("width").alias("img_w"),
-                      F.col("height").alias("img_h"),
-                      F.col("pixel_sum").alias("img_sum"))
 
 
 @q("parse_syslog", r"""
@@ -2627,234 +2071,6 @@ def snapshot_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot_context(ev, "event_type", "event_id",
                             F.col("event_id") % 97 == 0,
                             limit_rows=3, payload_cols=["user_id"])
-
-
-@q("multimodal_wav_features", """
-WITH d AS (SELECT doc_id, CAST(1 + doc_id % 2 AS INT) AS n_channels,
-                  CAST(256 + doc_id % 97 AS INT) AS n_samples
-           FROM documents),
-v AS (
-  SELECT d.doc_id, d.n_channels, d.n_samples,
-         (d.doc_id * 13 + c.g * 29 + i.g * 7) % 4096 - 2048 AS s
-  FROM d, generate_series(0, 352) AS i(g), generate_series(0, 1) AS c(g)
-  WHERE i.g < d.n_samples AND c.g < d.n_channels)
-SELECT doc_id, CAST(8000 AS INT) AS sample_rate, n_channels, n_samples,
-       CAST(sum(s) AS BIGINT) AS sample_sum,
-       CAST(sum(abs(s)) AS BIGINT) AS abs_sum,
-       CAST(max(abs(s)) AS INT) AS peak
-FROM v GROUP BY 1, 2, 3, 4
-""")
-def multimodal_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio samples through the multimodal path (r4 — clears the
-    audio stub): per doc, a formula-keyed int16 PCM clip (mono or
-    stereo by id parity, odd frame counts exercising the RIFF pad
-    byte) is WAV-ENCODED (functions/wav.py — RIFF chunk layout,
-    channel interleave) and DECODED back; rate/channels/frame-count
-    and integer sample statistics come from the actual decoded PCM and
-    are value-checked against a DuckDB oracle that recomputes every
-    sample arithmetically (no decoder on the oracle side). Both hops
-    are Arrow-batched mapInPandas — map-only, no shuffle at any
-    scale."""
-    from .operators.multimodal import decode_audio, encode_fixture_wavs
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    dec = decode_audio(encode_fixture_wavs(docs)).drop("payload")
-    return dec.select("doc_id", "sample_rate", "n_channels", "n_samples",
-                      "sample_sum", "abs_sum", "peak")
-
-
-@q("multimodal_video_frames", """
-WITH d AS (SELECT doc_id, CAST(4 + doc_id % 5 AS INT) AS n_frames,
-                  CAST(8 + doc_id % 5 AS INT) AS frame_w,
-                  CAST(6 + doc_id % 4 AS INT) AS frame_h
-           FROM documents),
-f AS (SELECT d.*, fr.g AS frame_idx
-      FROM d, generate_series(0, 8, 2) AS fr(g)
-      WHERE fr.g < d.n_frames)
-SELECT f.doc_id, f.n_frames, CAST(f.frame_idx AS INT) AS frame_idx,
-       f.frame_w, f.frame_h,
-       CAST(sum((f.doc_id * 31 + f.frame_idx * 19 + x.g * 7 + y.g * 13)
-                % 256) AS BIGINT) AS frame_sum
-FROM f, generate_series(0, 11) AS x(g), generate_series(0, 8) AS y(g)
-WHERE x.g < f.frame_w AND y.g < f.frame_h
-GROUP BY 1, 2, 3, 4, 5
-""")
-def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video frames through the multimodal path (r4 — clears the
-    video stub): per doc, a formula-keyed mono frame stack is
-    Y4M-ENCODED (functions/y4m.py — YUV4MPEG2 stream header + FRAME
-    markers) then 1:N frame-SAMPLED (every 2nd frame) with per-frame
-    pixel sums computed from the actual decoded planes; value-checked
-    against a DuckDB oracle that recomputes each sampled frame
-    arithmetically. The 1:N fan-out happens inside the Arrow batch
-    (UDTF shape) — map-only, no shuffle; compressed codecs remain the
-    documented ffmpeg plug-point."""
-    from .operators.multimodal import encode_fixture_y4ms, sample_video_frames
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    out = sample_video_frames(encode_fixture_y4ms(docs), every=2)
-    return out.select("doc_id", "n_frames", "frame_idx",
-                      "frame_w", "frame_h", "frame_sum")
-
-
-@q("multimodal_mp3_probe", """
-WITH d AS (
-  SELECT doc_id, CAST(3 + doc_id % 7 AS INT) AS n_frames,
-         ([44100, 48000, 32000])[CAST(1 + doc_id % 3 AS INT)] AS sr,
-         CASE WHEN doc_id % 4 = 0 THEN 27 + doc_id % 23 ELSE 0 END
-           AS id3_bytes
-  FROM documents),
-f AS (
-  SELECT d.*,
-         ([32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256,
-           320])[CAST(1 + (d.doc_id + (d.doc_id % 2) * i.g) % 14 AS INT)]
-           AS kbps,
-         (d.doc_id + i.g) % 2 AS padding
-  FROM d, generate_series(0, 8) AS i(g)
-  WHERE i.g < d.n_frames)
-SELECT doc_id, n_frames, CAST(sr AS INT) AS sample_rate,
-       CAST(min(kbps) AS INT) AS kbps_min,
-       CAST(max(kbps) AS INT) AS kbps_max,
-       min(kbps) <> max(kbps) AS vbr,
-       CAST(n_frames * 1152 AS BIGINT) AS total_samples,
-       CAST(n_frames * 1152 * 1000 // sr AS BIGINT) AS duration_ms,
-       CAST(id3_bytes AS INT) AS id3_bytes,
-       CAST(id3_bytes + sum(144000 * kbps // sr + padding) AS BIGINT)
-         AS parsed_bytes
-FROM f GROUP BY doc_id, n_frames, sr, id3_bytes
-""")
-def multimodal_mp3_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-audio STRUCTURAL probe (r5 — narrows the mp3
-    plug-point): per doc, a spec-valid MPEG-1 Layer III frame chain
-    (CBR for even ids, VBR walk for odd, ID3v2 tag every 4th id,
-    alternating padding bit) is built then header-walked
-    (functions/mpeg_audio.py) — frame count, rate, bitrate band,
-    exact sample count → duration, tag overhead, all WITHOUT decoding
-    a sample. The DuckDB oracle recomputes every field arithmetically
-    from ISO/IEC 11172-3's frame-length formula (144*bitrate/rate +
-    padding) — no codec on the oracle side. Map-only Arrow kernels,
-    no shuffle at any scale: this is the validate/meter pass a 100 TB
-    crawled-audio corpus gets before any sample-level work."""
-    from .operators.multimodal import encode_fixture_mp3s, probe_audio_frames
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    return probe_audio_frames(encode_fixture_mp3s(docs)).drop("payload")
-
-
-@q("multimodal_h264_probe", """
-SELECT doc_id,
-       CAST(300 + 2 * (doc_id % 11) AS INT) AS width,
-       CAST(180 + 2 * (doc_id % 7) AS INT) AS height,
-       CAST(([66, 77, 100])[CAST(1 + doc_id % 3 AS INT)] AS INT)
-         AS profile_idc,
-       CAST(30 + 10 * (doc_id % 3) AS INT) AS level_idc,
-       CAST(1 AS INT) AS n_sps, CAST(1 AS INT) AS n_pps,
-       CAST((2 + doc_id % 6 + 2) // 3 AS INT) AS n_idr,
-       CAST(2 + doc_id % 6 AS INT) AS n_slices
-FROM documents
-""")
-def multimodal_h264_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-video STRUCTURAL probe (r5 — narrows the h264
-    plug-point): per doc, a real Annex B stream (bit-exact Exp-Golomb
-    SPS with frame-cropping for non-mod-16 sizes, profile sweep
-    baseline/main/high, 3- and 4-byte start codes, RBSP
-    emulation-prevention escaping) is built then structurally parsed
-    (functions/h264.py): resolution/profile/level from the SPS bits,
-    keyframe/slice counts from the NAL walk — zero pixels decoded.
-    Oracle recomputes expectations from the fixture formulas alone.
-    Map-only, no shuffle; full pixel decode stays the documented
-    ffmpeg plug-point (operators/multimodal.py)."""
-    from .operators.multimodal import (
-        encode_fixture_h264s, probe_video_structure,
-    )
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    return probe_video_structure(encode_fixture_h264s(docs)).drop("payload")
-
-
-@q("multimodal_aac_probe", """
-WITH d AS (
-  SELECT doc_id, CAST(2 + doc_id % 6 AS INT) AS n_frames,
-         doc_id % 4 AS prof,
-         ([48000, 44100, 32000, 24000, 22050])[CAST(1 + doc_id % 5
-           AS INT)] AS sr,
-         CAST(1 + doc_id % 3 AS INT) AS channels,
-         doc_id % 2 = 0 AS has_crc
-  FROM documents),
-f AS (
-  SELECT d.*,
-         100 + (d.doc_id * 3 + i.g * 17) % 200 AS payload_len,
-         1 + (d.doc_id + i.g) % 2 AS blocks,
-         CASE WHEN d.has_crc AND i.g % 3 = 0 THEN 1 ELSE 0 END AS crc
-  FROM d, generate_series(0, 7) AS i(g)
-  WHERE i.g < d.n_frames)
-SELECT doc_id, n_frames,
-       (['Main', 'LC', 'SSR', 'LTP'])[CAST(1 + prof AS INT)] AS profile,
-       CAST(sr AS INT) AS sample_rate, channels,
-       CAST(sum(crc) AS INT) AS n_crc_frames,
-       CAST(1024 * sum(blocks) AS BIGINT) AS total_samples,
-       CAST(1024 * sum(blocks) * 1000 // sr AS BIGINT) AS duration_ms,
-       CAST(sum(7 + 2 * crc + payload_len) AS BIGINT) AS parsed_bytes
-FROM f GROUP BY doc_id, n_frames, prof, sr, channels
-""")
-def multimodal_aac_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-audio STRUCTURAL probe #2 (r5 — completes the
-    mp3/aac/h264 triple): per doc, a spec-valid ADTS frame chain
-    (profile sweep Main/LC/SSR/LTP, varying payload length, 1-2 raw
-    data blocks per frame, CRC-present 9-byte header on every 3rd
-    frame for even ids) is built then header-walked
-    (functions/adts.py): frame/raw-block counts, profile, rate,
-    channels, exact sample count → duration — zero samples decoded.
-    The DuckDB oracle recomputes every field arithmetically from
-    ISO/IEC 13818-7's header layout (13-bit frame length includes the
-    7/9-byte header; 1024 samples per raw data block) — no codec on
-    the oracle side. Map-only Arrow kernels, no shuffle at any
-    scale."""
-    from .operators.multimodal import encode_fixture_aacs, probe_adts_frames
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    return probe_adts_frames(encode_fixture_aacs(docs)).drop("payload")
-
-
-@q("multimodal_mp4_probe", """
-WITH d AS (
-  SELECT doc_id,
-         ([1000, 90000, 600, 30000, 12288])[CAST(1 + doc_id % 5
-           AS INT)] AS ts
-  FROM documents)
-SELECT doc_id,
-       (['isom', 'mp42', 'avc1', 'dash'])[CAST(1 + doc_id % 4 AS INT)]
-         AS major_brand,
-       CAST(ts AS INT) AS timescale,
-       CAST((ts * (3 + doc_id % 10) + doc_id % 7) * 1000 // ts
-         AS BIGINT) AS duration_ms,
-       CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 2 END AS INT)
-         AS n_tracks,
-       CAST(320 + doc_id % 65 AS INT) AS width,
-       CAST(180 + doc_id % 37 AS INT) AS height,
-       (['avc1', 'hev1', 'av01'])[CAST(1 + doc_id % 3 AS INT)]
-         AS video_codec,
-       CASE WHEN doc_id % 3 = 0 THEN NULL
-            ELSE (['mp4a', 'opus'])[CAST(1 + doc_id % 2 AS INT)] END
-         AS audio_codec,
-       CAST(1000 + (doc_id * 37) % 5000 AS BIGINT) AS mdat_bytes,
-       CAST(CASE WHEN doc_id % 3 = 0 THEN 12 ELSE 20 END AS INT)
-         AS n_boxes
-FROM d
-""")
-def multimodal_mp4_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Container-layer STRUCTURAL probe (r5 — completes the crawled-
-    video story: H.264-in-MP4 is the dominant web form): per doc, a
-    spec-valid ISO-BMFF box tree (brand/timescale/codec sweeps,
-    non-round durations, audio trak dropped on every 3rd id, mvhd v1
-    64-bit times on odd ids, largesize mdat on every 5th id) is built
-    then box-walked (functions/mp4.py): brand, movie duration, track
-    count, video dimensions (tkhd 16.16 fixed point), sample-entry
-    fourccs, mdat payload size, box count — zero samples touched. The
-    DuckDB oracle recomputes every field arithmetically from ISO/IEC
-    14496-12's layout (box count = 4 + 8 per trak; ms = duration *
-    1000 // timescale). Map-only Arrow kernels, no shuffle at any
-    scale."""
-    from .operators.multimodal import (
-        encode_fixture_mp4s, probe_mp4_structure,
-    )
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    return probe_mp4_structure(encode_fixture_mp4s(docs)).drop("payload")
 
 
 @q("redact_pii", """
@@ -3717,91 +2933,6 @@ def forward_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         fwd.decode_forward_binary(chunks, "chunk", fields))
     return back.select("event_id", "ts", "event_type", "user_id",
                        "value", "props", "tag")
-
-
-# ===========================================================================
-# Integer-exact k-means + SemDeDup over the embeddings table (r4)
-# ===========================================================================
-
-_KM_L2 = ("list_sum(list_transform(list_zip({a}.q, {b}.cq), "
-          "p -> (p[1] - p[2]) * (p[1] - p[2])))")
-_KM_CHAIN = """
-v AS (
-  SELECT vec_id,
-         list_transform(embedding::DOUBLE[],
-                        x -> CAST(floor(x * 1000) AS BIGINT) + 1024) AS q
-  FROM embeddings),
-c0 AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cl, q AS cq
-  FROM (SELECT vec_id, q FROM v ORDER BY vec_id LIMIT 8)),
-a1 AS (
-  SELECT v.vec_id, v.q,
-         (SELECT c.cl FROM c0 c
-          ORDER BY """ + _KM_L2.format(a="v", b="c") + """, c.cl
-          LIMIT 1) AS cl
-  FROM v),
-c1 AS (
-  SELECT cl, list(s ORDER BY i) AS cq FROM (
-    SELECT a1.cl, t.i, sum(a1.q[t.i]) // count(*) AS s
-    FROM a1, unnest(range(1, 65)) t(i)
-    GROUP BY a1.cl, t.i) GROUP BY cl),
-a2 AS (
-  SELECT v.vec_id, v.q,
-         (SELECT c.cl FROM c1 c
-          ORDER BY """ + _KM_L2.format(a="v", b="c") + """, c.cl
-          LIMIT 1) AS cl
-  FROM v)"""
-
-
-@q("kmeans_embeddings", "WITH " + _KM_CHAIN + """
-SELECT a2.vec_id, a2.cl::BIGINT AS cluster,
-       """ + _KM_L2.format(a="a2", b="c") + """::BIGINT AS d2
-FROM a2 JOIN c1 c ON c.cl = a2.cl
-""")
-def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed fixed-iteration Lloyd's k-means over integer-
-    quantized embeddings (operators/similarity.py kmeans): map-only
-    literal-centroid assignment, one k-row hash aggregate per update,
-    EXACT BIGINT arithmetic end to end — the DuckDB oracle replays
-    both Lloyd iterations (init = k smallest ids, floor-div centroid
-    update, lowest-cluster tie-break) and must match every assignment
-    and squared distance bit for bit."""
-    from .operators.similarity import kmeans
-    emb = t(spark, sf_dir, "embeddings")
-    out = kmeans(emb, "vec_id", "embedding", dim=64, k=8, iters=2)
-    return out.select("vec_id", F.col("cluster").cast("long"), "d2")
-
-
-@q("semdedup_drop", "WITH " + _KM_CHAIN + """,
-w AS (
-  SELECT a2.vec_id, a2.cl,
-         list_transform(e.embedding::DOUBLE[],
-                        x -> CAST(floor(x * 1000) AS BIGINT)) AS c
-  FROM a2 JOIN embeddings e USING (vec_id)),
-w2 AS (
-  SELECT vec_id, cl, c,
-         list_sum(list_transform(c, x -> x * x)) AS n2 FROM w),
-p AS (
-  SELECT b.vec_id, b.cl,
-         list_sum(list_transform(list_zip(a.c, b.c),
-                                 q -> q[1] * q[2])) AS dot,
-         a.n2 AS an2, b.n2 AS bn2
-  FROM w2 a JOIN w2 b ON a.cl = b.cl AND a.vec_id < b.vec_id)
-SELECT DISTINCT vec_id, cl::BIGINT AS cluster
-FROM p WHERE dot > 0 AND dot * dot * 10000 >= 1600 * an2 * bn2
-""")
-def semdedup_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (cluster-then-intra-cluster cosine dedup, Abbas et al.
-    2023): rows whose quantized cosine to a lower-id row in the same
-    k-means cluster reaches tau=0.4 are dropped. The pair join is
-    keyed by CLUSTER (never a corpus cross join); the cosine test is
-    pure BIGINT cross-multiplication (dot² · den ≥ tau² · |a|² · |b|²)
-    so the oracle reproduces it exactly."""
-    from .operators.similarity import semdedup
-    emb = t(spark, sf_dir, "embeddings")
-    out = semdedup(emb, "vec_id", "embedding", dim=64, k=8, iters=2,
-                   tau2_num=1600, tau2_den=10000)
-    return out.select("vec_id", F.col("cluster").cast("long"))
 
 
 # ===========================================================================
@@ -5517,41 +4648,6 @@ def kn_surprisal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                         discount_milli=750)
 
 
-@q("export_shards", """
-WITH d AS (SELECT doc_id, text,
-                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-           FROM documents),
-a AS (SELECT *,
-             CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-                                     1, 15))::BIGINT % 8 AS INT)
-               AS shard
-      FROM d),
-f AS (SELECT shard, n_tok,
-             ('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':'
-                                    || md5(text)), 1, 15))::BIGINT
-               AS fp
-      FROM a)
-SELECT shard, count(*) AS n_docs,
-       CAST(sum(n_tok) AS BIGINT) AS n_tok_sum,
-       CAST(bit_xor(fp) AS BIGINT) AS checksum
-FROM f GROUP BY shard
-""")
-def export_shards_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-shard manifest (operators/export.py shard_assign +
-    shard_manifest, 8 shards): deterministic md5 shard assignment and
-    the per-shard row/token/xor-checksum triple any engine can
-    recompute to prove the materialized dataset intact — xor fold is
-    order-insensitive and overflow-free, so the manifest is
-    partitioning-independent. The oracle replays assignment,
-    fingerprints, and folds."""
-    from .operators.export import shard_assign, shard_manifest
-    d = (t(spark, sf_dir, "documents")
-         .select("doc_id", "text",
-                 F.size(F.split("text", " ")).cast("long")
-                  .alias("n_tok")))
-    return shard_manifest(shard_assign(d, 8), "text")
-
-
 @q("span_corrupt", f"""
 WITH d AS (
   SELECT doc_id, source, {{TOK}} AS tokens,
@@ -5964,49 +5060,6 @@ def decontaminate_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = d.filter(F.col("doc_id") % 20 != 0)
     bench = d.filter(F.col("doc_id") % 20 == 0)
     return decontaminate_spans(train, bench, length=16)
-
-
-@q("shard_by_order", """
-WITH d AS (SELECT doc_id,
-                  CAST(len(string_split(text, ' ')) AS BIGINT)
-                    AS n_tok
-           FROM documents),
-r AS (SELECT doc_id, n_tok,
-             row_number() OVER (ORDER BY n_tok, doc_id) - 1 AS rk,
-             count(*) OVER () AS n
-      FROM d)
-SELECT CAST(rk * 8 // n AS INT) AS shard,
-       count(*) AS n_docs,
-       CAST(min(n_tok) AS BIGINT) AS min_len,
-       CAST(max(n_tok) AS BIGINT) AS max_len,
-       md5(array_to_string(list(doc_id ORDER BY rk), ',')) AS member_hash
-FROM r GROUP BY shard
-""")
-def shard_by_order_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range sharding (operators/export.py shard_by_order, 8 shards
-    ordered by n_tok): contiguous balanced length-ordered shards —
-    the curriculum-export layout (stream shard 0 first). The oracle
-    replays the global rank, the rank·N DIV total split, per-shard
-    length envelopes, and the exact ordered member list by md5."""
-    from pyspark.sql import Window
-
-    from .operators.export import shard_by_order
-    d = (t(spark, sf_dir, "documents")
-         .select("doc_id",
-                 F.size(F.split("text", " ")).cast("long")
-                  .alias("n_tok")))
-    out = shard_by_order(d, 8, order_col="n_tok")
-    w = Window.partitionBy("shard").orderBy("n_tok", "doc_id")
-    return (out
-            .withColumn("__m", F.collect_list("doc_id").over(
-                w.rowsBetween(Window.unboundedPreceding,
-                              Window.unboundedFollowing)))
-            .groupBy("shard")
-            .agg(F.count("*").alias("n_docs"),
-                 F.min("n_tok").alias("min_len"),
-                 F.max("n_tok").alias("max_len"),
-                 F.md5(F.concat_ws(",", F.first("__m")))
-                  .alias("member_hash")))
 
 
 @q("ngram_repetition", f"""

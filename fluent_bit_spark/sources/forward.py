@@ -22,7 +22,7 @@ posture as the OTLP/JSON file subset (sources/otlp.py):
   decode (``functions.msgpack.decode_forward_events``; accepts Message
   / Forward / PackedForward / gzip CompressedPackedForward / bare chunk
   streams) → typed columns per a field spec. Python runs once per
-  file, not per row — the file-codec posture (functions/png.py).
+  file, not per row.
 """
 
 from __future__ import annotations

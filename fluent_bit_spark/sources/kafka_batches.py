@@ -20,7 +20,7 @@ posture as forward chunks (sources/forward.py):
   sentinel row, DLQ-routable) → typed rows. Topic rides the file
   name, as it does in a real broker's ``<topic>-<partition>/`` layout
   — the batch format itself carries no topic. Python runs once per
-  file, not per row (the file-codec posture, functions/png.py).
+  file, not per row.
 
 Timestamps are Kafka CreateTime milliseconds (int64); the session
 pins UTC so the TIMESTAMP_NTZ → instant cast is deterministic, the

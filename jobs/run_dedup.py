@@ -50,7 +50,7 @@ def main() -> int:
     ap.add_argument("--exact-only", action="store_true",
                     help="hash-exact dedup only (skip near-dup LSH)")
     ap.add_argument("--mode", default=None,
-                    choices=["two-stage", "exact", "substring", "semdedup",
+                    choices=["two-stage", "exact", "substring",
                              "artifacts", "vs-corpus", "winnow",
                              "winnow-artifacts", "winnow-vs-corpus"],
                     help="dedup family (default two-stage LSH; "
@@ -83,17 +83,6 @@ def main() -> int:
                     help="winnow: drop fingerprints in more docs")
     ap.add_argument("--span-len", type=int, default=50,
                     help="substring mode: duplicated-window length")
-    ap.add_argument("--vec-col", default="embedding",
-                    help="semdedup mode: embedding column")
-    ap.add_argument("--dim", type=int, default=64,
-                    help="semdedup mode: embedding dimension")
-    ap.add_argument("--k", type=int, default=64,
-                    help="semdedup mode: k-means cluster count")
-    ap.add_argument("--tau", type=float, default=0.9,
-                    help="semdedup mode: cosine threshold (converted to "
-                         "the exact integer form tau^2/10000 internally "
-                         "- den stays at 1e4 so the BIGINT "
-                         "cross-multiplication cannot overflow)")
     args = ap.parse_args()
     mode = args.mode or ("exact" if args.exact_only else "two-stage")
 
@@ -292,24 +281,6 @@ def main() -> int:
                           "tokens_removed": int(agg["removed"] or 0),
                           "wall_sec": round(time.time() - t0, 2)}))
         return 0 if int(agg["n"]) == n_in else 2
-
-    if mode == "semdedup":
-        from fluent_bit_spark.operators.similarity import semdedup
-        dropped = semdedup(docs, args.id_col, args.vec_col, dim=args.dim,
-                           k=args.k, iters=2,
-                           tau2_num=round(args.tau * args.tau * 10000),
-                           tau2_den=10000)
-        dropped.write.mode("overwrite").parquet(f"{args.output}/dropped")
-        from fluent_bit_spark.caching import release
-        release(dropped)
-        drop_ids = spark.read.parquet(f"{args.output}/dropped")             .select(args.id_col)
-        deduped = docs.join(drop_ids, args.id_col, "left_anti")
-        deduped.write.mode("overwrite").parquet(f"{args.output}/deduped")
-        n_out = spark.read.parquet(f"{args.output}/deduped").count()
-        print(json.dumps({"mode": "semdedup", "rows_in": n_in,
-                          "rows_out": n_out, "dropped": n_in - n_out,
-                          "wall_sec": round(time.time() - t0, 2)}))
-        return 0
 
     if mode == "artifacts" and args.corpus_artifacts:
         # fold-in: --input is an ACCEPTED batch (e.g. the vs-corpus

@@ -1,137 +1,11 @@
-"""Dataset-shard export (operators/export.py + jobs/run_export.py):
-deterministic assignment, order/partitioning-insensitive checksums,
-writer-re-read verification."""
+"""Dataset-card job (jobs/run_card.py): per-source totals, Zipf and
+vocab-growth sections, and the drift section against a previous
+snapshot."""
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-
-import pytest
-from pyspark.sql import functions as F
-
-from fluent_bit_spark.operators.export import (export_shards,
-                                               shard_assign,
-                                               shard_by_order,
-                                               shard_manifest)
-
-
-def test_shard_assign_matches_python_and_balances(spark, tokens_df):
-    import hashlib
-    d = tokens_df.limit(400)
-    out = shard_assign(d, 8).select("doc_id", "shard").collect()
-    counts = {}
-    for r in out:
-        h = int(hashlib.md5(r["doc_id"].encode()).hexdigest()[:15], 16)
-        assert r["shard"] == h % 8
-        counts[r["shard"]] = counts.get(r["shard"], 0) + 1
-    assert len(counts) == 8 and min(counts.values()) > 10
-
-
-def test_manifest_is_partitioning_invariant(spark, tokens_df):
-    d = shard_assign(tokens_df.limit(300), 4)
-    a = sorted(map(tuple, shard_manifest(
-        d, "tokens").collect()))
-    b = sorted(map(tuple, shard_manifest(
-        d.repartition(13), "tokens").collect()))
-    assert a == b and len(a) == 4
-    with pytest.raises(ValueError):
-        shard_assign(d, 0)
-
-
-def test_manifest_detects_content_change(spark, tokens_df):
-    d = shard_assign(tokens_df.limit(100), 2)
-    a = {r["shard"]: r["checksum"]
-         for r in shard_manifest(d, "tokens").collect()}
-    mutated = d.withColumn(
-        "tokens",
-        F.when(F.col("doc_id") == d.first()["doc_id"],
-               F.slice("tokens", 1, 1)).otherwise(F.col("tokens")))
-    b = {r["shard"]: r["checksum"]
-         for r in shard_manifest(mutated, "tokens").collect()}
-    assert a != b and sum(a[k] != b[k] for k in a) == 1
-
-
-def test_run_export_job_verifies_and_detects_loss(
-        spark, fixture_paths, tmp_path, monkeypatch):
-    """CLI loop: export verifies via writer-re-read; deleting a shard
-    from the written tree makes a recomputed manifest differ."""
-    sys.path.insert(0, os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "jobs"))
-    import run_export
-
-    out = str(tmp_path / "ds")
-    monkeypatch.setattr(sys, "argv", [
-        "run_export.py", "--input", fixture_paths["tokens"],
-        "--output", out, "--shards", "8"])
-    printed = []
-    monkeypatch.setattr("builtins.print", lambda s: printed.append(s))
-    assert run_export.main() == 0
-    rep = json.loads(printed[-1])
-    assert rep["verified"] and rep["rows_sharded"] == rep["rows_in"]
-    man = json.load(open(f"{out}/manifest.json"))
-    assert len(man["shards"]) == 8
-    assert sum(m["n_docs"] for m in man["shards"]) == rep["rows_in"]
-
-    import shutil
-    shutil.rmtree(f"{out}/shards/shard=3")
-    back = spark.read.parquet(f"{out}/shards")
-    got = {r["shard"]: r["checksum"]
-           for r in shard_manifest(back, "tokens").collect()}
-    want = {m["shard"]: m["checksum"] for m in man["shards"]}
-    assert got != want and 3 not in got
-
-
-def test_shard_by_order_contiguous_and_balanced(spark, tokens_df):
-    """Range shards are contiguous in the order key (every shard's max
-    <= the next shard's min), balanced to ±1 docs, and cover every
-    doc exactly once."""
-    d = tokens_df.limit(403).select("doc_id", "n_tok")
-    out = shard_by_order(d, 8, order_col="n_tok")
-    rows = out.collect()
-    assert len(rows) == 403
-    by_shard: dict = {}
-    for r in rows:
-        by_shard.setdefault(r["shard"], []).append(r["n_tok"])
-    assert sorted(by_shard) == list(range(8))
-    sizes = [len(v) for _, v in sorted(by_shard.items())]
-    assert max(sizes) - min(sizes) <= 1
-    envs = [(min(v), max(v)) for _, v in sorted(by_shard.items())]
-    for (lo1, hi1), (lo2, hi2) in zip(envs, envs[1:]):
-        assert hi1 <= lo2
-    import pytest
-    with pytest.raises(ValueError):
-        shard_by_order(d, 0, order_col="n_tok")
-
-
-def test_run_export_order_mode(spark, fixture_paths, tmp_path,
-                               monkeypatch):
-    """--order-col produces verified contiguous range shards."""
-    import json
-
-    sys.path.insert(0, os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "jobs"))
-    import run_export
-
-    out = str(tmp_path / "ordered")
-    monkeypatch.setattr(sys, "argv", [
-        "run_export.py", "--input", fixture_paths["tokens"],
-        "--output", out, "--shards", "4", "--order-col", "n_tok"])
-    printed = []
-    monkeypatch.setattr("builtins.print", lambda s: printed.append(s))
-    assert run_export.main() == 0
-    rep = json.loads(printed[-1])
-    assert rep["verified"]
-    back = spark.read.parquet(f"{out}/shards")
-    envs = {r["shard"]: (r["lo"], r["hi"]) for r in
-            back.groupBy("shard")
-            .agg(F.min("n_tok").alias("lo"), F.max("n_tok").alias("hi"))
-            .collect()}
-    for s_ in range(3):
-        assert envs[s_][1] <= envs[s_ + 1][0]
 
 
 def test_run_card_job(spark, fixture_paths, tmp_path, monkeypatch):

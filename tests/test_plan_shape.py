@@ -117,41 +117,6 @@ def test_grep_filter_stays_in_codegen(spark, fixture_paths):
     assert "RLIKE" in plan or "rlike" in plan
 
 
-def test_embedding_neardup_has_no_cross_join(spark):
-    """The registered embedding near-dup operator must be the bucketed
-    LSH path: every join in the plan is an equi-join on (band, bucket)
-    or ids — a CartesianProduct / nested-loop join would be the O(n²)
-    brute pair join, which is only allowed inside the DuckDB oracle."""
-    from fluent_bit_spark.operators.similarity import lsh_banded_pairs
-    df = spark.createDataFrame(
-        [(i, [float((i * 7 + j) % 13) - 6.0 for j in range(8)])
-         for i in range(20)],
-        "vec_id long, embedding array<double>")
-    plan = (lsh_banded_pairs(df, "vec_id", "embedding", dim=8,
-                             n_planes=4, n_bands=2, threshold=0.4)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_ivf_topk_is_map_only_plus_topk(spark):
-    """IVF search must plan as one map-only scan (inline centroid argmax,
-    probe filter, cosine) feeding TakeOrderedAndProject — no Exchange,
-    no window, no join in the per-row path."""
-    from fluent_bit_spark.operators.similarity import ivf_topk
-    df = spark.createDataFrame(
-        [(i, [float((i * 5 + j) % 11) - 5.0 for j in range(8)])
-         for i in range(1, 40)],
-        "vec_id long, embedding array<double>")
-    plan = (ivf_topk(df, "vec_id", "embedding",
-                     [1.0] * 8, k=5, n_centroids=4, n_probe=2)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange" not in plan
-    assert "Window" not in plan
-    assert "Join" not in plan
-
-
 def test_range_lookup_is_broadcast_equi_join(spark):
     """The bucketed range join must plan as a BroadcastHashJoin on the
     bucket key with a residual range filter — NOT a nested-loop join
@@ -206,59 +171,6 @@ def test_multiline_join_is_single_shuffle(spark):
                          F.col("line").endswith("0"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
-
-
-def test_multiprobe_topk_shape_and_recall_dominates_single_probe(spark):
-    """Multi-probe LSH: (a) the probe set is base-bucket-first with
-    n_probe distinct Hamming-1-or-0 members; (b) the base-side plan is
-    map-only + TakeOrderedAndProject (no join/window/shuffle added by
-    probing); (c) its top-k overlap with brute force is >= the
-    single-bucket path's on the same data (probing supersets the
-    candidates)."""
-    from fluent_bit_spark.operators.similarity import (
-        ann_multiprobe_topk, brute_force_topk, lsh_bucket,
-        lsh_dots_sql, lsh_probes_from_dots_sql, _vec_sql)
-    import pyspark.sql.functions as F
-    dim, planes_n, k = 8, 4, 5
-    df = spark.createDataFrame(
-        [(i, [float((i * 5 + j * 3) % 11) - 5.0 for j in range(dim)])
-         for i in range(1, 60)],
-        "vec_id long, embedding array<double>")
-    qv = [1.0, -0.5, 2.0, 0.25, -1.5, 0.75, -0.25, 1.25]
-
-    probes = (spark.range(1)
-              .select(F.expr(lsh_dots_sql(_vec_sql(qv), dim,
-                                          planes_n)).alias("d"))
-              .select(F.expr(lsh_probes_from_dots_sql(
-                  "d", planes_n, 3)).alias("pl"))
-              .collect()[0].pl)
-    assert len(probes) == 3 and len(set(probes)) == 3
-    base_bucket = probes[0]
-    for flip in probes[1:]:
-        x = int(base_bucket) ^ int(flip)
-        assert x != 0 and (x & (x - 1)) == 0  # Hamming distance exactly 1
-
-    out = ann_multiprobe_topk(df, "vec_id", "embedding", dim, qv,
-                              k=k, n_planes=planes_n, n_probe=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    assert "Join" not in plan and "Window" not in plan
-
-    brute = {r.vec_id for r in brute_force_topk(
-        df, "vec_id", "embedding", qv, k).collect()}
-    mp = {r.vec_id for r in out.collect()}
-    single = (df.select("vec_id", "embedding",
-                        lsh_bucket("embedding", dim, planes_n).alias("bk"))
-              .filter(F.col("bk") == int(base_bucket)))
-    from fluent_bit_spark.operators.similarity import cosine
-    single_k = {r.vec_id for r in
-                (single.withColumn(
-                    "cos", cosine(F.col("embedding").cast("array<double>"),
-                                  F.expr(_vec_sql(qv))))
-                 .orderBy(F.desc("cos"), "vec_id").limit(k).collect())}
-    assert len(mp & brute) >= len(single_k & brute)
-    # the probed candidate set strictly contains the single bucket's
-    assert single_k <= mp or len(single_k) < k
 
 
 def _plan(df):
@@ -364,78 +276,6 @@ def test_line_dedup_reuses_materialized_lines(spark, tokens_df):
     # distinguishes reuse from re-evaluation)
     assert plan.count("InMemoryTableScan") >= 2, plan
     spark.catalog.clearCache()
-
-
-def test_pq_topk_is_map_only_plus_topk(spark):
-    """PQ search: the ADC scan (encode argmin + LUT sum, all literal
-    arithmetic) must be map-only feeding TakeOrderedAndProject — no
-    Exchange, window, or join anywhere; codebooks/LUT live in the plan
-    as literals (the tiny-broadcast 10^12-vector posture)."""
-    from fluent_bit_spark.operators.similarity import pq_topk
-    df = spark.createDataFrame(
-        [(i, [float((i * 7 + j) % 13) - 6.0 for j in range(16)])
-         for i in range(1, 60)],
-        "vec_id long, embedding array<double>")
-    out = pq_topk(df, "vec_id", "embedding", [1.0] * 16,
-                  k=5, dim=16, m=4, n_codes=8, refine=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange" not in plan
-    assert "Window" not in plan
-    assert "Join" not in plan
-
-
-def test_pq_recall_improves_with_refine(spark):
-    """Approximation-quality knob: widening the refine candidate pool
-    must not lose recall, and a full-width pool recovers brute force
-    exactly (the candidate ranking is a true distance bound)."""
-    from pyspark.sql import functions as FF
-    from fluent_bit_spark.operators.similarity import (_lit_vec, cosine,
-                                                       pq_topk)
-    df = spark.createDataFrame(
-        [(i, [float((i * 11 + 3 * j * j) % 17) - 8.0 for j in range(16)])
-         for i in range(1, 120)],
-        "vec_id long, embedding array<double>")
-    qv = [1.0, -2.0] * 8
-    brute = [r.vec_id for r in
-             df.select("vec_id",
-                       cosine(FF.col("embedding"), _lit_vec(qv))
-                       .alias("cos"))
-             .orderBy(FF.desc("cos"), "vec_id").limit(5).collect()]
-    r_small = {r.vec_id for r in
-               pq_topk(df, "vec_id", "embedding", qv, k=5, dim=16,
-                       m=4, n_codes=8, refine=2).collect()}
-    full = [r.vec_id for r in
-            pq_topk(df, "vec_id", "embedding", qv, k=5, dim=16,
-                    m=4, n_codes=8, refine=24).collect()]
-    assert full == brute                       # refine→all = exact
-    assert len(r_small & set(brute)) >= 2      # approximate but sane
-
-
-def test_pq_arrow_encode_bit_identical_to_sql(spark):
-    """The vectorized Arrow ADC path (pq_adc_arrow) must return the
-    EXACT rows of the pure-SQL form — same float64 ops in the same
-    accumulation order (8-element sequential sums, first-min ties) —
-    and stay map-only + TakeOrderedAndProject."""
-    from fluent_bit_spark.operators.similarity import pq_topk
-    df = spark.createDataFrame(
-        [(i, [float((i * 7 + j) % 13) - 6.0 + 0.125 * ((i + j) % 5)
-              for j in range(16)]) for i in range(1, 200)],
-        "vec_id long, embedding array<double>")
-    qv = [0.5, -1.25] * 8
-    a = [(r.vec_id, r.cos) for r in
-         pq_topk(df, "vec_id", "embedding", qv, k=7, dim=16, m=4,
-                 n_codes=8, refine=3, encode="arrow").collect()]
-    s = [(r.vec_id, r.cos) for r in
-         pq_topk(df, "vec_id", "embedding", qv, k=7, dim=16, m=4,
-                 n_codes=8, refine=3, encode="sql").collect()]
-    assert a == s and len(a) == 7              # bit-exact, ordered
-    out = pq_topk(df, "vec_id", "embedding", qv, k=7, dim=16, m=4,
-                  n_codes=8, refine=3, encode="arrow")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange" not in plan and "Join" not in plan
-    assert "MapInArrow" in plan                # the one Python boundary
 
 
 def test_vs_corpus_bucketed_band_table_one_sided_exchange(spark):

@@ -35,17 +35,12 @@ spark-submit --master 'local[8]' --py-files /tmp/smoke_engine.zip \
   jobs/run_pack.py --input .data/tokens_small.parquet \
   --output /tmp/smoke_pack --ctx 256 | tail -1   # exits 2 on token loss
 
-# r5-s2 job surfaces: denoising objectives + shard export, each with
-# its own exact conservation/verification exit code
-rm -rf /tmp/smoke_fim /tmp/smoke_export
+# r5-s2 job surface: denoising objectives, with its own exact
+# conservation exit code
+rm -rf /tmp/smoke_fim
 spark-submit --master 'local[8]' --py-files /tmp/smoke_engine.zip \
   jobs/run_pack.py --input .data/tokens_small.parquet \
   --output /tmp/smoke_fim --mode fim | tail -1      # exits 2 on sentinel loss
-spark-submit --master 'local[8]' --py-files /tmp/smoke_engine.zip \
-  jobs/run_export.py --input .data/tokens_small.parquet \
-  --output /tmp/smoke_export --shards 8 | tail -1   # exits 2 unless the
-                                                    # written tree re-reads
-                                                    # manifest-identical
 
 if [ "${1:-}" != "quick" ]; then
   # Volume-shape gates (VERDICT r3 #3): token/line conservation plus
@@ -63,9 +58,6 @@ if [ "${1:-}" != "quick" ]; then
     --out /tmp/smoke_tfidf_vol --gate | tail -1  # df table must stay vocab-bounded
   python tools/bench_substring.py --sizes 100000,400000 \
     --out /tmp/smoke_substr_vol --gate | tail -1 # planted-truth removal exact
-  python tools/bench_kmeans.py --sizes 100000,200000 --k 32 \
-    --semdedup-n 50000 --semdedup-k 100 \
-    --out /tmp/smoke_kmeans_vol --gate | tail -1 # twin recall must be exact
   python tools/bench_vscorpus.py --pairs 100000:10000 \
     --out /tmp/smoke_vsc_vol | tail -1 # exits 2 unless exact drops total
                                        # and fresh false-drops zero
