@@ -9,8 +9,9 @@ n_tok:int32, source:string``).
 This is NOT a port: fluent-bit is a row-at-a-time streaming C engine with
 no optimizer; this engine declares each pipeline as one lazy Catalyst plan
 (predicate pushdown, column pruning, whole-stage codegen, AQE) and keeps
-Python on the vectorized Arrow path only (pandas UDFs / mapInArrow — never
-per-row Python UDFs).
+Python on the vectorized Arrow path only (the parse stage is one
+``arrow_udf``; decoders and user parsers use ``mapInArrow`` / pandas
+UDFs — never per-row Python UDFs).
 
 Blueprint: SURVEY.md. Contract: BASELINE.json (north_rule / input_hint).
 """

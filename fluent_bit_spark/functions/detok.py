@@ -5,22 +5,20 @@ the reference consumes raw log lines; our input is pre-tokenized training
 sequences, so the raw line is reconstructed by a deterministic vocab
 lookup before regex parsing.
 
-Implementation is pure Arrow compute inside a pandas UDF: the token
-ListArray's flat values are gathered through the broadcast vocab with
-``Array.take`` and re-joined per row with ``pc.binary_join`` — both C++
-kernels, no per-row Python. The input column is returned untouched, so
-the token-array equality invariant holds trivially (transforms only add
-columns).
+Implementation is pure Arrow compute inside the parse ``arrow_udf``
+(``functions/parsers.fused_detok_parse``): the token ListArray's flat
+values are gathered through the broadcast vocab with ``Array.take`` and
+re-joined per row with ``pc.binary_join`` — both C++ kernels, no
+per-row Python. The token column is only read, so the token-array
+equality invariant holds trivially (transforms only add columns).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _detok_chunk(arr: pa.Array, vocab_arr: pa.Array) -> pa.Array:
@@ -31,33 +29,6 @@ def _detok_chunk(arr: pa.Array, vocab_arr: pa.Array) -> pa.Array:
     pieces = vocab_arr.take(flat)
     lists = pa.ListArray.from_arrays(arr.offsets, pieces)
     return pc.binary_join(lists, pa.scalar(""))
-
-
-def make_detokenize_udf(spark: SparkSession, vocab: list[str]):
-    """Return a pandas UDF ``tokens -> decoded`` closing over a broadcast
-    vocab (compile-once analogue of upstream:src/flb_regex.c precompiled
-    Onigmo patterns: the vocab Arrow array is built once per executor)."""
-    b = spark.sparkContext.broadcast(vocab)
-    cache: dict[str, pa.Array] = {}
-
-    @F.pandas_udf(T.StringType())
-    def detokenize(tokens: pd.Series) -> pd.Series:
-        va = cache.get("v")
-        if va is None:
-            va = pa.array(b.value, type=pa.string())
-            cache["v"] = va
-        arr = pa.Array.from_pandas(tokens, type=pa.list_(pa.int32()))
-        return _detok_chunk(arr, va).to_pandas()
-
-    return detokenize
-
-
-def with_decoded(df, spark: SparkSession, vocab: list[str],
-                 tokens_col: str = "tokens",
-                 out_col: str = "decoded"):
-    """Add ``decoded`` next to the untouched token column."""
-    udf = make_detokenize_udf(spark, vocab)
-    return df.withColumn(out_col, udf(F.col(tokens_col)))
 
 
 def tokens_fingerprint(tokens_col: str = "tokens") -> Column:

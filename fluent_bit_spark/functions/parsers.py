@@ -14,6 +14,10 @@ Reference semantics re-expressed (NOT ported):
   ``F.try_to_timestamp`` with strptime→Java format conversion.
 - parser decoders / do_next chains (upstream:src/flb_parser_decoder.c) →
   ``F.coalesce`` over try-parse columns (see ``parse_first_match``).
+- the pipeline's fused multi-shape parser (a parser list with do_next
+  chaining) → one ``F.arrow_udf`` over the RE2 kernel ``_parse_arrow``,
+  detokenizing first on the tokens path (``fused_detok_parse``,
+  ``with_parsed``).
 """
 
 from __future__ import annotations
@@ -341,11 +345,15 @@ def try_strptime(col: Column | str, fmt: str) -> Column:
 
 # ---------------------------------------------------------------------------
 # Fused multi-shape log-line parser: the flagship pipeline's hot path.
-# One Arrow round-trip classifies and parses all five fixture shapes
+# One arrow_udf classifies and parses all five fixture shapes
 # (apache / json / ltsv / logfmt / garbage). Equivalent to a fluent-bit
 # parser list with do_next chaining, but fused so the 10^12-row scan pays
-# a single UDF boundary.
+# a single UDF boundary. Only the UDF's argument (tokens, or decoded on
+# the text path) crosses into Python, and only (decoded, fields) come
+# back: no pandas, and the rest of the row stays in the JVM.
 # ---------------------------------------------------------------------------
+
+KEEP_DECODED = ("always", "dlq_only")
 
 PARSED_FIELDS = [
     ("kind", T.StringType()),
@@ -364,6 +372,7 @@ PARSED_FIELDS = [
 ]
 PARSED_SCHEMA = T.StructType(
     [T.StructField(n, t) for n, t in PARSED_FIELDS])
+_FIELD_NAMES = [n for n, _ in PARSED_FIELDS]
 
 _APACHE_RE = re.compile(
     r'^(?P<ip>\d+\.\d+\.\d+\.\d+) - (?P<user>\S+) \[(?P<ts_raw>[^\]]+)\] '
@@ -396,10 +405,10 @@ def _ex(arr, pattern: str, group: str = "v"):
 def _parse_arrow(arr: pa.Array) -> dict[str, pa.Array]:
     """Arrow-compute parse core (pc.extract_regex = RE2 in C++, no
     per-row Python): classify + extract all shapes, returning one
-    arrow array per PARSED_FIELDS column. Shared by the pandas-UDF
-    wrapper (``_parse_batch``) and the fused mapInArrow stage
-    (``fused_detok_parse``); semantics pinned to the pandas reference
-    implementation by the parity test in tests/test_parsers.py."""
+    arrow array per PARSED_FIELDS column. The body of the parse
+    ``arrow_udf`` (``_parse_udf``); semantics pinned to the pandas
+    reference implementation (``_parse_batch_pandas``) by the parity
+    test in tests/test_parsers.py."""
     f = lambda m: pc.fill_null(m, False)  # noqa: E731
 
     js = f(pc.starts_with(arr, "{"))
@@ -470,18 +479,9 @@ def _parse_arrow(arr: pa.Array) -> dict[str, pa.Array]:
     }
 
 
-def _parse_batch(s: pd.Series) -> pd.DataFrame:
-    arr = pa.Array.from_pandas(s, type=pa.string())
-    out = pa.table(_parse_arrow(arr)).to_pandas(types_mapper=None)
-    # nullable numeric dtypes expected by the struct schema
-    for c, dt in (("code", "Int32"), ("size", "Int64"),
-                  ("dur_ms", "Int64"), ("k", "Int64")):
-        out[c] = out[c].astype(dt)
-    out.index = s.index
-    return out
-
-
 def _parse_batch_pandas(s: pd.Series) -> pd.DataFrame:
+    """pandas reference implementation of :func:`_parse_arrow`, kept as
+    the test oracle."""
     out = pd.DataFrame(index=s.index)
     for name, _ in PARSED_FIELDS:
         out[name] = pd.Series(None, index=s.index, dtype=object)
@@ -533,31 +533,47 @@ def _parse_batch_pandas(s: pd.Series) -> pd.DataFrame:
     return out
 
 
-def parse_logline_udf():
-    @F.pandas_udf(PARSED_SCHEMA)
-    def parse_logline(s: pd.Series) -> pd.DataFrame:
-        return _parse_batch(s)
+def _fields(cols: dict[str, pa.Array]) -> pa.StructArray:
+    return pa.StructArray.from_arrays([cols[n] for n in _FIELD_NAMES],
+                                      names=_FIELD_NAMES)
 
-    return parse_logline
+
+def _parse_udf(vocab=None, dlq_only: bool = False):
+    """The parse stage's one Python boundary: an ``arrow_udf`` over
+    :func:`_parse_arrow`. Without ``vocab`` it maps ``decoded`` →
+    ``fields``; with ``vocab`` (a broadcast) it maps ``tokens`` →
+    struct(decoded, fields), detokenizing first and, with ``dlq_only``,
+    nulling ``decoded`` where the line parsed."""
+    if vocab is None:
+        @F.arrow_udf(PARSED_SCHEMA)
+        def parse(decoded: pa.Array) -> pa.Array:
+            return _fields(_parse_arrow(decoded))
+        return parse
+
+    from .detok import _detok_chunk
+    schema = T.StructType([T.StructField("decoded", T.StringType()),
+                           T.StructField("fields", PARSED_SCHEMA)])
+    vocab_arr: list[pa.Array] = []   # built on the worker, on first use
+
+    @F.arrow_udf(schema)
+    def parse(tokens: pa.Array) -> pa.Array:
+        if not vocab_arr:
+            vocab_arr.append(pa.array(vocab.value, type=pa.string()))
+        decoded = _detok_chunk(tokens, vocab_arr[0])
+        cols = _parse_arrow(decoded)
+        if dlq_only:
+            decoded = pc.if_else(pc.is_valid(cols["kind"]),
+                                 pa.scalar(None, pa.string()), decoded)
+        return pa.StructArray.from_arrays([decoded, _fields(cols)],
+                                          names=["decoded", "fields"])
+    return parse
 
 
 def with_parsed(df: DataFrame, decoded_col: str = "decoded",
                 out: str = "fields") -> DataFrame:
     """Add the fused parse struct + parse_ok flag."""
-    udf = parse_logline_udf()
-    df = df.withColumn(out, udf(F.col(decoded_col)))
+    df = df.withColumn(out, _parse_udf()(F.col(decoded_col)))
     return df.withColumn("parse_ok", F.col(f"{out}.kind").isNotNull())
-
-
-# ---------------------------------------------------------------------------
-# Fused detokenize+parse via mapInArrow — the hot path's fastest form.
-# The chained pandas-UDF pair (with_decoded → with_parsed) converts the
-# token ListArray to a pandas object-Series of ndarrays and back, plus a
-# decoded-string round-trip; mapInArrow hands the RecordBatch straight
-# to arrow compute: zero pandas anywhere, tokens pass through untouched
-# (the token-equality invariant holds structurally — the input columns
-# are re-emitted by reference).
-# ---------------------------------------------------------------------------
 
 
 def fused_detok_parse(df: DataFrame, spark, vocab: list[str],
@@ -565,92 +581,25 @@ def fused_detok_parse(df: DataFrame, spark, vocab: list[str],
                       decoded_col: str = "decoded",
                       fields_col: str = "fields",
                       keep_decoded: str = "always") -> DataFrame:
-    """``keep_decoded``:
+    """Detokenize + parse: add ``decoded``, the fused parse struct and
+    parse_ok. ``tokens`` itself is only read, so the token-equality
+    invariant holds. ``keep_decoded``:
 
     - ``always`` — the raw decoded line rides every row (reference
       posture: the record body is the raw line until filters rewrite).
     - ``dlq_only`` — decoded is nulled on successfully-parsed rows:
       sinks write structured fields, the dead-letter sink keeps the raw
-      text for reprocessing. At 10^12 rows this cuts the Python→JVM
-      Arrow return volume by the parse-success rate (~90%+), which is
-      the dominant IPC cost of the stage.
+      text for reprocessing, and the Python→JVM return volume shrinks
+      by the parse-success rate.
     """
-    from .detok import _detok_chunk
-
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(decoded_col, T.StringType()),
-           T.StructField(fields_col, PARSED_SCHEMA),
-           T.StructField("parse_ok", T.BooleanType())])
-    b = spark.sparkContext.broadcast(vocab)
-    field_names = [n for n, _ in PARSED_FIELDS]
-    dlq_only = keep_decoded == "dlq_only"
-
-    def run(batches):
-        va = None
-        for batch in batches:
-            if va is None:
-                va = pa.array(b.value, type=pa.string())
-            i = batch.schema.get_field_index(tokens_col)
-            decoded = _detok_chunk(batch.column(i), va)
-            cols = _parse_arrow(decoded)
-            fields = pa.StructArray.from_arrays(
-                [cols[n] for n in field_names], names=field_names)
-            parse_ok = pc.is_valid(cols["kind"])
-            out_dec = (pc.if_else(parse_ok, pa.scalar(None, pa.string()),
-                                  decoded) if dlq_only else decoded)
-            yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [out_dec, fields, parse_ok],
-                names=[f.name for f in out_schema.fields])
-
-    return df.mapInArrow(run, out_schema)
-
-
-def fused_detok_parse_udf(df: DataFrame, spark, vocab: list[str],
-                          tokens_col: str = "tokens",
-                          decoded_col: str = "decoded",
-                          fields_col: str = "fields",
-                          keep_decoded: str = "always") -> DataFrame:
-    """Column-UDF form of the fused stage: ONLY ``tokens`` crosses into
-    Python and ONLY (decoded, parse fields) cross back — the token
-    arrays (the widest column, ~4 B × n_tok per row ≈ 240 B/row
-    uncompressed in Arrow IPC) are never re-serialized to the JVM,
-    unlike mapInArrow's whole-batch pass-through. At 10^12 rows the
-    return IPC drops from ~(tokens+fields) to ~fields alone.
-
-    Returns the same schema/columns as ``fused_detok_parse``."""
-    from .detok import _detok_chunk
-
-    flat = T.StructType(
-        [T.StructField("decoded", T.StringType())]
-        + [T.StructField(n, t) for n, t in PARSED_FIELDS])
-    b = spark.sparkContext.broadcast(vocab)
-    field_names = [n for n, _ in PARSED_FIELDS]
-    dlq_only = keep_decoded == "dlq_only"
-    cache: dict[str, pa.Array] = {}
-
-    @F.pandas_udf(flat)
-    def parse(tokens: pd.Series) -> pd.DataFrame:
-        va = cache.get("v")
-        if va is None:
-            va = pa.array(b.value, type=pa.string())
-            cache["v"] = va
-        arr = pa.Array.from_pandas(tokens, type=pa.list_(pa.int32()))
-        decoded = _detok_chunk(arr, va)
-        cols = _parse_arrow(decoded)
-        if dlq_only:
-            decoded = pc.if_else(pc.is_valid(cols["kind"]),
-                                 pa.scalar(None, pa.string()), decoded)
-        out = pa.table({"decoded": decoded, **cols}).to_pandas()
-        for c, dt in (("code", "Int32"), ("size", "Int64"),
-                      ("dur_ms", "Int64"), ("k", "Int64")):
-            out[c] = out[c].astype(dt)
-        out.index = tokens.index
-        return out
-
-    df = df.withColumn("__p", parse(F.col(tokens_col)))
-    return (df.withColumn(decoded_col, F.col("__p.decoded"))
-              .withColumn(fields_col, F.struct(
-                  *[F.col(f"__p.{n}").alias(n) for n in field_names]))
-              .withColumn("parse_ok", F.col(f"{fields_col}.kind").isNotNull())
+    if keep_decoded not in KEEP_DECODED:
+        raise ValueError(f"keep_decoded must be one of {KEEP_DECODED}, "
+                         f"got {keep_decoded!r}")
+    udf = _parse_udf(spark.sparkContext.broadcast(vocab),
+                     dlq_only=keep_decoded == "dlq_only")
+    return (df.withColumn("__p", udf(F.col(tokens_col)))
+              .withColumns({
+                  decoded_col: F.col("__p.decoded"),
+                  fields_col: F.col("__p.fields"),
+                  "parse_ok": F.col("__p.fields.kind").isNotNull()})
               .drop("__p"))

@@ -104,8 +104,8 @@ Supported sections / properties (the subset with a batch meaning here):
   template mode). ``msgpack`` lands PackedForward chunk files — the
   out_forward / buffer-chunk byte format (sources/forward.py).
 - ``[SERVICE]`` / ``service:`` — engine tuning extensions:
-  ``salt_buckets``, ``keep_decoded``, ``sink_partition_by``
-  (comma-separated).
+  ``salt_buckets``, ``keep_decoded`` (``always`` | ``dlq_only``; any
+  other value raises), ``sink_partition_by`` (comma-separated).
 
 Unknown section names raise (a silently-ignored output is a data-loss
 foot-gun); unknown properties within a known section are ignored like
@@ -118,6 +118,7 @@ import os
 import re
 from typing import Any
 
+from ..functions.parsers import KEEP_DECODED
 from ..operators.filters import GrepRule
 from ..operators.router import RewriteTagRule, Route
 from .pipeline import SINK_WRITERS, SOURCES, ParserFilterSpec, PipelineSpec
@@ -488,6 +489,10 @@ def spec_from_tree(tree: dict[str, Any],
     ``input_path``, ``input_format``, ``outputs`` (sink names in config
     order)."""
     service = tree.get("service", {})
+    keep_decoded = str(service.get("keep_decoded", "always"))
+    if keep_decoded not in KEEP_DECODED:
+        raise ValueError(f"[SERVICE] keep_decoded must be one of "
+                         f"{KEEP_DECODED}, got {keep_decoded!r}")
     pipe = tree.get("pipeline", {})
     inputs = pipe.get("inputs", [])
     if len(inputs) > 1:
@@ -1127,7 +1132,7 @@ def spec_from_tree(tree: dict[str, Any],
         sink_format=sink_format or "parquet",
         sink_template=sink_template,
         gelf_keys=gelf_keys,
-        keep_decoded=str(service.get("keep_decoded", "always")),
+        keep_decoded=keep_decoded,
         parser_filters=parser_filters,
         modify_specs=modify_specs,
         nest_ops=nest_ops,

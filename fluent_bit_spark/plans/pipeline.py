@@ -131,13 +131,12 @@ class PipelineSpec:
     # {"host": col, "message": col, "ts": col, "level": col|None};
     # every other payload column rides as a _-prefixed extra.
     gelf_keys: dict | None = None
-    # Decoded-line retention in sink output. 'always' (default) keeps the
-    # decoded text on every row — fluent-bit's record body rides to the
-    # sink, so dropping it silently would surprise any downstream reader.
-    # 'dlq_only' is an explicit bandwidth opt-in (decoded is NULLed for
-    # successfully-parsed rows); 'auto' infers dlq_only only when no
-    # grep/rewrite rule or tag_expr references the raw line, and warns.
-    keep_decoded: str = "always"            # 'always' | 'dlq_only' | 'auto'
+    # Decoded-line retention in sink output (tokens input). 'always'
+    # (default) keeps the decoded text on every row — fluent-bit's record
+    # body rides to the sink, so dropping it silently would surprise any
+    # downstream reader. 'dlq_only' is an explicit bandwidth opt-in
+    # (decoded is NULLed for successfully-parsed rows).
+    keep_decoded: str = "always"            # 'always' | 'dlq_only'
     # Second-stage parsers (filter_parser analogue,
     # upstream:plugins/filter_parser): each entry re-parses one column
     # with a named-parser chain, adding a typed struct column. Applied
@@ -286,23 +285,8 @@ def build_stages(spark: SparkSession, df: DataFrame, spec: PipelineSpec,
     ``side_tables`` holds the lookup dim and checklist lists already
     read (:func:`_read_once`); without it they are read here."""
     from ..functions.parsers import fused_detok_parse
-    keep = spec.keep_decoded
-    if keep == "auto":
-        # any rule addressing the raw line forces full decode retention;
-        # otherwise warn that sink rows will carry decoded=NULL
-        refs_decoded = (
-            any(r.key == "decoded" for r in spec.grep_rules)
-            or any(r.key == "decoded" for r in spec.rewrite_rules)
-            or "decoded" in (spec.tag_expr or ""))
-        keep = "always" if refs_decoded else "dlq_only"
-        if keep == "dlq_only":
-            import warnings
-            warnings.warn(
-                "keep_decoded='auto' resolved to 'dlq_only': no pipeline "
-                "rule references the decoded line, so sink output will "
-                "carry decoded=NULL for parsed rows. Set "
-                "keep_decoded='always' to retain it.", stacklevel=2)
-    out = fused_detok_parse(df, spark, spec.vocab, keep_decoded=keep)
+    out = fused_detok_parse(df, spark, spec.vocab,
+                            keep_decoded=spec.keep_decoded)
     return _post_parse_stages(spark, out, spec, side_tables)
 
 
@@ -488,8 +472,8 @@ def build_stages_text(spark: SparkSession, df_text: DataFrame,
       across re-runs, duplicate identical lines share an id);
     - ``n_tok`` = whitespace token count of the line (the token-table
       path gets it from the input schema);
-    - the SAME vectorized parser as the fused path (one Arrow-batched
-      pandas UDF — no per-row Python).
+    - the SAME parse kernel as the tokens path (one ``arrow_udf``
+      that reads only ``decoded`` — no pandas, no per-row Python).
 
     ``side_tables`` is as for :func:`build_stages`.
     """

@@ -16,14 +16,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .functions import text as TX
 from .functions.parsers import ltsv_parser, logfmt_parser
 from .operators import dedup as DD
 from .operators.aggregate import (
-    hopping, log_histogram, salted_sink_aggregates, timeseries_forecast,
-    tumbling,
+    hopping, log_histogram, salted_sink_aggregates, tumbling,
 )
 from .operators.enrich import checklist_keep, lookup_join
 from .operators.filters import GrepRule, grep

@@ -203,6 +203,20 @@ def test_grep_pattern_keeps_spaces():
     assert spec.grep_rules[0].pattern == "GET /index.html 200"
 
 
+def test_service_keep_decoded_accepts_only_always_and_dlq_only():
+    """``[SERVICE] keep_decoded`` is ``always`` or ``dlq_only``; any
+    other value (the retired ``auto``, a typo) raises instead of
+    silently meaning ``always``."""
+    conf = ("[SERVICE]\n    keep_decoded {}\n[INPUT]\n    Name tokens\n"
+            "[OUTPUT]\n    Match *\n")
+    spec, _ = spec_from_tree(parse_classic(conf.format("dlq_only")),
+                             vocab=["a"])
+    assert spec.keep_decoded == "dlq_only"
+    for bad in ("auto", "dlq-only"):
+        with pytest.raises(ValueError, match="keep_decoded"):
+            spec_from_tree(parse_classic(conf.format(bad)), vocab=["a"])
+
+
 def test_config_errors():
     with pytest.raises(ValueError, match="unknown config section"):
         parse_classic("[WEIRD]\n    Name x\n")

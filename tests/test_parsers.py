@@ -132,9 +132,10 @@ def test_arrow_pandas_parse_parity(spark, fixture_paths):
     """The Arrow-compute parse core must match the pandas reference
     implementation cell-for-cell on the full fixture line corpus."""
     import pandas as pd
+    import pyarrow as pa
     from fluent_bit_spark import fixtures as fx
     from fluent_bit_spark.functions.parsers import (
-        _parse_batch, _parse_batch_pandas)
+        _parse_arrow, _parse_batch_pandas)
     pool = fx.LinePool(2000, 42)
     v = fx.vocab()
     lines = ["".join(v[t] for t in
@@ -143,7 +144,12 @@ def test_arrow_pandas_parse_parity(spark, fixture_paths):
              for i in range(2000)]
     lines += ["", "no shape here", "{not json}", "x=1"]
     s = pd.Series(lines)
-    a, b = _parse_batch(s), _parse_batch_pandas(s)
+    # Arrow ints → pandas nullable ints of the same width, so a kernel
+    # column of the wrong width fails check_dtype
+    ints = {pa.int32(): pd.Int32Dtype(), pa.int64(): pd.Int64Dtype()}
+    a = pa.table(_parse_arrow(pa.array(lines, pa.string()))).to_pandas(
+        types_mapper=ints.get)
+    b = _parse_batch_pandas(s)
     # normalize null spelling: arrow emits None, pandas emits NaN in
     # object columns — same value through the Arrow serializer
     for f in (a, b):
@@ -152,20 +158,30 @@ def test_arrow_pandas_parse_parity(spark, fixture_paths):
     pd.testing.assert_frame_equal(a, b, check_dtype=True)
 
 
-def test_fused_udf_variant_matches_mapinarrow(spark, fixture_paths):
-    """Both fused-stage forms (mapInArrow pass-through vs tokens-only
-    pandas UDF) must produce identical rows."""
-    from pyspark.sql import functions as F
+def test_dlq_only_nulls_decoded_exactly_where_parsed(spark, fixture_paths):
+    """keep_decoded='dlq_only' nulls ``decoded`` exactly on the parsed
+    rows, keeps the independent decode on every other row, and leaves
+    ``fields``, ``parse_ok`` and ``tokens`` as the 'always' run has
+    them."""
     from fluent_bit_spark import fixtures as fx
-    from fluent_bit_spark.functions.parsers import (
-        fused_detok_parse, fused_detok_parse_udf)
+    from fluent_bit_spark.functions.parsers import fused_detok_parse
+    from tests.oracle_pandas import decode_row
+    v = fx.vocab()
     df = spark.read.parquet(fixture_paths["tokens"]).limit(2000)
-    a = fused_detok_parse(df, spark, fx.vocab(), keep_decoded="dlq_only")
-    b = fused_detok_parse_udf(df, spark, fx.vocab(), keep_decoded="dlq_only")
-    cols = ["doc_id", "decoded", "parse_ok", "fields"]
-    ra = sorted(map(str, a.select(cols).collect()))
-    rb = sorted(map(str, b.select(cols).collect()))
-    assert ra == rb and len(ra) == 2000
+    cols = ["doc_id", "tokens", "decoded", "parse_ok", "fields"]
+    lean = {r.doc_id: r for r in fused_detok_parse(
+        df, spark, v, keep_decoded="dlq_only").select(cols).collect()}
+    full = {r.doc_id: r for r in fused_detok_parse(
+        df, spark, v, keep_decoded="always").select(cols).collect()}
+    assert len(lean) == 2000 and lean.keys() == full.keys()
+    assert 0 < sum(r.parse_ok for r in lean.values()) < 2000
+    for d, r in lean.items():
+        assert (r.decoded is None) == r.parse_ok, d
+        if not r.parse_ok:
+            assert r.decoded == decode_row(r.tokens, v), d
+        f = full[d]
+        assert (r.fields, r.parse_ok, r.tokens) == \
+            (f.fields, f.parse_ok, f.tokens), d
 
 
 def test_decoder_chain_fallback_on_malformed(spark):

@@ -10,6 +10,8 @@ corpus through Python.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,9 +45,39 @@ def routed_plan(spark, fixture_paths):
 def test_single_arrow_udf_pass(routed_plan):
     """detokenize + parse fuse into ONE Python/Arrow boundary — one
     Arrow round-trip for the whole parse stage (§4.2 item 3). The
-    fused stage plans as a MapInArrow node; any ArrowEvalPython on top
-    of it would mean a second pass of the corpus through Python."""
+    fused stage plans as one ArrowEvalPython node; a second one would
+    mean a second pass of the corpus through Python."""
     assert _python_boundaries(routed_plan) == 1, routed_plan
+
+
+@pytest.mark.parametrize("input_format,arg", [("tokens", "tokens"),
+                                              ("text", "decoded")])
+def test_parse_is_one_arrow_udf_over_its_input_column(
+        spark, fixture_paths, tmp_path, input_format, arg):
+    """The slice's parse stage is one ``arrow_udf`` (no pandas) whose
+    only argument is ``tokens``, or ``decoded`` on the text path: no
+    other column of the row (``_lineage``, the payload) crosses into
+    Python and back."""
+    from pyspark.util import PythonEvalType
+
+    from fluent_bit_spark.plans.pipeline import read_routed
+    spec = PipelineSpec(vocab=fx.vocab(),
+                        routes=[Route(*r) for r in fx.DEFAULT_ROUTES],
+                        lookup_path=fixture_paths["lookup"])
+    files = [fixture_paths["tokens"]]
+    if input_format == "text":
+        log = tmp_path / "src0.log"
+        log.write_text('level=info msg="ok" code=200\njunk\n')
+        files = [str(log)]
+    routed = read_routed(spark, spec, input_format, files, 0)
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "MapInArrow" not in plan, plan
+    m = re.search(r"ArrowEvalPython \[\w+\(([^)]*)\)#\d+\], "
+                  r"\[[^\]]*\], (\d+)", plan)
+    assert m, plan
+    assert re.fullmatch(rf"{arg}#\d+", m.group(1)), plan
+    assert int(m.group(2)) == PythonEvalType.SQL_SCALAR_ARROW_UDF, plan
 
 
 def test_rewrite_keep_copies_parse_once(spark, fixture_paths):
