@@ -24,10 +24,13 @@ from pyspark.sql import functions as F
 def _detok_chunk(arr: pa.Array, vocab_arr: pa.Array) -> pa.Array:
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    # gather pieces for the flat values, rebuild list structure, join
+    # gather pieces for the flat values, rebuild list structure, join;
+    # flatten() starts at the slice's first value, so the offsets of a
+    # sliced array are rebased to start at 0 as well
     flat = arr.flatten()
     pieces = vocab_arr.take(flat)
-    lists = pa.ListArray.from_arrays(arr.offsets, pieces)
+    offsets = pc.subtract(arr.offsets, arr.offsets[0])
+    lists = pa.ListArray.from_arrays(offsets, pieces)
     return pc.binary_join(lists, pa.scalar(""))
 
 

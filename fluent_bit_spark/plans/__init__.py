@@ -1,3 +1,3 @@
 """Pipeline plan construction & execution (SURVEY.md §3.4): spec →
-lazily-composed DataFrame stages → persist → N sink writes → metrics →
-checkpoint commit."""
+lazily-composed DataFrame stages → lazy local checkpoint → rebalanced
+sink write → DLQ → metrics → checkpoint commit."""

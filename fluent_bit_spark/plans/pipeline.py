@@ -27,14 +27,16 @@ upstream:src/flb_input.c, src/flb_output.c):
   frames.
 - ``SINK_WRITERS`` has one writer per sink format. parquet and the
   out_file text formats write every sink of a slice in one job (rows
-  exploded over their routes mask, the flb_routes_mask fan-out, staged
-  and renamed into place); http/es/loki/kafka/msgpack write one
-  filtered job per sink.
+  exploded over their routes mask, the flb_routes_mask fan-out,
+  rebalanced by (sink, partition columns) so each group lands in one
+  file, staged and renamed into place); http/es/loki/kafka/msgpack
+  write one filtered job per sink.
 - ``write_slice`` is the slice body, shared by the batch job and the
-  streaming fan-out: the routed frame is persisted once and read by
-  the sink writer, the log_to_metrics side outputs, the DLQ write
-  (whose Observation counts the slice's rows) and the per-tag metrics
-  (one group-by on tag, ``slice_metrics``).
+  streaming fan-out: the routed frame is stored once, by a lazy local
+  checkpoint that the first write fills, and read by the sink writer,
+  the log_to_metrics side outputs, the DLQ write (whose Observation
+  counts the slice's rows) and the per-tag metrics (one group-by on
+  tag, ``slice_metrics``).
 
 Checkpoint/resume (upstream:plugins/in_tail/tail_db.c offset DB →
 per-slice manifest, BASELINE.json north_rule "resumable from
@@ -742,7 +744,8 @@ def slice_metrics(routed: DataFrame, salt_buckets: int) -> DataFrame:
     """Per-tag lineage metrics for one slice: records, token sums,
     distinct sources and DLQ rows by reason — the cmetrics/flb_metrics
     analogue (upstream:src/flb_metrics.c), counted in one group-by over
-    the persisted routed frame, so it costs no extra scan of the input.
+    the stored routed frame (``write_slice``), so it costs no extra scan
+    of the input.
     Partial aggregation collapses a hot tag on the map side, so a salt
     would only add a shuffle; ``salt_buckets`` is unused. A NULL tag is
     one group like any other."""
@@ -769,9 +772,17 @@ def _stage_and_publish(spark: SparkSession, rows: DataFrame, fmt: str,
     """Every sink of slice ``i`` in one write job: ``rows`` carry one
     ``__sink`` per route hit (fluent-bit flushes a chunk to every
     matching output) and are partitioned by sink under
-    ``_stage/batch_id=<i>``, then published."""
-    (rows.write.mode("overwrite")
-         .partitionBy("__sink", *spec.sink_partition_by).format(fmt)
+    ``_stage/batch_id=<i>``, then published.
+
+    The AQE ``REBALANCE`` hint on the partition columns sends each
+    (sink, partition value) group to one task, so each gets one file
+    rather than one per scan task that saw it. Hash placement on named
+    columns is the same on a task retry; AQE splits a group larger than
+    ``advisoryPartitionSizeInBytes`` over several tasks, so a hot group
+    is no straggler, and coalesces small ones."""
+    cols = ("__sink", *spec.sink_partition_by)
+    (rows.hint("rebalance", *cols).write.mode("overwrite")
+         .partitionBy(*cols).format(fmt)
          .save(f"{output_dir}/_stage/batch_id={i}"))
     _publish(spark, output_dir, i, sinks)
 
@@ -1001,13 +1012,23 @@ def write_slice(spark: SparkSession, routed: DataFrame, spec: PipelineSpec,
     """Write slice ``i`` of a routed frame: every sink, the
     log_to_metrics side outputs, the DLQ and the per-tag ``_metrics``.
     The batch job calls it per slice, the streaming fan-out per
-    micro-batch. The frame is persisted once and read by each write.
-    Returns ``(rows_in, rows_dlq)``, counted by an Observation on the
-    DLQ write: one pass over the persisted frame, no extra action."""
+    micro-batch. Returns ``(rows_in, rows_dlq)``, counted by an
+    Observation on the DLQ write: one pass over the stored frame, no
+    extra action.
+
+    The frame is stored once, as a lazy local checkpoint
+    (MEMORY_AND_DISK), and read by each write. The first job that reads
+    it (the sink write's shuffle-map stage) fills it; a ``persist``
+    would cost a job of its own under AQE, which fills a cached frame
+    before any stage reads it. The trade-off: once filled, a local
+    checkpoint has no lineage. If an executor is lost between the
+    slice's first and last job, the slice fails instead of being
+    recomputed; its manifest is not committed, so a resume redoes it."""
     if spec.sink_format not in SINK_WRITERS:
         raise ValueError(f"sink format must be {'|'.join(SINK_WRITERS)}, "
                          f"got {spec.sink_format!r}")
-    routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
+    routed = routed.localCheckpoint(
+        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     try:
         good = routed.filter(F.col("dlq_reason").isNull())
         payload_cols = [c for c in good.columns if c not in
@@ -1049,7 +1070,15 @@ def write_slice(spark: SparkSession, routed: DataFrame, spec: PipelineSpec,
          .parquet(f"{output_dir}/_metrics/b{i}"))
         return counts.get["rows_in"], counts.get["rows_dlq"]
     finally:
-        routed.unpersist()
+        _release_checkpoint(routed)
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a local checkpoint. ``DataFrame.unpersist``
+    does not: it only drops the frame from the SQL cache, and a local
+    checkpoint is not there but in the RDD under its ``LogicalRDD``,
+    which stays registered with the SparkContext until unpersisted."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 # ---------------------------------------------------------------------------
@@ -1113,10 +1142,11 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
     Returns run stats. ``fail_after_slice`` injects a crash for the
     resume property test (kill after k slices → re-run → identical sinks).
 
-    Scale shape: each slice is an independent bounded job whose sink
-    writes are partition-local (no shuffle — routing is a map-side
-    expression); the only shuffle per slice is the metrics aggregation,
-    one group-by on tag. The input is listed on the driver, and the
+    Scale shape: each slice is an independent bounded job with two
+    shuffles: the sink write is rebalanced by (sink, partition columns),
+    so each group lands in one file and a hot group is split by AQE,
+    and the metrics aggregation is one group-by on tag. Routing itself
+    is a map-side expression. The input is listed on the driver, and the
     lookup dim and checklist lists are read once per call, not per
     slice. On a 1000-executor cluster slices become much larger file
     groups; the manifest bounds re-work on failure to one slice.

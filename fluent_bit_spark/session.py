@@ -60,6 +60,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # the staged sink write's REBALANCE hint: AQE splits a skewed
+        # (sink, source) group over several tasks
+        .config("spark.sql.adaptive.optimizeSkewsInRebalancePartitions"
+                ".enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(

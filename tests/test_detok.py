@@ -6,7 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from fluent_bit_spark import fixtures as fx
-from fluent_bit_spark.functions.detok import tokens_fingerprint
+from fluent_bit_spark.functions.detok import _detok_chunk, \
+    tokens_fingerprint
 from fluent_bit_spark.functions.parsers import fused_detok_parse
 
 
@@ -39,3 +40,16 @@ def test_tokens_invariant_through_pipeline(spark, tokens_df):
         .select("tokens", "n_tok").collect()
     for r in rows:
         assert len(r.tokens) == r.n_tok
+
+
+def test_detok_chunk_decodes_a_sliced_list_array():
+    """A sliced ListArray (offset > 0) decodes like the same rows of the
+    unsliced array; a null list decodes to an empty string."""
+    import pyarrow as pa
+    vocab = pa.array(fx.vocab(), type=pa.string())
+    a = pa.array([[0, 1], [2], None, [3, 3, 0], []], pa.list_(pa.int32()))
+    whole = _detok_chunk(a, vocab)
+    assert whole[2].as_py() == ""
+    for offset, length in ((1, 4), (2, 2), (3, 1), (5, 0)):
+        assert _detok_chunk(a.slice(offset, length), vocab) \
+            == whole.slice(offset, length)

@@ -14,7 +14,7 @@ from fluent_bit_spark import fixtures as fx
 from fluent_bit_spark.operators.router import RewriteTagRule, Route
 from fluent_bit_spark.plans.pipeline import (
     PipelineSpec, build_stages, read_dlq, read_metrics, read_sink,
-    run_pipeline,
+    run_pipeline, tune_scan_partitions,
 )
 from tests.oracle_pandas import run_oracle
 
@@ -393,6 +393,51 @@ def test_spark_jobs_per_slice_do_not_grow(spark, fixture_paths, tmp_path,
     per_slice = jobs[2] - jobs[1]
     assert per_slice <= jobs_per_slice
     assert jobs[1] - per_slice <= jobs_per_call
+
+
+@pytest.mark.parametrize("sink_format", ["parquet", "json_lines"])
+def test_each_sink_partition_gets_one_file(spark, fixture_paths, tmp_path,
+                                           sink_format):
+    """The staged write is rebalanced by (sink, source): a slice read by
+    several scan tasks, each seeing every source, still writes one data
+    file per ``sinks/<s>/batch_id=<i>/source=<x>`` directory, not one
+    per task that saw the group."""
+    inp = _split_input(spark, fixture_paths, tmp_path)
+    tune_scan_partitions(spark, inp)
+    assert spark.read.parquet(inp).rdd.getNumPartitions() >= 2
+    spec = _spec(fixture_paths)
+    spec.sink_format = sink_format
+    out = str(tmp_path / "o")
+    run_pipeline(spark, spec, inp, out)
+    dirs = 0
+    for root, _, files in os.walk(os.path.join(out, "sinks")):
+        if os.path.basename(root).startswith("source="):
+            dirs += 1
+            data = [f for f in files if f.startswith("part-")]
+            assert len(data) == 1, (root, data)
+    assert dirs > 1
+
+
+def test_slice_cache_is_released(spark, fixture_paths, tmp_path,
+                                 monkeypatch):
+    """The slice's stored frame is freed after every slice, and when a
+    write inside the slice raises: the SparkContext holds as many
+    persisted RDDs after a run as before it."""
+    from fluent_bit_spark.plans import fsio
+    split_dir = _split_input(spark, fixture_paths, tmp_path)
+    spec = _spec(fixture_paths)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = rdds().size()
+    run_pipeline(spark, spec, split_dir, str(tmp_path / "a"), n_slices=2)
+    assert rdds().size() == before
+
+    def failing_rename(spark_, src, dst):
+        raise IOError("injected rename failure")
+
+    monkeypatch.setattr(fsio, "rename", failing_rename)
+    with pytest.raises(IOError, match="injected rename failure"):
+        run_pipeline(spark, spec, split_dir, str(tmp_path / "b"))
+    assert rdds().size() == before
 
 
 def test_every_row_lands_somewhere(spark, fixture_paths):

@@ -16,3 +16,13 @@ def test_default_driver_memory_is_half_of_ram(tmp_path):
 
 def test_default_driver_memory_without_meminfo(tmp_path):
     assert default_driver_memory(str(tmp_path / "absent")) == "4g"
+
+
+def test_session_enables_the_aqe_rules_the_sink_rebalance_needs(spark):
+    """The staged sink write's REBALANCE hint sizes its files only under
+    AQE, and splits a skewed (sink, source) group only with the
+    rebalance skew rule on."""
+    for key in ("spark.sql.adaptive.enabled",
+                "spark.sql.adaptive.optimizeSkewsInRebalancePartitions"
+                ".enabled"):
+        assert spark.conf.get(key) == "true", key
