@@ -47,16 +47,12 @@ HEADLINE = [
     "topk_per_group",
     "agg_pushdown_q1",
     "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_lsh_verified",
-    "dedup_resolve_groups",
     "multiline_join",
     "multiline_cri",
     "decoder_escaped",
     "geoip_range_lookup",
     "grok_parse",
     "nb_quality",
-    "dedup_vs_corpus",
     "normalize_nfc",
     "url_host_cap",
     "bigram_surprisal",
@@ -80,9 +76,6 @@ HEADLINE = [
     "serialize_es_bulk",
     "serialize_loki_push",
     "syslog_octet_roundtrip",
-    # r5 late: WARC crawl-archive ingestion (1:N record explode)
-    "warc_ingest",
-    "crawl_to_pack",
     # r5 late: DSIR importance resampling (K-bounded hashed-feature
     # model + broadcast scoring + Gumbel top-k)
     "dsir_select",
@@ -119,7 +112,6 @@ HEADLINE = [
     "sft_render_pack",
     "decontaminate_spans",
     "ngram_repetition",
-    "unigram_lm_encode",
     "corpus_drift",
 ]
 
@@ -260,7 +252,6 @@ def main() -> int:
     sf = float(m.group(1).rstrip(".")) if m else None
 
     import __spark_entry__ as entrymod
-    import fluent_bit_spark.queries as qmod
     from fluent_bit_spark.session import get_spark
 
     _ensure_tokens()
@@ -272,12 +263,7 @@ def main() -> int:
 
     times: dict[str, float] = {}
     for name in HEADLINE:
-        # Unregistered-but-benchable entries (the xxhash64 dedup twins
-        # live outside queries() so the driver correctness file stays
-        # free of no_oracle rows) resolve straight off the module.
-        fn = queries.get(name) or getattr(qmod, name, None)
-        if fn is None:
-            continue
+        fn = queries[name]
         # MIN-OF-2 per query: single-run walls on this guest flap with
         # co-tenant bursts (observed same-day: disjoint "regressed"
         # sets on back-to-back runs of identical code, 1.5-4x swings on
@@ -285,10 +271,10 @@ def main() -> int:
         # so the min is a genuine re-execution, not cache reuse.
         def _cleanup():
             # Cache hygiene: operators with an internal persist
-            # (lsh_verified_pairs materialize=, line_dedup) cannot
-            # unpersist before their result is consumed; orphan blocks
-            # otherwise accumulate across the shared-JVM loop and tax
-            # later queries (measured 4s -> 30s on a same-JVM re-run).
+            # (line_dedup) cannot unpersist before their result is
+            # consumed; orphan blocks otherwise accumulate across the
+            # shared-JVM loop and tax later queries (measured 4s -> 30s
+            # on a same-JVM re-run).
             import gc
             spark.catalog.clearCache()
             gc.collect()

@@ -165,9 +165,8 @@ class DimCache:
       holding the cache in process memory.
     - Streaming: call :meth:`resolve` inside ``foreachBatch`` — fresh
       batches reuse the pinned snapshot, stale ones re-resolve, which
-      is exactly the static-side-replan posture of
-      ``dedup_stream_vs_corpus`` with an explicit TTL instead of
-      per-batch replan.
+      is exactly the static-side-replan posture of a stream-static
+      join with an explicit TTL instead of per-batch replan.
 
     ``clock`` is injectable (tests drive TTL expiry deterministically;
     production uses ``time.monotonic``).

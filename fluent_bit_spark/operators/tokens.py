@@ -554,7 +554,7 @@ def line_dedup(df: DataFrame, id_col: str = "doc_id",
     re-explode burned ~10× the count-side's task-seconds). Pass None to
     keep the plan stateless (tiny inputs, or callers managing their own
     persistence); the persisted frame is released by cache eviction or
-    the caller's clearCache, as with dedup's lsh_verified_pairs.
+    the caller's clearCache.
     """
     ln = (doc_lines(df, id_col, text_col, line_words, keep_cols)
           .withColumn("lh", F.md5("line")))
@@ -982,10 +982,9 @@ def tfidf_topk(df: DataFrame, k: int = 3, tokens_col: str = "tokens",
     tf = ex.groupBy(id_col, "tok").agg(F.count("*").alias("tf"))
     # tf feeds BOTH the document-frequency agg and the scoring join;
     # without a persist the explode + (doc,tok) agg runs twice per
-    # action (same fix class as dedup_vs_corpus). tf is the
-    # REDUCED frame (unique (doc,tok) rows), far narrower than the
-    # exploded tokens — MEMORY_AND_DISK keeps the big expansion
-    # un-persisted while halving the heavy path.
+    # action. tf is the REDUCED frame (unique (doc,tok) rows), far
+    # narrower than the exploded tokens — MEMORY_AND_DISK keeps the big
+    # expansion un-persisted while halving the heavy path.
     from pyspark import StorageLevel
     tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
     dfreq = tf.groupBy("tok").agg(
@@ -1760,8 +1759,7 @@ def winnow_corpus_fp(df: DataFrame, id_col: str = "doc_id",
     construction (no signature re-estimation, no band re-derivation;
     pytest pins this), which is the winnowing advantage over MinHash
     artifacts for incremental ingest. Maintain it bucketed by ``fp``
-    so the per-batch probe join is exchange-free on the corpus side
-    (the dedup_vs_corpus band-table posture)."""
+    so the per-batch probe join is exchange-free on the corpus side."""
     return (winnow_fingerprints(df, id_col, tokens_col, k, w)
             .select(id_col, "fp").distinct())
 
@@ -1773,12 +1771,11 @@ def winnow_vs_corpus(new: DataFrame, corpus_fp: DataFrame,
                      max_fp_freq: int = 20,
                      corpus_freq: DataFrame | None = None) -> DataFrame:
     """Survivors of ``new`` after winnowing dedup AGAINST a maintained
-    corpus fingerprint table (incremental ingest, the exact-guarantee
-    sibling of dedup_vs_corpus): a new doc sharing >= ``min_shared``
-    non-boilerplate fingerprints with ANY corpus doc is dropped; at
-    ``min_shared=1`` the drop has the SIGMOD'03 floor — any shared
-    token run of >= w+k-1 tokens with the corpus is certain to be
-    caught.
+    corpus fingerprint table (incremental ingest): a new doc sharing
+    >= ``min_shared`` non-boilerplate fingerprints with ANY corpus doc
+    is dropped; at ``min_shared=1`` the drop has the SIGMOD'03 floor —
+    any shared token run of >= w+k-1 tokens with the corpus is certain
+    to be caught.
 
     ``corpus_freq``: a maintained ``(fp, n_docs)`` table for the
     boilerplate guard; pass it so the guard costs a batch-keyed join

@@ -49,7 +49,7 @@ _FROM_STREAM_RE = re.compile(r"\bSTREAM:(\w+)", re.IGNORECASE)
 # Engine-extension verbs for the token-pipeline operators
 # (operators/tokens.py) — no upstream analogue (flb's SP stops at
 # aggregates); the dialect shape follows the CREATE STREAM grammar so
-# a [STREAM_TASK] Exec can drive packing / line dedup from config.
+# a [STREAM_TASK] Exec can drive the token ops from config.
 _PACK_RE = re.compile(
     r"^\s*PACK\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
     r"INTO\s+(?P<ctx>\d+)\s+TOKENS"
@@ -57,16 +57,6 @@ _PACK_RE = re.compile(
     r"(?:\s+PARTITION\s+BY\s+(?P<part>\w+))?"
     r"(?:\s+ORDER\s+BY\s+(?P<order>HASH\(\s*\w+\s*\)|\w+))?"
     r"(?:\s+SEP\s+(?P<sep>-?\d+))?\s*;?\s*$",
-    re.IGNORECASE)
-_DEDUP_LINES_RE = re.compile(
-    r"^\s*DEDUP\s+LINES\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
-    r"MAX\s+(?P<max>\d+)"
-    r"(?:\s+WORDS\s+(?P<words>\d+))?\s*;?\s*$",
-    re.IGNORECASE)
-_DEDUP_SPANS_RE = re.compile(
-    r"^\s*DEDUP\s+SPANS\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
-    r"LEN\s+(?P<len>\d+)"
-    r"(?:\s+TOKENS\s+(?P<col>\w+))?\s*;?\s*$",
     re.IGNORECASE)
 _SCORE_RE = re.compile(
     r"^\s*SCORE\s+SURPRISAL\s+(?P<src>STREAM:\w+|TAG:'[^']*')"
@@ -107,8 +97,7 @@ _CAP_HOST_RE = re.compile(
 _TOKENIZE_RE = re.compile(
     r"^\s*TOKENIZE\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
     r"USING\s+(?P<merges>STREAM:\w+|TAG:'[^']*')"
-    r"(?:\s+COL\s+(?P<col>\w+))?"
-    r"(?:\s+ALGO\s+(?P<algo>BPE|UNIGRAM))?\s*;?\s*$",
+    r"(?:\s+COL\s+(?P<col>\w+))?\s*;?\s*$",
     re.IGNORECASE)
 _REDACT_RE = re.compile(
     r"^\s*REDACT\s+PII\s+(?P<src>STREAM:\w+|TAG:'[^']*')"
@@ -117,12 +106,6 @@ _REDACT_RE = re.compile(
 _HTML_TEXT_RE = re.compile(
     r"^\s*EXTRACT\s+TEXT\s+(?P<src>STREAM:\w+|TAG:'[^']*')"
     r"(?:\s+COL\s+(?P<col>\w+))?(?:\s+AS\s+(?P<out>\w+))?\s*;?\s*$",
-    re.IGNORECASE)
-_DEDUP_VS_RE = re.compile(
-    r"^\s*DEDUP\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
-    r"VS\s+CORPUS\s+(?P<corpus>STREAM:\w+|TAG:'[^']*')"
-    r"(?:\s+TEXT\s+(?P<text>\w+))?(?:\s+ID\s+(?P<id>\w+))?"
-    r"(?:\s+JACCARD\s+(?P<pm>\d+))?\s*;?\s*$",
     re.IGNORECASE)
 _HEAVY_RE = re.compile(
     r"^\s*HEAVY\s+KEYS\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
@@ -162,21 +145,6 @@ _BATCH_RE = re.compile(
     r"^\s*BATCH\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
     r"MAX\s+(?P<max>\d+)\s+TOKENS"
     r"(?:\s+ROUND\s+(?P<round>\d+))?\s*;?\s*$",
-    re.IGNORECASE)
-_WINNOW_RE = re.compile(
-    r"^\s*DEDUP\s+WINNOW\s+(?P<src>STREAM:\w+|TAG:'[^']*')"
-    r"(?:\s+K\s+(?P<k>\d+))?(?:\s+WINDOW\s+(?P<w>\d+))?"
-    r"(?:\s+SHARED\s+(?P<shared>\d+))?"
-    r"(?:\s+MAXFREQ\s+(?P<freq>\d+))?"
-    r"(?:\s+TOKENS\s+(?P<col>\w+))?\s*;?\s*$",
-    re.IGNORECASE)
-_WINNOW_VS_RE = re.compile(
-    r"^\s*DEDUP\s+WINNOW\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
-    r"VS\s+CORPUS\s+(?P<corpus>STREAM:\w+|TAG:'[^']*')"
-    r"(?:\s+K\s+(?P<k>\d+))?(?:\s+WINDOW\s+(?P<w>\d+))?"
-    r"(?:\s+SHARED\s+(?P<shared>\d+))?"
-    r"(?:\s+MAXFREQ\s+(?P<freq>\d+))?"
-    r"(?:\s+TOKENS\s+(?P<col>\w+))?(?:\s+ID\s+(?P<id>\w+))?\s*;?\s*$",
     re.IGNORECASE)
 _ALLOCATE_RE = re.compile(
     r"^\s*ALLOCATE\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
@@ -355,25 +323,6 @@ class StreamProcessor:
             kw["order_col"] = order
         return pack_sequences(df, **kw)
 
-    def _dedup_lines(self, m: re.Match) -> DataFrame:
-        """DEDUP LINES STREAM:src MAX n [WORDS k] — C4-style
-        cross-corpus line dedup (operators/tokens.py line_dedup)."""
-        from ..operators.tokens import line_dedup
-        kw: dict = {"max_occ": int(m.group("max"))}
-        if m.group("words"):
-            kw["line_words"] = int(m.group("words"))
-        return line_dedup(self._source_df(m.group("src")), **kw)
-
-    def _dedup_spans(self, m: re.Match) -> DataFrame:
-        """DEDUP SPANS STREAM:src LEN n [TOKENS col] — exact
-        duplicated-span removal (operators/tokens.py
-        substring_dedup): every n-token window occurring twice
-        corpus-wide is scrubbed from all but its first occurrence."""
-        from ..operators.tokens import substring_dedup
-        return substring_dedup(self._source_df(m.group("src")),
-                               length=int(m.group("len")),
-                               tokens_col=m.group("col") or "tokens")
-
     def _score_surprisal(self, m: re.Match) -> DataFrame:
         """SCORE SURPRISAL STREAM:src [TOKENS col] [ORDER n]
         [BACKOFF TRAIN STREAM:train] — surprisal quality scoring over
@@ -458,22 +407,6 @@ class StreamProcessor:
             [F.desc(m.group("by")), F.col(id_col)], int(m.group("n")),
             **kw)
 
-    def _dedup_vs(self, m: re.Match) -> DataFrame:
-        """DEDUP STREAM:new VS CORPUS STREAM:corpus [TEXT col] [ID col]
-        [JACCARD permille] — incremental ingest dedup
-        (operators/dedup.py dedup_vs_corpus); the corpus stream's
-        artifacts are built inline here (a config user points the
-        corpus stream at the maintained artifact-backed table to skip
-        that)."""
-        from ..operators.dedup import corpus_artifacts, dedup_vs_corpus
-        text = m.group("text") or "text"
-        id_col = m.group("id") or "doc_id"
-        thresh = (int(m.group("pm")) / 1000.0) if m.group("pm") else 0.5
-        hashes, sigs = corpus_artifacts(
-            self._source_df(m.group("corpus")), id_col, text)
-        return dedup_vs_corpus(self._source_df(m.group("src")), id_col,
-                               text, hashes, sigs, threshold=thresh)
-
     def _score_nb(self, m: re.Match) -> DataFrame:
         """SCORE QUALITY STREAM:src LABEL col 'value' [TEXT col] —
         Naive-Bayes log-odds quality classifier (operators/tokens.py
@@ -513,18 +446,6 @@ class StreamProcessor:
         vocab-bounded, so collecting it to ride the kernel's closure
         is the same bounded-collect posture as the IVF quantizer."""
         from ..functions.bpe import bpe_encode_arrow
-        if (m.group("algo") or "BPE").upper() == "UNIGRAM":
-            # TOKENIZE … ALGO UNIGRAM: the table stream carries
-            # (piece, cost, id) — functions/unigram_lm.py
-            from ..functions.unigram_lm import unigram_encode_pandas
-            vrows = (self._source_df(m.group("merges"))
-                     .orderBy("id").collect())
-            vocab = [(r["piece"], r["cost"]) for r in vrows]
-            if not vocab:
-                raise ValueError("TOKENIZE UNIGRAM: empty vocab table")
-            return unigram_encode_pandas(
-                self._source_df(m.group("src")), vocab,
-                text_col=m.group("col") or "text")
         mrows = (self._source_df(m.group("merges"))
                  .orderBy("rank").collect())
         merges = [(r["a"], r["b"]) for r in mrows]
@@ -648,43 +569,6 @@ class StreamProcessor:
             nb_min_millinats=int(m.group("nbmin") or 0),
             band_max=int(m.group("band") or 5))
 
-    def _winnow_vs(self, m: re.Match) -> DataFrame:
-        """DEDUP WINNOW STREAM:new VS CORPUS STREAM:corpus [K k]
-        [WINDOW w] [SHARED n] [MAXFREQ f] [TOKENS col] [ID col] —
-        incremental winnowing dedup against a maintained corpus
-        (operators/tokens.py winnow_vs_corpus). When the corpus stream
-        already carries an ``fp`` column it IS the maintained (id, fp)
-        artifact table (the production posture — appends to it are
-        exact by construction); otherwise fingerprints are derived
-        inline from its tokens (the `_dedup_vs` convenience posture)."""
-        from ..operators.tokens import winnow_corpus_fp, winnow_vs_corpus
-        col = m.group("col") or "tokens"
-        id_col = m.group("id") or "doc_id"
-        k = int(m.group("k") or 4)
-        w = int(m.group("w") or 4)
-        corpus = self._source_df(m.group("corpus"))
-        if "fp" not in corpus.columns:
-            corpus = winnow_corpus_fp(corpus, id_col, col, k=k, w=w)
-        return winnow_vs_corpus(
-            self._source_df(m.group("src")), corpus,
-            id_col=id_col, tokens_col=col, k=k, w=w,
-            min_shared=int(m.group("shared") or 2),
-            max_fp_freq=int(m.group("freq") or 20))
-
-    def _winnow_pairs(self, m: re.Match) -> DataFrame:
-        """DEDUP WINNOW STREAM:src [K k] [WINDOW w] [SHARED n]
-        [MAXFREQ f] [TOKENS col] — winnowing-fingerprint candidate
-        pairs (operators/tokens.py winnow_overlap_pairs): the
-        exact-guarantee near-dup pair generator (any shared run of
-        >= w+k-1 tokens always collides)."""
-        from ..operators.tokens import winnow_overlap_pairs
-        return winnow_overlap_pairs(
-            self._source_df(m.group("src")),
-            tokens_col=m.group("col") or "tokens",
-            k=int(m.group("k") or 4), w=int(m.group("w") or 4),
-            min_shared=int(m.group("shared") or 2),
-            max_fp_freq=int(m.group("freq") or 20))
-
     def _allocate(self, m: re.Match) -> DataFrame:
         """ALLOCATE STREAM:totals BUDGET n [EPOCHS milli] —
         data-constrained token-budget water-filling
@@ -708,12 +592,6 @@ class StreamProcessor:
 
     def _exec_select(self, text: str) -> DataFrame:
         """A statement body: a token-op verb, else translated SQL."""
-        wv_ = _WINNOW_VS_RE.match(text)
-        if wv_:
-            return self._winnow_vs(wv_)
-        wm_ = _WINNOW_RE.match(text)
-        if wm_:
-            return self._winnow_pairs(wm_)
         al = _ALLOCATE_RE.match(text)
         if al:
             return self._allocate(al)
@@ -741,18 +619,9 @@ class StreamProcessor:
         cm = _CAP_HOST_RE.match(text)
         if cm:
             return self._cap_host(cm)
-        vm = _DEDUP_VS_RE.match(text)
-        if vm:
-            return self._dedup_vs(vm)
         pm = _PACK_RE.match(text)
         if pm:
             return self._pack(pm)
-        dm = _DEDUP_LINES_RE.match(text)
-        if dm:
-            return self._dedup_lines(dm)
-        sp = _DEDUP_SPANS_RE.match(text)
-        if sp:
-            return self._dedup_spans(sp)
         sm = _SCORE_RE.match(text)
         if sm:
             return self._score_surprisal(sm)
@@ -786,7 +655,7 @@ class StreamProcessor:
         result (and WITH(tag=…) stamps the emitted tag, the re-emission
         analogue — upstream:src/stream_processor/flb_sp_stream.c);
         plain SELECT returns the DataFrame. The statement body may be a
-        SELECT or one of the token-op verbs (PACK / DEDUP LINES)."""
+        SELECT or one of the token-op verbs (PACK, SCORE, …)."""
         sm = _CREATE_SNAP_RE.match(text)
         if sm:
             return self._create_snapshot(sm)

@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from .functions import text as TX
 from .functions.parsers import ltsv_parser, logfmt_parser
-from .operators import dedup as DD
 from .operators.aggregate import (
     hopping, log_histogram, salted_sink_aggregates, tumbling,
 )
@@ -698,52 +697,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.count("*").alias("total_docs")))
 
 
-@q("dedup_ngram_jaccard", """
-WITH w AS (SELECT doc_id, string_split(text, ' ') ws FROM documents),
-sh AS (SELECT doc_id,
-              unnest(list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                                    for i in generate_series(1, len(ws)-2)]))
-                AS s
-       FROM w WHERE len(ws) >= 3),
-cnt AS (SELECT doc_id, count(*) c FROM sh GROUP BY 1),
-pr AS (SELECT a.doc_id d1, b.doc_id d2, count(*) inter
-       FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-       GROUP BY 1, 2)
-SELECT d1, d2,
-       round(inter * 1.0 / (c1.c + c2.c - inter), 6) AS jaccard
-FROM pr JOIN cnt c1 ON pr.d1 = c1.doc_id
-        JOIN cnt c2 ON pr.d2 = c2.doc_id
-WHERE inter * 1.0 / (c1.c + c2.c - inter) >= 0.05
-""")
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    # allow_quadratic: this registration IS the documented small-scale
-    # oracle baseline; the scale path is dedup_lsh_verified
-    out = DD.ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
-                                 threshold=0.05, allow_quadratic=True)
-    return out.withColumn("jaccard", F.round("jaccard", 6))
-
-
-# NOT @q-registered: the xxhash64 hash family has no DuckDB equivalent,
-# so these would be rows-only (`no_oracle`) driver rows. The chain logic
-# is value-checked via the portable-hash twins (dedup_minhash_portable /
-# dedup_simhash_portable), and the xxhash64 OUTPUTS are gated by the
-# pytest equivalence tests (tests/test_dedup.py::
-# test_lsh_verified_xxhash64_equals_portable and
-# ::test_simhash_xxhash64_recall_parity). Kept callable for bench.py
-# (xxhash64 is the production-speed configuration).
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    return DD.minhash_lsh_pairs(docs, "doc_id", "text", num_perm=16,
-                                bands=4, threshold=0.25)
-
-
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    return DD.simhash_pairs(docs, "doc_id", "text", bits=32, bands=4,
-                            max_hamming=3)
-
-
 # ===========================================================================
 # Text analysis (training-data extensions)
 # ===========================================================================
@@ -1278,184 +1231,6 @@ def record_accessor_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keyed.groupBy("key").agg(F.count("*").alias("n"))
 
 
-def _minhash_portable_oracle(num_perm: int = 16, bands: int = 4,
-                             threshold: float = 0.5,
-                             words_expr: str = "string_split(text, ' ')",
-                             ) -> str:
-    """Generate the DuckDB oracle for the portable-hash MinHash+LSH:
-    identical md5+affine arithmetic as operators.dedup hash_fn='portable'.
-    ``words_expr`` parametrizes the unit sequence — default the text's
-    words; the token-payload variant passes a token-id list expression
-    so the SAME chain is checked over pre-tokenized sequences."""
-    P = 2147483647
-    rows = num_perm // bands
-    mins = ",\n  ".join(
-        f"min((b*{2 * i + 3} + {7 * i + 1}) % {P}) AS m{i}"
-        for i in range(num_perm))
-    def fold(b):
-        expr = "0"
-        for r in range(rows):
-            expr = f"(({expr})*1000003 + m{b * rows + r}) % {P}"
-        return expr
-    band_rows = "\n  UNION ALL\n  ".join(
-        f"SELECT doc_id, {b} AS band, {fold(b)} AS bh FROM sig"
-        for b in range(bands))
-    eq = " + ".join(
-        f"CASE WHEN s1.m{i} = s2.m{i} THEN 1 ELSE 0 END"
-        for i in range(num_perm))
-    return f"""
-WITH w AS (SELECT doc_id, {words_expr} AS ws FROM documents),
-sh0 AS (SELECT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-        FROM w, UNNEST(range(1, len(ws)-1)) AS t(i)
-        WHERE len(ws) >= 3),
-sh AS (SELECT DISTINCT doc_id, s FROM sh0),
-hb AS (SELECT doc_id, ('0x' || substring(md5(s),1,7))::BIGINT AS b FROM sh),
-sig AS (SELECT doc_id,
-  {mins}
-  FROM hb GROUP BY doc_id),
-bandt AS (
-  {band_rows}),
-cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-         FROM bandt a JOIN bandt b
-           ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-est AS (SELECT c.d1, c.d2, ({eq}) / {num_perm}.0 AS est_jaccard
-        FROM cand c
-        JOIN sig s1 ON s1.doc_id = c.d1
-        JOIN sig s2 ON s2.doc_id = c.d2)
-SELECT d1, d2, est_jaccard FROM est WHERE est_jaccard >= {threshold}
-"""
-
-
-@q("dedup_minhash_portable", _minhash_portable_oracle())
-def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH with the portable (md5+affine) hash family — the
-    SAME operator pipeline as dedup_minhash_lsh but every hash is
-    reproducible in ANSI SQL, so the full shingle→signature→band→
-    candidate→estimate chain is DuckDB-oracle-checked end to end."""
-    docs = t(spark, sf_dir, "documents")
-    return DD.minhash_lsh_pairs(docs, "doc_id", "text", num_perm=16,
-                                bands=4, threshold=0.5, hash_fn="portable")
-
-
-def _simhash_portable_oracle(bits: int = 32, bands: int = 4,
-                             max_hamming: int = 3) -> str:
-    """DuckDB oracle for the portable SimHash: identical md5-prefix word
-    hashes, per-bit majority vote, band-bucketed candidates, hamming."""
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
-    bit_terms = " + ".join(
-        f"(CASE WHEN sum((h >> {i}) & 1) > count(*) / 2.0 "
-        f"THEN {1 << i}::BIGINT ELSE 0 END)"
-        for i in range(bits))
-    band_rows = "\n  UNION ALL\n  ".join(
-        f"SELECT doc_id, {b} AS band, (sh >> {b * band_bits}) & {mask} "
-        f"AS bv, sh FROM sig"
-        for b in range(bands))
-    return f"""
-WITH words AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-h AS (SELECT doc_id,
-             ('0x' || substring(md5(w),1,15))::BIGINT AS h FROM words),
-sig AS (SELECT doc_id, {bit_terms} AS sh FROM h GROUP BY doc_id),
-bandt AS (
-  {band_rows}),
-cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-                a.sh AS s1, b.sh AS s2
-         FROM bandt a JOIN bandt b
-           ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id)
-SELECT d1, d2, bit_count(xor(s1, s2)) AS hamming
-FROM cand WHERE bit_count(xor(s1, s2)) <= {max_hamming}
-"""
-
-
-@q("dedup_simhash_portable", _simhash_portable_oracle())
-def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup with the portable hash family — the full
-    word-hash → bit-majority → band-bucket → hamming chain is
-    DuckDB-oracle-checked value-for-value."""
-    docs = t(spark, sf_dir, "documents")
-    out = DD.simhash_pairs(docs, "doc_id", "text", bits=32, bands=4,
-                           max_hamming=3, hash_fn="portable")
-    return out.select("d1", "d2", F.col("hamming").cast("long")
-                      .alias("hamming"))
-
-
-def _lsh_verified_oracle(num_perm: int = 16, bands: int = 4,
-                         cand_threshold: float = 0.2,
-                         jaccard_threshold: float = 0.5) -> str:
-    """Two-stage dedup oracle: portable-MinHash candidates + exact
-    shingle-Jaccard verify, all in one DuckDB statement."""
-    cand_sql = _minhash_portable_oracle(num_perm, bands, cand_threshold)
-    # reuse the generator's CTE chain; its final SELECT becomes a CTE
-    body = cand_sql.strip()
-    assert body.startswith("WITH ")
-    head, final = body.rsplit("SELECT d1, d2, est_jaccard", 1)
-    return f"""{head}
-cand AS2_PLACEHOLDER
-SELECT v.d1, v.d2, round(v.jaccard, 6) AS jaccard FROM (
-  SELECT c.d1, c.d2,
-         (SELECT count(*) FROM sh x JOIN sh y
-            ON x.s = y.s AND x.doc_id = c.d1 AND y.doc_id = c.d2)
-           * 1.0 /
-         ((SELECT count(*) FROM sh WHERE doc_id = c.d1)
-          + (SELECT count(*) FROM sh WHERE doc_id = c.d2)
-          - (SELECT count(*) FROM sh x JOIN sh y
-               ON x.s = y.s AND x.doc_id = c.d1 AND y.doc_id = c.d2))
-           AS jaccard
-  FROM (SELECT d1, d2, est_jaccard{final.rstrip()}) c) v
-WHERE v.jaccard >= {jaccard_threshold}
-"""
-
-
-@q("dedup_lsh_verified",
-   _lsh_verified_oracle().replace("cand AS2_PLACEHOLDER", ""))
-def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage scale dedup (operators/dedup.py lsh_verified_pairs):
-    LSH candidates → exact Jaccard verify, value-checked end to end."""
-    docs = t(spark, sf_dir, "documents")
-    out = DD.lsh_verified_pairs(docs, "doc_id", "text", materialize=True)
-    return out.select("d1", "d2", F.round("jaccard", 6).alias("jaccard"))
-
-
-def _resolve_groups_oracle() -> str:
-    """Recursive-CTE oracle for connected-component dedup resolution:
-    the verified-pair query becomes a CTE, a transitive closure walks
-    the symmetric edge set, canonical = min doc_id per component."""
-    body = _lsh_verified_oracle().replace("cand AS2_PLACEHOLDER",
-                                          "").strip()
-    assert body.startswith("WITH ")
-    head, final = body.rsplit("SELECT v.d1", 1)
-    ctes = head[len("WITH "):].rstrip().rstrip(",")
-    return f"""
-WITH RECURSIVE {ctes},
-verified AS (SELECT v.d1, v.d2 FROM ({'SELECT v.d1' + final.rstrip()})
-             AS v(d1, d2, jaccard)),
-edges AS (SELECT d1 AS a, d2 AS b FROM verified
-          UNION SELECT d2, d1 FROM verified),
-reach(node, r) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT reach.node, e.b FROM reach JOIN edges e ON reach.r = e.a)
-SELECT node AS doc_id, min(r) AS canonical_id,
-       (min(r) = node) AS keep
-FROM reach GROUP BY node
-"""
-
-
-@q("dedup_resolve_groups", _resolve_groups_oracle())
-def dedup_resolve_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The end of the dedup story: near-dup PAIRS (two-stage LSH →
-    Jaccard verify) resolved to connected components with one canonical
-    keep-one doc per group — the actual deduplicated table, as
-    (doc_id, canonical_id, keep) over every document. Oracle is a
-    DuckDB recursive-CTE transitive closure over the identical
-    portable-hash pair set."""
-    docs = t(spark, sf_dir, "documents")
-    pairs = DD.lsh_verified_pairs(docs, "doc_id", "text",
-                                  materialize=True)
-    return DD.resolve_duplicate_groups(docs, pairs, "doc_id")
-
-
 # ===========================================================================
 # Token-payload dedup + deterministic sampling (north-star input is
 # PRE-TOKENIZED sequences — these run the dedup chain on token ids)
@@ -1494,19 +1269,6 @@ def dedup_tokens_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (toks.groupBy("source")
             .agg(F.count_distinct(F.md5("text")).alias("distinct_seqs"),
                  F.count("*").alias("total_docs")))
-
-
-@q("dedup_tokens_minhash",
-   _minhash_portable_oracle(threshold=0.5, words_expr=_TOK_WORDS_SQL))
-def dedup_tokens_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup over token-id sequences — the IDENTICAL
-    shingle→signature→band→candidate chain as dedup_minhash_portable,
-    run on pre-tokenized sequences and value-checked end to end (the
-    oracle derives the same token ids in SQL)."""
-    toks = _tokenized_docs(spark, sf_dir)
-    return DD.minhash_lsh_pairs(toks, "doc_id", "text", num_perm=16,
-                                bands=4, threshold=0.5,
-                                hash_fn="portable")
 
 
 @q("substring_dedup", """
@@ -3145,86 +2907,6 @@ def html_text_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "plain")
 
 
-def _vs_corpus_oracle(num_perm: int = 16, bands: int = 4,
-                      threshold: float = 0.5) -> str:
-    """DuckDB oracle for incremental dedup-vs-corpus: documents split
-    by doc_id parity (even = corpus, odd = new batch); exact drops via
-    text equality, near drops via the portable MinHash chain with
-    new×corpus (never new×new) band candidates. Near-drop is computed
-    over ALL odd docs while the operator runs stage 2 only on exact
-    survivors — the survivor set is identical (a doc dropped by both
-    stages is dropped either way)."""
-    P = 2147483647
-    rows = num_perm // bands
-    mins = ",\n  ".join(
-        f"min((b*{2 * i + 3} + {7 * i + 1}) % {P}) AS m{i}"
-        for i in range(num_perm))
-    def fold(b):
-        expr = "0"
-        for r in range(rows):
-            expr = f"(({expr})*1000003 + m{b * rows + r}) % {P}"
-        return expr
-    band_rows = "\n  UNION ALL\n  ".join(
-        f"SELECT doc_id, {b} AS band, {fold(b)} AS bh FROM sig"
-        for b in range(bands))
-    eq = " + ".join(
-        f"CASE WHEN s1.m{i} = s2.m{i} THEN 1 ELSE 0 END"
-        for i in range(num_perm))
-    return f"""
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-sh0 AS (SELECT doc_id, array_to_string(ws[t.i:t.i+2], ' ') AS s
-        FROM w, UNNEST(range(1, len(ws)-1)) AS t(i)
-        WHERE len(ws) >= 3),
-sh AS (SELECT DISTINCT doc_id, s FROM sh0),
-hb AS (SELECT doc_id, ('0x' || substring(md5(s),1,7))::BIGINT AS b FROM sh),
-sig AS (SELECT doc_id,
-  {mins}
-  FROM hb GROUP BY doc_id),
-bandt AS (
-  {band_rows}),
-exact_drop AS (
-  SELECT DISTINCT n.doc_id FROM documents n
-  WHERE n.doc_id % 2 = 1 AND EXISTS (
-    SELECT 1 FROM documents c
-    WHERE c.doc_id % 2 = 0 AND c.text = n.text)),
-cand AS (SELECT DISTINCT a.doc_id AS nd, b.doc_id AS cd
-         FROM bandt a JOIN bandt b
-           ON a.band = b.band AND a.bh = b.bh
-          AND a.doc_id % 2 = 1 AND b.doc_id % 2 = 0),
-near_drop AS (
-  SELECT DISTINCT c.nd AS doc_id
-  FROM cand c
-  JOIN sig s1 ON s1.doc_id = c.nd
-  JOIN sig s2 ON s2.doc_id = c.cd
-  WHERE ({eq}) / {num_perm}.0 >= {threshold})
-SELECT d.doc_id, d.source FROM documents d
-WHERE d.doc_id % 2 = 1
-  AND d.doc_id NOT IN (SELECT doc_id FROM exact_drop)
-  AND d.doc_id NOT IN (SELECT doc_id FROM near_drop)
-"""
-
-
-@q("dedup_vs_corpus", _vs_corpus_oracle())
-def dedup_vs_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental dedup: the odd-doc_id half of documents is "today's
-    crawl", the even half the existing corpus. The corpus contributes
-    ONLY its precomputed artifacts (distinct content hashes + MinHash
-    signatures — operators/dedup.corpus_artifacts), so at 100 TB the
-    corpus text is never re-read or re-shingled per ingested batch;
-    both joins are one-sided and narrow. Portable hash family → the
-    full exact-anti-join + band-join + estimate chain is value-checked
-    against DuckDB."""
-    docs = t(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    hashes, sigs = DD.corpus_artifacts(corpus, "doc_id", "text",
-                                       hash_fn="portable")
-    out = DD.dedup_vs_corpus(new, "doc_id", "text", hashes, sigs,
-                             num_perm=16, bands=4, threshold=0.5,
-                             hash_fn="portable")
-    return out.select("doc_id", "source")
-
-
 @q("nb_quality", """
 WITH ex AS (
   SELECT doc_id, source, lang = 'en' AS pos, tok
@@ -3350,120 +3032,6 @@ def journal_export_roundtrip(spark: SparkSession,
         "group", F.element_at("fields", "MESSAGE").alias("message"),
         F.element_at("fields", "PRIORITY").alias("priority"),
         "ts", "tag", "entry_ok")
-
-
-@q("warc_ingest", """
-WITH d AS (SELECT doc_id, CAST(2 + doc_id % 4 AS INT) AS n_rec
-           FROM documents),
-r AS (
-  SELECT d.doc_id, CAST(i.g AS INT) AS rec_idx, d.n_rec
-  FROM d, generate_series(0, 5) AS i(g)
-  WHERE i.g <= d.n_rec),
-b AS (
-  SELECT *,
-         CASE WHEN rec_idx = 0 THEN NULL
-              ELSE '<html><body>doc ' || doc_id || ' rec '
-                   || (rec_idx - 1) || ' '
-                   || repeat('x', CAST(doc_id % 50 AS INT))
-                   || '</body></html>' END AS body,
-         CASE WHEN rec_idx = 0 THEN NULL
-              ELSE (['200 OK', '404 Not Found',
-                     '301 Moved Permanently'])[CAST(
-                       1 + (doc_id + rec_idx - 1) % 3 AS INT)] END
-           AS status_text
-  FROM r)
-SELECT doc_id, rec_idx,
-       CASE WHEN rec_idx = 0 THEN 'warcinfo' ELSE 'response' END
-         AS warc_type,
-       CASE WHEN rec_idx = 0 THEN NULL
-            ELSE 'http://h' || doc_id || '.example/p' || (rec_idx - 1)
-            END AS target_uri,
-       CAST(CASE WHEN rec_idx = 0 THEN NULL
-                 ELSE CAST(split_part(status_text, ' ', 1) AS INT) END
-         AS INT) AS http_status,
-       CAST(CASE WHEN rec_idx = 0
-                 THEN length('software: fluent-bit-spark') + 2
-                 ELSE 38 + length(status_text) + length(body) END
-         AS BIGINT) AS content_length,
-       body, TRUE AS rec_ok
-FROM b
-""")
-def warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC crawl-archive ingestion (sources/warc.py — ISO 28500 /
-    Common Crawl interchange; training-data extension): per doc a
-    spec-valid capture (warcinfo leader + 2-5 HTTP response records,
-    gzip-member-compressed on every 3rd id exactly like a real
-    ``.warc.gz``) is built, then the 1:N Arrow record walk explodes it
-    back into rows — WARC headers, Content-Length framing, HTTP
-    status/body split, gzip transparency all exercised. The oracle
-    reconstructs every record — URIs, status codes, exact
-    Content-Length byte counts, bodies — arithmetically from the
-    fixture formulas. Map-only at any scale: one capture per task,
-    records never shuffle to be parsed; downstream this feeds the
-    html_text → C4-clean → pack chain."""
-    from .sources.warc import decode_warc, encode_fixture_warcs
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    return decode_warc(encode_fixture_warcs(docs))
-
-
-@q("crawl_to_pack", f"""
-WITH d0 AS (SELECT doc_id, CAST(2 + doc_id % 4 AS INT) AS n_rec
-            FROM documents),
-r AS (SELECT d0.doc_id, CAST(i.g AS INT) AS rec_idx
-      FROM d0, generate_series(1, 5) AS i(g)
-      WHERE i.g <= d0.n_rec),
-ok AS (SELECT doc_id, rec_idx FROM r
-       WHERE (doc_id + rec_idx - 1) % 3 = 0),
-txt AS (SELECT doc_id * 8 + rec_idx AS rid,
-               'crawl-' || CAST(doc_id % 3 AS VARCHAR) AS source,
-               'doc ' || CAST(doc_id AS VARCHAR) || ' rec '
-               || CAST(rec_idx - 1 AS VARCHAR)
-               || CASE WHEN doc_id % 50 > 0
-                       THEN ' ' || repeat('x', CAST(doc_id % 50 AS INT))
-                       ELSE '' END AS text
-        FROM ok),
-d AS (SELECT rid AS doc_id, source, {{_TOK_IDS_SQL}} AS tokens,
-             len(string_split(text, ' ')) AS n_tok
-      FROM txt),
-{{_pack_oracle_suffix_64}}
-""".format(_TOK_IDS_SQL=_TOK_IDS_SQL,
-           _pack_oracle_suffix_64=_pack_oracle_suffix(64)))
-def crawl_to_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END crawl→training-data chain under ONE oracle (the
-    warc_ingest fixture feeding the corpus_clean_pack machinery):
-    spec-valid ``.warc.gz`` captures (sources/warc.py) → 1:N record
-    explode → keep HTTP-200 responses → html_to_text boilerplate
-    strip (operators/web.py) → deterministic tokenization →
-    concat-and-chunk packing into 64-token windows
-    (operators/tokens.py pack_sequences, distributed two-phase prefix
-    sum). The oracle reconstructs every stage arithmetically from the
-    fixture formulas — record selection, extracted text, token ids,
-    chunk boundaries — and value-checks each packed window by md5
-    over its token ids. 100 TB shape: scan → map-only explode +
-    strip + tokenize (zero shuffle until packing), then the packing
-    prefix-sum's two narrow exchanges; nothing materializes the
-    corpus twice."""
-    from .operators.tokens import pack_sequences
-    from .operators.web import html_to_text
-    from .sources.warc import decode_warc, encode_fixture_warcs
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    recs = decode_warc(encode_fixture_warcs(docs))
-    resp = recs.filter((F.col("warc_type") == "response")
-                       & F.col("rec_ok") & (F.col("http_status") == 200))
-    pages = html_to_text(resp, "body", "text")
-    tok = F.transform(
-        F.split("text", " "),
-        lambda w: (F.conv(F.substring(F.md5(w), 1, 7), 16, 10)
-                   .cast("long") % 50000).cast("int"))
-    d = (pages.select(
-            (F.col("doc_id") * 8 + F.col("rec_idx")).alias("doc_id"),
-            F.concat(F.lit("crawl-"),
-                     (F.col("doc_id") % 3).cast("string")).alias("source"),
-            tok.alias("tokens"))
-         .withColumn("n_tok", F.size("tokens")))
-    packed = pack_sequences(d, ctx_len=64, id_col="doc_id",
-                            group_size=1 << 20)
-    return _pack_select(packed)
 
 
 @q("url_canonical_dedup", """
@@ -5111,94 +4679,6 @@ def ngram_repetition_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.tokens import ngram_repetition
     d = _tok_int_docs(spark, sf_dir)
     return ngram_repetition(d, top_n=2, dup_n=5)
-
-
-# frozen unigram-LM vocab: train_unigram_lm over sf0.01 word counts
-# (vocab_size=48, max_piece_len=4) — deterministic trainer output,
-# pinned the way _BPE_MERGES pins the BPE table
-_ULM_VOCAB = [
-    ('a', 2193), ('t', 2424), ('e', 2546), ('g', 3110), ('r', 3119),
-    ('s', 3128), ('d', 3374), ('er', 3380), ('l', 3380), ('or', 3387),
-    ('i', 3396), ('u', 3396), ('p', 3400), ('v', 3786), ('n', 3793),
-    ('b', 3800), ('k', 3804), ('w', 3807), ('y', 3810), ('o', 3811),
-    ('join', 4416), ('hash', 4433), ('row', 4438), ('bat', 4444),
-    ('ch', 4444), ('scan', 4445), ('colu', 4447), ('cust', 4447),
-    ('mn', 4447), ('omer', 4447), ('filt', 4448), ('sma', 4454),
-    ('c', 4471), ('m', 4498), ('q', 4517), ('f', 4537), ('h', 4553),
-    ('j', 11287),
-]
-
-
-def _viterbi_oracle_sql(vocab, unk=14000, shift=64, max_word=16):
-    """DuckDB replay of the integer-cost Viterbi DP (functions/
-    unigram_lm.py viterbi_word) as an UNROLLED position chain: stage
-    ``b{j}`` holds each word's best combined objective for its first
-    ``j`` characters; transitions try every piece length ending at j
-    with the single-char UNK fallback. Words longer than ``max_word``
-    bypass as one overlong piece — same contract as the kernel."""
-    max_pl = max(len(p) for p, _ in vocab)
-    vals = ", ".join(f"('{p}', {c})" for p, c in vocab)
-    stages = ["b0 AS MATERIALIZED (SELECT doc_id, widx, CAST(0 AS BIGINT) AS best "
-              "FROM words)"]
-    for j in range(1, max_word + 1):
-        branches = []
-        for pl in range(1, min(max_pl, j) + 1):
-            fb = f"CASE WHEN {pl} = 1 THEN {unk} END"
-            branches.append(f"""
-      SELECT w.doc_id, w.widx,
-             p.best + coalesce(v.cost, {fb}) * {shift} + 1 AS cand
-      FROM words w
-      JOIN b{j - pl} p ON w.doc_id = p.doc_id AND w.widx = p.widx
-      LEFT JOIN vocab v ON v.piece = substring(w.w, {j - pl + 1}, {pl})
-      WHERE w.len >= {j}""")
-        stages.append(
-            f"b{j} AS MATERIALIZED (SELECT doc_id, widx, min(cand) AS best FROM "
-            f"({' UNION ALL '.join(branches)}) cands "
-            f"WHERE cand IS NOT NULL GROUP BY doc_id, widx)")
-    finals = " UNION ALL ".join(
-        f"SELECT w.doc_id, b.best AS combined FROM words w "
-        f"JOIN b{j} b ON w.doc_id = b.doc_id AND w.widx = b.widx "
-        f"WHERE w.len = {j}" for j in range(1, max_word + 1))
-    return f"""
-WITH d AS MATERIALIZED (
-  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-words AS MATERIALIZED (
-  SELECT doc_id, i AS widx, ws[i] AS w, length(ws[i]) AS len
-  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS i
-        FROM d) t
-  WHERE length(ws[i]) > 0),
-vocab(piece, cost) AS (VALUES {vals}),
-{', '.join(stages)},
-perword AS (
-  {finals}
-  UNION ALL
-  SELECT doc_id, CAST(len AS BIGINT) * {unk} * {shift} + 1 AS combined
-  FROM words WHERE len > {max_word})
-SELECT d.doc_id,
-       CAST(coalesce(sum(p.combined // {shift}), 0) AS BIGINT)
-         AS cost_millinats,
-       CAST(coalesce(sum(p.combined % {shift}), 0) AS BIGINT)
-         AS n_pieces
-FROM d LEFT JOIN perword p ON d.doc_id = p.doc_id
-GROUP BY d.doc_id
-"""
-
-
-@q("unigram_lm_encode", _viterbi_oracle_sql(_ULM_VOCAB))
-def unigram_lm_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM (SentencePiece-style) tokenization (functions/
-    unigram_lm.py, Kudo 2018): integer-cost Viterbi segmentation per
-    word under the frozen _ULM_VOCAB (trained by the deterministic
-    hard-EM driver over the bounded word table — the BPE-trainer
-    posture), run as the cached-word mapInPandas kernel. The oracle
-    replays the DP exactly via an unrolled position chain — per-doc
-    total cost and piece counts are pure integers, value-hashed; the
-    piece SEQUENCES are pytest-pinned against hand-computed
-    segmentations (tests/test_unigram_lm.py)."""
-    from .functions.unigram_lm import unigram_encode_pandas
-    docs = t(spark, sf_dir, "documents")
-    out = unigram_encode_pandas(docs, _ULM_VOCAB)
-    return out.select("doc_id", "cost_millinats", "n_pieces")
 
 
 @q("corpus_drift", f"""

@@ -103,6 +103,8 @@ def _finish_cds_build(proc: subprocess.Popen, tmp: str, archive: str) -> None:
             proc.kill()
             proc.wait()
     if proc.returncode == 0 and os.path.exists(tmp):
+        with open(tmp, "rb") as f:
+            os.fsync(f.fileno())
         os.replace(tmp, archive)
     else:
         with contextlib.suppress(FileNotFoundError):
@@ -115,8 +117,8 @@ def _cds_plan(conf: dict[str, str]) -> tuple[str, str, str | None] | None:
     already), or None where no archive applies: a JVM already runs, a
     real file (``spark-defaults.conf``, ``log4j2.properties``, ...) or
     ``HADOOP_CONF_DIR``/``YARN_CONF_DIR`` would be hidden, a class-path
-    directory is not empty, the caller sets its own default Java options,
-    or the cache directory is not writable."""
+    directory is not empty, the caller sets its own default Java options
+    or an ``-Xshare`` mode, or the cache directory is not writable."""
     env = os.environ
     spark_home = env.get("SPARK_HOME") or _find_spark_home()
     java_home = env.get("JAVA_HOME") or os.path.dirname(os.path.dirname(
@@ -128,6 +130,7 @@ def _cds_plan(conf: dict[str, str]) -> tuple[str, str, str | None] | None:
     if (SparkContext._gateway is not None
             or "PYSPARK_GATEWAY_PORT" in env
             or "spark.driver.defaultJavaOptions" in conf
+            or "-Xshare" in conf.get("spark.driver.extraJavaOptions", "")
             or env.get("HADOOP_CONF_DIR") or env.get("YARN_CONF_DIR")
             or not os.path.isdir(os.path.join(spark_home, "jars"))
             # JDK 17 neither dumps nor maps an archive whose class path
@@ -168,12 +171,18 @@ def driver_cds(conf: dict[str, str]):
 
     Without an archive for this install, the JVM writes one at exit
     (``-XX:ArchiveClassesAtExit``), and an interpreter-exit hook waits
-    for it. With one, the JVM maps it (``-XX:SharedArchiveFile``); the
-    JDK checks the archive and turns sharing off on any mismatch, so a
-    stale archive costs start-up time but never correctness. For the
-    launch only, ``SPARK_CONF_DIR`` points at an empty directory: Spark's
-    conf dir holds only ``*.template`` files then, but on the class path
-    it would stop the JVM from archiving.
+    for it and fsyncs the dump before moving it into place. With one, the
+    JVM maps it (``-XX:SharedArchiveFile``). A JVM that refuses the
+    archive (stale or corrupt header) turns class-data sharing off, the
+    JDK's default archive included; the launched JVM's ``java.vm.info``
+    then lacks ``sharing``, and the archive is deleted so the next
+    session writes a new one. An archive cut short behind a valid header
+    is not refused: the launch dies (SIGBUS), and only deleting
+    ``cds_dir()`` clears it.
+
+    For the launch only, ``SPARK_CONF_DIR`` points at an empty directory:
+    Spark's conf dir holds only ``*.template`` files then, but on the
+    class path it would stop the JVM from archiving.
     """
     plan = _cds_plan(conf)
     if plan is None:
@@ -194,9 +203,14 @@ def driver_cds(conf: dict[str, str]):
             os.environ.pop("SPARK_CONF_DIR", None)
         else:
             os.environ["SPARK_CONF_DIR"] = saved
-    proc = getattr(SparkContext._gateway, "proc", None)
-    if tmp and proc is not None:
-        atexit.register(_finish_cds_build, proc, tmp, archive)
+    gw = SparkContext._gateway
+    if gw is None:
+        return
+    if tmp:
+        atexit.register(_finish_cds_build, gw.proc, tmp, archive)
+    elif "sharing" not in gw.jvm.java.lang.System.getProperty("java.vm.info"):
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(archive)
 
 
 def get_spark(

@@ -213,13 +213,12 @@ def start_scored_stream(spark: SparkSession, stream_df: DataFrame,
 
     Scoring runs inside ``foreachBatch`` — every document arrives whole
     in its batch, so the per-doc aggregation is batch-local and the
-    query carries ZERO streaming state (constant memory forever; same
-    posture as :func:`dedup_stream_vs_corpus`). The static model is
-    re-planned per batch, so pointing it at the maintained model table
-    picks up re-trains between batches; with a FIXED model the scores
-    are bit-identical to scoring the union of all batches at once
-    (integer milli-nat sums are order-independent — the parity test's
-    contract)."""
+    query carries ZERO streaming state (constant memory forever). The
+    static model is re-planned per batch, so pointing it at the
+    maintained model table picks up re-trains between batches; with a
+    FIXED model the scores are bit-identical to scoring the union of all
+    batches at once (integer milli-nat sums are order-independent — the
+    parity test's contract)."""
     from ..operators.tokens import score_tokens
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
@@ -274,104 +273,6 @@ def start_dsir_scored_stream(spark: SparkSession, stream_df: DataFrame,
          .option("checkpointLocation",
                  checkpoint_dir
                  or os.path.join(output_dir, "_dsir_ckpt")))
-    if available_now:
-        q = q.trigger(availableNow=True)
-    return q.start()
-
-
-# ---------------------------------------------------------------------------
-# Streaming exact dedup (cross-batch duplicate suppression)
-# ---------------------------------------------------------------------------
-
-
-def dedup_stream_exact(stream_df: DataFrame, content_cols: list[str],
-                       ts_col: str = "event_ts",
-                       watermark: str = "10 minutes") -> DataFrame:
-    """Streaming analogue of ``operators.dedup.exact_dedup``: emit the
-    first occurrence of each content hash, suppressing re-deliveries
-    and duplicates that arrive within the watermark horizon.
-
-    State is BOUNDED by the watermark (dropDuplicatesWithinWatermark:
-    a seen-hash entry is evicted once the event-time watermark passes
-    it) — the property that makes this runnable forever on a 10^12-row
-    stream, unlike an unbounded seen-set. Duplicates farther apart than
-    the horizon both pass; the batch dedup suite is the exact backstop
-    for those (the standard streaming/batch lambda split)."""
-    # Hash the JSON of a struct, not concat_ws: concat_ws silently SKIPS
-    # null arguments, so ('x', NULL) and (NULL, 'x') would collide and
-    # the second row be wrongly suppressed. to_json keeps field names,
-    # so a null in a different position yields different bytes — the
-    # same null-is-a-distinct-value semantics as batch exact_dedup.
-    h = F.sha2(F.to_json(F.struct(
-        *[F.col(c).cast("string").alias(c) for c in content_cols])), 256)
-    return (stream_df.withColumn("__h", h)
-            .withWatermark(ts_col, watermark)
-            .dropDuplicatesWithinWatermark(["__h"])
-            .drop("__h"))
-
-
-def dedup_stream_vs_corpus(stream_df: DataFrame,
-                           corpus_hashes: DataFrame,
-                           text_col: str = "text") -> DataFrame:
-    """Streaming face of ``operators.dedup.dedup_vs_corpus``'s exact
-    stage: drop incoming documents whose content already exists in the
-    corpus's precomputed hash table (``corpus_artifacts``).
-
-    A stream-STATIC left_anti join — no streaming state at all, so it
-    runs forever at constant memory; Spark broadcasts or shuffles the
-    static side per micro-batch exactly as it would a batch anti-join.
-    The static frame is re-planned per batch, so pointing it at the
-    maintained hashes table picks up corpus growth between batches.
-    Compose BEFORE :func:`dedup_stream_exact` to also suppress
-    within-stream duplicates."""
-    from ..operators.dedup import content_hash
-    return (stream_df.withColumn("__h", content_hash(F.col(text_col)))
-            .join(corpus_hashes.withColumnRenamed("h", "__h"),
-                  "__h", "left_anti")
-            .drop("__h"))
-
-
-def start_winnow_dedup_stream(spark: SparkSession, stream_df: DataFrame,
-                              corpus_fp: DataFrame, output_dir: str,
-                              tokens_col: str = "tokens",
-                              id_col: str = "doc_id",
-                              k: int = 4, w: int = 4,
-                              min_shared: int = 2,
-                              max_fp_freq: int = 20,
-                              corpus_freq: DataFrame | None = None,
-                              checkpoint_dir: str | None = None,
-                              available_now: bool = True):
-    """Streaming face of ``operators.tokens.winnow_vs_corpus``: drop
-    incoming documents sharing >= ``min_shared`` non-boilerplate
-    winnowing fingerprints with the MAINTAINED corpus artifact table,
-    appending survivors as parquet.
-
-    Runs inside ``foreachBatch`` (the :func:`start_scored_stream`
-    posture): the per-doc shared-fingerprint count is a batch-local
-    aggregation — every document arrives whole in its batch — so the
-    query carries ZERO streaming state. The static ``corpus_fp`` frame
-    is re-planned per batch, so pointing it at the maintained fps
-    table picks up corpus growth between batches; and because winnow
-    artifact appends are exact by construction (per-doc selection),
-    folding each batch's survivors back into that table keeps the
-    stream's guarantee identical to a batch rebuild — no re-sketching
-    drift, the property MinHash signature dirs don't have."""
-    from ..operators.tokens import winnow_vs_corpus
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        (winnow_vs_corpus(batch, corpus_fp, id_col=id_col,
-                          tokens_col=tokens_col, k=k, w=w,
-                          min_shared=min_shared,
-                          max_fp_freq=max_fp_freq,
-                          corpus_freq=corpus_freq)
-         .write.mode("append")
-         .parquet(os.path.join(output_dir, "deduped")))
-
-    q = (stream_df.writeStream
-         .foreachBatch(write_batch)
-         .option("checkpointLocation",
-                 checkpoint_dir
-                 or os.path.join(output_dir, "_winnow_ckpt")))
     if available_now:
         q = q.trigger(availableNow=True)
     return q.start()

@@ -47,16 +47,6 @@ def main() -> int:
     ap.add_argument("--merges", default=None,
                     help="encode mode: merges/ dir from --mode train")
     ap.add_argument("--id-space", type=int, default=50000)
-    ap.add_argument("--algo", choices=["bpe", "unigram"],
-                    default="bpe",
-                    help="'unigram' = SentencePiece-style unigram-LM "
-                         "(functions/unigram_lm.py): train writes "
-                         "vocab/ (piece, cost, id); encode reads "
-                         "--vocab and writes the same tokens/ shape")
-    ap.add_argument("--vocab", default=None,
-                    help="unigram encode mode: vocab/ dir from train")
-    ap.add_argument("--vocab-size", type=int, default=64,
-                    help="unigram train mode: target piece count")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -70,61 +60,6 @@ def main() -> int:
     t0 = time.time()
     docs = spark.read.parquet(args.input)
     n_in = docs.count()
-
-    if args.mode == "train" and args.algo == "unigram":
-        from fluent_bit_spark.functions.unigram_lm import \
-            train_unigram_lm
-        wc = word_counts(docs, args.text_col)
-        rows = sorted((r["word"], r["c"]) for r in wc.collect())
-        vocab = train_unigram_lm(dict(rows),
-                                 vocab_size=args.vocab_size)
-        spark.createDataFrame(
-            [(p, c, i) for i, (p, c) in enumerate(vocab)],
-            "piece string, cost long, id int"
-        ).coalesce(1).write.mode("overwrite") \
-            .parquet(f"{args.output}/vocab")
-        print(json.dumps({"mode": "train", "algo": "unigram",
-                          "docs_in": n_in,
-                          "distinct_words": len(rows),
-                          "pieces": len(vocab),
-                          "wall_sec": round(time.time() - t0, 2)}))
-        return 0
-
-    if args.mode == "encode" and args.algo == "unigram":
-        from fluent_bit_spark.functions.unigram_lm import \
-            unigram_encode_pandas
-        if not args.vocab:
-            ap.error("--mode encode --algo unigram needs --vocab")
-        vrows = spark.read.parquet(args.vocab).orderBy("id").collect()
-        vocab = [(r["piece"], r["cost"]) for r in vrows]
-        if not vocab:
-            print(json.dumps({"mode": "encode", "algo": "unigram",
-                              "error": "empty vocab table"}))
-            return 2
-        id_cols = tuple(c for c in (args.id_col, "source")
-                        if c in docs.columns)
-        enc = unigram_encode_pandas(docs, vocab,
-                                    text_col=args.text_col,
-                                    id_cols=id_cols)
-        out = (enc.withColumn("n_tok", F.size("tokens"))
-               .drop("piece_md5"))
-        out.write.mode("overwrite").parquet(f"{args.output}/tokens")
-        chk = spark.read.parquet(f"{args.output}/tokens")
-        n_out = chk.count()
-        # every word is >= 1 piece, so total pieces must cover total
-        # words (per-word detok concat is pytest-pinned)
-        word_total = docs.agg(F.sum(F.size(F.filter(
-            F.split(F.col(args.text_col), " "),
-            lambda w: w != "")))).first()[0] or 0
-        piece_total = chk.agg(F.sum("n_pieces")).first()[0] or 0
-        tok_total = chk.agg(F.sum("n_tok")).first()[0] or 0
-        ok = (n_out == n_in and piece_total >= word_total)
-        print(json.dumps({"mode": "encode", "algo": "unigram",
-                          "docs_in": n_in, "docs_out": n_out,
-                          "tokens_out": int(tok_total),
-                          "words_in": int(word_total),
-                          "wall_sec": round(time.time() - t0, 2)}))
-        return 0 if ok else 2
 
     if args.mode == "train":
         wc = word_counts(docs, args.text_col)

@@ -12,7 +12,6 @@ Usage:
     spark-submit --master local[32] --py-files engine.zip \
         jobs/run_curate.py --input /path/pages.parquet \
         --output /path/curated \
-        [--input-format warc]  # .warc/.warc.gz dir: HTTP-200 bodies \
         [--html-col html] [--text-col text] [--form NFC] [--lower] \
         [--redact] [--gopher] [--url-col url --cap 1000 --salt 16]
 
@@ -37,16 +36,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     ap = argparse.ArgumentParser(description="web-corpus curation chain")
-    ap.add_argument("--input", required=True,
-                    help="documents parquet, or (with --input-format "
-                         "warc) a dir of .warc/.warc.gz archives")
+    ap.add_argument("--input", required=True, help="documents parquet")
     ap.add_argument("--output", required=True, help="output dir")
-    ap.add_argument("--input-format", default="parquet",
-                    choices=["parquet", "warc"],
-                    help="warc: HTTP-200 response bodies become the "
-                         "corpus (sources/warc.py record walk; "
-                         "--html-col defaults to body, --id-col to "
-                         "rec_uid, --url-col to target_uri)")
     ap.add_argument("--html-col", default=None,
                     help="extract text from this HTML column first")
     ap.add_argument("--text-col", default="text")
@@ -95,27 +86,7 @@ def main() -> int:
 
     spark = get_spark(app_name="run_curate")
     t0 = time.time()
-    if args.input_format == "warc":
-        # crawl-archive entry: keep HTTP-200 response records, body is
-        # the page HTML, target_uri the natural --url-col. rec_uid is
-        # archive-path#record-index — unique and replay-stable.
-        from fluent_bit_spark.sources.warc import read_warc_files
-        recs = read_warc_files(spark, args.input)
-        df = (recs.filter((F.col("warc_type") == "response")
-                          & F.col("rec_ok")
-                          & (F.col("http_status") == 200))
-              .withColumn("rec_uid",
-                          F.concat_ws("#", F.col("path"),
-                                      F.col("rec_idx").cast("string")))
-              .drop("warc_type", "rec_ok"))
-        if args.html_col is None:
-            args.html_col = "body"
-        if args.id_col == "doc_id":
-            args.id_col = "rec_uid"
-        if args.url_col is None and args.cap > 0:
-            args.url_col = "target_uri"
-    else:
-        df = spark.read.parquet(args.input)
+    df = spark.read.parquet(args.input)
     n_in = df.count()
     tcol = args.text_col
 

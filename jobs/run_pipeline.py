@@ -110,7 +110,7 @@ def main() -> int:
     rate = stats["rows_in"] / stats["wall_sec"] if stats["wall_sec"] else 0
     print(json.dumps({**stats, "rows_per_sec": round(rate, 1)}))
     # no spark.stop(): spark-submit tears the JVM down at exit, and an
-    # in-suite main() shares the test session (the run_dedup r4 lesson)
+    # in-suite main() shares the test session, which a stop would kill
     return 0
 
 

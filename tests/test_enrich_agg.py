@@ -199,7 +199,7 @@ def test_dim_cache_ttl_semantics(spark, tmp_path):
 def test_dim_cache_stream_enrichment_parity(spark, tmp_path):
     """Streaming face: enrich_cached inside foreachBatch. With ttl=0
     each micro-batch re-resolves — a dim rewrite between batches is
-    visible to the next batch (the dedup_stream_vs_corpus replan
+    visible to the next batch (the stream-static join replan
     posture); with ttl=inf every batch carries the first snapshot.
     Batch parity: each micro-batch's rows equal a batch lookup_join
     against the dim version live at that batch."""

@@ -310,55 +310,6 @@ def test_line_dedup_reuses_materialized_lines(spark, tokens_df):
     spark.catalog.clearCache()
 
 
-def test_vs_corpus_bucketed_band_table_one_sided_exchange(spark):
-    """With the corpus band table persisted BUCKETED on (band, bh),
-    the per-batch LSH band join must read the corpus side with NO
-    Exchange — only the new batch shuffles (per-batch cost ∝ batch,
-    the BENCH/DEDUP.md vs-corpus posture) — and select the same
-    survivors as the inline path."""
-    from fluent_bit_spark.operators.dedup import (
-        corpus_artifacts, corpus_band_table, dedup_vs_corpus,
-    )
-    from fluent_bit_spark.sources.tables import read_table, write_bucketed
-    corpus = spark.createDataFrame(
-        [(f"c{i}", f"alpha{i} beta{i} gamma{i} delta{i} eps{i} zeta{i}")
-         for i in range(50)], "doc_id string, text string")
-    new = spark.createDataFrame(
-        [("n0", "alpha7 beta7 gamma7 delta7 eps7 zeta7"),     # = c7
-         ("n1", "totally fresh words that match nothing here")],
-        "doc_id string, text string")
-    hashes, sigs = corpus_artifacts(corpus, "doc_id", "text")
-    write_bucketed(corpus_band_table(sigs), "vs_bands",
-                   ["band", "bh"], n_buckets=8)
-    # at toy size the optimizer just broadcasts the corpus side; force
-    # the SMJ the real corpus≫batch sizes would get so the test checks
-    # the at-scale shape
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        bands_tbl = read_table(spark, "vs_bands")
-        out = dedup_vs_corpus(new, "doc_id", "text", hashes, sigs,
-                              corpus_bands=bands_tbl)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        lines = plan.splitlines()
-        scan_at = [i for i, ln in enumerate(lines) if "vs_bands" in ln]
-        assert scan_at, plan
-        i = scan_at[0]
-        assert "Bucketed: true" in plan
-        # walk up from the bucketed scan to its SortMergeJoin: only
-        # Sort/Project/Filter allowed in between — NO Exchange (the
-        # bucketed layout already satisfies the join's distribution)
-        subtree = "\n".join(lines[max(0, i - 6):i])
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in subtree, subtree
-        got = sorted(r.doc_id for r in out.collect())
-        want = dedup_vs_corpus(new, "doc_id", "text", hashes, sigs)
-        assert got == sorted(r.doc_id for r in want.collect()) == ["n1"]
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS vs_bands")
-
-
 def test_bpe_paths_plan_shapes(spark):
     """The BPE encode paths carry the right 100 TB shape: the Arrow
     kernel is MAP-ONLY (no Exchange — a tokenize pass must never

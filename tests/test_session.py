@@ -129,6 +129,9 @@ def test_cds_not_used_when_a_jvm_runs_or_options_are_set(fake_install,
                                                          monkeypatch):
     with driver_cds({"spark.driver.defaultJavaOptions": "-Xss4m"}) as opts:
         assert opts is None
+    with driver_cds({"spark.driver.extraJavaOptions": "-Xss4m -Xshare:off"}
+                    ) as opts:
+        assert opts is None
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "4040")
     with driver_cds({}) as opts:
         assert opts is None
@@ -180,6 +183,7 @@ def test_cds_archive_built_once_then_mapped_and_a_corrupt_one_ignored(
     assert second["count"] == 10
     assert archive in second["maps"]
     assert "[cds" not in out
+    assert os.path.exists(archive)
 
     os.remove(archive)
     with open(archive, "wb") as f:
@@ -187,3 +191,5 @@ def test_cds_archive_built_once_then_mapped_and_a_corrupt_one_ignored(
     third, _ = _cds_child(env)
     assert third["count"] == 10
     assert archive not in third["maps"]
+    # the JVM refused it, so it is gone and the next session rebuilds
+    assert not os.path.exists(archive)

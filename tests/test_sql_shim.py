@@ -241,24 +241,6 @@ def test_create_stream_from_pack_verb(sp, spark):
     assert got.c > 0
 
 
-def test_dedup_lines_verb_matches_operator(sp, spark):
-    """DEDUP LINES STREAM:x MAX n [WORDS k] == line_dedup."""
-    from fluent_bit_spark.operators.tokens import line_dedup
-    docs = spark.createDataFrame(
-        [("a", "spam spam spam unique one two"),
-         ("b", "spam spam spam other words here"),
-         ("c", "spam spam spam more text again")],
-        "doc_id string, text string")
-    sp.register_stream("docs", docs)
-    got = sp.sql("DEDUP LINES STREAM:docs MAX 2 WORDS 3;")
-    want = line_dedup(docs, max_occ=2, line_words=3)
-    g = {(r.doc_id, r.n_kept, r.n_dropped, r.text) for r in got.collect()}
-    w = {(r.doc_id, r.n_kept, r.n_dropped, r.text) for r in want.collect()}
-    assert g == w
-    # 'spam spam spam' occurs 3 > 2 times -> dropped everywhere
-    assert all(t[2] == 1 for t in g)
-
-
 def test_score_surprisal_verb_matches_operator(sp, spark):
     """SCORE SURPRISAL STREAM:x equals the direct unigram_surprisal
     call — a [STREAM_TASK] Exec reaches the quality scorer."""
@@ -336,25 +318,6 @@ def test_split_holdout_verb_matches_operator(sp, spark):
     assert {"train", "holdout"} == set(got.values())
 
 
-def test_dedup_spans_verb_matches_operator(sp, spark):
-    """DEDUP SPANS STREAM:x LEN n == substring_dedup."""
-    from fluent_bit_spark.operators.tokens import substring_dedup
-    S = list(range(900, 908))
-    docs = spark.createDataFrame(
-        [(1, list(range(10)) + S),
-         (2, S + list(range(50, 60))),
-         (3, list(range(70, 82)))],
-        "doc_id long, tokens array<int>")
-    sp.register_stream("tdocs", docs)
-    got = {(r.doc_id, tuple(r.tokens), r.n_removed) for r in
-           sp.sql("DEDUP SPANS STREAM:tdocs LEN 8;").collect()}
-    want = {(r.doc_id, tuple(r.tokens), r.n_removed) for r in
-            substring_dedup(docs, length=8).collect()}
-    assert got == want
-    # the later copy of S lost exactly its 8 tokens
-    assert (2, tuple(range(50, 60)), 8) in got
-
-
 def test_normalize_verb_matches_operator(sp, spark):
     """NORMALIZE STREAM:x FORM NFKC LOWER COLLAPSE == normalize_text."""
     from fluent_bit_spark.operators.web import normalize_text
@@ -385,30 +348,6 @@ def test_cap_host_verb_matches_operator(sp, spark):
     want = cap_per_host(df, "host", [F.desc("score"), F.col("doc_id")], 3)
     assert sorted(r.doc_id for r in got.collect()) == \
            sorted(r.doc_id for r in want.collect())
-
-
-def test_dedup_vs_corpus_verb_matches_operator(sp, spark):
-    """DEDUP STREAM:new VS CORPUS STREAM:corpus == corpus_artifacts +
-    dedup_vs_corpus at the same threshold."""
-    from fluent_bit_spark.operators.dedup import (
-        corpus_artifacts, dedup_vs_corpus,
-    )
-    corpus = spark.createDataFrame(
-        [("c1", "alpha beta gamma delta epsilon zeta")],
-        "doc_id string, text string")
-    new = spark.createDataFrame(
-        [("n1", "alpha beta gamma delta epsilon zeta"),   # exact dup
-         ("n2", "totally different words entirely here now")],
-        "doc_id string, text string")
-    sp.register_stream("corpus", corpus)
-    sp.register_stream("newb", new)
-    got = sp.sql("DEDUP STREAM:newb VS CORPUS STREAM:corpus "
-                 "TEXT text ID doc_id JACCARD 500;")
-    hashes, sigs = corpus_artifacts(corpus, "doc_id", "text")
-    want = dedup_vs_corpus(new, "doc_id", "text", hashes, sigs,
-                           threshold=0.5)
-    assert sorted(r.doc_id for r in got.collect()) == \
-           sorted(r.doc_id for r in want.collect()) == ["n2"]
 
 
 def test_score_quality_verb_matches_operator(sp, spark):
@@ -539,26 +478,11 @@ def test_audit_verbs_match_operators(sp, spark):
 
 
 def test_winnow_allocate_fuse_verbs_match_operators(sp, spark):
-    """DEDUP WINNOW / ALLOCATE BUDGET / FUSE RANKS == the direct
-    operator calls with the same parameters."""
+    """ALLOCATE BUDGET / FUSE RANKS == the direct operator calls with
+    the same parameters."""
     from fluent_bit_spark.operators.tokens import (
-        allocate_token_budget, rrf_fuse, winnow_overlap_pairs,
+        allocate_token_budget, rrf_fuse,
     )
-    shared = "lorem ipsum dolor sit amet consectetur adipiscing".split()
-    docs = spark.createDataFrame(
-        [(1, [f"a{i}" for i in range(10)] + shared),
-         (2, [f"b{i}" for i in range(10)] + shared),
-         (3, [f"c{i}" for i in range(20)])],
-        "doc_id long, tokens array<string>")
-    sp.register_stream("wdocs", docs)
-    got = {(r.id_a, r.id_b, r.shared_fp) for r in
-           sp.sql("DEDUP WINNOW STREAM:wdocs K 4 WINDOW 4 SHARED 1 "
-                  "MAXFREQ 10;").collect()}
-    want = {(r.id_a, r.id_b, r.shared_fp) for r in
-            winnow_overlap_pairs(docs, k=4, w=4, min_shared=1,
-                                 max_fp_freq=10).collect()}
-    assert got == want and got
-
     totals = spark.createDataFrame(
         [("s1", 1000, 3), ("s2", 5000, 1)],
         "source string, unique_tokens long, weight long")
@@ -583,40 +507,6 @@ def test_winnow_allocate_fuse_verbs_match_operators(sp, spark):
     want_f = {tuple(r) for r in
               rrf_fuse([la, lb], k=60, top_n=2).collect()}
     assert got_f == want_f and got_f
-
-
-def test_winnow_vs_corpus_verb_matches_operator(sp, spark):
-    """DEDUP WINNOW ... VS CORPUS ... == winnow_vs_corpus, for both
-    corpus postures: raw token docs (fingerprints derived inline) and
-    a prebuilt (id, fp) artifact stream (the maintained-table path)."""
-    from fluent_bit_spark.operators.tokens import (
-        winnow_corpus_fp, winnow_vs_corpus,
-    )
-    shared = "lorem ipsum dolor sit amet consectetur adipiscing".split()
-    corpus = spark.createDataFrame(
-        [(0, [f"c{i}" for i in range(10)] + shared),
-         (2, [f"k{i}" for i in range(15)])],
-        "doc_id long, tokens array<string>")
-    new = spark.createDataFrame(
-        [(1, [f"n{i}" for i in range(8)] + shared),   # dup of corpus 0
-         (3, [f"f{i}" for i in range(20)])],          # fresh
-        "doc_id long, tokens array<string>")
-    sp.register_stream("wnew", new)
-    sp.register_stream("wcorp", corpus)
-    want = {r.doc_id for r in winnow_vs_corpus(
-        new, winnow_corpus_fp(corpus, k=4, w=4),
-        k=4, w=4, min_shared=1, max_fp_freq=10).collect()}
-    got = {r.doc_id for r in
-           sp.sql("DEDUP WINNOW STREAM:wnew VS CORPUS STREAM:wcorp "
-                  "K 4 WINDOW 4 SHARED 1 MAXFREQ 10;").collect()}
-    assert got == want == {3}
-
-    # prebuilt-artifact posture: the corpus stream carries fp rows
-    sp.register_stream("wfps", winnow_corpus_fp(corpus, k=4, w=4))
-    got_fp = {r.doc_id for r in
-              sp.sql("DEDUP WINNOW STREAM:wnew VS CORPUS STREAM:wfps "
-                     "K 4 WINDOW 4 SHARED 1 MAXFREQ 10;").collect()}
-    assert got_fp == want
 
 
 def test_gate_quality_verb_matches_operator(sp, spark):
@@ -722,25 +612,6 @@ def test_corrupt_spans_verb_matches_operator(sp, spark):
     w = {r["doc_id"]: (r["n_spans"], r["inputs"], r["targets"])
          for r in want.collect()}
     assert g == w and any(k for k, _, _ in g.values())
-
-
-def test_tokenize_unigram_verb(sp, spark):
-    from fluent_bit_spark.functions.unigram_lm import \
-        unigram_encode_pandas
-    docs = spark.createDataFrame(
-        [("d0", "s", "ab c ab"), ("d1", "s", "cab")],
-        "doc_id string, source string, text string")
-    vocab = spark.createDataFrame(
-        [("ab", 150, 0), ("a", 100, 1), ("b", 100, 2), ("c", 100, 3)],
-        "piece string, cost long, id int")
-    sp.register_stream("udocs", docs)
-    sp.register_stream("uvocab", vocab)
-    got = sp.sql("TOKENIZE STREAM:udocs USING STREAM:uvocab "
-                 "ALGO UNIGRAM;")
-    want = unigram_encode_pandas(
-        docs, [("ab", 150), ("a", 100), ("b", 100), ("c", 100)])
-    assert sorted(map(tuple, got.collect())) \
-        == sorted(map(tuple, want.collect()))
 
 
 def test_audit_drift_verb_matches_operator(sp, spark):

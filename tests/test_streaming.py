@@ -138,42 +138,6 @@ def test_throttle_stateful_cross_batch(spark, landing, spec):
     assert len(rows) < total_in
 
 
-def test_dedup_stream_exact_cross_batch(spark, tmp_path):
-    """Duplicates of the same content in LATER files (micro-batches)
-    are suppressed; distinct content all passes. Parity oracle: batch
-    exact dedup over the same rows."""
-    from fluent_bit_spark.streaming.stream_pipeline import (
-        dedup_stream_exact,
-    )
-    d = str(tmp_path / "landing2")
-    rows0 = [("d0", "hello world", 0), ("d1", "spark streams", 1),
-             ("d2", "hello world", 2)]          # in-batch dup of d0
-    rows1 = [("d3", "hello world", 3),          # cross-batch dup of d0
-             ("d4", "brand new doc", 4)]
-    schema = "doc_id string, text string, sec int"
-    spark.createDataFrame(rows0, schema).coalesce(1) \
-        .write.parquet(f"{d}/f0.parquet")
-    spark.createDataFrame(rows1, schema).coalesce(1) \
-        .write.parquet(f"{d}/f1.parquet")
-    # glob: each write.parquet made a directory; the file stream source
-    # does not recurse into non-partition subdirs on its own
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(f"{d}/*")
-              .withColumn("event_ts",
-                          F.timestamp_seconds(F.lit(1767225600)
-                                              + F.col("sec"))))
-    out = dedup_stream_exact(stream, ["text"], watermark="1 hour")
-    q = (out.writeStream.format("memory").queryName("dedup_stream")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.text for r in
-           spark.sql("SELECT text FROM dedup_stream").collect()}
-    ids = sorted(r.doc_id for r in
-                 spark.sql("SELECT doc_id FROM dedup_stream").collect())
-    assert got == {"hello world", "spark streams", "brand new doc"}
-    assert len(ids) == 3          # one survivor per distinct content
-
-
 def test_multiline_stateful_cross_batch_and_timeout(spark, tmp_path):
     """A group spanning micro-batches joins when the next start
     arrives; the last open group flushes via the event-time timeout
@@ -252,33 +216,6 @@ def test_multiline_preset_stateful_python_traceback(spark, tmp_path):
           "    run()\nValueError: boom")
     assert rows[tb] == (4, True)
     assert rows["plain log line"] == (1, False)
-
-
-def test_dedup_stream_null_patterns_not_collided(spark, tmp_path):
-    """('x', NULL) and (NULL, 'x') are DIFFERENT contents — concat_ws
-    would skip the nulls and collide them (ADVICE r2); the struct-JSON
-    hash keeps them distinct, matching batch exact_dedup."""
-    from fluent_bit_spark.streaming.stream_pipeline import (
-        dedup_stream_exact,
-    )
-    d = str(tmp_path / "landing_null")
-    schema = "doc_id string, a string, b string, sec int"
-    spark.createDataFrame(
-        [("d0", "x", None, 0), ("d1", None, "x", 1),
-         ("d2", "x", None, 2)], schema) \
-        .coalesce(1).write.parquet(f"{d}/f0.parquet")
-    stream = (spark.readStream.schema(schema).parquet(f"{d}/*")
-              .withColumn("event_ts",
-                          F.timestamp_seconds(F.lit(1767225600)
-                                              + F.col("sec"))))
-    out = dedup_stream_exact(stream, ["a", "b"], watermark="1 hour")
-    q = (out.writeStream.format("memory").queryName("dedup_nulls")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    ids = sorted(r.doc_id for r in
-                 spark.sql("SELECT doc_id FROM dedup_nulls").collect())
-    # d2 is a true dup of d0; d1 must survive despite the null swap
-    assert ids == ["d0", "d1"]
 
 
 def test_multiline_stateful_late_line_survives(spark, tmp_path):
@@ -486,49 +423,6 @@ def test_stream_quality_stamps_match_batch(spark, landing, fixture_paths,
     assert {s for _, s, _ in got} == {"train", "holdout"}
 
 
-def test_dedup_stream_vs_corpus(spark, tmp_path):
-    """Stream-static anti-join against precomputed corpus hashes:
-    corpus-known content is suppressed in every micro-batch, fresh
-    content passes, and composing with dedup_stream_exact also
-    suppresses the within-stream duplicate. Parity: batch
-    dedup_vs_corpus exact stage over the same rows."""
-    from fluent_bit_spark.operators.dedup import corpus_artifacts
-    from fluent_bit_spark.streaming.stream_pipeline import (
-        dedup_stream_exact, dedup_stream_vs_corpus,
-    )
-    corpus = spark.createDataFrame(
-        [("c0", "seen before"), ("c1", "also known")],
-        "doc_id string, text string")
-    hashes, _ = corpus_artifacts(corpus, "doc_id", "text")
-    hashes = spark.createDataFrame(hashes.collect(), hashes.schema)
-
-    d = str(tmp_path / "landing_vs")
-    schema = "doc_id string, text string, sec int"
-    rows0 = [("n0", "seen before", 0),        # corpus dup → dropped
-             ("n1", "fresh one", 1)]
-    rows1 = [("n2", "also known", 2),         # corpus dup, later batch
-             ("n3", "fresh two", 3),
-             ("n4", "fresh one", 4)]          # stream dup of n1
-    spark.createDataFrame(rows0, schema).coalesce(1) \
-        .write.parquet(f"{d}/f0.parquet")
-    spark.createDataFrame(rows1, schema).coalesce(1) \
-        .write.parquet(f"{d}/f1.parquet")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(f"{d}/*")
-              .withColumn("event_ts",
-                          F.timestamp_seconds(F.lit(1767225600)
-                                              + F.col("sec"))))
-    out = dedup_stream_exact(
-        dedup_stream_vs_corpus(stream, hashes, "text"),
-        ["text"], watermark="1 hour")
-    q = (out.writeStream.format("memory").queryName("vs_corpus_stream")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(r.doc_id for r in
-                 spark.sql("SELECT doc_id FROM vs_corpus_stream").collect())
-    assert got == ["n1", "n3"]
-
-
 def test_start_scored_stream_matches_batch(spark, tmp_path):
     """Streaming quality scoring vs a maintained model table: scores
     appended across micro-batches are EXACTLY the batch score_tokens
@@ -616,50 +510,6 @@ def test_start_dsir_scored_stream_matches_batch(spark, tmp_path):
     assert {t[0] for t in got} == {"a0", "a1", "a2", "a3"}
     a3 = next(t for t in got if t[0] == "a3")
     assert a3[3] == 1   # one unigram feature, no bigram
-
-
-def test_start_winnow_dedup_stream_matches_batch(spark, tmp_path):
-    """Streaming winnowing dedup vs a maintained fp table: survivors
-    appended across micro-batches == batch winnow_vs_corpus over the
-    union (per-doc decisions depend only on the doc and the static
-    corpus side — zero streaming state, order-independent)."""
-    from fluent_bit_spark.operators.tokens import (
-        winnow_corpus_fp, winnow_vs_corpus,
-    )
-    from fluent_bit_spark.streaming.stream_pipeline import (
-        start_winnow_dedup_stream,
-    )
-    shared = "lorem ipsum dolor sit amet consectetur adipiscing".split()
-    corpus = spark.createDataFrame(
-        [(0, [f"c{i}" for i in range(10)] + shared)],
-        "doc_id long, tokens array<string>")
-    fps = winnow_corpus_fp(corpus, k=4, w=4)
-    fps = spark.createDataFrame(fps.collect(), fps.schema)
-
-    d = str(tmp_path / "landing_wn")
-    schema = "doc_id long, tokens array<string>"
-    rows0 = [(1, [f"n{i}" for i in range(8)] + shared),   # dup → drop
-             (3, [f"f{i}" for i in range(20)])]           # fresh
-    rows1 = [(5, [f"g{i}" for i in range(6)] + shared),   # dup → drop
-             (7, [f"h{i}" for i in range(15)])]           # fresh
-    spark.createDataFrame(rows0, schema).coalesce(1) \
-        .write.parquet(f"{d}/f0.parquet")
-    spark.createDataFrame(rows1, schema).coalesce(1) \
-        .write.parquet(f"{d}/f1.parquet")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(f"{d}/*"))
-    out = str(tmp_path / "winnow_out")
-    q = start_winnow_dedup_stream(spark, stream, fps, out,
-                                  k=4, w=4, min_shared=1,
-                                  max_fp_freq=10)
-    q.awaitTermination(120)
-
-    got = {r.doc_id for r in
-           spark.read.parquet(f"{out}/deduped").collect()}
-    both = spark.createDataFrame(rows0 + rows1, schema)
-    want = {r.doc_id for r in winnow_vs_corpus(
-        both, fps, k=4, w=4, min_shared=1, max_fp_freq=10).collect()}
-    assert got == want == {3, 7}
 
 
 def test_start_objective_stream_matches_batch(spark, tmp_path):

@@ -175,50 +175,6 @@ def test_run_curate_cli_full_chain(spark, tmp_path, monkeypatch):
     assert k0.u_host == "big.com" and k0.gq_reasons == 0
 
 
-def test_run_curate_cli_warc_input(spark, tmp_path, monkeypatch):
-    """jobs/run_curate.py --input-format warc: .warc/.warc.gz archives
-    in a dir become the corpus (HTTP-200 bodies only), target_uri is
-    the natural cap key, rec_uid the id; conservation exact."""
-    import importlib
-    import json as _json
-    import os
-    import sys
-
-    from fluent_bit_spark.sources.warc import fixture_warc_capture
-
-    sys.path.insert(0, os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "jobs"))
-    run_curate = importlib.import_module("run_curate")
-
-    land = tmp_path / "crawl"
-    land.mkdir()
-    for i in range(9):
-        ext = "warc.gz" if i % 3 == 0 else "warc"
-        (land / f"cap{i}.{ext}").write_bytes(fixture_warc_capture(i))
-    # fixture arithmetic: doc i has 2+i%4 responses, status 200 iff
-    # (i + rec) % 3 == 0
-    n200 = sum(1 for i in range(9) for j in range(2 + i % 4)
-               if (i + j) % 3 == 0)
-
-    out = str(tmp_path / "curated")
-    printed = []
-    monkeypatch.setattr(sys, "argv", [
-        "run_curate.py", "--input", str(land), "--output", out,
-        "--input-format", "warc", "--lower", "--collapse-ws"])
-    monkeypatch.setattr("builtins.print", lambda s: printed.append(s))
-    assert run_curate.main() == 0
-    rep = _json.loads(printed[-1])
-    assert rep["conserved"] and rep["docs_in"] == n200
-    kept = spark.read.parquet(f"{out}/kept")
-    assert kept.count() == n200
-    r = kept.filter("rec_uid like '%cap5.warc#%'").collect()
-    # doc 5: responses j=0..2, 200 iff (5+j)%3==0 → j=1 only
-    assert len(r) == 1 and r[0].target_uri == "http://h5.example/p1"
-    assert r[0].text.startswith("doc 5 rec 1")
-    assert "<body>" not in r[0].text
-
-
 def test_canonical_url_rules(spark):
     """Scheme/host lowercase, scheme-matched default-port strip,
     fragment drop, tracking-param strip + param sort, trailing-slash

@@ -29,7 +29,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.bench_dedup import shuffle_totals  # noqa: E402
+from tools.bench_sinks import shuffle_totals  # noqa: E402
 from tools.bench_pack import VOCAB, tokens_sql  # noqa: E402
 
 K = 10

@@ -37,7 +37,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.bench_dedup import shuffle_totals  # noqa: E402
+from tools.bench_sinks import shuffle_totals  # noqa: E402
 
 VOCAB = 50_000
 LINEAR_GATE = 5.5      # 4x rows -> <= this x shuffle (linear = 4.0)

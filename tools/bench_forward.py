@@ -31,7 +31,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.bench_dedup import shuffle_totals  # noqa: E402
+from tools.bench_sinks import shuffle_totals  # noqa: E402
 
 TOK_PER_DOC = 48       # ~flagship-shaped wide rows
 N_SOURCES = 8

@@ -1,7 +1,7 @@
 """Sink-payload-codec volume evidence: es _bulk / loki push bodies and
 octet-framed syslog encode→decode at millions of records, with
 per-phase walls and shuffle bytes (completes the volume set for the
-round-5 sink codecs; methodology identical to bench_dedup/PACK).
+round-5 sink codecs; methodology identical to PACK).
 
 The sf0.1 events table (100k rows) verifies byte-exactness but cannot
 stress the 100 TB claims, so this script generates a deterministic
@@ -37,14 +37,27 @@ import json
 import os
 import sys
 import time
+import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools.bench_dedup import shuffle_totals  # noqa: E402
 
 N_SERVICES = 40
 N_DAYS = 14
 N_CONNS_PER_M = 4000     # framed connections per million rows
+
+
+def shuffle_totals(ui_port: int = 4040) -> tuple[int, int]:
+    """(shuffle_read_bytes, shuffle_write_bytes) summed over all stages
+    so far, via the Spark UI REST API."""
+    base = f"http://localhost:{ui_port}/api/v1/applications"
+    with urllib.request.urlopen(base, timeout=10) as r:
+        apps = json.load(r)
+    app_id = apps[0]["id"]
+    with urllib.request.urlopen(f"{base}/{app_id}/stages", timeout=10) as r:
+        stages = json.load(r)
+    rd = sum(s.get("shuffleReadBytes", 0) for s in stages)
+    wr = sum(s.get("shuffleWriteBytes", 0) for s in stages)
+    return rd, wr
 
 
 def events_sql(n: int) -> str:

@@ -24,7 +24,7 @@ dup-table probe, one doc-keyed gather — all ∝ tokens.
 
 Usage:
     python tools/bench_substring.py --sizes 1600000,16000000 \
-        [--span-frac 0.2] [--out /tmp/substr_vol] [--md BENCH/DEDUP.md]
+        [--span-frac 0.2] [--out /tmp/substr_vol] [--md report.md]
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.bench_dedup import shuffle_totals  # noqa: E402
+from tools.bench_sinks import shuffle_totals  # noqa: E402
 
 TOK_PER_DOC = 32
 SPAN_LEN = 12

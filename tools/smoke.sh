@@ -58,13 +58,6 @@ if [ "${1:-}" != "quick" ]; then
     --out /tmp/smoke_tfidf_vol --gate | tail -1  # df table must stay vocab-bounded
   python tools/bench_substring.py --sizes 100000,400000 \
     --out /tmp/smoke_substr_vol --gate | tail -1 # planted-truth removal exact
-  python tools/bench_vscorpus.py --pairs 100000:10000 \
-    --out /tmp/smoke_vsc_vol | tail -1 # exits 2 unless exact drops total
-                                       # and fresh false-drops zero
-  python tools/bench_winnow.py --vs-corpus --sizes 100000 \
-    --out /tmp/smoke_winvs_vol | tail -1 # exits 3 unless drop recall,
-                                         # fresh precision both 1.0 and
-                                         # probe shuffle tracks batch
   python tools/bench_dataloader.py --sizes 400000,1600000 \
     | tail -1 # exits 1 unless fim shuffle stays flat, bucket/KN
               # shuffle stay linear, and the conservation/coverage
