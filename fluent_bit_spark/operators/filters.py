@@ -4,13 +4,10 @@ Reference semantics re-expressed:
 
 - filter_grep  (upstream:plugins/filter_grep/grep.c): per-key regex
   Regex/Exclude rules with AND/OR logical_op.
-- filter_record_modifier
-  (upstream:plugins/filter_record_modifier/filter_modifier.c):
-  Allowlist_key / Remove_key / static Record adds / Uuid_key.
 - filter_type_converter (upstream:plugins/filter_type_converter):
   int/str/float casts of existing keys into new keys.
-- processor_sampling (upstream:plugins/processor_sampling): head /
-  percentage sampling.
+- processor_sampling (upstream:plugins/processor_sampling): head and
+  deterministic key-hash sampling.
 - filter_expect (upstream:plugins/filter_expect/expect.c): embedded
   assertions — here ``F.assert_true`` or raising checks in tests.
 """
@@ -57,31 +54,6 @@ def grep(df: DataFrame, rules: list[GrepRule],
 
 
 # ---------------------------------------------------------------------------
-# filter_record_modifier
-# ---------------------------------------------------------------------------
-
-
-def allowlist_keys(df: DataFrame, keys: list[str]) -> DataFrame:
-    return df.select(*[k for k in df.columns if k in set(keys)])
-
-
-def remove_keys(df: DataFrame, keys: list[str]) -> DataFrame:
-    return df.drop(*keys)
-
-
-def add_records(df: DataFrame, records: dict[str, object]) -> DataFrame:
-    """Static ``Record k v`` adds."""
-    for k, v in records.items():
-        df = df.withColumn(k, F.lit(v))
-    return df
-
-
-def uuid_key(df: DataFrame, key: str = "uuid") -> DataFrame:
-    """Uuid_key — nondeterministic; excluded from golden compares."""
-    return df.withColumn(key, F.expr("uuid()"))
-
-
-# ---------------------------------------------------------------------------
 # filter_type_converter
 # ---------------------------------------------------------------------------
 
@@ -104,19 +76,19 @@ def type_convert(df: DataFrame, conversions: list[tuple[str, str, str]],
 # ---------------------------------------------------------------------------
 
 
-def sample_fraction(df: DataFrame, fraction: float, seed: int = 42,
-                    ) -> DataFrame:
-    return df.sample(fraction=fraction, seed=seed)
-
-
 def sample_head(df: DataFrame, n: int) -> DataFrame:
     return df.limit(n)
+
+
+def sample_predicate(key: str, rate: int) -> Column:
+    """True on 1-in-``rate`` rows by key hash."""
+    return F.pmod(F.xxhash64(F.col(key)), F.lit(rate)) == 0
 
 
 def deterministic_sample(df: DataFrame, key: str, rate: int) -> DataFrame:
     """Keep 1-in-``rate`` rows by key hash — deterministic (golden-safe),
     unlike Bernoulli sampling; this is the scale path for 10^12 rows."""
-    return df.filter(F.pmod(F.xxhash64(F.col(key)), F.lit(rate)) == 0)
+    return df.filter(sample_predicate(key, rate))
 
 
 # ---------------------------------------------------------------------------

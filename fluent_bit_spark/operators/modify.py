@@ -131,10 +131,13 @@ def _apply_rule(df: DataFrame, r: ModifyRule, gate: Column) -> DataFrame:
     raise ValueError(f"unknown modify op {r.op}")
 
 
-def apply_modify(df: DataFrame, spec: ModifySpec) -> DataFrame:
-    gate = (reduce(lambda a, b: a & b,
-                   [condition_predicate(df, c) for c in spec.conditions])
-            if spec.conditions else F.lit(True))
+def apply_modify(df: DataFrame, spec: ModifySpec,
+                 gate: Column | None = None) -> DataFrame:
+    """The rules, gated by the conditions and by ``gate`` (the filter's
+    Match) when one is given."""
+    gate = reduce(lambda a, b: a & b,
+                  [condition_predicate(df, c) for c in spec.conditions],
+                  F.lit(True) if gate is None else gate)
     for r in spec.rules:
         df = _apply_rule(df, r, gate)
     return df

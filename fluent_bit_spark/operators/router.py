@@ -111,8 +111,10 @@ def compile_tag_template(template: str, rule_key: str, rule_pattern: str,
 
 
 def apply_rewrite_tag(df: DataFrame, rules: list[RewriteTagRule],
-                      tag_col: str = "tag") -> DataFrame:
+                      tag_col: str = "tag",
+                      gate: Column | None = None) -> DataFrame:
     """First matching rule wins (reference evaluates rules in order).
+    Only rows where ``gate`` holds are rewritten (the filter's Match).
 
     keep=False → the row's tag is replaced in place.
     keep=True  → the original row is kept AND a re-tagged copy is emitted
@@ -139,6 +141,8 @@ def apply_rewrite_tag(df: DataFrame, rules: list[RewriteTagRule],
                      else keep_case.when(cond, F.lit(r.keep)))
 
     matched = tag_case.isNotNull()
+    if gate is not None:
+        matched = matched & gate
     if not any(r.keep for r in rules):
         return df.withColumn(
             tag_col, F.when(matched, tag_case).otherwise(F.col(tag_col)))

@@ -18,55 +18,24 @@ Supported sections / properties (the subset with a batch meaning here):
   the detokenizer; default: the built-in fixture vocab), ``tag_expr``
   (engine extension: SQL expression for the tag column),
   ``multiline.parser`` (in_tail posture — same joiner as the filter
-  form below).
-- ``[FILTER] Name grep`` — ``regex KEY PATTERN`` / ``exclude KEY
-  PATTERN`` properties (repeatable, classic flb syntax), ``logical_op``
-  (``AND``/``OR``, legacy AND default).
-- ``[FILTER] Name rewrite_tag`` — ``rule $KEY REGEX NEW_TAG KEEP``
-  (repeatable), exactly upstream:plugins/filter_rewrite_tag syntax.
-- ``[FILTER] Name lookup`` — ``file <parquet>`` + ``lookup_key``
-  (filter_lookup's CSV becomes a parquet dim; broadcast enrich).
-- ``[FILTER] Name parser`` — ``key_name`` + repeatable ``parser`` refs
-  (first match wins) resolving against ``[PARSER]`` sections or the
-  service ``parsers_file``; adds a typed struct column.
-- ``[FILTER] Name modify`` — repeatable ``condition KIND KEY [VALUE]``
-  plus ``set/add/remove/remove_wildcard/remove_regex/rename/
-  hard_rename/copy/hard_copy`` rules (reserved pipeline columns are
-  protected).
-- ``[FILTER] Name record_modifier`` — ``Record KEY VALUE`` /
-  ``Remove_key KEY`` (repeatable) via the same ModifySpec machinery;
-  ``Allowlist_key`` is rejected (append-only column model).
-- ``[FILTER] Name nest`` — ``Operation nest`` (repeatable ``Wildcard``
-  keys under ``Nest_under``) or ``Operation lift`` (``Nested_under``
-  flattened), with ``Add_prefix``/``Remove_prefix`` — applied as output
-  shaping (after tag/route, so internal schema references survive).
-- ``[FILTER] Name throttle`` — ``Rate``/``Window``/``Interval``
-  (upstream:plugins/filter_throttle): at most Rate×Window rows per
-  (``Keys``, Window×Interval bucket of ``Ts_key``); without ``Ts_key``
-  the batch slice is the window (cap per key per slice). ``Keys``
-  defaults to ``tag`` (upstream throttles per-tag instance).
-- ``[FILTER] Name type_converter`` — repeatable ``int_key``/
-  ``uint_key``/``str_key``/``float_key`` ``SRC DST`` lines
-  (upstream:plugins/filter_type_converter); try_cast semantics.
-- ``[FILTER] Name sampling`` — engine extension: ``Key`` + ``Rate``
-  keep 1-in-Rate rows by deterministic key hash.
-- ``[FILTER] Name multiline`` — ``multiline.parser`` preset
-  (docker/cri/java/python/go, upstream:plugins/filter_multiline):
-  physical lines join into logical events before parsing (text input;
-  the runner switches to the ordered wholetext read).
-- ``[FILTER] Name log_to_metrics`` — ``metric_mode`` (``counter`` |
-  ``gauge`` | ``histogram``), ``metric_name`` (names the side-output
-  dir), repeatable ``label_field``, ``value_field``, repeatable
-  ``bucket`` boundaries, ``regex``/``exclude`` record pre-filters
-  (upstream:plugins/filter_log_to_metrics); each slice writes the
-  metric frame under ``metrics_out/<metric_name>/``. ``gauge_mode``
-  (``avg``/``min``/``max``/``sum``) replaces upstream's
-  arrival-order last-value gauge.
-- ``[FILTER] Name script`` (alias ``lua``) — ``script <file.py>`` +
-  ``call <fn>``: the filter_lua hook with the engine's vectorized
-  runtime (operators/script.py) — ``fn`` maps each Arrow batch
-  (``pandas.DataFrame`` → same-schema ``pandas.DataFrame``; rows may
-  drop or rewrite). ``.lua`` files are rejected with a porting hint.
+  form below). The tag is set here, at input, before any filter; a
+  ``tag_expr`` that reads a column a filter adds is a plan-time error.
+- ``[FILTER]`` / ``filters:`` — run in config order, each on the
+  records whose tag its ``match`` (glob) or ``match_regex`` selects
+  (upstream:src/flb_filter.c); no Match means every tag (upstream
+  unloads such a filter). Another Match than ``*`` keeps the other
+  tags' rows and values: grep, sampling, checklist, expect,
+  gopher_quality and stratified_split filter or write only matching
+  rows, modify/record_modifier (Set/Add only) and rewrite_tag gate their
+  rules on it, parser/type_converter/lookup write NULL elsewhere into a
+  column they add. script/lua, throttle, nest, multiline and
+  log_to_metrics raise instead. Divergences: a rewrite_tag copy passes
+  only the filters after its rewrite_tag, matched by its new tag
+  (upstream re-injects it at input), and nest runs after routing.
+  Plugins (plans/filters.py readers list their properties): grep,
+  rewrite_tag, lookup, parser, modify, record_modifier, nest, throttle,
+  type_converter, sampling, multiline, expect, checklist,
+  gopher_quality, stratified_split, log_to_metrics, script (alias lua).
 - ``[INPUT] name http`` — body-per-line capture files through
   sources/http.py: ``tag`` (listener tag), ``tag_key`` (lift tag from
   a record field); record ``log`` fields become the raw line for the
@@ -119,30 +88,10 @@ import re
 from typing import Any
 
 from ..functions.parsers import KEEP_DECODED
-from ..operators.filters import GrepRule
-from ..operators.router import RewriteTagRule, Route
-from .pipeline import SINK_WRITERS, SOURCES, ParserFilterSpec, PipelineSpec
-
-_KNOWN_FILTERS = {"grep", "rewrite_tag", "lookup", "parser", "modify",
-                  "record_modifier", "nest", "throttle", "type_converter",
-                  "sampling", "multiline", "expect", "checklist",
-                  "gopher_quality", "stratified_split", "log_to_metrics",
-                  "script", "lua"}
-
-_MULTILINE_PRESETS = {"docker", "cri", "java", "python", "go"}
-
-# filter_modify rule ops (upstream:plugins/filter_modify) — all
-# repeatable config keys; condition kinds are validated by
-# operators/modify.condition_predicate at plan time.
-_MODIFY_OPS = ("set", "add", "remove", "remove_wildcard", "remove_regex",
-               "rename", "hard_rename", "copy", "hard_copy")
-
-# Columns the pipeline contract depends on: the token-equality
-# invariant (tokens ride untouched), routing inputs, and DLQ
-# accounting. Config-driven modify may read them (copy source) but
-# never redefine or drop them.
-_RESERVED_COLS = {"doc_id", "tokens", "n_tok", "source", "decoded",
-                  "fields", "parse_ok", "tag", "sinks", "dlq_reason"}
+from ..operators.router import Route
+from .filters import (_MODIFY_OPS, _MULTILINE_PRESETS, FILTERS, _as_list,
+                      check_scope, filter_match)
+from .pipeline import SINK_WRITERS, SOURCES, PipelineSpec
 
 _VAR_RE = re.compile(r"\$\{(\w+)\}")
 
@@ -317,108 +266,6 @@ def parse_yaml(text: str) -> dict[str, Any]:
 # ---------------------------------------------------------------------------
 
 
-def _as_list(v) -> list[str]:
-    if v is None:
-        return []
-    return [str(x) for x in v] if isinstance(v, list) else [str(v)]
-
-
-def _parse_rewrite_rule(rule: str) -> RewriteTagRule:
-    """``$KEY REGEX NEW_TAG KEEP`` (upstream:plugins/filter_rewrite_tag
-    — exactly four space-separated fields, KEY is a record accessor)."""
-    parts = rule.split()
-    if len(parts) != 4:
-        raise ValueError(
-            f"rewrite_tag rule needs 4 fields '$KEY REGEX NEW_TAG KEEP', "
-            f"got {rule!r}")
-    key, pattern, new_tag, keep = parts
-    if key.startswith("$"):
-        key = key[1:]
-    return RewriteTagRule(key=key, pattern=pattern, new_tag=new_tag,
-                          keep=keep.lower() in ("true", "on", "1", "yes"))
-
-
-def _flb_interval(val: str) -> tuple[str, int]:
-    """flb throttle ``Interval`` (``1s``/``5m``/``1h``, or a bare number
-    of seconds) → (Spark interval string, seconds). Spark-style strings
-    like ``1 minute`` pass through."""
-    v = str(val).strip().lower()
-    m = re.fullmatch(r"(\d+)\s*([smh]?)", v)
-    if not m:
-        # already a Spark interval string ("1 minute")
-        m2 = re.fullmatch(r"(\d+)\s+(second|minute|hour)s?", v)
-        if not m2:
-            raise ValueError(f"throttle Interval wants Ns|Nm|Nh or a "
-                             f"Spark interval, got {val!r}")
-        n, unit = int(m2.group(1)), m2.group(2)
-        secs = n * {"second": 1, "minute": 60, "hour": 3600}[unit]
-        return f"{n} {unit}s", secs
-    n = int(m.group(1))
-    unit = m.group(2) or "s"
-    secs = n * {"s": 1, "m": 60, "h": 3600}[unit]
-    return f"{secs} seconds", secs
-
-
-def _parse_grep_prop(val: str, exclude: bool) -> GrepRule:
-    """``KEY PATTERN`` — pattern may itself contain spaces (flb splits
-    on the first blank only)."""
-    parts = val.split(None, 1)
-    if len(parts) != 2:
-        raise ValueError(f"grep rule needs 'KEY PATTERN', got {val!r}")
-    return GrepRule(key=parts[0], pattern=parts[1], exclude=exclude)
-
-
-def _parse_modify_filter(f: dict[str, Any]):
-    """``[FILTER] Name modify`` → ModifySpec: ``Condition KIND KEY
-    [VALUE]`` lines (all must hold, upstream:plugins/filter_modify) plus
-    rule lines ``Set/Add/Rename/... KEY [VALUE]`` applied in config
-    order. Structural or value ops may not target the pipeline's
-    reserved columns (the token-equality invariant and routing inputs);
-    Copy/Hard_copy may READ them."""
-    from ..operators.modify import Condition, ModifyRule, ModifySpec
-    conditions = []
-    for c in _as_list(f.get("condition")):
-        parts = c.split(None, 2)
-        if len(parts) < 2:
-            raise ValueError(f"Condition wants 'KIND KEY [VALUE]', "
-                             f"got {c!r}")
-        conditions.append(Condition(
-            kind=parts[0].lower(), key=parts[1],
-            value=parts[2] if len(parts) > 2 else ""))
-    rules = []
-    for op in _MODIFY_OPS:
-        for v in _as_list(f.get(op)):
-            parts = v.split(None, 1)
-            key = parts[0]
-            value = parts[1].strip() if len(parts) > 1 else ""
-            two_arg = op in ("set", "add", "rename", "hard_rename",
-                             "copy", "hard_copy")
-            if two_arg and not value:
-                raise ValueError(f"{op} wants 'KEY VALUE', got {v!r}")
-            target = value if op in ("copy", "hard_copy") else key
-            if target in _RESERVED_COLS or (
-                    op in ("rename", "hard_rename")
-                    and value in _RESERVED_COLS):
-                raise ValueError(
-                    f"modify {op} may not target reserved column "
-                    f"{target!r} (pipeline contract: "
-                    f"{sorted(_RESERVED_COLS)})")
-            if op == "remove_wildcard" and any(
-                    r.startswith(key) for r in _RESERVED_COLS):
-                raise ValueError(
-                    f"remove_wildcard {key!r} would drop reserved "
-                    f"column(s)")
-            if op == "remove_regex" and any(
-                    re.search(key, r) for r in _RESERVED_COLS):
-                raise ValueError(
-                    f"remove_regex {key!r} would drop reserved "
-                    f"column(s)")
-            rules.append(ModifyRule(op=op, key=key, value=value))
-    if not rules:
-        raise ValueError("[FILTER] modify defines no rules")
-    return ModifySpec(conditions=conditions, rules=rules)
-
-
 def parsers_from_tree(tree: dict[str, Any]) -> dict[str, Any]:
     """``[PARSER]`` sections → {name: RegexParser}. Supported formats:
     ``regex`` (pattern + optional ``types``/``time_key``/``time_format``)
@@ -541,21 +388,8 @@ def spec_from_tree(tree: dict[str, Any],
             vocab = fx.vocab()
 
     named_parsers = parsers_from_tree(tree)
-    grep_rules: list[GrepRule] = []
-    grep_op = "AND"
-    rewrite_rules: list[RewriteTagRule] = []
-    parser_filters: list[ParserFilterSpec] = []
-    modify_specs: list = []
-    nest_ops: list = []
-    type_conversions: list[tuple[str, str, str]] = []
-    sample_spec: tuple[str, int] | None = None
-    throttle_specs: list[dict[str, Any]] = []
-    expect_specs: list[dict[str, Any]] = []
-    checklist_specs: list[dict[str, Any]] = []
-    gopher_spec: dict[str, Any] | None = None
-    split_spec: dict[str, Any] | None = None
+    filters: list = []
     metrics_specs: list[dict[str, Any]] = []
-    script_specs: list[dict[str, Any]] = []
     # [INPUT] multiline.parser — the common in_tail posture
     # (upstream:plugins/in_tail: multiline joins at ingestion); the
     # [FILTER] Name multiline form sets the same spec field.
@@ -567,382 +401,25 @@ def spec_from_tree(tree: dict[str, Any],
                 f"[INPUT] multiline.parser must be one of "
                 f"{sorted(_MULTILINE_PRESETS)}, got {inp_ml!r}")
         multiline_parser = inp_ml
-    lookup_path: str | None = None
-    lookup_key = "source"
-    lookup_ttl: float | None = None
     for f in pipe.get("filters", []):
         name = str(f.get("name", "")).lower()
-        if name not in _KNOWN_FILTERS:
+        if name not in FILTERS:
             raise ValueError(
                 f"unsupported filter {name!r} (supported: "
-                f"{sorted(_KNOWN_FILTERS)}; the wider filter surface is "
+                f"{sorted(FILTERS)}; the wider filter surface is "
                 f"the Python API — operators/)")
-        if name == "grep":
-            for v in _as_list(f.get("regex")):
-                grep_rules.append(_parse_grep_prop(v, exclude=False))
-            for v in _as_list(f.get("exclude")):
-                grep_rules.append(_parse_grep_prop(v, exclude=True))
-            grep_op = str(f.get("logical_op", grep_op)).upper()
-        elif name == "rewrite_tag":
-            for v in _as_list(f.get("rule")):
-                rewrite_rules.append(_parse_rewrite_rule(v))
-        elif name == "lookup":
-            lookup_path = f.get("file") or f.get("path")
-            lookup_key = str(f.get("lookup_key", lookup_key))
-            if f.get("cache_ttl") is not None:
-                # TTL-cached pinned dim snapshot (DimCache — the
-                # filter_kubernetes Kube_Meta_Cache_TTL posture)
-                lookup_ttl = float(f["cache_ttl"])
-        elif name == "parser":
-            # upstream:plugins/filter_parser — Key_Name + Parser
-            # (repeatable, first match wins). Reserve_Data Off is
-            # rejected: this engine adds a struct column and never
-            # destroys the record body.
-            refs = _as_list(f.get("parser"))
-            if not refs:
-                raise ValueError("[FILTER] parser needs >=1 Parser ref")
-            missing = [r for r in refs if r not in named_parsers]
-            if missing:
-                raise ValueError(
-                    f"[FILTER] parser references unknown parser(s) "
-                    f"{missing}; define them in [PARSER] sections or "
-                    f"the service Parsers_File")
-            if str(f.get("reserve_data", "on")).lower() in ("off",
-                                                            "false", "0"):
-                raise ValueError(
-                    "[FILTER] parser Reserve_Data Off is unsupported: "
-                    "parsed fields land in a new struct column and the "
-                    "source column always survives")
-            parser_filters.append(ParserFilterSpec(
-                key=str(f.get("key_name", "decoded")),
-                parsers=[named_parsers[r] for r in refs],
-                out=str(f.get("out", f"parsed_{refs[0]}"))))
-        elif name == "modify":
-            modify_specs.append(_parse_modify_filter(f))
-        elif name == "record_modifier":
-            # upstream:plugins/filter_record_modifier — Record K V adds
-            # a static field; Remove_key drops one. Both are the modify
-            # ops in disguise, so they reuse ModifySpec (same reserved-
-            # column protection). Allowlist_key (keep-only) conflicts
-            # with the engine's append-only column model — rejected
-            # loudly rather than half-honored.
-            if f.get("allowlist_key") or f.get("whitelist_key"):
-                raise ValueError(
-                    "[FILTER] record_modifier Allowlist_key is "
-                    "unsupported: pipeline columns are append-only "
-                    "(project in the sink instead)")
-            from ..operators.modify import ModifyRule, ModifySpec
-            rules = []
-            for v in _as_list(f.get("record")):
-                parts = v.split(None, 1)
-                if len(parts) != 2:
-                    raise ValueError(
-                        f"[FILTER] record_modifier Record needs "
-                        f"'KEY VALUE': {v!r}")
-                rules.append(ModifyRule("set", parts[0], parts[1]))
-            for v in _as_list(f.get("remove_key")):
-                rules.append(ModifyRule("remove", v.strip()))
-            if not rules:
-                raise ValueError("[FILTER] record_modifier: no Record/"
-                                 "Remove_key properties")
-            modify_specs.append(ModifySpec(rules=rules))
-        elif name == "nest":
-            # upstream:plugins/filter_nest — Operation nest (gather
-            # Wildcard keys under Nest_under) or lift (flatten
-            # Nested_under), with Add_prefix/Remove_prefix.
-            op = str(f.get("operation", "")).lower()
-            if op == "nest":
-                # Wildcard is repeatable upstream — honor every pattern
-                wildcards = _as_list(f.get("wildcard"))
-                if not wildcards or not f.get("nest_under"):
-                    raise ValueError("[FILTER] nest Operation nest "
-                                     "needs Wildcard + Nest_under")
-                nest_ops.append(("nest", {
-                    "wildcard": wildcards,
-                    "nest_under": str(f["nest_under"]),
-                    "remove_prefix": str(f.get("remove_prefix", "")),
-                    "add_prefix": str(f.get("add_prefix", ""))}))
-            elif op == "lift":
-                if not f.get("nested_under"):
-                    raise ValueError("[FILTER] nest Operation lift "
-                                     "needs Nested_under")
-                nest_ops.append(("lift", {
-                    "nested_under": str(f["nested_under"]),
-                    "add_prefix": str(f.get("add_prefix", ""))}))
-            else:
-                raise ValueError(
-                    f"[FILTER] nest Operation must be nest|lift, "
-                    f"got {op!r}")
-        elif name == "type_converter":
-            # upstream:plugins/filter_type_converter — repeatable
-            # ``<T>_key SRC DST`` lines (int_key/uint_key/str_key/
-            # float_key). try_cast semantics: a bad value nulls the
-            # converted field, the record survives.
-            kinds = (("int_key", "int"), ("uint_key", "int"),
-                     ("str_key", "string"), ("float_key", "float"))
-            n_before = len(type_conversions)
-            for prop, typ in kinds:
-                for v in _as_list(f.get(prop)):
-                    parts = v.split()
-                    if len(parts) != 2:
-                        raise ValueError(
-                            f"[FILTER] type_converter {prop} wants "
-                            f"'SRC DST', got {v!r}")
-                    src, dst = parts
-                    if dst in _RESERVED_COLS:
-                        raise ValueError(
-                            f"type_converter may not overwrite reserved "
-                            f"column {dst!r}")
-                    type_conversions.append((src, dst, typ))
-            if len(type_conversions) == n_before:
-                raise ValueError("[FILTER] type_converter defines no "
-                                 "<T>_key conversions")
-        elif name == "sampling":
-            # engine extension (operators/filters.deterministic_sample):
-            # keep 1-in-Rate rows by key hash — reproducible across
-            # runs/partitionings, unlike Bernoulli sampling.
-            if sample_spec is not None:
-                raise ValueError("one [FILTER] sampling per pipeline")
-            rate = int(f.get("rate", 0))
-            if rate < 1:
-                raise ValueError("[FILTER] sampling needs Rate >= 1")
-            sample_spec = (str(f.get("key", "doc_id")), rate)
-        elif name == "multiline":
-            # upstream:plugins/filter_multiline — multiline.parser names
-            # a built-in preset; physical lines join into logical events
-            # before parsing (text input only; needs the ordered read,
-            # handled by the runner). multiline.key_content must be the
-            # decoded line — the engine joins the record body, custom
-            # content keys have no batch meaning here.
-            preset = str(f.get("multiline.parser", "")).strip()
-            if preset not in _MULTILINE_PRESETS:
-                raise ValueError(
-                    f"[FILTER] multiline needs multiline.parser in "
-                    f"{sorted(_MULTILINE_PRESETS)}, got {preset!r}")
-            kc = str(f.get("multiline.key_content", "decoded"))
-            if kc not in ("decoded", "log"):
-                raise ValueError(
-                    f"[FILTER] multiline key_content must be the record "
-                    f"body (decoded/log), got {kc!r}")
+        if FILTERS[name].once and any(n == name for n, _, _ in filters):
+            raise ValueError(f"one [FILTER] {name} per pipeline")
+        conf, match = FILTERS[name].read(f, named_parsers), filter_match(f)
+        check_scope(name, match, conf)
+        if name == "multiline":
             if multiline_parser is not None:
                 raise ValueError("one [FILTER] multiline per pipeline")
-            multiline_parser = preset
-        elif name == "throttle":
-            # upstream:plugins/filter_throttle — Rate msgs per Interval
-            # averaged over Window panes. Batch analogue: at most
-            # Rate×Window rows per (keys, Window×Interval bucket of
-            # Ts_key), kept in stable order; without Ts_key the slice
-            # itself is the window (cap per key per slice).
-            if not f.get("rate"):
-                raise ValueError("[FILTER] throttle needs Rate")
-            rate = int(f["rate"])
-            window = int(f.get("window", 5))
-            ts_key = f.get("ts_key") or None
-            spec_d: dict[str, Any] = {
-                "rate": rate * window,
-                "keys": [s.strip() for s in
-                         str(f.get("keys", "tag")).split(",") if s.strip()],
-                "ts_key": ts_key,
-            }
-            if ts_key:
-                _, secs = _flb_interval(f.get("interval", "1s"))
-                spec_d["interval"] = f"{secs * window} seconds"
-            throttle_specs.append(spec_d)
-        elif name == "expect":
-            # upstream:plugins/filter_expect — repeatable rule
-            # properties AND together; action exit (abort) | warn /
-            # result_key (stamp a boolean). In this engine's flat
-            # columnar record a missing key IS a null column, so
-            # key_exists ≡ IS NOT NULL (dotted keys reach into the
-            # fields struct).
-            conds: list[str] = []
-            for k in _as_list(f.get("key_exists")):
-                conds.append(f"({k}) IS NOT NULL")
-            for k in _as_list(f.get("key_not_exists")):
-                conds.append(f"({k}) IS NULL")
-            for k in _as_list(f.get("key_val_is_null")):
-                conds.append(f"({k}) IS NULL")
-            for k in _as_list(f.get("key_val_is_not_null")):
-                conds.append(f"({k}) IS NOT NULL")
-            for v in _as_list(f.get("key_val_eq")):
-                parts = v.split(None, 1)
-                if len(parts) != 2:
-                    raise ValueError(
-                        f"[FILTER] expect key_val_eq wants 'KEY VALUE', "
-                        f"got {v!r}")
-                k, val = parts
-                conds.append(f"CAST(({k}) AS STRING) = '{val}'")
-            if not conds:
-                raise ValueError("[FILTER] expect defines no rules")
-            action = str(f.get("action", "exit")).lower()
-            if action not in ("exit", "warn", "result_key"):
-                raise ValueError(
-                    f"[FILTER] expect action must be exit|warn|"
-                    f"result_key, got {action!r}")
-            expect_specs.append({
-                "cond": " AND ".join(conds),
-                "action": action,
-                "result_key": str(f.get("result_key", "_expect_ok")),
-            })
-        elif name == "checklist":
-            # upstream:plugins/filter_checklist — File of values (one
-            # per line, or a parquet with a 'value' column), Lookup_key,
-            # repeatable ``Record KEY VALUE`` sets on match, Ignore_case.
-            # Upstream's Mode partial (substring match) is not
-            # implemented — broadcast hash lookup is exact by design;
-            # ``Action keep|drop`` are the semi/anti-join extensions.
-            if not f.get("file"):
-                raise ValueError("[FILTER] checklist needs File")
-            mode = str(f.get("mode", "exact")).lower()
-            if mode != "exact":
-                raise ValueError(
-                    "[FILTER] checklist supports Mode exact only "
-                    "(partial-match lists need a different join shape)")
-            action = str(f.get("action", "flag")).lower()
-            if action not in ("flag", "keep", "drop"):
-                raise ValueError(
-                    f"[FILTER] checklist Action must be flag|keep|drop, "
-                    f"got {action!r}")
-            sets = []
-            for v in _as_list(f.get("record")):
-                parts = v.split(None, 1)
-                if len(parts) != 2:
-                    raise ValueError(
-                        f"[FILTER] checklist Record wants 'KEY VALUE', "
-                        f"got {v!r}")
-                sets.append((parts[0], parts[1]))
-            if sets and action != "flag":
-                raise ValueError("[FILTER] checklist Record sets only "
-                                 "apply with Action flag")
-            checklist_specs.append({
-                "path": str(f["file"]),
-                "lookup_key": str(f.get("lookup_key", "source")),
-                "action": action,
-                "ignore_case": str(f.get("ignore_case", "off")).lower()
-                               in ("on", "true", "1"),
-                "sets": sets,
-            })
-        elif name == "gopher_quality":
-            # engine extension (functions/text.py gopher_filter):
-            # integer-exact composite quality gate. Action flag stamps
-            # gq_reasons/gq_keep; Action drop filters failures out.
-            if gopher_spec is not None:
-                raise ValueError("one [FILTER] gopher_quality per "
-                                 "pipeline")
-            action = str(f.get("action", "flag")).lower()
-            if action not in ("flag", "drop"):
-                raise ValueError(f"[FILTER] gopher_quality Action must "
-                                 f"be flag|drop, got {action!r}")
-            pct = int(f.get("min_distinct_pct", 50))
-            if not 0 <= pct <= 100:
-                raise ValueError("[FILTER] gopher_quality "
-                                 "Min_distinct_pct wants 0..100")
-            gopher_spec = {
-                "key": str(f.get("key", "text")),
-                "action": action,
-                "thresholds": {
-                    "min_words": int(f.get("min_words", 30)),
-                    "min_mean_len_x1": int(f.get("min_mean_len", 4)),
-                    "max_mean_len_x1": int(f.get("max_mean_len", 10)),
-                    "min_distinct_num": pct,
-                    "min_distinct_den": 100,
-                    "max_word_len": int(f.get("max_word_len", 7)),
-                },
-            }
+            multiline_parser = conf
         elif name == "log_to_metrics":
-            # upstream:plugins/filter_log_to_metrics — metric_mode /
-            # metric_name / label_field (repeatable) / value_field /
-            # bucket (repeatable boundary) plus regex/exclude record
-            # pre-filters. gauge_mode is an engine extension: upstream's
-            # gauge is last-value over arrival order, which a batch has
-            # none of — the reduction is explicit (default avg).
-            mode = str(f.get("metric_mode", "counter")).lower()
-            if mode not in ("counter", "gauge", "histogram"):
-                raise ValueError(
-                    f"[FILTER] log_to_metrics metric_mode must be "
-                    f"counter|gauge|histogram, got {mode!r}")
-            mname = f.get("metric_name")
-            if not mname:
-                raise ValueError("[FILTER] log_to_metrics needs "
-                                 "metric_name (it names the side "
-                                 "output directory)")
-            buckets: list[float] = []
-            for v in _as_list(f.get("bucket")):
-                try:
-                    buckets.append(float(v))
-                except ValueError:
-                    raise ValueError(
-                        f"[FILTER] log_to_metrics bucket wants a "
-                        f"float boundary, got {v!r}") from None
-            mgrep: list[GrepRule] = []
-            for v in _as_list(f.get("regex")):
-                mgrep.append(_parse_grep_prop(v, exclude=False))
-            for v in _as_list(f.get("exclude")):
-                mgrep.append(_parse_grep_prop(v, exclude=True))
-            if mode in ("gauge", "histogram") and not f.get("value_field"):
-                raise ValueError(f"[FILTER] log_to_metrics {mode} "
-                                 f"needs value_field")
-            if mode == "histogram" and not buckets:
-                raise ValueError("[FILTER] log_to_metrics histogram "
-                                 "needs at least one bucket line")
-            metrics_specs.append({
-                "name": str(mname),
-                "mode": mode,
-                "labels": _as_list(f.get("label_field")),
-                "value_field": f.get("value_field"),
-                "buckets": buckets or None,
-                "gauge_mode": str(f.get("gauge_mode", "avg")).lower(),
-                "grep_rules": mgrep,
-                "description": f.get("metric_description"),
-            })
-        elif name in ("script", "lua"):
-            # the [FILTER] lua surface (upstream:plugins/filter_lua:
-            # script + call) with the engine's vectorized runtime
-            # (operators/script.py): Call names a batch function
-            # (pandas.DataFrame -> pandas.DataFrame, schema preserved)
-            # in the Python file at Script. A .lua script cannot run
-            # here — the error says what to hand the engine instead.
-            spath = f.get("script")
-            if not spath:
-                raise ValueError(f"[FILTER] {name} needs a Script "
-                                 f"property (path to a .py file)")
-            if str(spath).endswith(".lua"):
-                raise ValueError(
-                    "[FILTER] lua: no Lua runtime in this engine — "
-                    "port the script to a Python batch function "
-                    "(pandas.DataFrame -> pandas.DataFrame) and point "
-                    "Script at the .py file; Call still names the "
-                    "function")
-            script_specs.append({
-                "path": str(spath),
-                "call": str(f.get("call", "cb_filter")),
-            })
-        elif name == "stratified_split":
-            # engine extension (operators/filters.stratified_split):
-            # deterministic per-group eval holdout; repeatable
-            # ``Split_rate GROUP PERMILLE`` lines set per-group rates.
-            if split_spec is not None:
-                raise ValueError("one [FILTER] stratified_split per "
-                                 "pipeline")
-            rates: dict[str, int] = {}
-            for v in _as_list(f.get("split_rate")):
-                parts = v.split()
-                if len(parts) != 2 or not parts[1].lstrip("-").isdigit():
-                    raise ValueError(
-                        f"[FILTER] stratified_split Split_rate wants "
-                        f"'GROUP PERMILLE', got {v!r}")
-                rates[parts[0]] = int(parts[1])
-            default = int(f.get("default_rate", 0))
-            for bad in [*rates.values(), default]:
-                if not 0 <= bad <= 1000:
-                    raise ValueError("[FILTER] stratified_split rates "
-                                     "want 0..1000 permille")
-            split_spec = {
-                "group_key": str(f.get("group_key", "source")),
-                "hash_key": str(f.get("hash_key", "doc_id")),
-                "rates": rates,
-                "default_permille": default,
-            }
+            metrics_specs.append(conf)
+        else:
+            filters.append((name, match, conf))
 
     routes: list[Route] = []
     sink_format = None
@@ -1117,12 +594,7 @@ def spec_from_tree(tree: dict[str, Any],
     spec = PipelineSpec(
         vocab=vocab,
         routes=routes,
-        grep_rules=grep_rules,
-        grep_op=grep_op,
-        rewrite_rules=rewrite_rules,
-        lookup_path=lookup_path,
-        lookup_key=lookup_key,
-        lookup_ttl=lookup_ttl,
+        filters=filters,
         tag_expr=inp.get("tag_expr"),
         sink_partition_by=[
             s.strip() for s in
@@ -1133,19 +605,8 @@ def spec_from_tree(tree: dict[str, Any],
         sink_template=sink_template,
         gelf_keys=gelf_keys,
         keep_decoded=keep_decoded,
-        parser_filters=parser_filters,
-        modify_specs=modify_specs,
-        nest_ops=nest_ops,
-        type_conversions=type_conversions,
-        sample_spec=sample_spec,
-        throttle_specs=throttle_specs,
         multiline_parser=multiline_parser,
-        expect_specs=expect_specs,
-        checklist_specs=checklist_specs,
-        gopher_spec=gopher_spec,
-        split_spec=split_spec,
         metrics_specs=metrics_specs,
-        script_specs=script_specs,
         http_input=http_input,
         http_output=http_output,
         es_output=es_output,

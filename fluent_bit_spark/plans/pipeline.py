@@ -1,5 +1,5 @@
-"""The end-to-end pipeline: read → parse → filter → enrich → tag →
-route → fan-out → aggregate, with checkpointed resume and lineage
+"""The end-to-end pipeline: read → parse → tag → filters (enrich among
+them) → route → fan-out → aggregate, with checkpointed resume and lineage
 metrics.
 
 Reference lifecycle re-expressed (SURVEY.md §3.1): fluent-bit runs
@@ -50,22 +50,21 @@ committed slice would now get other files.
 
 from __future__ import annotations
 
-import os
 import time
-from dataclasses import dataclass, field, replace
+from dataclasses import InitVar, dataclass, field, replace
 from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from . import fsio
+from .filters import FILTERS, check_scope, lookup_filter, run_filters
 from ..functions.serialize import (to_csv_line, to_gelf, to_json_lines,
                                    to_ltsv_line, to_template)
-from ..operators.enrich import lookup_join
-from ..operators.filters import GrepRule, grep_predicate
-from ..operators.router import RewriteTagRule, Route, apply_rewrite_tag, \
-    with_routes
+from ..operators.filters import grep_predicate
+from ..operators.router import RewriteTagRule, Route, with_routes
 
 TOKENS_SCHEMA = ("doc_id string, tokens array<int>, n_tok int, "
                  "source string")
@@ -105,15 +104,13 @@ class PipelineSpec:
 
     vocab: list[str]
     routes: list[Route]
-    grep_rules: list[GrepRule] = field(default_factory=list)
-    grep_op: str = "AND"
-    rewrite_rules: list[RewriteTagRule] = field(default_factory=list)
-    lookup_path: str | None = None          # enrichment dim parquet
-    lookup_key: str = "source"
-    # [FILTER] lookup Cache_TTL — resolve the dim through a TTL-cached
-    # pinned snapshot (operators/enrich.DimCache, the
-    # filter_kubernetes metadata-cache posture). None = plain read.
-    lookup_ttl: float | None = None
+    # the [FILTER] blocks in config order: (name, match, conf) entries of
+    # plans/filters.FILTERS, match None for every tag
+    filters: list = field(default_factory=list)
+    # init-only shorthands for Match * lookup and rewrite_tag entries,
+    # which run first, in that order
+    rewrite_rules: InitVar[list[RewriteTagRule] | None] = None
+    lookup_path: InitVar[str | None] = None
     tag_expr: str | None = None             # SQL expr for the tag column
     sink_partition_by: list[str] = field(default_factory=lambda: ["source"])
     # [SERVICE] salt_buckets: still parsed, no longer used by the slice
@@ -139,58 +136,11 @@ class PipelineSpec:
     # downstream reader. 'dlq_only' is an explicit bandwidth opt-in
     # (decoded is NULLed for successfully-parsed rows).
     keep_decoded: str = "always"            # 'always' | 'dlq_only'
-    # Second-stage parsers (filter_parser analogue,
-    # upstream:plugins/filter_parser): each entry re-parses one column
-    # with a named-parser chain, adding a typed struct column. Applied
-    # before grep so grep/tag rules can reference the extracted fields.
-    parser_filters: list["ParserFilterSpec"] = field(default_factory=list)
-    # filter_modify blocks (operators/modify.py ModifySpec), applied
-    # after parser_filters / before grep in config order.
-    modify_specs: list = field(default_factory=list)
-    # filter_nest blocks: ("nest"|"lift", kwargs for operators/nest.py),
-    # applied LAST (output shaping — after tag/route/DLQ, so internal
-    # schema references survive any reshaping).
-    nest_ops: list = field(default_factory=list)
-    # filter_type_converter blocks: [(src, dst, type)] via
-    # operators/filters.type_convert (try_cast: bad values → null, the
-    # record survives — upstream drops just the conversion). Applied
-    # after modify_specs.
-    type_conversions: list = field(default_factory=list)
-    # sampling: (key, rate) — keep 1-in-rate rows by key hash
-    # (operators/filters.deterministic_sample; golden-safe, unlike
-    # Bernoulli). Applied after grep, before enrichment.
-    sample_spec: tuple | None = None
-    # filter_throttle blocks: dicts {rate, keys, ts_key, interval} via
-    # operators/throttle.throttle. Applied after tag/rewrite (throttle
-    # keys default to the tag, like upstream's per-tag instances) and
-    # before routing, so dropped rows never reach a sink.
-    throttle_specs: list = field(default_factory=list)
     # multiline preset (docker/cri/java/python/go) for the TEXT path:
     # physical lines join into logical events before parsing
     # (operators/multiline.py; needs the ordered read — see
     # build_stages_text / read_text_ordered). Ignored on tokens input.
     multiline_parser: str | None = None
-    # filter_expect blocks: (cond_sql, action) with action exit|warn|
-    # result_key per upstream:plugins/filter_expect. All rules in one
-    # block AND together into cond_sql. Applied after type conversion
-    # (expect validates parser/converter output), before grep.
-    expect_specs: list = field(default_factory=list)
-    # filter_checklist blocks: dicts {path, format, lookup_key, mode,
-    # sets} — value list broadcast against lookup_key. mode 'flag'
-    # (upstream default: stamp matched + apply Record k v sets on hit),
-    # 'keep' (semi join) or 'drop' (anti join) extensions. Applied with
-    # the other enrichment joins, right after lookup.
-    checklist_specs: list = field(default_factory=list)
-    # [FILTER] gopher_quality — integer-exact composite quality gate
-    # (functions/text.py gopher_filter): {key, action flag|drop,
-    # thresholds}. Applied after type conversion, before grep, so a
-    # grep/route can key on gq_keep / gq_reasons.
-    gopher_spec: dict | None = None
-    # [FILTER] stratified_split — deterministic per-group eval holdout
-    # (operators/filters.stratified_split): {group_key, hash_key,
-    # rates, default_permille}. Map-only stamp applied right before
-    # tagging so the tag expression / routes can key on ``split``.
-    split_spec: dict | None = None
     # [FILTER] log_to_metrics blocks
     # (upstream:plugins/filter_log_to_metrics): dicts {name, mode,
     # labels, value_field, buckets, gauge_mode, grep_rules,
@@ -198,13 +148,6 @@ class PipelineSpec:
     # under metrics_out/<name>/ (the batch analogue of re-emitting
     # metrics records under a new tag); records pass through untouched.
     metrics_specs: list = field(default_factory=list)
-    # [FILTER] script / lua-equivalent blocks
-    # (upstream:plugins/filter_lua surface over operators/script.py):
-    # dicts {path, call} — ``call`` names a batch function
-    # (pandas.DataFrame -> pandas.DataFrame, same schema) in the
-    # Python file at ``path``; applied via mapInPandas after the
-    # record-shaping filters (modify/type_converter), before expect.
-    script_specs: list = field(default_factory=list)
     # [INPUT] http (sources/http.py decode side): {tag, tag_key} —
     # body-per-line capture files decode to records before the text
     # stages; None means the input is not http.
@@ -230,46 +173,15 @@ class PipelineSpec:
     # records JSON-rendered like out_kafka's default Format json.
     kafka_output: dict | None = None
 
-
-@dataclass
-class ParserFilterSpec:
-    """One ``[FILTER] Name parser`` block: re-parse column ``key`` with
-    a first-match chain of named parsers into struct column ``out``.
-    The source column is always preserved (Reserve_Data On posture —
-    this engine adds columns, it never destroys the record body)."""
-
-    key: str
-    parsers: list                           # list[RegexParser]
-    out: str = "parsed"
-
-
-_SCRIPT_CACHE: dict = {}
-
-
-def load_script_fn(path: str, call: str):
-    """Load the batch function a ``[FILTER] script`` block names — the
-    filter_lua ``script``/``call`` surface with a Python-batch runtime
-    (upstream:plugins/filter_lua/lua.c receives one record per call;
-    the vectorized contract here is pandas.DataFrame -> pandas.DataFrame
-    over each Arrow batch, operators/script.py). Modules load once per
-    driver and ship to executors by closure serialization."""
-    key = (os.path.abspath(path), call)
-    if key not in _SCRIPT_CACHE:
-        import importlib.util
-        spec = importlib.util.spec_from_file_location(
-            f"_fbs_script_{abs(hash(key))}", path)
-        if spec is None or spec.loader is None:
-            raise ValueError(f"[FILTER] script: cannot load {path!r}")
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        fn = getattr(mod, call, None)
-        if not callable(fn):
-            raise ValueError(
-                f"[FILTER] script: {path!r} defines no callable "
-                f"{call!r} (the Call property must name a batch "
-                f"function taking and returning a pandas.DataFrame)")
-        _SCRIPT_CACHE[key] = fn
-    return _SCRIPT_CACHE[key]
+    def __post_init__(self, rewrite_rules, lookup_path):
+        first = ([lookup_filter(lookup_path)] if lookup_path else []) + (
+            [("rewrite_tag", None, list(rewrite_rules))]
+            if rewrite_rules else [])
+        self.filters = first + list(self.filters)
+        for name, match, conf in self.filters:
+            if name not in FILTERS or FILTERS[name].stage is None:
+                raise ValueError(f"no filter stage named {name!r}")
+            check_scope(name, match, conf)
 
 
 def default_tag_expr() -> str:
@@ -285,161 +197,34 @@ def build_stages(spark: SparkSession, df: DataFrame, spec: PipelineSpec,
     ``tokens`` passes through untouched end-to-end (token-equality
     invariant) — every stage only adds columns or filters rows.
     ``side_tables`` holds the lookup dim and checklist lists already
-    read (:func:`_read_once`); without it they are read here."""
+    read (``plans.filters._read_once``); without it they are read here."""
     from ..functions.parsers import fused_detok_parse
     out = fused_detok_parse(df, spark, spec.vocab,
                             keep_decoded=spec.keep_decoded)
     return _post_parse_stages(spark, out, spec, side_tables)
 
 
-def _read_once(side_tables: dict | None, key: tuple,
-               read: Callable[[], DataFrame]) -> DataFrame:
-    """A side table from ``side_tables``, read on first use (read every
-    time without it). ``run_pipeline`` passes one dict per call, so the
-    lookup dim and the checklist lists are read (and a parquet schema
-    inferred, one Spark job) once per call, and every slice joins the
-    same frame. A lookup with a ``Cache_TTL`` is not kept here: its
-    DimCache decides per slice whether to re-read."""
-    if side_tables is None:
-        return read()
-    if key not in side_tables:
-        side_tables[key] = read()
-    return side_tables[key]
-
-
-def _apply_checklist(spark: SparkSession, out: DataFrame, ck: dict,
-                     side_tables: dict | None) -> DataFrame:
-    """One [FILTER] checklist block (upstream:plugins/filter_checklist):
-    the value list is a one-value-per-line text file (or parquet with a
-    ``value`` / lookup-key column) broadcast against ``lookup_key``.
-    mode 'flag' stamps ``matched`` and applies ``Record k v`` sets on
-    hit (upstream behavior); 'keep'/'drop' are the semi/anti-join
-    extensions."""
-    from ..operators.enrich import checklist_flag, checklist_keep
-    path, key = ck["path"], ck["lookup_key"]
-    action = ck.get("action", "flag")
-    values = _read_once(side_tables, ("checklist", path), lambda: (
-        spark.read.parquet(path) if str(path).endswith(".parquet")
-        else spark.read.text(path)))     # upstream: one value per line
-    list_key = "value" if "value" in values.columns else values.columns[0]
-    join_key, tmp = key, False
-    if ck.get("ignore_case"):
-        values = values.select(
-            F.lower(F.col(list_key).cast("string")).alias(list_key))
-        out = out.withColumn("__ck_key",
-                             F.lower(F.col(key).cast("string")))
-        join_key, tmp = "__ck_key", True
-    if action == "keep":
-        out = checklist_keep(out, values, join_key, list_key=list_key)
-    elif action == "drop":
-        dim = values.select(
-            F.col(list_key).cast("string").alias("__ck_val")).distinct()
-        out = out.join(
-            F.broadcast(dim),
-            F.col(join_key).cast("string") == F.col("__ck_val"),
-            "left_anti")
-    else:
-        out = checklist_flag(out, values, join_key, list_key=list_key)
-        for k, v in ck.get("sets", []):
-            out = out.withColumn(
-                k, F.when(F.col("matched"), F.lit(v))
-                    .otherwise(F.col(k) if k in out.columns
-                               else F.lit(None).cast("string")))
-    return out.drop("__ck_key") if tmp else out
-
-
 def _post_parse_stages(spark: SparkSession, out: DataFrame,
                        spec: PipelineSpec,
                        side_tables: dict | None = None) -> DataFrame:
-    """[parser filters →] grep → enrich → tag → rewrite → route →
-    dlq_reason — shared by the tokens path (fused detok+parse) and the
-    raw-text path."""
-    if spec.parser_filters:
-        from ..functions.parsers import (apply_regex_parser,
-                                         parse_first_match)
-        for pf in spec.parser_filters:
-            if len(pf.parsers) == 1:
-                out = apply_regex_parser(out, pf.parsers[0],
-                                         key=pf.key, out=pf.out)
-            else:
-                out = parse_first_match(out, pf.parsers,
-                                        key=pf.key, out=pf.out)
-    if spec.modify_specs:
-        from ..operators.modify import apply_modify
-        for ms in spec.modify_specs:
-            out = apply_modify(out, ms)
-    if spec.type_conversions:
-        from ..operators.filters import type_convert
-        out = type_convert(out, spec.type_conversions)
-    if spec.script_specs:
-        from ..operators.script import filter_map_batches
-        for ss in spec.script_specs:
-            out = filter_map_batches(out, load_script_fn(ss["path"],
-                                                         ss["call"]))
-    if spec.expect_specs:
-        from ..operators.filters import expect
-        for es in spec.expect_specs:
-            out = expect(out, F.expr(es["cond"]),
-                         action=es.get("action", "exit"),
-                         result_key=es.get("result_key", "_expect_ok"))
-    if spec.gopher_spec:
-        from ..functions.text import gopher_filter
-        g = spec.gopher_spec
-        out = gopher_filter(out, col=g["key"], **g.get("thresholds", {}))
-        if g.get("action") == "drop":
-            out = out.filter(F.col("gq_keep")) \
-                     .drop("gq_reasons", "gq_keep")
-    if spec.grep_rules:
-        # grep drops rows entirely in fluent-bit; we keep them for the DLQ
-        # accounting instead when they fail parse, but a grep miss is a
-        # real drop (matches reference: grep'd records vanish silently —
-        # we still count them via metrics on the pre-grep frame if needed)
-        out = out.filter(grep_predicate(spec.grep_rules, spec.grep_op))
-    if spec.sample_spec:
-        from ..operators.filters import deterministic_sample
-        key, rate = spec.sample_spec
-        out = deterministic_sample(out, key, rate)
-    if spec.lookup_path:
-        if spec.lookup_ttl is not None:
-            from ..operators.enrich import dim_cache_for
-            dim = dim_cache_for(spec.lookup_path,
-                                spec.lookup_ttl).resolve(spark)
-        else:
-            dim = _read_once(side_tables, ("lookup", spec.lookup_path),
-                             lambda: spark.read.parquet(spec.lookup_path))
-        out = lookup_join(out, dim, spec.lookup_key)
-    for ck in spec.checklist_specs:
-        out = _apply_checklist(spark, out, ck, side_tables)
-    if spec.split_spec:
-        from ..operators.filters import stratified_split
-        sp = spec.split_spec
-        out = stratified_split(out, sp["group_key"], sp["hash_key"],
-                               sp.get("rates", {}),
-                               sp.get("default_permille", 0))
-    out = out.withColumn("tag", F.expr(spec.tag_expr or default_tag_expr()))
-    if spec.rewrite_rules:
-        out = apply_rewrite_tag(out, spec.rewrite_rules)
-    if spec.throttle_specs:
-        from ..operators.throttle import throttle
-        for tsp in spec.throttle_specs:
-            out = throttle(out, tsp["rate"], tsp["keys"],
-                           ts_col=tsp.get("ts_key"),
-                           interval=tsp.get("interval", "1 minute"),
-                           tiebreak=tsp.get("tiebreak") or ["doc_id"])
+    """tag → filters in config order → route → dlq_reason → nest, shared
+    by the tokens and the raw-text path. The tag is set from the decoded
+    record, as in_tail tags at input, so every filter's Match sees it."""
+    expr = spec.tag_expr or default_tag_expr()
+    try:
+        out = out.withColumn("tag", F.expr(expr))
+    except AnalysisException as e:
+        raise ValueError(f"tag_expr {expr!r} does not resolve on the "
+                         f"decoded record: it cannot read a column a "
+                         f"[FILTER] adds") from e
+    out = run_filters(spark, out, spec.filters, side_tables)
     out = with_routes(out, spec.routes)
     out = out.withColumn(
         "dlq_reason",
         F.when(~F.col("parse_ok"), F.lit("parse_fail"))
          .when(F.size("sinks") == 0, F.lit("no_route")))
-    if spec.nest_ops:
-        # nest/lift are OUTPUT-SHAPING transforms (flb users nest/
-        # flatten the record for the sink), so they run after tagging/
-        # routing — internal stages (tag_expr, rewrite rules, DLQ) keep
-        # their schema references regardless of reshaping.
-        from ..operators.nest import lift, nest
-        for op, kw in spec.nest_ops:
-            out = (nest(out, **kw) if op == "nest" else lift(out, **kw))
-    return out
+    return run_filters(spark, out, spec.filters, side_tables,
+                       after_route=True)
 
 
 def read_text_ordered(spark: SparkSession, path) -> DataFrame:
@@ -1043,12 +828,9 @@ def write_slice(spark: SparkSession, routed: DataFrame, spec: PipelineSpec,
         # pre-filtered by the block's regex/exclude.
         for ms in spec.metrics_specs:
             from ..operators.aggregate import log_to_metrics
-            src = good
-            if ms.get("grep_rules"):
-                src = src.filter(grep_predicate(
-                    ms["grep_rules"], ms.get("grep_op", "AND")))
             mdf = log_to_metrics(
-                src, ms["mode"], ms.get("labels", []),
+                good.filter(grep_predicate(ms.get("grep_rules", []))),
+                ms["mode"], ms.get("labels", []),
                 value_field=ms.get("value_field"),
                 buckets=ms.get("buckets"),
                 gauge_mode=ms.get("gauge_mode", "avg"))

@@ -2530,7 +2530,7 @@ FROM (SELECT doc_id,
       FROM documents)
 """)
 def second_stage_parse_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """filter_parser second stage (plans/pipeline.ParserFilterSpec →
+    """filter_parser second stage (plans/filters.ParserFilterSpec →
     functions/parsers.py apply_regex_parser): a field produced by the
     first parse is re-parsed by a NAMED PARSER with typed groups —
     the actual [FILTER] Name parser machinery, not inline expressions.

@@ -18,6 +18,7 @@ import shutil
 import subprocess
 
 from pyspark import SparkContext
+from pyspark.errors import PySparkRuntimeError
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
@@ -177,8 +178,8 @@ def driver_cds(conf: dict[str, str]):
     JDK's default archive included; the launched JVM's ``java.vm.info``
     then lacks ``sharing``, and the archive is deleted so the next
     session writes a new one. An archive cut short behind a valid header
-    is not refused: the launch dies (SIGBUS), and only deleting
-    ``cds_dir()`` clears it.
+    is not refused: the launch dies (SIGBUS). The archive is deleted
+    then too, and ``get_spark`` launches once more without it.
 
     For the launch only, ``SPARK_CONF_DIR`` points at an empty directory:
     Spark's conf dir holds only ``*.template`` files then, but on the
@@ -198,6 +199,11 @@ def driver_cds(conf: dict[str, str]):
     try:
         yield (f"{opt} -Xlog:cds*=off "
                f"-Xlog:cds*=warning:file={log}::filecount=0")
+    except PySparkRuntimeError:     # the JVM died before it answered
+        if not tmp:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(archive)
+        raise
     finally:
         if saved is None:
             os.environ.pop("SPARK_CONF_DIR", None)
@@ -263,9 +269,22 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    with driver_cds(extra_conf or {}) as java_opts:
-        if java_opts:
-            b = b.config("spark.driver.defaultJavaOptions", java_opts)
-        spark = b.getOrCreate()
+    java_opts = None
+    try:
+        with driver_cds(extra_conf or {}) as java_opts:
+            if java_opts:
+                b = b.config("spark.driver.defaultJavaOptions", java_opts)
+            spark = b.getOrCreate()
+    except PySparkRuntimeError as first:
+        # the JVM died mapping the archive, which driver_cds deleted:
+        # launch once without it, and report the first failure if the
+        # second launch fails too
+        if "SharedArchiveFile" not in (java_opts or ""):
+            raise
+        try:
+            spark = b.config("spark.driver.defaultJavaOptions",
+                             "").getOrCreate()
+        except PySparkRuntimeError:
+            raise first from None
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -46,7 +46,10 @@ def main() -> int:
     ap.add_argument("--gen-rows", type=int, default=0,
                     help="synthesize the input first with N rows")
     ap.add_argument("--lookup", default=None,
-                    help="enrichment dim parquet (default: generated)")
+                    help="enrichment dim parquet (default: generated); "
+                         "with --config, used only if the config has no "
+                         "lookup filter, as a Match * lookup that runs "
+                         "before the config's filters")
     ap.add_argument("--config", default=None,
                     help="fluent-bit-style config file (.yaml/.yml or "
                          "classic .conf) defining the pipeline; CLI "
@@ -69,11 +72,12 @@ def main() -> int:
     input_format = args.input_format
     if args.config:
         from fluent_bit_spark.plans.config import spec_from_config
+        from fluent_bit_spark.plans.filters import lookup_filter
         spec, io = spec_from_config(args.config)
         if io["input_format"]:
             input_format = io["input_format"]
-        if spec.lookup_path is None and args.lookup:
-            spec.lookup_path = args.lookup
+        if args.lookup and all(n != "lookup" for n, _, _ in spec.filters):
+            spec.filters.insert(0, lookup_filter(args.lookup))
     else:
         lookup = args.lookup
         if lookup is None:

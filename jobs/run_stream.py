@@ -69,9 +69,10 @@ def main() -> int:
     spark = get_spark(app_name="logpipe-stream")
     if args.config:
         from fluent_bit_spark.plans.config import spec_from_config
+        from fluent_bit_spark.plans.filters import lookup_filter
         spec, _ = spec_from_config(args.config)
-        if spec.lookup_path is None:
-            spec.lookup_path = lookup
+        if all(n != "lookup" for n, _, _ in spec.filters):
+            spec.filters.insert(0, lookup_filter(lookup))
     else:
         spec = PipelineSpec(
             vocab=fx.vocab(),

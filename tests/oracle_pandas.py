@@ -103,39 +103,56 @@ def run_oracle(tokens_path: str, vocab: list[str],
                          rewrite_errors_keep)
 
 
+def match(tag: str, pattern: str, mt: str = "glob") -> bool:
+    if mt == "regex":
+        return re.search(pattern, tag) is not None
+    # fluent-bit glob: '*' matches any run incl '.'; fnmatch's '*'
+    # does too, but fnmatch also honours ? and [] — our patterns
+    # use only '*', so translate by escaping everything else
+    rx = "^" + "".join(".*" if c == "*" else re.escape(c)
+                       for c in pattern) + "$"
+    return re.match(rx, tag) is not None
+
+
+def rewrite_errors(rec: dict, keep: bool = True) -> list[dict]:
+    """The rewrite_tag rule ``level=error → err.$TAG[1]``: the re-tagged
+    copy follows the record (``keep``) or replaces it."""
+    if rec["level"] != "error":
+        return [rec]
+    copy = {**rec, "tag": f"err.{rec['tag'].split('.')[1]}", "ok": True}
+    return [rec, copy] if keep else [copy]
+
+
 def route_records(records: list[tuple], routes: list[tuple[str, str, str]],
-                  rewrite_errors_keep: bool = True,
-                  tag_fn=default_tag) -> dict:
-    """Parse, tag (``tag_fn(source, kind)``), rewrite and route
+                  rewrite_errors_keep: bool | None = True,
+                  tag_fn=default_tag, filters=(),
+                  values: tuple[str, ...] = ()) -> dict:
+    """Parse, tag (``tag_fn(source, kind)``), filter, rewrite and route
     ``(doc_id, source, n_tok, line)`` records; return per-sink golden
     aggregates and routed doc_id sets, DLQ counts by reason and per-tag
-    metrics over every emitted row."""
+    metrics over every emitted row.
+
+    ``filters`` are ``(glob, fn)`` pairs applied in order, each to the
+    records whose tag matches: ``fn(record dict)`` returns the records
+    it becomes (none drops it). The built-in rewrite follows them, unless
+    ``rewrite_errors_keep`` is None. Each sink's ``values`` lists
+    ``(doc_id, tag, *record[k] for k in values)``, sorted."""
     rows = []
     for doc_id, source, n_tok, line in records:
         p = parse_row(line)
-        tag = tag_fn(source, p["kind"])
-        emitted = [(tag, p["kind"] is not None)]
-        if p["level"] == "error":
-            # rewrite_tag rule: level=error → err.$TAG[1], keep=True
-            err_tag = f"err.{tag.split('.')[1]}"
-            if rewrite_errors_keep:
-                emitted.append((err_tag, True))
-            else:
-                emitted = [(err_tag, True)]
-        for t, ok in emitted:
-            rows.append((doc_id, source, n_tok, t, ok))
-    df = pd.DataFrame(rows,
-                      columns=["doc_id", "source", "n_tok", "tag", "ok"])
-
-    def match(tag: str, pattern: str, mt: str) -> bool:
-        if mt == "regex":
-            return re.search(pattern, tag) is not None
-        # fluent-bit glob: '*' matches any run incl '.'; fnmatch's '*'
-        # does too, but fnmatch also honours ? and [] — our patterns
-        # use only '*', so translate by escaping everything else
-        rx = "^" + "".join(".*" if c == "*" else re.escape(c)
-                           for c in pattern) + "$"
-        return re.match(rx, tag) is not None
+        recs = [{"doc_id": doc_id, "source": source, "n_tok": n_tok, **p,
+                 "tag": tag_fn(source, p["kind"]),
+                 "ok": p["kind"] is not None}]
+        for pattern, fn in filters:
+            recs = [out for r in recs
+                    for out in (fn(r) if match(r["tag"], pattern) else [r])]
+        if rewrite_errors_keep is not None:
+            recs = [out for r in recs
+                    for out in rewrite_errors(r, rewrite_errors_keep)]
+        rows += recs
+    df = pd.DataFrame(rows, columns=list(dict.fromkeys(
+        ["doc_id", "source", "n_tok", "tag", "ok", *values,
+         *(k for r in rows for k in r)])))
 
     sinks: dict[str, pd.DataFrame] = {}
     sink_order: list[str] = []
@@ -156,6 +173,9 @@ def route_records(records: list[tuple], routes: list[tuple[str, str, str]],
             "distinct_sources": int(sub["source"].nunique()),
             "doc_ids": sorted(sub["doc_id"].tolist()),
             "pairs": sorted(zip(sub["doc_id"], sub["tag"])),
+            "values": sorted(zip(sub["doc_id"], sub["tag"], *[
+                sub[k].astype(object).where(sub[k].notna(), None)
+                for k in values])),
         }
     no_sink = df["ok"] & (df["sinks"].map(len) == 0)
     out["dlq"] = {"parse_fail": int((~df["ok"]).sum()),

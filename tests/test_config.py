@@ -18,6 +18,11 @@ from fluent_bit_spark.plans.config import (
 )
 from fluent_bit_spark.plans.pipeline import PipelineSpec, run_pipeline
 
+
+def _confs(spec: PipelineSpec, name: str) -> list:
+    """The confs of a spec's ``name`` filter entries, in config order."""
+    return [conf for n, _, conf in spec.filters if n == name]
+
 CLASSIC = """\
 # fluent-bit classic-mode config (flb_cf classic reader subset)
 [SERVICE]
@@ -131,8 +136,8 @@ def test_classic_and_yaml_parse_to_same_spec(fixture_paths, tmp_path):
     assert io_c == io_y
     ref = reference_spec(lk)
     assert spec_c.routes == ref.routes
-    assert spec_c.rewrite_rules == ref.rewrite_rules
-    assert spec_c.lookup_path == ref.lookup_path
+    for name in ("rewrite_tag", "lookup"):
+        assert _confs(spec_c, name) == _confs(ref, name)
     assert spec_c.vocab == ref.vocab
     assert io_c["input_format"] == "tokens"
     # routes keep config order; duplicate sinks collapse in sink list
@@ -180,10 +185,11 @@ def test_grep_properties_accumulate():
     Sink all
 """)
     spec, _ = spec_from_tree(tree, vocab=["a"])
-    assert [(g.key, g.pattern, g.exclude) for g in spec.grep_rules] == [
+    [(rules, op)] = _confs(spec, "grep")
+    assert [(g.key, g.pattern, g.exclude) for g in rules] == [
         ("decoded", "GET", False), ("source", "src", False),
         ("decoded", "DELETE", True)]
-    assert spec.grep_op == "OR"
+    assert op == "OR"
 
 
 def test_grep_pattern_keeps_spaces():
@@ -200,7 +206,7 @@ def test_grep_pattern_keeps_spaces():
     Sink all
 """)
     spec, _ = spec_from_tree(tree, vocab=["a"])
-    assert spec.grep_rules[0].pattern == "GET /index.html 200"
+    assert _confs(spec, "grep")[0][0][0].pattern == "GET /index.html 200"
 
 
 def test_service_keep_decoded_accepts_only_always_and_dlq_only():
@@ -291,7 +297,7 @@ def test_meta_include_set_and_env_translation(tmp_path, monkeypatch):
     monkeypatch.setenv("TIER", "web")
     spec, io = spec_from_config(str(main), vocab=["x"])
     assert spec.salt_buckets == 8
-    assert [(r.key, r.pattern) for r in spec.grep_rules] == [
+    assert [(r.key, r.pattern) for r in _confs(spec, "grep")[0][0]] == [
         ("level", "^(error|warn)$")]
     # glob order is sorted → a before b; env var translated in Match
     assert [(r.sink, r.pattern) for r in spec.routes] == [
@@ -377,8 +383,7 @@ def test_parser_sections_and_filter_parser(tmp_path):
     Sink all
 """)
     spec, _ = spec_from_config(str(tmp_path / "main.conf"), vocab=["x"])
-    assert len(spec.parser_filters) == 1
-    pf = spec.parser_filters[0]
+    [pf] = _confs(spec, "parser")
     assert pf.key == "decoded"
     assert [p.name for p in pf.parsers] == ["kv_num", "word"]
     assert pf.parsers[0].types == {"n": "integer"}
@@ -390,8 +395,8 @@ def test_parser_filter_runs_in_pipeline(spark):
     in _post_parse_stages: first match wins, typed fields extracted."""
     from fluent_bit_spark.functions.parsers import RegexParser
     from fluent_bit_spark.operators.router import Route
-    from fluent_bit_spark.plans.pipeline import (ParserFilterSpec,
-                                                 PipelineSpec,
+    from fluent_bit_spark.plans.filters import ParserFilterSpec
+    from fluent_bit_spark.plans.pipeline import (PipelineSpec,
                                                  _post_parse_stages)
     import pyspark.sql.functions as F
     df = spark.createDataFrame(
@@ -401,12 +406,12 @@ def test_parser_filter_runs_in_pipeline(spark):
     ).withColumn("fields", F.expr("named_struct('kind', 'raw')"))
     spec = PipelineSpec(
         vocab=["x"], routes=[Route("all", "*")],
-        parser_filters=[ParserFilterSpec(
+        filters=[("parser", None, ParserFilterSpec(
             key="decoded",
             parsers=[RegexParser("kv", r"^(?P<k>\w+)=(?P<n>\d+)$",
                                  types={"n": "integer"}),
                      RegexParser("word", r"^(?P<w>[a-z]+)$")],
-            out="p")])
+            out="p"))])
     out = _post_parse_stages(spark, df, spec)
     rows = {r.doc_id: r.p for r in out.select("doc_id", "p").collect()}
     assert rows["d1"].k == "count" and rows["d1"].n == 42 \
@@ -450,7 +455,7 @@ def test_modify_filter_from_config(spark):
     Sink all
 """)
     spec, _ = spec_from_tree(tree, vocab=["x"])
-    assert len(spec.modify_specs) == 1
+    assert len(_confs(spec, "modify")) == 1
     df = spark.createDataFrame(
         [("d1", "error", "s1", True), ("d2", "info", "s1", True)],
         "doc_id string, level string, source string, parse_ok boolean"
@@ -599,14 +604,14 @@ def test_nest_repeated_wildcards(spark):
         "    Nest_under meta\n"
         "[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
     spec, _ = spec_from_tree(tree, vocab=["x"])
-    assert spec.nest_ops == [("nest", {
+    assert _confs(spec, "nest") == [("nest", {
         "wildcard": ["lvl_*", "extra"], "nest_under": "meta",
         "remove_prefix": "", "add_prefix": ""})]
     from fluent_bit_spark.operators.nest import nest
     df = spark.createDataFrame(
         [("d1", "a", "b", "c")],
         "doc_id string, lvl_one string, extra string, keepme string")
-    out = nest(df, **spec.nest_ops[0][1])
+    out = nest(df, **_confs(spec, "nest")[0][1])
     assert set(out.columns) == {"doc_id", "keepme", "meta"}
     r = out.first()
     assert r.meta.lvl_one == "a" and r.meta.extra == "b"
@@ -629,7 +634,8 @@ def test_type_converter_filter_from_config(spark):
     spec, _ = spec_from_tree(tree, vocab=["x"])
     # grouped by kind, not config line order — conversions are
     # independent (distinct dst columns), so order is immaterial
-    assert set(spec.type_conversions) == {("code", "code_i", "int"),
+    [convs] = _confs(spec, "type_converter")
+    assert set(convs) == {("code", "code_i", "int"),
                                           ("ratio", "ratio_f", "float"),
                                           ("n_tok", "n_str", "string")}
     df = spark.createDataFrame(
@@ -645,7 +651,7 @@ def test_type_converter_filter_from_config(spark):
     assert rows["d1"].n_str == "7"
     # parity with the direct operator on the same frame
     want = {(r.doc_id, r.code_i, r.n_str) for r in
-            type_convert(df, spec.type_conversions).collect()}
+            type_convert(df, convs).collect()}
     got = {(r.doc_id, r.code_i, r.n_str) for r in out.collect()}
     assert got == want
 
@@ -661,7 +667,7 @@ def test_sampling_filter_from_config(spark, fixture_paths):
         "    Key  doc_id\n    Rate 3\n"
         "[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
     spec, _ = spec_from_tree(tree)
-    assert spec.sample_spec == ("doc_id", 3)
+    assert _confs(spec, "sampling") == [("doc_id", 3)]
     df = spark.read.parquet(fixture_paths["tokens"]).limit(300)
     got = {r.doc_id for r in build_stages(spark, df, spec)
            .select("doc_id").collect()}
@@ -687,7 +693,7 @@ def test_throttle_filter_from_config_slice_window(spark, fixture_paths):
         "    Rate   4\n    Window 2\n"
         "[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
     spec, _ = spec_from_tree(tree)
-    assert spec.throttle_specs == [
+    assert _confs(spec, "throttle") == [
         {"rate": 8, "keys": ["tag"], "ts_key": None}]
     df = spark.read.parquet(fixture_paths["tokens"]).limit(500)
     out = build_stages(spark, df, spec)
@@ -717,7 +723,7 @@ def test_throttle_filter_from_config_time_window(spark):
         "    Ts_key   ts\n    Keys     source\n"
         "[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
     spec, _ = spec_from_tree(tree, vocab=["x"])
-    assert spec.throttle_specs == [
+    assert _confs(spec, "throttle") == [
         {"rate": 6, "keys": ["source"], "ts_key": "ts",
          "interval": "30 seconds"}]
     rows = [(f"d{i:02d}", "s1", True,
@@ -889,11 +895,11 @@ pipeline:
     sc, _ = spec_from_tree(classic, vocab=["x"])
     sy, _ = spec_from_tree(yaml_tree, vocab=["x"])
     assert sc == sy
-    assert sc.throttle_specs == [{"rate": 8, "keys": ["tag"],
-                                  "ts_key": None}]
-    assert set(sc.type_conversions) == {("code", "code_i", "int"),
-                                        ("n_tok", "n_str", "string")}
-    assert sc.sample_spec == ("doc_id", 5)
+    assert _confs(sc, "throttle") == [{"rate": 8, "keys": ["tag"],
+                                       "ts_key": None}]
+    assert set(_confs(sc, "type_converter")[0]) == {
+        ("code", "code_i", "int"), ("n_tok", "n_str", "string")}
+    assert _confs(sc, "sampling") == [("doc_id", 5)]
     assert sc.multiline_parser == "cri"
     assert sc.sink_format == "csv"
 
@@ -949,7 +955,7 @@ def test_expect_filter_from_config(spark):
         "    result_key   ok\n"
         "[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
     spec, _ = spec_from_tree(tree, vocab=["x"])
-    assert spec.expect_specs == [{
+    assert _confs(spec, "expect") == [{
         "cond": "(kind) IS NOT NULL AND CAST((source) AS STRING) = 's1'",
         "action": "result_key", "result_key": "ok"}]
     df = _tiny_frame(spark)
@@ -957,7 +963,7 @@ def test_expect_filter_from_config(spark):
             _post_parse_stages(spark, df, spec).collect()}
     assert rows == {"d1": True, "d2": False, "d3": False}
     want = {r.doc_id: r.ok for r in
-            expect(df, F.expr(spec.expect_specs[0]["cond"]),
+            expect(df, F.expr(_confs(spec, "expect")[0]["cond"]),
                    action="result_key", result_key="ok").collect()}
     assert rows == want
     # action exit: violating row aborts at execution time
@@ -995,7 +1001,7 @@ def test_checklist_filter_from_config(spark, tmp_path):
     # Action flag (default) + Record sets on hit
     spec, _ = spec_from_tree(parse_classic(base.format(
         path=lst, extra="    Record flagged yes\n")), vocab=["x"])
-    assert spec.checklist_specs == [{
+    assert _confs(spec, "checklist") == [{
         "path": str(lst), "lookup_key": "kind", "action": "flag",
         "ignore_case": False, "sets": [("flagged", "yes")]}]
     rows = {r.doc_id: (r.matched, r.flagged) for r in
@@ -1093,9 +1099,9 @@ pipeline:
     sc, _ = spec_from_tree(classic, vocab=["x"])
     sy, _ = spec_from_tree(yaml_tree, vocab=["x"])
     assert sc == sy
-    assert sc.expect_specs[0]["action"] == "warn"
-    assert sc.checklist_specs[0]["ignore_case"] is True
-    assert sc.checklist_specs[0]["sets"] == [("hit", "yes")]
+    assert _confs(sc, "expect")[0]["action"] == "warn"
+    assert _confs(sc, "checklist")[0]["ignore_case"] is True
+    assert _confs(sc, "checklist")[0]["sets"] == [("hit", "yes")]
 
 
 def test_gopher_quality_filter_from_config(spark):
@@ -1118,8 +1124,9 @@ def test_gopher_quality_filter_from_config(spark):
 
     spec, _ = spec_from_tree(parse_classic(base.format(extra="")),
                              vocab=["x"])
-    assert spec.gopher_spec["thresholds"]["min_words"] == 5
-    assert spec.gopher_spec["thresholds"]["max_word_len"] == 6
+    [gopher] = _confs(spec, "gopher_quality")
+    assert gopher["thresholds"]["min_words"] == 5
+    assert gopher["thresholds"]["max_word_len"] == 6
     got = {r.doc_id: (r.gq_reasons, r.gq_keep) for r in
            _post_parse_stages(spark, df, spec).collect()}
     want = {r.doc_id: (r.gq_reasons, r.gq_keep) for r in
@@ -1138,7 +1145,7 @@ def test_gopher_quality_filter_from_config(spark):
 def test_stratified_split_filter_from_config(spark, fixture_paths):
     """[FILTER] stratified_split: repeatable Split_rate lines set
     per-group permille rates; config run equals the direct operator
-    call; the split column is visible to tagging/routes."""
+    call."""
     from fluent_bit_spark.operators.filters import stratified_split
     from fluent_bit_spark.plans.pipeline import build_stages
     tree = parse_classic(
@@ -1149,9 +1156,9 @@ def test_stratified_split_filter_from_config(spark, fixture_paths):
         "    Default_rate 50\n"
         "[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
     spec, _ = spec_from_tree(tree)
-    assert spec.split_spec == {
+    assert _confs(spec, "stratified_split") == [{
         "group_key": "source", "hash_key": "doc_id",
-        "rates": {"web": 200, "logs": 0}, "default_permille": 50}
+        "rates": {"web": 200, "logs": 0}, "default_permille": 50}]
     df = spark.read.parquet(fixture_paths["tokens"]).limit(400)
     out = build_stages(spark, df, spec)
     got = {(r.doc_id, r.split) for r in
@@ -1212,8 +1219,8 @@ pipeline:
     sc, _ = spec_from_tree(classic, vocab=["x"])
     sy, _ = spec_from_tree(yaml_tree, vocab=["x"])
     assert sc == sy
-    assert sc.gopher_spec["action"] == "drop"
-    assert sc.split_spec["rates"] == {"web": 100}
+    assert _confs(sc, "gopher_quality")[0]["action"] == "drop"
+    assert _confs(sc, "stratified_split")[0]["rates"] == {"web": 100}
 
 
 def test_template_output_format_from_config():
@@ -1351,8 +1358,8 @@ def test_script_filter_from_config(spark, tmp_path):
     run it via mapInPandas; config run equals the direct
     filter_map_batches call. .lua files and missing functions raise."""
     from fluent_bit_spark.operators.script import filter_map_batches
-    from fluent_bit_spark.plans.pipeline import (_post_parse_stages,
-                                                 load_script_fn)
+    from fluent_bit_spark.plans.filters import load_script_fn
+    from fluent_bit_spark.plans.pipeline import _post_parse_stages
     py = tmp_path / "scrub.py"
     py.write_text(
         "def cb_filter(b):\n"
@@ -1364,7 +1371,7 @@ def test_script_filter_from_config(spark, tmp_path):
             f"    Script {py}\n    Call cb_filter\n"
             "[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
     spec, _ = spec_from_tree(parse_classic(base), vocab=["x"])
-    assert spec.script_specs == [{"path": str(py), "call": "cb_filter"}]
+    assert _confs(spec, "script") == [{"path": str(py), "call": "cb_filter"}]
 
     df = spark.createDataFrame(
         [("d1", "short", "s1", True),
@@ -1399,7 +1406,7 @@ def test_script_filter_from_config(spark, tmp_path):
 
 
 def test_lookup_cache_ttl_config(spark, tmp_path):
-    """[FILTER] lookup Cache_TTL → spec.lookup_ttl, and the pipeline's
+    """[FILTER] lookup Cache_TTL → the entry's ttl, and the pipeline's
     lookup stage resolves the dim through a pinned DimCache snapshot:
     a second run within TTL does not see an external dim rewrite; with
     no Cache_TTL the spec stays None (plain per-run read)."""
@@ -1415,11 +1422,12 @@ def test_lookup_cache_ttl_config(spark, tmp_path):
             "[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
     spec0, _ = spec_from_tree(parse_classic(base.format(ttl="")),
                               vocab=["x"])
-    assert spec0.lookup_ttl is None
+    assert _confs(spec0, "lookup")[0]["ttl"] is None
     spec, _ = spec_from_tree(
         parse_classic(base.format(ttl="    Cache_TTL 300\n")),
         vocab=["x"])
-    assert spec.lookup_ttl == 300.0 and spec.lookup_path == dim
+    [lk] = _confs(spec, "lookup")
+    assert lk["ttl"] == 300.0 and lk["path"] == dim
 
     _DIM_CACHES.clear()   # isolate from other tests in this process
     df = spark.createDataFrame(

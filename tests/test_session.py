@@ -156,7 +156,9 @@ print(json.dumps({"pid": pid, "count": spark.range(10).count(),
 
 
 def _cds_child(env: dict[str, str]) -> tuple[dict, str]:
+    # from the scratch dir: a JVM that dies leaves its crash log there
     out = subprocess.run([sys.executable, "-c", _CDS_CHILD], env=env,
+                         cwd=os.path.dirname(env["XDG_CACHE_HOME"]),
                          stdout=subprocess.PIPE, timeout=300,
                          check=True, text=True).stdout
     return json.loads(out.splitlines()[-1]), out
@@ -185,6 +187,8 @@ def test_cds_archive_built_once_then_mapped_and_a_corrupt_one_ignored(
     assert "[cds" not in out
     assert os.path.exists(archive)
 
+    with open(archive, "rb") as f:
+        head = f.read(1 << 20)
     os.remove(archive)
     with open(archive, "wb") as f:
         f.write(os.urandom(4096))
@@ -193,3 +197,16 @@ def test_cds_archive_built_once_then_mapped_and_a_corrupt_one_ignored(
     assert archive not in third["maps"]
     # the JVM refused it, so it is gone and the next session rebuilds
     assert not os.path.exists(archive)
+
+    # an archive cut short behind its valid header is mapped, and the
+    # JVM dies (SIGBUS): the archive is deleted and the launch retried
+    # without it, and the session after that rebuilds it
+    with open(archive, "wb") as f:
+        f.write(head)
+    fourth, _ = _cds_child(env)
+    assert fourth["count"] == 10
+    assert archive not in fourth["maps"]
+    assert not os.path.exists(archive)
+    fifth, _ = _cds_child(env)
+    assert fifth["count"] == 10
+    assert os.path.exists(archive)

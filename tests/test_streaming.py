@@ -9,7 +9,6 @@ outputs; here the batch plan plays the reference role).
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -404,10 +403,12 @@ def test_stream_quality_stamps_match_batch(spark, landing, fixture_paths,
         vocab=fx.vocab(),
         routes=[Route("all", "*", "glob")],
         lookup_path=fixture_paths["lookup"],
-        split_spec={"group_key": "source", "hash_key": "doc_id",
-                    "rates": {"web": 400}, "default_permille": 150},
-        expect_specs=[{"cond": "n_tok >= 0", "action": "result_key",
-                       "result_key": "n_ok"}],
+        filters=[("expect", None, {"cond": "n_tok >= 0",
+                                   "action": "result_key",
+                                   "result_key": "n_ok"}),
+                 ("stratified_split", None, {
+                     "group_key": "source", "hash_key": "doc_id",
+                     "rates": {"web": 400}, "default_permille": 150})],
     )
     out = str(tmp_path / "stream_quality")
     q = start_pipeline_stream(spark, spec_q, landing, out)
