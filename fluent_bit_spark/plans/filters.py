@@ -120,8 +120,12 @@ def _read_lookup(f, parsers):
     a parquet dim; broadcast enrich). ``cache_ttl`` resolves the dim
     through a TTL-cached pinned snapshot (DimCache — the
     filter_kubernetes Kube_Meta_Cache_TTL posture)."""
+    path = f.get("file") or f.get("path")
+    if not path:
+        raise ValueError("[FILTER] lookup needs a File (or Path) property: "
+                         "the parquet dim to join")
     ttl = f.get("cache_ttl")
-    return {"path": f.get("file") or f.get("path"),
+    return {"path": path,
             "key": str(f.get("lookup_key", "source")),
             "ttl": None if ttl is None else float(ttl)}
 
@@ -160,6 +164,13 @@ def _read_parser(f, parsers):
                             out=str(f.get("out", f"parsed_{refs[0]}")))
 
 
+def _check_target(op: str, target: str) -> None:
+    if target in _RESERVED_COLS:
+        raise ValueError(
+            f"modify {op} may not target reserved column {target!r} "
+            f"(pipeline contract: {sorted(_RESERVED_COLS)})")
+
+
 def _read_modify(f, parsers):
     """upstream:plugins/filter_modify — ``Condition KIND KEY [VALUE]``
     lines (all must hold) plus ``Set/Add/Rename/... KEY [VALUE]`` rules
@@ -185,13 +196,9 @@ def _read_modify(f, parsers):
             if two_arg and not value:
                 raise ValueError(f"{op} wants 'KEY VALUE', got {v!r}")
             target = value if op in ("copy", "hard_copy") else key
-            if target in _RESERVED_COLS or (
-                    op in ("rename", "hard_rename")
-                    and value in _RESERVED_COLS):
-                raise ValueError(
-                    f"modify {op} may not target reserved column "
-                    f"{target!r} (pipeline contract: "
-                    f"{sorted(_RESERVED_COLS)})")
+            _check_target(op, target)
+            if op in ("rename", "hard_rename"):
+                _check_target(op, value)
             if op == "remove_wildcard" and any(
                     r.startswith(key) for r in _RESERVED_COLS):
                 raise ValueError(f"remove_wildcard {key!r} would drop "
@@ -209,7 +216,7 @@ def _read_modify(f, parsers):
 def _read_record_modifier(f, parsers):
     """upstream:plugins/filter_record_modifier — ``Record KEY VALUE``
     adds a static field, ``Remove_key KEY`` drops one (repeatable), via
-    ModifySpec; unlike modify, the reserved columns are not checked.
+    ModifySpec; as in modify, neither may target a reserved column.
     ``Allowlist_key`` (keep-only) conflicts with the append-only column
     model — rejected loudly rather than half-honored."""
     if f.get("allowlist_key") or f.get("whitelist_key"):
@@ -224,6 +231,8 @@ def _read_record_modifier(f, parsers):
                "{val!r}")))
     for v in _as_list(f.get("remove_key")):
         rules.append(ModifyRule("remove", v.strip()))
+    for r in rules:
+        _check_target(r.op, r.key)
     if not rules:
         raise ValueError("[FILTER] record_modifier: no Record/"
                          "Remove_key properties")
@@ -525,8 +534,6 @@ def _rewrite_tag(spark, out, rules, where, side_tables):
 
 def _lookup(spark, out, lk, where, side_tables):
     path = lk["path"]
-    if not path:
-        return out
     if lk.get("ttl") is not None:
         dim = dim_cache_for(path, lk["ttl"]).resolve(spark)
     else:

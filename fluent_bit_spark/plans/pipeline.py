@@ -31,19 +31,24 @@ upstream:src/flb_input.c, src/flb_output.c):
   rebalanced by (sink, partition columns) so each group lands in one
   file, staged and renamed into place); http/es/loki/kafka/msgpack
   write one filtered job per sink.
-- ``write_slice`` is the slice body, shared by the batch job and the
-  streaming fan-out: the routed frame is stored once, by a lazy local
-  checkpoint that the first write fills, and read by the sink writer,
-  the log_to_metrics side outputs, the DLQ write (whose Observation
-  counts the slice's rows) and the per-tag metrics (one group-by on
-  tag, ``slice_metrics``).
+- A slice body is a sink write and a tail. The routed frame is stored
+  once, by a lazy local checkpoint that the sink write fills; the tail
+  then reads it from a small driver thread pool, its jobs side by side
+  (fluent-bit's output worker threads, upstream:src/flb_output_thread.c):
+  the publish of the staged sinks, the log_to_metrics side outputs, the
+  DLQ write (whose Observation counts the slice's rows) and the per-tag
+  metrics (one group-by on tag, ``slice_metrics``). ``write_slice``
+  runs one slice body, for the streaming fan-out's micro-batches;
+  ``run_pipeline`` overlaps consecutive slices, planning slice i+1 and
+  running slice i's tail while slice i+1's sink write runs.
 
 Checkpoint/resume (upstream:plugins/in_tail/tail_db.c offset DB →
 per-slice manifest, BASELINE.json north_rule "resumable from
 per-partition checkpoints with lineage + metrics"): input files are
 grouped into slices; each slice's sink rows land under
 ``sinks/<sink>/batch_id=<i>`` directories, and a manifest JSON marks
-the slice done only after all sinks + metrics commit. A re-run skips
+the slice done only after all sinks + metrics commit, and only after
+the slice before it is committed. A re-run skips
 completed slices and reproduces identical outputs; it fails if a
 committed slice would now get other files.
 """
@@ -51,13 +56,16 @@ committed slice would now get other files.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import InitVar, dataclass, field, replace
+from functools import partial
 from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+from pyspark.util import inheritable_thread_target
 
 from . import fsio
 from .filters import FILTERS, check_scope, lookup_filter, run_filters
@@ -551,13 +559,13 @@ def slice_metrics(routed: DataFrame, salt_buckets: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _stage_and_publish(spark: SparkSession, rows: DataFrame, fmt: str,
-                       spec: PipelineSpec, output_dir: str, i: int,
-                       sinks: list[str]) -> None:
+def _stage_sinks(spark: SparkSession, rows: DataFrame, fmt: str,
+                 spec: PipelineSpec, output_dir: str, i: int,
+                 sinks: list[str]) -> Callable[[], None]:
     """Every sink of slice ``i`` in one write job: ``rows`` carry one
     ``__sink`` per route hit (fluent-bit flushes a chunk to every
     matching output) and are partitioned by sink under
-    ``_stage/batch_id=<i>``, then published.
+    ``_stage/batch_id=<i>``. Returns the step that publishes them.
 
     The AQE ``REBALANCE`` hint on the partition columns sends each
     (sink, partition value) group to one task, so each gets one file
@@ -569,14 +577,16 @@ def _stage_and_publish(spark: SparkSession, rows: DataFrame, fmt: str,
     (rows.hint("rebalance", *cols).write.mode("overwrite")
          .partitionBy(*cols).format(fmt)
          .save(f"{output_dir}/_stage/batch_id={i}"))
-    _publish(spark, output_dir, i, sinks)
+    return partial(_publish, spark, output_dir, i, sinks)
 
 
 def _publish(spark: SparkSession, output_dir: str, i: int,
              sinks: list[str]) -> None:
     """Move each sink's rows from slice ``i``'s stage onto
     ``sinks/<sink>/batch_id=<i>``, replacing what an earlier attempt
-    left there, then delete the stage.
+    left there, then delete ``_stage/batch_id=<i>``. Only that one: the
+    next slice may be staging beside it. ``run_pipeline`` and
+    ``write_slice`` remove the empty ``_stage`` when they end cleanly.
 
     This runs before the manifest commit, so a crash anywhere in here
     leaves the slice uncommitted and the resume redoes it: the stage is
@@ -597,12 +607,12 @@ def _publish(spark: SparkSession, output_dir: str, i: int,
             fsio.rename(spark, src, dst)
         else:
             fsio.mkdirs(spark, dst)
-    fsio.delete(spark, f"{output_dir}/_stage")
+    fsio.delete(spark, stage)
 
 
 def _write_parquet(spark, good, payload_cols, spec, output_dir, i, sinks):
-    _stage_and_publish(spark, good.withColumn("__sink", F.explode("sinks")),
-                       "parquet", spec, output_dir, i, sinks)
+    return _stage_sinks(spark, good.withColumn("__sink", F.explode("sinks")),
+                        "parquet", spec, output_dir, i, sinks)
 
 
 def _line_sinks(serialize):
@@ -612,7 +622,7 @@ def _line_sinks(serialize):
         lines = (serialize(good, payload_cols, spec)
                  .select("value", F.explode("sinks").alias("__sink"),
                          *spec.sink_partition_by))
-        _stage_and_publish(spark, lines, "text", spec, output_dir, i, sinks)
+        return _stage_sinks(spark, lines, "text", spec, output_dir, i, sinks)
     return write
 
 
@@ -775,7 +785,9 @@ def _msgpack_sink(rows, payload_cols, spec, i, dest):
 
 
 # writer(spark, good, payload_cols, spec, output_dir, i, sinks) per sink
-# format: every sink of slice i lands under sinks/<sink>/batch_id=<i>
+# format: every sink of slice i lands under sinks/<sink>/batch_id=<i>.
+# A staging writer returns the step that publishes its stage (run in the
+# slice's tail), a direct one None
 SINK_WRITERS = {
     "parquet": _write_parquet,
     "json_lines": _line_sinks(lambda d, cols, spec: to_json_lines(d, cols)),
@@ -792,67 +804,138 @@ SINK_WRITERS = {
 }
 
 
+# Threads that run one slice's tail jobs side by side: the publish, the
+# DLQ write, the _metrics write and each log_to_metrics output
+_TAIL_THREADS = 4
+
+
+def _submit(pool: ThreadPoolExecutor, spark: SparkSession, fn, *args):
+    """``fn(*args)`` on a pool thread whose Spark jobs keep the calling
+    thread's job group, local properties and tags (captured here)."""
+    return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+
+def _raise_first(futures: list) -> None:
+    """Re-raise the first error of ``futures`` (all done), in order."""
+    for f in futures:
+        if f.exception() is not None:
+            raise f.exception()
+
+
+def _store(spec: PipelineSpec, routed: DataFrame) -> DataFrame:
+    """The routed frame as a lazy local checkpoint (MEMORY_AND_DISK),
+    planned on the driver. Planning starts no job but the broadcasts
+    the plan needs (the lookup dim's)."""
+    if spec.sink_format not in SINK_WRITERS:
+        raise ValueError(f"sink format must be {'|'.join(SINK_WRITERS)}, "
+                         f"got {spec.sink_format!r}")
+    return routed.localCheckpoint(
+        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+
+
+def _good(stored: DataFrame) -> DataFrame:
+    return stored.filter(F.col("dlq_reason").isNull())
+
+
+def _stage(spark: SparkSession, stored: DataFrame, spec: PipelineSpec,
+           output_dir: str, i: int, sinks: list[str]):
+    """The slice's sink write, whose first stage fills the checkpoint.
+    Returns the publish step of what it staged, or None."""
+    good = _good(stored)
+    payload_cols = [c for c in good.columns if c not in
+                    ("sinks", "routes_mask", "dlq_reason", "_lineage")]
+    return SINK_WRITERS[spec.sink_format](spark, good, payload_cols, spec,
+                                          output_dir, i, sinks)
+
+
+def _write_log_metrics(good: DataFrame, ms: dict, output_dir: str,
+                       i: int) -> None:
+    """One [FILTER] log_to_metrics side output: the batch analogue of
+    re-emitting metric records under a new tag, written per slice
+    (upstream:plugins/filter_log_to_metrics). Derived from the routed
+    GOOD frame (the filter sits after parsing), optionally pre-filtered
+    by the block's regex/exclude."""
+    from ..operators.aggregate import log_to_metrics
+    mdf = log_to_metrics(
+        good.filter(grep_predicate(ms.get("grep_rules", []))),
+        ms["mode"], ms.get("labels", []),
+        value_field=ms.get("value_field"),
+        buckets=ms.get("buckets"),
+        gauge_mode=ms.get("gauge_mode", "avg"))
+    mdf.write.mode("overwrite").parquet(
+        f"{output_dir}/metrics_out/{ms['name']}/batch_id={i}")
+
+
+def _write_dlq(stored: DataFrame, counts: Observation, output_dir: str,
+               i: int) -> None:
+    dlq_cols = [c for c in ("doc_id", "tokens", "n_tok", "source",
+                            "decoded", "tag", "dlq_reason",
+                            "_lineage") if c in stored.columns]
+    (stored.observe(counts, F.count(F.lit(1)).alias("rows_in"),
+                    F.count("dlq_reason").alias("rows_dlq"))
+           .filter(F.col("dlq_reason").isNotNull())
+           .select(*dlq_cols)
+           .write.mode("overwrite")
+           .parquet(f"{output_dir}/dlq/batch_id={i}"))
+
+
+def _write_metrics(stored: DataFrame, spec: PipelineSpec, output_dir: str,
+                   i: int) -> None:
+    (slice_metrics(stored, spec.salt_buckets)
+     .withColumn("batch_id", F.lit(i))
+     .write.mode("overwrite")
+     .parquet(f"{output_dir}/_metrics/b{i}"))
+
+
+def _tail(spark: SparkSession, stored: DataFrame, spec: PipelineSpec,
+          output_dir: str, i: int, publish) -> tuple[int, int]:
+    """The slice's jobs that need only the filled checkpoint, run side
+    by side from a small thread pool (fluent-bit's output worker
+    threads, upstream:src/flb_output_thread.c): the publish, the
+    log_to_metrics outputs, the DLQ write and the ``_metrics`` group-by.
+    Joins them all, then raises the first error. Returns ``(rows_in,
+    rows_dlq)`` from the DLQ write's Observation."""
+    good = _good(stored)
+    counts = Observation()
+    steps = ([publish] if publish else []) + [
+        partial(_write_log_metrics, good, ms, output_dir, i)
+        for ms in spec.metrics_specs] + [
+        partial(_write_dlq, stored, counts, output_dir, i),
+        partial(_write_metrics, stored, spec, output_dir, i)]
+    with ThreadPoolExecutor(_TAIL_THREADS) as pool:
+        futures = [_submit(pool, spark, step) for step in steps]
+    _raise_first(futures)
+    return counts.get["rows_in"], counts.get["rows_dlq"]
+
+
 def write_slice(spark: SparkSession, routed: DataFrame, spec: PipelineSpec,
                 output_dir: str, i: int, sinks: list[str]) -> tuple[int, int]:
     """Write slice ``i`` of a routed frame: every sink, the
     log_to_metrics side outputs, the DLQ and the per-tag ``_metrics``.
-    The batch job calls it per slice, the streaming fan-out per
-    micro-batch. Returns ``(rows_in, rows_dlq)``, counted by an
-    Observation on the DLQ write: one pass over the stored frame, no
-    extra action.
+    The streaming fan-out calls it per micro-batch; ``run_pipeline``
+    runs the same steps, overlapped across slices. Returns ``(rows_in,
+    rows_dlq)``, counted by an Observation on the DLQ write: one pass
+    over the stored frame, no extra action.
 
     The frame is stored once, as a lazy local checkpoint
-    (MEMORY_AND_DISK), and read by each write. The first job that reads
-    it (the sink write's shuffle-map stage) fills it; a ``persist``
-    would cost a job of its own under AQE, which fills a cached frame
-    before any stage reads it. The trade-off: once filled, a local
-    checkpoint has no lineage. If an executor is lost between the
-    slice's first and last job, the slice fails instead of being
-    recomputed; its manifest is not committed, so a resume redoes it."""
-    if spec.sink_format not in SINK_WRITERS:
-        raise ValueError(f"sink format must be {'|'.join(SINK_WRITERS)}, "
-                         f"got {spec.sink_format!r}")
-    routed = routed.localCheckpoint(
-        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    (MEMORY_AND_DISK), and read by each write. The sink write runs
+    first: its first stage fills the checkpoint (a ``persist`` would
+    cost a job of its own under AQE, which fills a cached frame before
+    any stage reads it). The tail jobs (publish, DLQ, ``_metrics``,
+    log_to_metrics) then run side by side from a thread pool under the
+    caller's job group, and the call returns when all have ended. The
+    trade-off: once filled, a local checkpoint has no lineage. If an
+    executor is lost between the slice's first and last job, the slice
+    fails instead of being recomputed; its manifest is not committed,
+    so a resume redoes it."""
+    stored = _store(spec, routed)
     try:
-        good = routed.filter(F.col("dlq_reason").isNull())
-        payload_cols = [c for c in good.columns if c not in
-                        ("sinks", "routes_mask", "dlq_reason", "_lineage")]
-        SINK_WRITERS[spec.sink_format](spark, good, payload_cols, spec,
-                                       output_dir, i, sinks)
-        # [FILTER] log_to_metrics side outputs: the batch analogue of
-        # re-emitting metric records under a new tag — each slice
-        # writes the metric frame per block
-        # (upstream:plugins/filter_log_to_metrics). Derived from the
-        # routed GOOD frame (the filter sits after parsing), optionally
-        # pre-filtered by the block's regex/exclude.
-        for ms in spec.metrics_specs:
-            from ..operators.aggregate import log_to_metrics
-            mdf = log_to_metrics(
-                good.filter(grep_predicate(ms.get("grep_rules", []))),
-                ms["mode"], ms.get("labels", []),
-                value_field=ms.get("value_field"),
-                buckets=ms.get("buckets"),
-                gauge_mode=ms.get("gauge_mode", "avg"))
-            mdf.write.mode("overwrite").parquet(
-                f"{output_dir}/metrics_out/{ms['name']}/batch_id={i}")
-        dlq_cols = [c for c in ("doc_id", "tokens", "n_tok", "source",
-                                "decoded", "tag", "dlq_reason",
-                                "_lineage") if c in routed.columns]
-        counts = Observation()
-        (routed.observe(counts, F.count(F.lit(1)).alias("rows_in"),
-                        F.count("dlq_reason").alias("rows_dlq"))
-               .filter(F.col("dlq_reason").isNotNull())
-               .select(*dlq_cols)
-               .write.mode("overwrite")
-               .parquet(f"{output_dir}/dlq/batch_id={i}"))
-        (slice_metrics(routed, spec.salt_buckets)
-         .withColumn("batch_id", F.lit(i))
-         .write.mode("overwrite")
-         .parquet(f"{output_dir}/_metrics/b{i}"))
-        return counts.get["rows_in"], counts.get["rows_dlq"]
+        publish = _stage(spark, stored, spec, output_dir, i, sinks)
+        counts = _tail(spark, stored, spec, output_dir, i, publish)
     finally:
-        _release_checkpoint(routed)
+        _release_checkpoint(stored)
+    fsio.delete(spark, f"{output_dir}/_stage")
+    return counts
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -914,6 +997,78 @@ def _commit_slice(spark: SparkSession, output_dir: str, run_id: str,
     fsio.write_json_atomic(spark, f"{d}/slice_{i}.json", payload)
 
 
+# Slices with a sink write or tail jobs under way at once
+_SLICES_IN_FLIGHT = 2
+
+
+def _run_slices(spark: SparkSession, spec: PipelineSpec, input_format: str,
+                slices: list[list[str]], todo: list[int], output_dir: str,
+                run_id: str, sinks: list[str]) -> list[tuple[int, int]]:
+    """Run and commit the slices ``todo``, in order, overlapped two at
+    a time. Returns each slice's ``(rows_in, rows_dlq)``.
+
+    The calling thread runs the sink writes, one at a time. While slice
+    i's runs, a pool thread plans slice i+1 (``read_routed`` and the
+    lazy checkpoint, ``_store``: driver work and the lookup dim's
+    broadcast). Once slice i's write has filled its checkpoint, a pool
+    thread runs slice i's tail (``_tail``), releases its checkpoint,
+    waits for slice i-1's commit and commits slice i, beside slice
+    i+1's sink write. Slice i+2's sink write starts only after slice
+    i's tail has ended. Every pool thread keeps the caller's job group.
+
+    On an error, the threads in flight are joined (a slice whose tail
+    ended commits, if the ones before it did), every checkpoint is
+    released, a planned one never filled too, and then the first error
+    in slice order is raised."""
+    side_tables: dict = {}
+
+    def plan(i: int) -> DataFrame:
+        return _store(spec, read_routed(spark, spec, input_format,
+                                        slices[i], i, side_tables))
+
+    def finish(i: int, stored: DataFrame, publish, prev) -> tuple[int, int]:
+        try:
+            rows_in, rows_dlq = _tail(spark, stored, spec, output_dir, i,
+                                      publish)
+        finally:
+            _release_checkpoint(stored)
+        if prev is not None:
+            prev.result()
+        _commit_slice(spark, output_dir, run_id, i, {
+            "files": slices[i], "rows_in": rows_in, "rows_dlq": rows_dlq,
+            "sinks": sinks, "ts": time.time()})
+        return rows_in, rows_dlq
+
+    tails: list = []
+    planned = None
+    error = None
+    with ThreadPoolExecutor(_SLICES_IN_FLIGHT + 1) as pool:
+        try:
+            for n, i in enumerate(todo):
+                if len(tails) >= _SLICES_IN_FLIGHT:
+                    tails[-_SLICES_IN_FLIGHT].result()
+                stored = planned.result() if planned is not None else plan(i)
+                planned = None
+                if n + 1 < len(todo):
+                    planned = _submit(pool, spark, plan, todo[n + 1])
+                try:
+                    publish = _stage(spark, stored, spec, output_dir, i,
+                                     sinks)
+                except BaseException:
+                    _release_checkpoint(stored)
+                    raise
+                tails.append(_submit(pool, spark, finish, i, stored, publish,
+                                     tails[-1] if tails else None))
+        except BaseException as e:
+            error = e
+    if planned is not None and planned.exception() is None:
+        _release_checkpoint(planned.result())
+    _raise_first(tails)
+    if error is not None:
+        raise error
+    return [t.result() for t in tails]
+
+
 def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
                  output_dir: str, run_id: str = "run0",
                  n_slices: int = 1,
@@ -922,7 +1077,14 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
     """Execute the pipeline with per-slice checkpointing.
 
     Returns run stats. ``fail_after_slice`` injects a crash for the
-    resume property test (kill after k slices → re-run → identical sinks).
+    resume property test (kill after k slices → re-run → identical
+    sinks): slices up to k are committed, and slice k+1 is never
+    planned.
+
+    Consecutive slices overlap, at most two in flight (``_run_slices``):
+    slice i+1 is planned on a driver thread while slice i's sink write
+    runs, and slice i's tail jobs run beside slice i+1's sink write.
+    Sink writes run one at a time, and slices commit in order.
 
     Scale shape: each slice is an independent bounded job with two
     shuffles: the sink write is rebalanced by (sink, partition columns),
@@ -943,21 +1105,18 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
     sinks = sink_names(spec)
     stats = {"slices_total": len(slices), "slices_skipped": len(done),
              "rows_in": 0, "rows_dlq": 0}
-    side_tables: dict = {}
-    for i, files in enumerate(slices):
-        if i in done:
-            continue
-        routed = read_routed(spark, spec, input_format, files, i,
-                             side_tables)
-        rows_in, rows_dlq = write_slice(spark, routed, spec, output_dir,
-                                        i, sinks)
+    todo = [i for i in range(len(slices)) if i not in done]
+    crash = next((i for i in todo if fail_after_slice is not None
+                  and i >= fail_after_slice), None)
+    if crash is not None:
+        todo = todo[:todo.index(crash) + 1]
+    for rows_in, rows_dlq in _run_slices(spark, spec, input_format, slices,
+                                         todo, output_dir, run_id, sinks):
         stats["rows_in"] += rows_in
         stats["rows_dlq"] += rows_dlq
-        _commit_slice(spark, output_dir, run_id, i, {
-            "files": files, "rows_in": rows_in, "rows_dlq": rows_dlq,
-            "sinks": sinks, "ts": time.time()})
-        if fail_after_slice is not None and i >= fail_after_slice:
-            raise RuntimeError(f"injected failure after slice {i}")
+    if crash is not None:
+        raise RuntimeError(f"injected failure after slice {crash}")
+    fsio.delete(spark, f"{output_dir}/_stage")
     stats["wall_sec"] = time.time() - t0
     return stats
 

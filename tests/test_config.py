@@ -481,6 +481,29 @@ def test_modify_filter_reserved_columns_raise():
                            vocab=["x"])
 
 
+@pytest.mark.parametrize("prop", ["Record tokens x", "Remove_key doc_id"])
+def test_record_modifier_reserved_columns_raise(prop):
+    """record_modifier writes through the same rules as modify, so it
+    may not overwrite or drop a reserved column either."""
+    from fluent_bit_spark.plans.config import parse_classic, spec_from_tree
+    conf = ("[INPUT]\n    Name tokens\n[FILTER]\n    Name record_modifier\n"
+            f"    Match *\n    {prop}\n[OUTPUT]\n    Name file\n"
+            "    Match *\n    Sink all\n")
+    with pytest.raises(ValueError, match="may not target reserved column"):
+        spec_from_tree(parse_classic(conf), vocab=["x"])
+
+
+def test_lookup_filter_without_a_file_raises():
+    """A lookup block that names no dim is an error, not a filter that
+    joins nothing."""
+    from fluent_bit_spark.plans.config import parse_classic, spec_from_tree
+    conf = ("[INPUT]\n    Name tokens\n[FILTER]\n    Name lookup\n"
+            "    Match *\n    Lookup_key source\n[OUTPUT]\n"
+            "    Name file\n    Match *\n    Sink all\n")
+    with pytest.raises(ValueError, match="File"):
+        spec_from_tree(parse_classic(conf), vocab=["x"])
+
+
 def test_streams_file_tasks(spark, fixture_paths, tmp_path):
     """[SERVICE] Streams_File -> [STREAM_TASK] sections (upstream:
     src/stream_processor/flb_sp.c): the config front end loads the

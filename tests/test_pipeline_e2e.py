@@ -4,8 +4,11 @@ north_star), token invariant, checkpointed resume idempotence."""
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
+import threading
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -303,6 +306,136 @@ def test_publish_crash_then_resume_lands_each_pair_once(
         got = _sink_pairs(spark, crashed, sink)
         assert len(set(got)) == len(got), sink
         assert got == _sink_pairs(spark, clean, sink) == g["pairs"], sink
+
+
+def _dlq_pairs(spark, out: str) -> list[tuple[str, str]]:
+    return sorted((r.doc_id, r.dlq_reason) for r in
+                  read_dlq(spark, out).select("doc_id", "dlq_reason")
+                  .collect())
+
+
+def test_failed_sink_write_beside_a_tail_is_loud(
+        spark, fixture_paths, golden, tmp_path, monkeypatch):
+    """Slice 1's sink write fails while slice 0's tail jobs still run
+    beside it and slice 2 is planned. The call raises that error only
+    after slice 0's tail has ended: slice 0 commits, slice 1 does not,
+    no job is left running and every checkpoint is released, slice 2's
+    never filled one too. The resume then lands sinks and DLQ equal to
+    a clean run and to the oracle."""
+    from fluent_bit_spark.plans import pipeline
+
+    split_dir = str(tmp_path / "split3")
+    spark.read.parquet(fixture_paths["tokens"]).repartition(3) \
+        .write.parquet(split_dir)
+    spec = _spec(fixture_paths)
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    write, metrics = pipeline.SINK_WRITERS["parquet"], pipeline._write_metrics
+    failed = threading.Event()
+
+    def failing_write(spark_, good, cols, spec_, out, i, sinks):
+        if i == 1:
+            failed.set()
+            raise IOError("injected sink write failure")
+        return write(spark_, good, cols, spec_, out, i, sinks)
+
+    def late_metrics(stored, spec_, out, i):
+        # slice 0's tail is still in flight when slice 1's write fails
+        if i == 0:
+            assert failed.wait(60)
+        metrics(stored, spec_, out, i)
+
+    monkeypatch.setitem(pipeline.SINK_WRITERS, "parquet", failing_write)
+    monkeypatch.setattr(pipeline, "_write_metrics", late_metrics)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = rdds().size()
+    with pytest.raises(IOError, match="injected sink write failure"):
+        run_pipeline(spark, spec, split_dir, crashed, n_slices=3)
+    # the status tracker learns of ended jobs through the listener bus
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert rdds().size() == before
+    manifests = os.listdir(os.path.join(crashed, "_checkpoints", "run0"))
+    assert sorted(m for m in manifests if m.endswith(".json")) \
+        == ["slice_0.json"]
+    monkeypatch.undo()
+
+    stats = run_pipeline(spark, spec, split_dir, crashed, n_slices=3)
+    assert stats["slices_skipped"] == 1
+    run_pipeline(spark, spec, split_dir, clean, n_slices=3)
+    assert not os.path.exists(os.path.join(crashed, "_stage"))
+    for sink, g in golden["sinks"].items():
+        if g["records"]:
+            assert _sink_pairs(spark, crashed, sink) \
+                == _sink_pairs(spark, clean, sink) == g["pairs"], sink
+    got = _dlq_pairs(spark, crashed)
+    assert got == _dlq_pairs(spark, clean)
+    assert {r: sum(1 for _, x in got if x == r) for r in golden["dlq"]} \
+        == golden["dlq"]
+
+
+def test_injected_crash_never_starts_the_next_slice(
+        spark, fixture_paths, tmp_path, monkeypatch):
+    """``fail_after_slice=0`` commits slice 0 and never plans slice 1:
+    nothing of slice 1 is staged or published."""
+    from fluent_bit_spark.plans import pipeline
+
+    split_dir = _split_input(spark, fixture_paths, tmp_path)
+    out = str(tmp_path / "o")
+    read, planned = pipeline.read_routed, []
+
+    def recording_read(spark_, spec_, fmt, files, i, side_tables=None):
+        planned.append(i)
+        return read(spark_, spec_, fmt, files, i, side_tables)
+
+    monkeypatch.setattr(pipeline, "read_routed", recording_read)
+    with pytest.raises(RuntimeError, match="injected failure after slice 0"):
+        run_pipeline(spark, _spec(fixture_paths), split_dir, out,
+                     n_slices=2, fail_after_slice=0)
+    assert planned == [0]
+    assert os.path.exists(f"{out}/_checkpoints/run0/slice_0.json")
+    assert not os.path.exists(f"{out}/_stage/batch_id=1")
+    assert not glob.glob(f"{out}/sinks/*/batch_id=1")
+    assert glob.glob(f"{out}/sinks/*/batch_id=0")
+
+
+def test_every_job_keeps_the_callers_job_group(spark, fixture_paths,
+                                              tmp_path):
+    """The jobs a 2-slice run starts from its pool threads keep the
+    caller's job group: every job between two marker jobs is in the
+    group, none lands in no group, and wrapping the threads raises no
+    "Spark session is not provided" warning."""
+    inp = _split_input(spark, fixture_paths, tmp_path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(name: str) -> int:
+        sc.setJobGroup(name, name)
+        try:
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        [job] = tracker.getJobIdsForGroup(name)
+        return job
+
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    first = marker("job-group-before")
+    group = "job-group-run"
+    sc.setJobGroup(group, group)
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            stats = run_pipeline(spark, _spec(fixture_paths), inp,
+                                 str(tmp_path / "o"), n_slices=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    last = marker("job-group-after")
+    assert stats["slices_total"] == 2
+    assert sorted(tracker.getJobIdsForGroup(group)) \
+        == list(range(first + 1, last))
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert not [w for w in caught
+                if "Spark session is not provided" in str(w.message)]
 
 
 def test_empty_sink_slice_replaces_stale_attempt(spark, fixture_paths,

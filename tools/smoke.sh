@@ -28,9 +28,25 @@ python tools/bench_compare.py /tmp/smoke_bench.json   # fails on >1.5x regressio
 
 zip -qr /tmp/smoke_engine.zip fluent_bit_spark -x "*__pycache__*"
 rm -rf /tmp/smoke_out /tmp/smoke_pack
-spark-submit --master 'local[8]' --py-files /tmp/smoke_engine.zip \
-  jobs/run_pipeline.py --input .data/tokens_small.parquet \
-  --output /tmp/smoke_out --slices 2 --gen-rows 20000 | tail -1
+# slices are cut per input file: a two-file table gives the pipeline
+# job two slices; the pack jobs read the one-file table
+python -c 'import os
+from fluent_bit_spark import fixtures as fx
+if not os.path.exists(".data/tokens_small.parquet"):
+    fx.generate_tokens_table(".data/tokens_small.parquet", 20000)
+fx.generate_tokens_table(".data/tokens_small_2f", 20000, n_files=2)'
+# the second run resumes: it must skip every committed slice, and
+# neither run may leave a stage behind
+for run in first resume; do
+  spark-submit --master 'local[8]' --py-files /tmp/smoke_engine.zip \
+    jobs/run_pipeline.py --input .data/tokens_small_2f \
+    --output /tmp/smoke_out --slices 2 | tail -1 \
+    | tee "/tmp/smoke_pipeline_$run.json"
+  test ! -e /tmp/smoke_out/_stage
+done
+python -c 'import json; s = json.load(open("/tmp/smoke_pipeline_resume.json"))
+raise SystemExit(s["slices_skipped"] != s["slices_total"] or
+                 s["slices_total"] != 2)'
 spark-submit --master 'local[8]' --py-files /tmp/smoke_engine.zip \
   jobs/run_pack.py --input .data/tokens_small.parquet \
   --output /tmp/smoke_pack --ctx 256 | tail -1   # exits 2 on token loss
