@@ -203,8 +203,11 @@ def generate_tokens_table(
     ``n_files > 1`` writes a directory of part files (the realistic
     table shape — a 100 TB Iceberg table is many files, and Spark's
     scan parallelism + the pipeline's per-file slice checkpointing both
-    key off file boundaries). Content depends only on (n_rows, seed):
-    the same row stream is chunked round-robin into files.
+    key off file boundaries); its chunks go round-robin into the files.
+    Content depends on (n_rows, seed, pool_size) and on the chunk size,
+    which ``n_files > 1`` caps at ``ceil(n_rows / n_files)``: the random
+    draws are made per chunk, so the same rows split over more files
+    are other rows, not the one-file table's rows chunked differently.
     """
     pool = LinePool(pool_size, seed)
     rng = np.random.default_rng(seed + 1)

@@ -23,6 +23,8 @@ Reference semantics re-expressed (NOT ported):
 from __future__ import annotations
 
 import re
+import sys
+import zipimport
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -538,28 +540,42 @@ def _fields(cols: dict[str, pa.Array]) -> pa.StructArray:
                                       names=_FIELD_NAMES)
 
 
+def _drop_zip_finders() -> None:
+    """Forget the worker's cached zip-archive path finders.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the
+    start of every task, and there each cached ``zipimporter`` re-reads
+    its whole archive: with pyspark imported from ``pyspark.zip`` that
+    is 16 finders and 0.1-0.25 s a task. A dropped finder is rebuilt
+    from zipimport's directory cache, without reading the archive, when
+    an import next needs it."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            sys.path_importer_cache.pop(path, None)
+
+
 def _parse_udf(vocab=None, dlq_only: bool = False):
     """The parse stage's one Python boundary: an ``arrow_udf`` over
     :func:`_parse_arrow`. Without ``vocab`` it maps ``decoded`` →
-    ``fields``; with ``vocab`` (a broadcast) it maps ``tokens`` →
-    struct(decoded, fields), detokenizing first and, with ``dlq_only``,
-    nulling ``decoded`` where the line parsed."""
+    ``fields``; with ``vocab`` (a broadcast string array) it maps
+    ``tokens`` → struct(decoded, fields), detokenizing first and, with
+    ``dlq_only``, nulling ``decoded`` where the line parsed. Each batch
+    first drops the worker's zip finders (:func:`_drop_zip_finders`)."""
     if vocab is None:
         @F.arrow_udf(PARSED_SCHEMA)
         def parse(decoded: pa.Array) -> pa.Array:
+            _drop_zip_finders()
             return _fields(_parse_arrow(decoded))
         return parse
 
     from .detok import _detok_chunk
     schema = T.StructType([T.StructField("decoded", T.StringType()),
                            T.StructField("fields", PARSED_SCHEMA)])
-    vocab_arr: list[pa.Array] = []   # built on the worker, on first use
 
     @F.arrow_udf(schema)
     def parse(tokens: pa.Array) -> pa.Array:
-        if not vocab_arr:
-            vocab_arr.append(pa.array(vocab.value, type=pa.string()))
-        decoded = _detok_chunk(tokens, vocab_arr[0])
+        _drop_zip_finders()
+        decoded = _detok_chunk(tokens, vocab.value)
         cols = _parse_arrow(decoded)
         if dlq_only:
             decoded = pc.if_else(pc.is_valid(cols["kind"]),
@@ -595,8 +611,8 @@ def fused_detok_parse(df: DataFrame, spark, vocab: list[str],
     if keep_decoded not in KEEP_DECODED:
         raise ValueError(f"keep_decoded must be one of {KEEP_DECODED}, "
                          f"got {keep_decoded!r}")
-    udf = _parse_udf(spark.sparkContext.broadcast(vocab),
-                     dlq_only=keep_decoded == "dlq_only")
+    pieces = spark.sparkContext.broadcast(pa.array(vocab, pa.string()))
+    udf = _parse_udf(pieces, dlq_only=keep_decoded == "dlq_only")
     return (df.withColumn("__p", udf(F.col(tokens_col)))
               .withColumns({
                   decoded_col: F.col("__p.decoded"),

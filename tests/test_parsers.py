@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
 from fluent_bit_spark.functions.parsers import (
@@ -182,6 +184,59 @@ def test_dlq_only_nulls_decoded_exactly_where_parsed(spark, fixture_paths):
         f = full[d]
         assert (r.fields, r.parse_ok, r.tokens) == \
             (f.fields, f.parse_ok, f.tokens), d
+
+
+def test_drop_zip_finders_keeps_zip_imports_working(tmp_path, monkeypatch):
+    """Dropping the cached finder of a zip on sys.path forgets it, and a
+    later import from the same zip still works."""
+    import sys
+    import zipfile
+    from fluent_bit_spark.functions.parsers import _drop_zip_finders
+    archive = str(tmp_path / "pkgs.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zf_first.py", "VALUE = 1\n")
+        z.writestr("zf_second.py", "VALUE = 2\n")
+    monkeypatch.syspath_prepend(archive)
+    try:
+        import zf_first
+        assert zf_first.VALUE == 1
+        assert archive in sys.path_importer_cache
+        _drop_zip_finders()
+        assert archive not in sys.path_importer_cache
+        import zf_second
+        assert zf_second.VALUE == 2
+    finally:
+        sys.modules.pop("zf_first", None)
+        sys.modules.pop("zf_second", None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+def test_parse_udf_leaves_no_zip_finder_in_the_worker(spark):
+    """PySpark's worker makes every cached zip finder re-read its
+    archive at each task start (``importlib.invalidate_caches()``). The
+    parse UDF drops them, so a UDF chained after it in the same task
+    finds none left."""
+    from fluent_bit_spark.functions.parsers import _parse_udf
+
+    @F.arrow_udf("in_zip boolean, finders int")
+    def probe(fields: pa.Array) -> pa.Array:
+        import sys
+        import zipimport
+        import pyspark
+        in_zip = isinstance(pyspark.__spec__.loader, zipimport.zipimporter)
+        n = sum(isinstance(f, zipimport.zipimporter)
+                for f in list(sys.path_importer_cache.values()))
+        return pa.StructArray.from_arrays(
+            [pa.array([in_zip] * len(fields)),
+             pa.array([n] * len(fields), pa.int32())],
+            names=["in_zip", "finders"])
+
+    df = spark.createDataFrame([(APACHE_LINE,), ("no shape",)], ["decoded"])
+    got = [r.p for r in df.coalesce(1).select(
+        probe(_parse_udf()(F.col("decoded"))).alias("p")).collect()]
+    if not got[0].in_zip:
+        pytest.skip("the workers import pyspark from a directory")
+    assert [p.finders for p in got] == [0, 0]
 
 
 def test_decoder_chain_fallback_on_malformed(spark):
