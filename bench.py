@@ -35,8 +35,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Representative of SURVEY.md §2 operator families: parse, filter,
-# enrich-join, route+agg (flagship), salted skew agg, windows, dedup,
-# text analysis.
+# enrich-join, route+agg (flagship), salted skew agg, windows, dedup.
 HEADLINE = [
     "route_agg",
     "parse_json_props",
@@ -53,16 +52,10 @@ HEADLINE = [
     "geoip_range_lookup",
     "grok_parse",
     "nb_quality",
-    "normalize_nfc",
-    "url_host_cap",
     "bigram_surprisal",
-    "html_text",
-    "bpe_encode",
     "asof_enrich",
     "rollup_agg",
     "sp_sql_window",
-    "text_quality",
-    "token_count_regex",
     # r3 token-sequence training-data ops (operators/tokens.py)
     "pack_sequences",
     "line_dedup_c4",
@@ -83,15 +76,11 @@ HEADLINE = [
     # vocab-bounded rank window)
     "cms_heavy_hitters",
     "zipf_coverage",
-    "url_canonical_dedup",
     # r5 final: winnowing fingerprints (map-only HOF fold), hybrid
-    # retrieval fusion (one composite bm25 scan + RRF), fertility audit
+    # retrieval fusion (one composite bm25 scan + RRF)
     "winnow_fingerprint_digest",
     "rrf_hybrid_topk",
-    "tokenizer_fertility",
-    # r5 final: multi-signal quality gate (3 vocab-bounded signals +
-    # doc-keyed combine) and incremental winnowing dedup
-    "quality_ensemble",
+    # r5 final: incremental winnowing dedup
     "winnow_vs_corpus",
     # r5 final: dataloader-materialization ops — FIM rewrite (map-only
     # slice+concat), length-bucketed batching (two-phase prefix count),

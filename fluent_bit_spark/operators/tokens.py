@@ -12,7 +12,7 @@ parse→enrich→route engine:
 - ``pack_documents``   — non-splitting greedy packing (SFT posture:
   docs stay whole, bins pad, overlong docs routed aside);
 - ``bm25_topk``        — Okapi BM25 top-k retrieval (broadcast query
-  terms, integer-exact tf normalization, salted exact top-k);
+  terms, integer-exact tf normalization, exact top-k);
 - ``chunk_documents``  — per-document sliding-window chunking with
   stride (RAG indexing / long-doc eval: overlapping windows that never
   cross a document boundary);
@@ -1010,8 +1010,8 @@ def tfidf_topk(df: DataFrame, k: int = 3, tokens_col: str = "tokens",
 
 
 def bm25_topk(df: DataFrame, queries: DataFrame, k: int = 10,
-              tokens_col: str = "tokens", id_col: str = "doc_id",
-              salt_buckets: int = 0) -> DataFrame:
+              tokens_col: str = "tokens", id_col: str = "doc_id"
+              ) -> DataFrame:
     """Top-``k`` documents per query under Okapi BM25 — the sparse
     half of corpus retrieval (decontamination-by-retrieval, RAG
     indexing, hard-negative mining). ``queries`` is a small
@@ -1046,11 +1046,7 @@ def bm25_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     - df_t is exact from the matched rows (every doc containing a
       query term survives the semi join) and query-vocab-bounded;
       corpus totals are a 1-row broadcast;
-    - the final top-k partitions by query_id — few queries over a
-      huge corpus is the textbook skewed window, so pass
-      ``salt_buckets`` to prune to ≤ buckets·k per query first
-      (two-phase exact, the cap_per_host argument: a global top-k row
-      is in the top-k of whichever bucket it lands in).
+    - the final top-k partitions by query_id.
     """
     if k <= 0:
         raise ValueError("bm25_topk: k must be positive")
@@ -1083,12 +1079,8 @@ def bm25_topk(df: DataFrame, queries: DataFrame, k: int = 10,
               .groupBy("query_id", id_col)
               .agg(F.sum(F.col("idf_milli") * F.col("norm_milli"))
                    .cast("long").alias("score_micro")))
-    order = [F.desc("score_micro"), F.asc(id_col)]
-    if salt_buckets:
-        from fluent_bit_spark.operators.web import cap_per_host
-        scored = cap_per_host(scored, "query_id", order, k,
-                              salt_buckets=salt_buckets, salt_key=id_col)
-    w = Window.partitionBy("query_id").orderBy(*order)
+    w = Window.partitionBy("query_id").orderBy(F.desc("score_micro"),
+                                               F.asc(id_col))
     from fluent_bit_spark.caching import carry
     return carry(
         scored.withColumn("rank",
@@ -1806,67 +1798,6 @@ def winnow_vs_corpus(new: DataFrame, corpus_fp: DataFrame,
                .filter(F.col("__shared") >= min_shared)
                .select(id_col).distinct())
     return new.join(dropped, id_col, "left_anti")
-
-
-def quality_ensemble(df: DataFrame, label: Column,
-                     text_col: str = "text",
-                     id_cols: tuple[str, ...] = ("doc_id", "source"),
-                     nb_min_millinats: int = 0,
-                     band_max: int = 5) -> DataFrame:
-    """Multi-signal quality gate — the FineWeb/Dolma posture of
-    combining several WEAK signals into one keep/drop with an
-    auditable reason bitmask, instead of trusting any single filter:
-
-    - bits 1|2|4|8: the Gopher structural rules
-      (:func:`~fluent_bit_spark.functions.text.gopher_reasons` —
-      word count, mean word length, distinct fraction, max word
-      length), map-only;
-    - bit 16: Naive-Bayes exemplar-class log-odds below
-      ``nb_min_millinats`` (:func:`nb_quality_score`; a doc with NO
-      scorable token also fails — "no evidence" is not "passes");
-    - bit 32: mean unigram surprisal band above ``band_max``
-      (:func:`unigram_surprisal` on the space-split tokens, band =
-      ``nll DIV n DIV 500`` milli-nats — the CCNet perplexity-bucket
-      analogue; unscorable docs fail likewise).
-
-    ``keep = (ens_reasons == 0)``. Output: ``id_cols +
-    (ens_reasons:int, keep:boolean)``, one row per input document.
-
-    Scale shape: each signal is map-only or vocab-bounded (the two
-    model tables broadcast); the combine is a doc-keyed 3-way join
-    whose sides are all ~one narrow row per doc, map-side-combined
-    before their exchanges. Nothing in the composition grows faster
-    than the corpus. All-integer thresholds keep the verdict
-    engine-portable (NOTES #25).
-    """
-    from ..functions.text import gopher_reasons
-    ids = [F.col(c) for c in id_cols]
-    gq = df.select(*ids, label.alias("__pos"),
-                   gopher_reasons(text_col).alias("__gq"),
-                   F.col(text_col).alias("__txt"))
-    nb = (nb_quality_score(df, label, text_col=text_col,
-                           id_cols=id_cols)
-          .select(*id_cols, F.col("llr_millinats").alias("__llr")))
-    sp = (unigram_surprisal(
-              df.select(*ids, F.split(F.col(text_col), " ")
-                        .alias("__t")),
-              tokens_col="__t", id_cols=id_cols)
-          .select(*id_cols,
-                  (F.col("nll_millinats")
-                   .cast("long") / F.lit(1)).cast("long").alias("__nll"),
-                  F.col("n_tok_scored").alias("__n")))
-    out = (gq.join(nb, list(id_cols), "left")
-             .join(sp, list(id_cols), "left"))
-    band = F.expr("__nll DIV __n DIV 500")
-    reasons = (F.col("__gq")
-               + F.when(F.col("__llr").isNull()
-                        | (F.col("__llr") < nb_min_millinats), 16)
-                  .otherwise(0)
-               + F.when(band.isNull() | (band > band_max), 32)
-                  .otherwise(0))
-    return (out.select(*id_cols,
-                       reasons.cast("int").alias("ens_reasons"))
-               .withColumn("keep", F.col("ens_reasons") == 0))
 
 
 # ---------------------------------------------------------------------------

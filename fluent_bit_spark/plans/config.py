@@ -24,9 +24,9 @@ Supported sections / properties (the subset with a batch meaning here):
   records whose tag its ``match`` (glob) or ``match_regex`` selects
   (upstream:src/flb_filter.c); no Match means every tag (upstream
   unloads such a filter). Another Match than ``*`` keeps the other
-  tags' rows and values: grep, sampling, checklist, expect,
-  gopher_quality and stratified_split filter or write only matching
-  rows, modify/record_modifier (Set/Add only) and rewrite_tag gate their
+  tags' rows and values: grep, sampling, checklist, expect and
+  stratified_split filter or write only matching rows,
+  modify/record_modifier (Set/Add only) and rewrite_tag gate their
   rules on it, parser/type_converter/lookup write NULL elsewhere into a
   column they add. script/lua, throttle, nest, multiline and
   log_to_metrics raise instead. Divergences: a rewrite_tag copy passes
@@ -35,7 +35,7 @@ Supported sections / properties (the subset with a batch meaning here):
   Plugins (plans/filters.py readers list their properties): grep,
   rewrite_tag, lookup, parser, modify, record_modifier, nest, throttle,
   type_converter, sampling, multiline, expect, checklist,
-  gopher_quality, stratified_split, log_to_metrics, script (alias lua).
+  stratified_split, log_to_metrics, script (alias lua).
 - ``[INPUT] name http`` — body-per-line capture files through
   sources/http.py: ``tag`` (listener tag), ``tag_key`` (lift tag from
   a record field); record ``log`` fields become the raw line for the

@@ -18,7 +18,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.parsers import apply_regex_parser, parse_first_match
-from ..functions.text import gopher_filter
 from ..operators.enrich import checklist_flag, dim_cache_for, lookup_join
 from ..operators.filters import (GrepRule, expect, grep_predicate,
                                  sample_predicate, stratified_split,
@@ -391,27 +390,6 @@ def _read_checklist(f, parsers):
             "sets": sets}
 
 
-def _read_gopher(f, parsers):
-    """Engine extension (functions/text.py gopher_filter): integer-exact
-    composite quality gate. Action flag stamps gq_reasons/gq_keep;
-    Action drop filters failures out."""
-    action = str(f.get("action", "flag")).lower()
-    if action not in ("flag", "drop"):
-        raise ValueError(f"[FILTER] gopher_quality Action must "
-                         f"be flag|drop, got {action!r}")
-    pct = int(f.get("min_distinct_pct", 50))
-    if not 0 <= pct <= 100:
-        raise ValueError("[FILTER] gopher_quality "
-                         "Min_distinct_pct wants 0..100")
-    return {"key": str(f.get("key", "text")), "action": action,
-            "thresholds": {
-                "min_words": int(f.get("min_words", 30)),
-                "min_mean_len_x1": int(f.get("min_mean_len", 4)),
-                "max_mean_len_x1": int(f.get("max_mean_len", 10)),
-                "min_distinct_num": pct, "min_distinct_den": 100,
-                "max_word_len": int(f.get("max_word_len", 7))}}
-
-
 def _read_log_to_metrics(f, parsers):
     """upstream:plugins/filter_log_to_metrics — ``metric_mode`` (counter
     | gauge | histogram), ``metric_name`` (each slice writes the metric
@@ -622,15 +600,6 @@ def _checklist(spark, out, ck, where, side_tables):
     return _scope_columns(out, where, flag_and_set)
 
 
-def _gopher(spark, out, g, where, side_tables):
-    out = _scope_columns(out, where, lambda d: gopher_filter(
-        d, col=g["key"], **g.get("thresholds", {})))
-    if g.get("action") == "drop":
-        out = (out.filter(_keep(where, F.col("gq_keep")))
-               .drop("gq_reasons", "gq_keep"))
-    return out
-
-
 def _split(spark, out, sp, where, side_tables):
     return _scope_columns(out, where, lambda d: stratified_split(
         d, sp["group_key"], sp["hash_key"], sp.get("rates", {}),
@@ -710,7 +679,6 @@ FILTERS: dict[str, Filter] = {
     "multiline": Filter(_read_multiline, None, _never),
     "expect": Filter(_read_expect, _expect),
     "checklist": Filter(_read_checklist, _checklist),
-    "gopher_quality": Filter(_read_gopher, _gopher, once=True),
     "stratified_split": Filter(_read_split, _split, once=True),
     "log_to_metrics": Filter(_read_log_to_metrics, None, _never),
     "script": Filter(_read_script, _script, _never),

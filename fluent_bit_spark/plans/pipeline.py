@@ -1095,6 +1095,8 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, input_path: str,
     slice. On a 1000-executor cluster slices become much larger file
     groups; the manifest bounds re-work on failure to one slice.
     """
+    if n_slices < 1:
+        raise ValueError(f"n_slices must be at least 1, got {n_slices}")
     t0 = time.time()
     tune_scan_partitions(spark, input_path)
     all_files = _list_inputs(spark, input_format, input_path)

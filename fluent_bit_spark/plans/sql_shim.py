@@ -67,45 +67,10 @@ _SCORE_RE = re.compile(
     r"TRAIN\s+(?P<train>STREAM:\w+|TAG:'[^']*'))?"
     r"\s*;?\s*$",
     re.IGNORECASE)
-_SCORE_NB_RE = re.compile(
-    r"^\s*SCORE\s+QUALITY\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
-    r"LABEL\s+(?P<lcol>\w+)\s+'(?P<lval>[^']*)'"
-    r"(?:\s+TEXT\s+(?P<text>\w+))?\s*;?\s*$",
-    re.IGNORECASE)
-_GATE_RE = re.compile(
-    r"^\s*GATE\s+QUALITY\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
-    r"LABEL\s+(?P<lcol>\w+)\s+'(?P<lval>[^']*)'"
-    r"(?:\s+NBMIN\s+(?P<nbmin>-?\d+))?(?:\s+BAND\s+(?P<band>\d+))?"
-    r"(?:\s+TEXT\s+(?P<text>\w+))?\s*;?\s*$",
-    re.IGNORECASE)
 _SPLIT_RE = re.compile(
     r"^\s*SPLIT\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
     r"HOLDOUT\s+(?P<pm>\d+)"
     r"(?:\s+BY\s+(?P<grp>\w+))?(?:\s+KEY\s+(?P<key>\w+))?\s*;?\s*$",
-    re.IGNORECASE)
-_NORMALIZE_RE = re.compile(
-    r"^\s*NORMALIZE\s+(?P<src>STREAM:\w+|TAG:'[^']*')"
-    r"(?:\s+COL\s+(?P<col>\w+))?"
-    r"(?:\s+FORM\s+(?P<form>NFC|NFKC|NFD|NFKD|NONE))?"
-    r"(?P<lower>\s+LOWER)?(?P<collapse>\s+COLLAPSE)?\s*;?\s*$",
-    re.IGNORECASE)
-_CAP_HOST_RE = re.compile(
-    r"^\s*CAP\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
-    r"HOST\s+(?P<host>\w+)\s+BEST\s+(?P<n>\d+)\s+BY\s+(?P<by>\w+)"
-    r"(?:\s+ID\s+(?P<id>\w+))?(?:\s+SALT\s+(?P<salt>\d+))?\s*;?\s*$",
-    re.IGNORECASE)
-_TOKENIZE_RE = re.compile(
-    r"^\s*TOKENIZE\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
-    r"USING\s+(?P<merges>STREAM:\w+|TAG:'[^']*')"
-    r"(?:\s+COL\s+(?P<col>\w+))?\s*;?\s*$",
-    re.IGNORECASE)
-_REDACT_RE = re.compile(
-    r"^\s*REDACT\s+PII\s+(?P<src>STREAM:\w+|TAG:'[^']*')"
-    r"(?:\s+COL\s+(?P<col>\w+))?(?P<nocounts>\s+NOCOUNTS)?\s*;?\s*$",
-    re.IGNORECASE)
-_HTML_TEXT_RE = re.compile(
-    r"^\s*EXTRACT\s+TEXT\s+(?P<src>STREAM:\w+|TAG:'[^']*')"
-    r"(?:\s+COL\s+(?P<col>\w+))?(?:\s+AS\s+(?P<out>\w+))?\s*;?\s*$",
     re.IGNORECASE)
 _HEAVY_RE = re.compile(
     r"^\s*HEAVY\s+KEYS\s+(?P<src>STREAM:\w+|TAG:'[^']*')\s+"
@@ -378,82 +343,6 @@ class StreamProcessor:
             m.group("grp") or "source", m.group("key") or "doc_id",
             {}, default_permille=int(m.group("pm")))
 
-    def _normalize(self, m: re.Match) -> DataFrame:
-        """NORMALIZE STREAM:src [COL col] [FORM NFC|NFKC|NFD|NFKD|NONE]
-        [LOWER] [COLLAPSE] — unicode text canonicalization
-        (operators/web.py normalize_text) in place on the column."""
-        from ..operators.web import normalize_text
-        return normalize_text(
-            self._source_df(m.group("src")), m.group("col") or "text",
-            form=(m.group("form") or "NFC"),
-            lower=bool(m.group("lower")),
-            collapse_ws=bool(m.group("collapse")))
-
-    def _cap_host(self, m: re.Match) -> DataFrame:
-        """CAP STREAM:src HOST hcol BEST n BY scol [ID idcol] [SALT k]
-        — domain balancing (operators/web.py cap_per_host): keep the n
-        best rows per host, ordered scol DESC with the id column as
-        the deterministic tiebreak; SALT k enables the exact two-phase
-        skew form."""
-        from pyspark.sql import functions as F
-
-        from ..operators.web import cap_per_host
-        id_col = m.group("id") or "doc_id"
-        kw: dict = {}
-        if m.group("salt"):
-            kw.update(salt_buckets=int(m.group("salt")), salt_key=id_col)
-        return cap_per_host(
-            self._source_df(m.group("src")), m.group("host"),
-            [F.desc(m.group("by")), F.col(id_col)], int(m.group("n")),
-            **kw)
-
-    def _score_nb(self, m: re.Match) -> DataFrame:
-        """SCORE QUALITY STREAM:src LABEL col 'value' [TEXT col] —
-        Naive-Bayes log-odds quality classifier (operators/tokens.py
-        nb_quality_score); the exemplar class is rows where the label
-        column equals the quoted value."""
-        from pyspark.sql import functions as F
-
-        from ..operators.tokens import nb_quality_score
-        return nb_quality_score(
-            self._source_df(m.group("src")),
-            F.col(m.group("lcol")) == m.group("lval"),
-            text_col=m.group("text") or "text")
-
-    def _redact_pii(self, m: re.Match) -> DataFrame:
-        """REDACT PII STREAM:src [COL col] [NOCOUNTS] — scrub
-        email/IPv4/phone shapes in place (functions/text.py redact);
-        per-rule ``<name>_hits`` audit columns unless NOCOUNTS."""
-        from ..functions.text import pii_counts, redact
-        df = self._source_df(m.group("src"))
-        col = m.group("col") or "text"
-        if not m.group("nocounts"):
-            df = df.select("*", *pii_counts(col))
-        return df.withColumn(col, redact(col))
-
-    def _html_text(self, m: re.Match) -> DataFrame:
-        """EXTRACT TEXT STREAM:src [COL col] [AS out] — HTML→plain-text
-        boilerplate strip (operators/web.py html_to_text)."""
-        from ..operators.web import html_to_text
-        return html_to_text(self._source_df(m.group("src")),
-                            m.group("col") or "html",
-                            m.group("out") or "text_plain")
-
-    def _tokenize(self, m: re.Match) -> DataFrame:
-        """TOKENIZE STREAM:docs USING STREAM:merges [COL col] — BPE
-        encode (functions/bpe.py bpe_encode_arrow) against a merge
-        table stream with (a, b, rank) columns. The merge table is
-        vocab-bounded, so collecting it to ride the kernel's closure
-        is the same bounded-collect posture as the IVF quantizer."""
-        from ..functions.bpe import bpe_encode_arrow
-        mrows = (self._source_df(m.group("merges"))
-                 .orderBy("rank").collect())
-        merges = [(r["a"], r["b"]) for r in mrows]
-        if not merges:
-            raise ValueError("TOKENIZE: empty merge table")
-        return bpe_encode_arrow(self._source_df(m.group("src")), merges,
-                                text_col=m.group("col") or "text")
-
     def _resample(self, m: re.Match) -> DataFrame:
         """RESAMPLE STREAM:raw TARGET STREAM:tgt TOP n [TOKENS col]
         [BUCKETS k] [SEED 'name'] — DSIR importance resampling
@@ -553,22 +442,6 @@ class StreamProcessor:
                               k=int(m.group("k") or 50))
         return vocab_growth(src, tokens_col=col)
 
-    def _gate_quality(self, m: re.Match) -> DataFrame:
-        """GATE QUALITY STREAM:src LABEL col 'value' [NBMIN n]
-        [BAND b] [TEXT col] — multi-signal quality gate
-        (operators/tokens.py quality_ensemble): Gopher structural
-        bits + NB exemplar log-odds + unigram surprisal band into one
-        per-document reason bitmask with keep = (bitmask == 0)."""
-        from pyspark.sql import functions as F
-
-        from ..operators.tokens import quality_ensemble
-        return quality_ensemble(
-            self._source_df(m.group("src")),
-            F.col(m.group("lcol")) == m.group("lval"),
-            text_col=m.group("text") or "text",
-            nb_min_millinats=int(m.group("nbmin") or 0),
-            band_max=int(m.group("band") or 5))
-
     def _allocate(self, m: re.Match) -> DataFrame:
         """ALLOCATE STREAM:totals BUDGET n [EPOCHS milli] —
         data-constrained token-budget water-filling
@@ -598,27 +471,6 @@ class StreamProcessor:
         fu = _FUSE_RE.match(text)
         if fu:
             return self._fuse_ranks(fu)
-        tm = _TOKENIZE_RE.match(text)
-        if tm:
-            return self._tokenize(tm)
-        rm = _REDACT_RE.match(text)
-        if rm:
-            return self._redact_pii(rm)
-        xm = _HTML_TEXT_RE.match(text)
-        if xm:
-            return self._html_text(xm)
-        qm = _SCORE_NB_RE.match(text)
-        if qm:
-            return self._score_nb(qm)
-        gm = _GATE_RE.match(text)
-        if gm:
-            return self._gate_quality(gm)
-        nm = _NORMALIZE_RE.match(text)
-        if nm:
-            return self._normalize(nm)
-        cm = _CAP_HOST_RE.match(text)
-        if cm:
-            return self._cap_host(cm)
         pm = _PACK_RE.match(text)
         if pm:
             return self._pack(pm)

@@ -17,7 +17,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions import text as TX
 from .functions.parsers import ltsv_parser, logfmt_parser
 from .operators.aggregate import (
     hopping, log_histogram, salted_sink_aggregates, tumbling,
@@ -695,75 +694,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (docs.groupBy("source")
             .agg(F.count_distinct(F.md5("text")).alias("distinct_docs"),
                  F.count("*").alias("total_docs")))
-
-
-# ===========================================================================
-# Text analysis (training-data extensions)
-# ===========================================================================
-
-
-@q("text_quality", """
-SELECT source,
-       round(avg(len(string_split(text, ' '))), 4) AS avg_words,
-       round(avg(len(list_filter(string_split(text, ' '),
-                                 w -> w IN ('the', 'a', 'of', 'and', 'to',
-                                            'in', 'is', 'it')))
-                 * 1.0 / len(string_split(text, ' '))), 6)
-         AS avg_stopword_ratio
-FROM documents GROUP BY source
-""")
-def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    per_doc = docs.select(
-        "source", TX.n_words("text").alias("nw"),
-        TX.stopword_ratio("text").alias("swr"))
-    return (per_doc.groupBy("source")
-            .agg(F.round(F.avg("nw"), 4).alias("avg_words"),
-                 F.round(F.avg("swr"), 6).alias("avg_stopword_ratio")))
-
-
-@q("lang_id_heuristic", """
-WITH scored AS (
-  SELECT CASE WHEN len(list_filter(string_split(text, ' '),
-                                   w -> w IN ('the', 'a', 'of', 'and'))) > 0
-              THEN 'en' ELSE 'unk' END AS lang_guess
-  FROM documents)
-SELECT lang_guess, count(*) AS n FROM scored GROUP BY lang_guess
-""")
-def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    guess = docs.select(TX.lang_id("text").alias("lang_guess"))
-    return guess.groupBy("lang_guess").agg(F.count("*").alias("n"))
-
-
-@q("token_count_regex", """
-SELECT lang,
-       CAST(sum(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')))
-            AS BIGINT) AS total_tokens,
-       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_ws_tokens
-FROM documents GROUP BY lang
-""")
-def token_count_regex_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    per = docs.select(
-        "lang", TX.token_count_regex("text").alias("tk"),
-        TX.token_count_ws("text").alias("wk"))
-    return (per.groupBy("lang")
-            .agg(F.sum("tk").alias("total_tokens"),
-                 F.sum("wk").alias("total_ws_tokens")))
-
-
-@q("doc_fingerprint", """
-SELECT source,
-       count(DISTINCT md5(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')))
-         AS n_fingerprints
-FROM documents GROUP BY source
-""")
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    return (docs.select("source", TX.fingerprint("text").alias("fp"))
-            .groupBy("source")
-            .agg(F.count_distinct("fp").alias("n_fingerprints")))
 
 
 # ===========================================================================
@@ -1833,59 +1763,6 @@ def snapshot_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
                             limit_rows=3, payload_cols=["user_id"])
 
 
-@q("redact_pii", """
-WITH d AS (
-  SELECT doc_id, text,
-         CASE WHEN doc_id % 3 <> 0 THEN 1 ELSE 0 END AS has_email,
-         CASE WHEN doc_id % 4 <> 0 THEN 1 ELSE 0 END AS has_ip,
-         CASE WHEN doc_id % 5 <> 0 THEN 1 ELSE 0 END AS has_phone
-  FROM documents)
-SELECT doc_id,
-       text
-       || CASE WHEN has_email = 1 THEN ' <EMAIL>' ELSE '' END
-       || CASE WHEN has_ip = 1 THEN ' from <IP>' ELSE '' END
-       || CASE WHEN has_phone = 1 THEN ' call <PHONE>' ELSE '' END
-         AS redacted,
-       CAST(has_email AS INT) AS email_hits,
-       CAST(has_ip AS INT) AS ipv4_hits,
-       CAST(has_phone AS INT) AS phone_hits
-FROM d
-""")
-def redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub pass for training corpora (r4): emails / IPv4s /
-    phone numbers replaced by typed placeholders, with per-category
-    hit counts as the audit trail (functions/text.py redact,
-    pii_counts). The scrub is a chain of native regexp_replace /
-    regexp_count Column expressions — whole-stage codegen, map-only,
-    no UDF, so it rides the same 10^12-row scan as the other text
-    functions. PII spans are injected deterministically per doc_id
-    (documents.text itself is digit-free), which lets the DuckDB
-    oracle reconstruct the redacted string and counts with pure
-    string arithmetic — no regex engine on the oracle side, so the
-    check is independent of regex-dialect quirks."""
-    from .functions.text import pii_counts, redact
-    did = F.col("doc_id")
-    line = F.concat(
-        F.col("text"),
-        F.when(did % 3 != 0, F.concat(
-            F.lit(" u"), (did % 89).cast("string"),
-            F.lit("@m"), (did % 7).cast("string"), F.lit(".org"),
-        )).otherwise(F.lit("")),
-        F.when(did % 4 != 0, F.concat(
-            F.lit(" from 10."), (did % 256).cast("string"),
-            F.lit(".0."), (did % 100).cast("string"),
-        )).otherwise(F.lit("")),
-        F.when(did % 5 != 0, F.concat(
-            F.lit(" call +1-555-"),
-            F.lpad((did % 10000).cast("string"), 4, "0"),
-        )).otherwise(F.lit("")))
-    docs = (t(spark, sf_dir, "documents")
-            .select("doc_id", line.alias("line")))
-    return docs.select("doc_id",
-                       redact("line").alias("redacted"),
-                       *pii_counts("line"))
-
-
 # ===========================================================================
 # Unigram-LM surprisal quality scoring + stratified holdout split (the
 # quality-filter and eval-carve-out steps of a training-data pipeline)
@@ -2135,182 +2012,6 @@ def backoff_surprisal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("n_oov").alias("sum_oov")))
 
 
-@q("web_curate_chain", r"""
-WITH pages AS (
-  SELECT doc_id,
-         '<h1>Doc ' || CAST(doc_id AS VARCHAR) || '</h1><p>' || text
-         || '</p><script>var x = ' || CAST(doc_id AS VARCHAR)
-         || ';</script><div>contact u' || CAST(doc_id % 89 AS VARCHAR)
-         || '@m' || CAST(doc_id % 7 AS VARCHAR) || '.org</div>' AS html,
-         CASE WHEN doc_id % 3 = 0 THEN 'big.com'
-              ELSE 'h' || CAST(doc_id % 17 AS VARCHAR) || '.org'
-         END AS host
-  FROM documents),
-stripped AS (
-  SELECT doc_id, host,
-    regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-    regexp_replace(
-      replace(replace(replace(replace(replace(replace(replace(
-        regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        regexp_replace(regexp_replace(html,
-          '(?is)<script\b[^>]*>.*?</script\s*>', ' ', 'g'),
-          '(?is)<style\b[^>]*>.*?</style\s*>', ' ', 'g'),
-          '(?s)<!--.*?-->', ' ', 'g'),
-          '(?i)<br\s*/?>', chr(10), 'g'),
-          '(?i)</(p|div|h1|h2|h3|h4|h5|h6|li|tr|ul|ol|table|blockquote)\s*>',
-          chr(10), 'g'),
-          '<[^>]*>', ' ', 'g'),
-        '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        '&apos;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-      '[ ' || chr(9) || chr(13) || ']+', ' ', 'g'),
-      ' ?' || chr(10) || ' ?', chr(10), 'g'),
-      chr(10) || '+', chr(10), 'g'),
-      '^\s+', '', 'g'),
-      '\s+$', '', 'g') AS plain
-  FROM pages),
-normed AS (
-  SELECT doc_id, host,
-         trim(regexp_replace(lower(plain), '\s+', ' ', 'g')) AS txt
-  FROM stripped),
-red AS (
-  -- documents.text is digit-, '@'- and '+'-free, so the planted email
-  -- is the ONLY redactable span: reconstruct the scrub with string
-  -- arithmetic (regex-free oracle side, same trick as redact_pii)
-  SELECT doc_id, host,
-         replace(txt,
-                 'u' || CAST(doc_id % 89 AS VARCHAR) || '@m'
-                 || CAST(doc_id % 7 AS VARCHAR) || '.org',
-                 '<EMAIL>') AS txt,
-         1 AS email_hits
-  FROM normed),
-gq AS (
-  SELECT doc_id, host, txt, email_hits,
-         len(string_split(txt, ' ')) AS nw,
-         list_aggregate(list_transform(string_split(txt, ' '),
-                        w -> length(w)), 'sum') AS sc,
-         len(list_distinct(string_split(txt, ' '))) AS nd,
-         list_aggregate(list_transform(string_split(txt, ' '),
-                        w -> length(w)), 'max') AS mx
-  FROM red),
-flagged AS (
-  SELECT doc_id, host, txt, email_hits,
-         CAST(CASE WHEN nw < 30 THEN 1 ELSE 0 END
-         + CASE WHEN sc < 4 * nw OR sc > 10 * nw THEN 2 ELSE 0 END
-         + CASE WHEN 2 * nd < 1 * nw THEN 4 ELSE 0 END
-         + CASE WHEN mx > 8 THEN 8 ELSE 0 END AS INT) AS gq_reasons
-  FROM gq),
-ranked AS (
-  SELECT *, CASE WHEN gq_reasons = 0 THEN
-              row_number() OVER (PARTITION BY host,
-                                 CASE WHEN gq_reasons = 0 THEN 1
-                                      ELSE 0 END
-                                 ORDER BY doc_id)
-            ELSE NULL END AS rn
-  FROM flagged)
-SELECT doc_id, host, CAST(email_hits AS INT) AS email_hits, gq_reasons,
-       CASE WHEN gq_reasons <> 0 THEN 'gopher'
-            WHEN rn > 5 THEN 'host_cap' END AS drop_reason,
-       md5(txt) AS txt_md5
-FROM ranked
-""")
-def web_curate_chain_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPOSED curation chain under one oracle (same pattern as
-    corpus_clean_pack): render HTML pages + hosts deterministically
-    from the documents table, then html_to_text → lower/ws-canon →
-    PII redact (+audit count) → Gopher gate (max_word_len=8 for this
-    corpus) → exact salted per-host cap (best 5 by doc_id) — the
-    run_curate.py chain operator-for-operator. The oracle reproduces
-    every stage in DuckDB (the scrub regex-free via string
-    reconstruction) and value-checks the final text md5, the audit
-    count, the reason bitmask, and the drop partition for EVERY
-    document."""
-    from .functions.text import gopher_filter, pii_counts, redact
-    from .operators.web import cap_per_host, html_to_text, normalize_text
-    did = F.col("doc_id")
-    docs = t(spark, sf_dir, "documents")
-    page = F.concat(
-        F.lit("<h1>Doc "), did.cast("string"), F.lit("</h1><p>"),
-        F.col("text"), F.lit("</p><script>var x = "),
-        did.cast("string"), F.lit(";</script><div>contact u"),
-        (did % 89).cast("string"), F.lit("@m"),
-        (did % 7).cast("string"), F.lit(".org</div>"))
-    host = (F.when(did % 3 == 0, F.lit("big.com"))
-             .otherwise(F.concat(F.lit("h"), (did % 17).cast("string"),
-                                 F.lit(".org"))))
-    df = docs.select("doc_id", page.alias("html"), host.alias("host"))
-    df = html_to_text(df, "html", "txt")
-    df = normalize_text(df, "txt", form="none", lower=True,
-                        collapse_ws=True)
-    df = (df.select("*", *pii_counts("txt"))
-            .withColumn("txt", redact("txt")))
-    df = gopher_filter(df, "txt", max_word_len=8)
-    kept_ids = cap_per_host(
-        df.filter("gq_keep"), "host", [F.col("doc_id")], 5,
-        salt_buckets=8, salt_key="doc_id"
-    ).select("doc_id", F.lit(1).alias("__k"))
-    return (df.join(kept_ids, "doc_id", "left")
-            .select("doc_id", "host", "email_hits", "gq_reasons",
-                    F.when(~F.col("gq_keep"), F.lit("gopher"))
-                     .when(F.col("__k").isNull(), F.lit("host_cap"))
-                     .alias("drop_reason"),
-                    F.md5("txt").alias("txt_md5")))
-
-
-# fixed (a != b) merge table for the oracled BPE query — the encode
-# machinery is what's under test; a corpus-trained table would differ
-# per SF and the oracle string is static
-_BPE_MERGES = [("t", "h"), ("th", "e</w>"), ("a", "n"), ("an", "d</w>"),
-               ("i", "n"), ("e", "r"), ("o", "n"), ("r", "e"),
-               ("in", "g</w>"), ("o", "f</w>")]
-
-
-def _bpe_oracle_sql(merges: list[tuple[str, str]]) -> str:
-    # per-word spaced-symbol chain, the same construction as
-    # functions/bpe.bpe_apply_expr: " t h e " → " t h e</w> " → two
-    # replace passes per merge in rank order
-    expr = "' ' || regexp_replace(w, '(.)', '\\1 ', 'g')"
-    expr = f"regexp_replace({expr}, ' $', '</w> ', 'g')"
-    for a, b in merges:
-        i, o = f"' {a} {b} '", f"' {a}{b} '"
-        expr = f"replace(replace({expr}, {i}, {o}), {i}, {o})"
-    ids = (f"list_transform(list_filter(string_split(trim({expr}), ' '), "
-           "t -> t != ''), t -> CAST(('0x' || substring(md5(t), 1, 7))"
-           "::BIGINT % 50000 AS INT))")
-    return f"""
-WITH w AS (
-  SELECT doc_id,
-         flatten(list_transform(
-           list_filter(string_split_regex(text, '\\s+'), w -> w != ''),
-           w -> {ids})) AS toks
-  FROM documents)
-SELECT doc_id, len(toks) AS n_tok,
-       md5(array_to_string(list_transform(toks,
-           x -> CAST(x AS VARCHAR)), ',')) AS tok_md5
-FROM w
-"""
-
-
-@q("bpe_encode", _bpe_oracle_sql(_BPE_MERGES))
-def bpe_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenization (functions/bpe.py): the ENCODE step between
-    text curation and sequence packing, applied with a fixed merge
-    table via the pure-Catalyst replace chain (bpe_apply_expr). The
-    oracle regenerates the identical chain in DuckDB — per-word
-    spaced symbols, two leftmost-nonoverlapping replace passes per
-    merge in rank order, portable md5-mod token ids — and the full
-    token-id sequence is value-checked per document (md5 + length).
-    The Arrow word-cache path (bpe_encode_arrow) is parity-tested
-    against this chain token-for-token in tests/test_bpe.py."""
-    from .functions.bpe import bpe_apply_expr
-    docs = t(spark, sf_dir, "documents")
-    toks = bpe_apply_expr("text", _BPE_MERGES)
-    return docs.select(
-        "doc_id",
-        F.size(toks).alias("n_tok"),
-        F.md5(F.concat_ws(",", F.transform(
-            toks, lambda x: x.cast("string")))).alias("tok_md5"))
-
-
 _SPLIT_RATES = {f"src{i}": (100 if i % 3 == 0 else 25)
                 for i in range(0, 20, 2)}  # odd sources -> default 10
 
@@ -2348,39 +2049,6 @@ def stratified_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.md5(F.concat_ws(",", F.sort_array(
                      F.collect_list(F.col("doc_id").cast("string")))))
                   .alias("ids_hash")))
-
-
-@q("gopher_quality", """
-WITH s AS (
-  SELECT source,
-         len(string_split(text, ' ')) AS nw,
-         list_sum(list_transform(string_split(text, ' '),
-                                 w -> len(w))) AS sc,
-         len(list_distinct(string_split(text, ' '))) AS nd,
-         list_max(list_transform(string_split(text, ' '),
-                                 w -> len(w))) AS mx
-  FROM documents),
-r AS (
-  SELECT source,
-         (CASE WHEN nw < 30 THEN 1 ELSE 0 END
-          + CASE WHEN sc < 4 * nw OR sc > 10 * nw THEN 2 ELSE 0 END
-          + CASE WHEN 2 * nd < 1 * nw THEN 4 ELSE 0 END
-          + CASE WHEN mx > 7 THEN 8 ELSE 0 END) AS gq_reasons
-  FROM s)
-SELECT source, CAST(gq_reasons AS INT) AS gq_reasons,
-       count(*) AS docs
-FROM r GROUP BY source, gq_reasons
-""")
-def gopher_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style composite quality gate (functions/text.py
-    gopher_filter): integer cross-multiplied rules — word count, mean
-    word length band, distinct-word fraction, max word length — into a
-    failed-rule bitmask, audited per source. Exact arithmetic end to
-    end; the oracle reproduces every rule and the bitmask."""
-    from .functions.text import gopher_filter
-    docs = gopher_filter(t(spark, sf_dir, "documents"))
-    return (docs.groupBy("source", "gq_reasons")
-            .agg(F.count("*").alias("docs")))
 
 
 @q("tfidf_topk", f"""
@@ -2425,69 +2093,6 @@ def serialize_template_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return to_template(
         docs, "[{source}] doc {doc_id} lang={lang} chars={n_chars}"
     ).select("value")
-
-
-@q("corpus_quality_pack", f"""
-WITH st AS (
-  SELECT doc_id, source, text,
-         len(string_split(text, ' ')) AS nw,
-         list_sum(list_transform(string_split(text, ' '),
-                                 w -> len(w))) AS sc,
-         len(list_distinct(string_split(text, ' '))) AS nd,
-         list_max(list_transform(string_split(text, ' '),
-                                 w -> len(w))) AS mx
-  FROM documents),
-g AS (
-  SELECT doc_id, source, text FROM st
-  WHERE nw >= 15 AND sc BETWEEN 3 * nw AND 10 * nw
-        AND 10 * nd >= 3 * nw AND mx <= 8),
-d0 AS (
-  SELECT doc_id, source, {_TOK_IDS_SQL} AS tokens,
-         len(string_split(text, ' ')) AS n_tok
-  FROM g),
-ex AS (SELECT doc_id, unnest(tokens) AS tok FROM d0),
-f AS (SELECT tok, count(*) AS c FROM ex GROUP BY tok),
-tt AS (SELECT sum(c) AS t FROM f),
-m AS (SELECT tok, CAST(round(-ln(c / t) * 1000) AS BIGINT) AS nll
-      FROM f, tt),
-sc2 AS (SELECT doc_id, sum(nll) AS nllsum, count(*) AS n
-        FROM ex JOIN m USING (tok) GROUP BY doc_id),
-d AS (
-  SELECT d0.doc_id, d0.source, d0.tokens, d0.n_tok
-  FROM d0 JOIN sc2 USING (doc_id)
-  WHERE nllsum <= 3404 * n),
-{_pack_oracle_suffix(64)}
-""")
-def corpus_quality_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END quality pipeline composed from the quality + token
-    ops: raw corpus → Gopher composite gate (integer rules) →
-    corpus-self-trained unigram surprisal scoring → mean-surprisal
-    ceiling drop (integer cross-multiply) → concat-and-chunk pack into
-    64-token windows. ONE oracle value-checks the whole chain — every
-    gate verdict, the frequency model over the GATED corpus, every
-    milli-nat sum, every drop, every chunk boundary and packed token id
-    (md5 per chunk). The 100 TB shape is the sum of its parts: map-only
-    gate, vocab-bounded model + one narrow per-doc agg, map-only drop,
-    then the packing prefix-sum + chunk-keyed exchange."""
-    from .functions.text import gopher_filter
-    from .operators.tokens import pack_sequences, unigram_surprisal
-    docs = t(spark, sf_dir, "documents")
-    gated = (gopher_filter(docs, min_words=15, min_mean_len_x1=3,
-                           min_distinct_num=3, min_distinct_den=10,
-                           max_word_len=8)
-             .filter("gq_keep"))
-    tok = F.transform(
-        F.split("text", " "),
-        lambda w: (F.conv(F.substring(F.md5(w), 1, 7), 16, 10)
-                   .cast("long") % 50000).cast("int"))
-    d0 = (gated.select("doc_id", "source", tok.alias("tokens"))
-          .withColumn("n_tok", F.size("tokens")))
-    scores = unigram_surprisal(d0, id_cols=("doc_id",))
-    kept = (d0.join(scores, "doc_id")
-            .filter(F.col("nll_millinats")
-                    <= 3404 * F.col("n_tok_scored"))
-            .select("doc_id", "source", "tokens", "n_tok"))
-    return _pack_select(pack_sequences(kept, ctx_len=64))
 
 
 @q("script_filter_map", """
@@ -2773,138 +2378,8 @@ def grok_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Web-corpus curation (operators/web.py): unicode normalization, URL
-# decomposition, per-host capping (domain balancing)
+# Naive-Bayes log-odds quality classifier (operators/tokens.py)
 # ===========================================================================
-
-@q("normalize_nfc", r"""
-WITH raw AS (
-  SELECT doc_id,
-         text || ' Cafe' || chr(769) || '   ' || upper(lang) AS mangled
-  FROM documents)
-SELECT doc_id,
-       trim(regexp_replace(lower(nfc_normalize(mangled)), '\s+', ' ', 'g'))
-         AS norm
-FROM raw
-""")
-def normalize_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode NFC normalization + casefold + whitespace collapse
-    (C4/RefinedWeb-style text canonicalization before dedup). Both
-    engines build byte-identical mangled text containing a DECOMPOSED
-    accent (e + U+0301) and runs of spaces; Spark normalizes via the
-    Arrow-batched pandas str.normalize kernel, DuckDB via its native
-    nfc_normalize — two independent implementations of the same
-    Unicode spec must agree byte-for-byte."""
-    from .operators.web import normalize_text
-    docs = t(spark, sf_dir, "documents")
-    mangled = docs.select(
-        "doc_id",
-        F.concat(F.col("text"), F.lit(" Café   "),
-                 F.upper("lang")).alias("mangled"))
-    out = normalize_text(mangled, "mangled", "norm", form="NFC",
-                         lower=True, collapse_ws=True)
-    return out.select("doc_id", "norm")
-
-
-@q("url_host_cap", """
-WITH pages AS (
-  SELECT event_id, value,
-         'h' || CAST(user_id % 23 AS VARCHAR)
-         || CASE WHEN user_id % 4 = 0 THEN '.co.uk'
-                 ELSE '.example.com' END AS host,
-         CASE WHEN user_id % 4 = 0
-              THEN 'h' || CAST(user_id % 23 AS VARCHAR) || '.co.uk'
-              ELSE 'example.com' END AS domain,
-         '/p/' || event_type AS path
-  FROM events),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY host
-                               ORDER BY value DESC, event_id) AS rn
-  FROM pages)
-SELECT event_id, host, domain, path, value
-FROM ranked WHERE rn <= 5
-""")
-def url_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host document cap (domain balancing, RefinedWeb-style URL
-    curation): URLs are RENDERED from the events table, decomposed with
-    the JVM parse_url builtin (host/path/domain — zero Python), then
-    capped at the best 5 per host via the EXACT salted two-phase
-    top-n (operators/web.cap_per_host, salt_buckets=8). The oracle
-    reproduces the cap with a plain single-window row_number — the
-    two-phase form must select the identical row set."""
-    from .operators.web import cap_per_host, url_parts
-    ev = t(spark, sf_dir, "events")
-    urls = ev.select(
-        "event_id", "value",
-        F.concat(
-            F.lit("https://h"), (F.col("user_id") % 23).cast("string"),
-            F.when(F.col("user_id") % 4 == 0, F.lit(".co.uk"))
-             .otherwise(F.lit(".example.com")),
-            F.lit("/p/"), F.col("event_type"),
-            F.lit("?q="), (F.col("event_id") % 10).cast("string"),
-        ).alias("url"))
-    parts = url_parts(urls, "url")
-    capped = cap_per_host(parts, "u_host",
-                          [F.desc("value"), F.col("event_id")], 5,
-                          salt_buckets=8, salt_key="event_id")
-    return capped.select(
-        "event_id", F.col("u_host").alias("host"),
-        F.col("u_domain").alias("domain"), F.col("u_path").alias("path"),
-        "value")
-
-
-@q("html_text", r"""
-WITH pages AS (
-  SELECT doc_id,
-         '<html><head><script type="text/js">var x = 1 &lt; 2;</script>'
-         || '<style>p { color: red }</style></head><body><!-- nav -->'
-         || '<h1>Doc ' || CAST(doc_id AS VARCHAR) || '</h1><p>'
-         || text || '</p><div>A &amp;&amp; B&nbsp;&lt;tag&gt;'
-         || '</div><br/>fin</body></html>' AS html
-  FROM documents)
-SELECT doc_id,
-  regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-    replace(replace(replace(replace(replace(replace(replace(
-      regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-      regexp_replace(regexp_replace(html,
-        '(?is)<script\b[^>]*>.*?</script\s*>', ' ', 'g'),
-        '(?is)<style\b[^>]*>.*?</style\s*>', ' ', 'g'),
-        '(?s)<!--.*?-->', ' ', 'g'),
-        '(?i)<br\s*/?>', chr(10), 'g'),
-        '(?i)</(p|div|h1|h2|h3|h4|h5|h6|li|tr|ul|ol|table|blockquote)\s*>',
-        chr(10), 'g'),
-        '<[^>]*>', ' ', 'g'),
-      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-      '&apos;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-    '[ ' || chr(9) || chr(13) || ']+', ' ', 'g'),
-    ' ?' || chr(10) || ' ?', chr(10), 'g'),
-    chr(10) || '+', chr(10), 'g'),
-    '^\s+', '', 'g'),
-    '\s+$', '', 'g') AS plain
-FROM pages
-""")
-def html_text_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML→plain-text extraction (operators/web.html_to_text): both
-    engines wrap the documents text in identical boilerplate (script/
-    style bodies, comments, headings, entities — incl. a double-encoded
-    '&amp;&amp;'), then strip it. The whole chain is map-only Catalyst
-    regexp_replace/replace; DuckDB re-runs the same passes under RE2 —
-    byte-for-byte agreement is the check."""
-    from .operators.web import html_to_text
-    docs = t(spark, sf_dir, "documents")
-    pages = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit('<html><head><script type="text/js">var x = 1 &lt; 2;'
-                  '</script><style>p { color: red }</style></head>'
-                  '<body><!-- nav --><h1>Doc '),
-            F.col("doc_id").cast("string"),
-            F.lit("</h1><p>"), F.col("text"),
-            F.lit("</p><div>A &amp;&amp; B&nbsp;&lt;tag&gt;</div>"
-                  "<br/>fin</body></html>"),
-        ).alias("html"))
-    out = html_to_text(pages, "html", "plain")
-    return out.select("doc_id", "plain")
 
 
 @q("nb_quality", """
@@ -3032,65 +2507,6 @@ def journal_export_roundtrip(spark: SparkSession,
         "group", F.element_at("fields", "MESSAGE").alias("message"),
         F.element_at("fields", "PRIORITY").alias("priority"),
         "ts", "tag", "entry_ok")
-
-
-@q("url_canonical_dedup", """
-WITH u AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 2 = 0 THEN 'http' ELSE 'https' END AS sch,
-         'h' || CAST(doc_id % 40 AS VARCHAR) || '.example.com' AS host,
-         CASE WHEN doc_id % 11 = 10 THEN '/'
-              ELSE '/P' || CAST(doc_id % 9 AS VARCHAR) END AS p,
-         CASE WHEN doc_id % 3 < 2 THEN '?a=1&b=2' ELSE '' END AS qq
-  FROM documents),
-c AS (SELECT doc_id, sch || '://' || host || p || qq AS url_canon
-      FROM u)
-SELECT url_canon, CAST(count(*) AS BIGINT) AS n_urls,
-       CAST(min(doc_id) AS BIGINT) AS keep_id
-FROM c GROUP BY url_canon
-""")
-def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL-level dedup (operators/web.py canonical_url — the stage
-    crawl pipelines run before content dedup): per doc a MESSY url is
-    rendered by formula — mixed-case scheme/host, scheme-matched
-    default ports, trailing slashes, tracking params in shuffled
-    positions, fragments — then canonicalized and exact-deduped by
-    the canonical string (count + min-id keep per group). The oracle
-    constructs the EXPECTED canonical form directly from the same
-    formulas (it never runs a canonicalizer), so every rule —
-    lowercase, port strip, utm/fragment drop, param sort, slash
-    normalization — is value-checked independently. Map-only until
-    the one dedup agg; skew-free (hash keys)."""
-    from .operators.web import canonical_url
-    did = F.col("doc_id")
-    sch_raw = (F.when(did % 8 == 6, F.lit("HTTP"))
-               .when(did % 8 == 7, F.lit("HTTPS"))
-               .when(did % 2 == 0, F.lit("http"))
-               .otherwise(F.lit("https")))
-    host_raw = F.concat(F.lit("H"), (did % 40).cast("string"),
-                        F.lit(".Example.com"))
-    port = F.when(did % 5 == 0,
-                  F.when(did % 2 == 0, F.lit(":80"))
-                   .otherwise(F.lit(":443"))).otherwise(F.lit(""))
-    path_raw = (F.when(did % 11 == 10, F.lit(""))
-                .otherwise(F.concat(
-                    F.lit("/P"), (did % 9).cast("string"),
-                    F.when(did % 4 == 0, F.lit("/"))
-                     .otherwise(F.lit("")))))
-    q_raw = (F.when(did % 3 == 0, F.lit("?utm_source=t&b=2&a=1"))
-             .when(did % 3 == 1, F.lit("?b=2&a=1"))
-             .otherwise(F.lit("")))
-    frag = (F.when(did % 6 < 3,
-                   F.concat(F.lit("#s"), (did % 6).cast("string")))
-            .otherwise(F.lit("")))
-    url = F.concat(sch_raw, F.lit("://"), host_raw, port, path_raw,
-                   q_raw, frag)
-    docs = t(spark, sf_dir, "documents").select(
-        "doc_id", url.alias("url"))
-    return (canonical_url(docs)
-            .groupBy("url_canon")
-            .agg(F.count("*").alias("n_urls"),
-                 F.min("doc_id").alias("keep_id")))
 
 
 # ===========================================================================
@@ -3420,9 +2836,7 @@ def bm25_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT, idf snapped to integer milli-nats (the surprisal NOTES #25
     posture). The oracle replays the whole integer chain — truncated
     avgdl, norm_milli DIV, idf rounding, rank ties on doc_id — so
-    scores AND ranks are value-checked. Runs the salted two-phase
-    top-k path (salt_buckets=8) to keep the skewed-by-construction
-    per-query window exercised under the oracle."""
+    scores AND ranks are value-checked."""
     from .operators.tokens import bm25_topk
     docs = t(spark, sf_dir, "documents")
     d = docs.select("doc_id", F.split("text", " ").alias("tokens"))
@@ -3430,7 +2844,7 @@ def bm25_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
              (2, "hash"), (2, "merge"), (2, "sort"),
              (3, "customer"), (3, "query"), (3, "table")]
     qdf = spark.createDataFrame(terms, "query_id long, term string")
-    return bm25_topk(d, qdf, k=10, salt_buckets=8)
+    return bm25_topk(d, qdf, k=10)
 
 
 # ===========================================================================
@@ -3598,23 +3012,6 @@ def token_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  max_epochs_milli=1500)
 
 
-@q("compression_quality")  # rows-only: DEFLATE has no SQL oracle
-def compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """zlib compression-ratio quality signal (functions/text.py
-    compressed_size — the RedPajama-v2/Dolma "gzip ratio" field):
-    per-document permille ratio plus the keep verdict for the
-    200..900 band. Arrow-batched zlib kernel (no per-row Python); no
-    SQL engine can reproduce DEFLATE so this entry is deliberately
-    rows-only at the driver — the exact byte counts are pinned by
-    pytest against a direct zlib replay instead."""
-    docs = t(spark, sf_dir, "documents")
-    r = TX.compression_ratio_permille("text")
-    return (docs.select("doc_id", "source",
-                        r.alias("compress_permille"))
-            .withColumn("keep",
-                        F.col("compress_permille").between(200, 900)))
-
-
 # ===========================================================================
 # Reciprocal Rank Fusion (Cormack et al. SIGIR'09) over a BM25 query
 # ensemble — hybrid/expanded retrieval for RAG + decontamination
@@ -3720,49 +3117,6 @@ def rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rrf_fuse(lists, k=_RRF_K, top_n=_RRF_TOP_N)
 
 
-@q("tokenizer_fertility", """
-WITH per AS (
-  SELECT source,
-         CAST(len(regexp_extract_all(text, '\\w+|[^\\w\\s]'))
-              AS BIGINT) AS tk,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS wk,
-         CAST(octet_length(encode(text)) AS BIGINT) AS bytes
-  FROM documents WHERE length(text) > 0)
-SELECT source,
-       CAST(sum(tk) AS BIGINT) AS total_tokens,
-       CAST(sum(wk) AS BIGINT) AS total_words,
-       CAST(sum(bytes) AS BIGINT) AS total_bytes,
-       CAST(sum(tk) * 1000 // sum(wk) AS BIGINT)
-         AS tok_per_word_permille,
-       CAST(sum(bytes) * 1000 // sum(tk) AS BIGINT)
-         AS bytes_per_tok_permille
-FROM per GROUP BY source
-""")
-def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility audit — the tokens-per-word and
-    bytes-per-token ratios a pipeline tracks per source when choosing
-    or retraining a tokenizer (high fertility = the tokenizer
-    fragments that domain; bytes/token tracks multilingual cost).
-    BPE-ish pre-tokenizer counts (functions/text.py token_count_regex)
-    vs whitespace words vs UTF-8 bytes, ratios as integer permille
-    (NOTES #25 DIV discipline) — all map-side sums, one vocab-of-
-    sources-sized aggregate."""
-    docs = t(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    per = docs.select(
-        "source",
-        TX.token_count_regex("text").cast("long").alias("tk"),
-        TX.token_count_ws("text").cast("long").alias("wk"),
-        F.octet_length("text").cast("long").alias("bytes"))
-    return (per.groupBy("source")
-            .agg(F.sum("tk").alias("total_tokens"),
-                 F.sum("wk").alias("total_words"),
-                 F.sum("bytes").alias("total_bytes"),
-                 F.expr("sum(tk) * 1000 DIV sum(wk)")
-                 .alias("tok_per_word_permille"),
-                 F.expr("sum(bytes) * 1000 DIV sum(tk)")
-                 .alias("bytes_per_tok_permille")))
-
-
 @q("winnow_vs_corpus", _WINNOW_FP_SQL + """,
 nfp AS (SELECT DISTINCT doc_id, v FROM fp WHERE doc_id % 2 = 1),
 cfp AS (SELECT DISTINCT doc_id, v FROM fp WHERE doc_id % 2 = 0),
@@ -3796,79 +3150,6 @@ def winnow_vs_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                             max_fp_freq=20)
     return surv.select("doc_id", "source",
                        F.length("text").cast("long").alias("n_chars"))
-
-
-@q("quality_ensemble", r"""
-WITH g AS (
-  SELECT doc_id, source,
-         len(string_split(text, ' ')) AS nw,
-         list_sum(list_transform(string_split(text, ' '),
-                                 w -> len(w))) AS sc,
-         len(list_distinct(string_split(text, ' '))) AS nd,
-         list_max(list_transform(string_split(text, ' '),
-                                 w -> len(w))) AS mx
-  FROM documents),
-gq AS (
-  SELECT doc_id, source,
-         (CASE WHEN nw < 30 THEN 1 ELSE 0 END
-          + CASE WHEN sc < 4 * nw OR sc > 10 * nw THEN 2 ELSE 0 END
-          + CASE WHEN 2 * nd < 1 * nw THEN 4 ELSE 0 END
-          + CASE WHEN mx > 7 THEN 8 ELSE 0 END) AS gq
-  FROM g),
-ex AS (
-  SELECT doc_id, source, lang = 'en' AS pos, tok
-  FROM (SELECT doc_id, source, lang,
-               unnest(list_filter(string_split_regex(text, '\s+'),
-                                  w -> w <> '')) AS tok
-        FROM documents)),
-freq AS (
-  SELECT tok,
-         sum(CASE WHEN pos THEN 1 ELSE 0 END) AS ca,
-         sum(CASE WHEN pos THEN 0 ELSE 1 END) AS cb
-  FROM ex GROUP BY tok),
-tot AS (SELECT sum(ca) AS na, sum(cb) AS nb, count(*) AS v FROM freq),
-model AS (
-  SELECT tok,
-         CAST(round((ln((ca + 1.0) / (na + 1.0 * v))
-                     - ln((cb + 1.0) / (nb + 1.0 * v))) * 1000)
-              AS BIGINT) AS w
-  FROM freq, tot),
-nbs AS (
-  SELECT e.doc_id, e.source, CAST(sum(m.w) AS BIGINT) AS llr
-  FROM ex e JOIN model m USING (tok) GROUP BY e.doc_id, e.source),
-sx AS (SELECT doc_id, source, unnest(string_split(text, ' ')) AS tok
-       FROM documents),
-f2 AS (SELECT tok, count(*) AS c FROM sx GROUP BY tok),
-t2 AS (SELECT sum(c) AS t FROM f2),
-m2 AS (SELECT tok, CAST(round(-ln(c / t) * 1000) AS BIGINT) AS nll
-       FROM f2, t2),
-sp AS (SELECT doc_id, source, sum(nll) AS nll, count(*) AS n
-       FROM sx JOIN m2 USING (tok) GROUP BY doc_id, source),
-r AS (
-  SELECT gq.doc_id, gq.source,
-         gq.gq
-         + CASE WHEN nbs.llr IS NULL OR nbs.llr < 0
-                THEN 16 ELSE 0 END
-         + CASE WHEN sp.nll IS NULL OR (sp.nll // sp.n // 500) > 6
-                THEN 32 ELSE 0 END AS er
-  FROM gq LEFT JOIN nbs USING (doc_id, source)
-          LEFT JOIN sp USING (doc_id, source))
-SELECT doc_id, source, CAST(er AS INT) AS ens_reasons,
-       er = 0 AS keep
-FROM r
-""")
-def quality_ensemble_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-signal quality gate (operators/tokens.py
-    quality_ensemble): Gopher structural bits + Naive-Bayes exemplar
-    log-odds (lang='en' class, fail < 0) + unigram surprisal band
-    (fail > 6) combined into one per-document reason bitmask. The
-    oracle replays ALL THREE signal chains — the Gopher rules, the
-    smoothed NB model and BIGINT llr sums, the milli-nat unigram
-    model and banding — and the bitmask combine, row for row."""
-    from .operators.tokens import quality_ensemble
-    docs = t(spark, sf_dir, "documents")
-    return quality_ensemble(docs, F.col("lang") == "en",
-                            nb_min_millinats=0, band_max=6)
 
 
 @q("fim_transform", f"""

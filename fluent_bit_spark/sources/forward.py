@@ -357,20 +357,3 @@ def read_forward_files(spark: SparkSession, path: str | list[str],
            .select("content", "path"))
     return decode_forward_binary(raw, "content", fields,
                                  path_col="path" if with_path else None)
-
-
-def read_forward_files_stream(spark: SparkSession, path: str,
-                              fields: list[tuple[str, str]],
-                              max_files: int | None = None) -> DataFrame:
-    """Streaming twin: a landing-directory tail of ``.fwd`` chunk
-    files — the continuous-arrival shape of in_forward, like the OTLP
-    landing-dir tail (sources/otlp.py)."""
-    # the binaryFile schema is fixed but the streaming source still
-    # demands it explicitly
-    reader = (spark.readStream.format("binaryFile")
-              .schema("path string, modificationTime timestamp, "
-                      "length long, content binary"))
-    if max_files is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files)
-    raw = reader.load(path).select("content", "path")
-    return decode_forward_binary(raw, "content", fields)

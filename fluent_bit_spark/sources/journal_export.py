@@ -217,18 +217,3 @@ def with_journal_tag(df: DataFrame, prefix: str = "systemd.",
     return df.withColumn(
         out, F.concat(F.lit(prefix),
                       F.coalesce(unit, F.lit("unknown"))))
-
-
-def read_export_stream(spark, path: str,
-                       max_files: int | None = None) -> DataFrame:
-    """Streaming twin: a landing-directory tail of journal export
-    captures (the systemd-journal-remote spool shape) — one decoded
-    row per entry, tagged by unit."""
-    reader = (spark.readStream.format("binaryFile")
-              .schema("path string, modificationTime timestamp, "
-                      "length long, content binary"))
-    if max_files is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files)
-    raw = reader.load(path).select("content", "path")
-    return with_journal_tag(
-        decode_export(raw, "content", passthrough=["path"]))

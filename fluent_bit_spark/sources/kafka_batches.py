@@ -216,22 +216,3 @@ def read_kafka_segments(spark: SparkSession, path: str | list[str],
                    F.col("path").alias("_input_file")))
     pt = ["topic"] + (["_input_file"] if with_path else [])
     return decode_kafka_binary(raw, "content", passthrough=pt)
-
-
-def read_kafka_segments_stream(spark: SparkSession, path: str,
-                               max_files: int | None = None
-                               ) -> DataFrame:
-    """Streaming twin: a landing-directory tail of ``.log`` batch
-    files — the continuous-arrival shape of in_kafka consuming, like
-    the forward landing-dir tail (sources/forward.py)."""
-    reader = (spark.readStream.format("binaryFile")
-              .schema("path string, modificationTime timestamp, "
-                      "length long, content binary"))
-    if max_files is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files)
-    raw = (reader.load(path)
-           .select("content",
-                   F.regexp_extract(F.col("path"),
-                                    r"([^/]+)-[0-9a-f]{12}\.log$", 1)
-                   .alias("topic")))
-    return decode_kafka_binary(raw, "content", passthrough=["topic"])

@@ -99,23 +99,6 @@ def read_otlp_logs(spark: SparkSession, path: str) -> DataFrame:
                              .json(path))
 
 
-def read_otlp_logs_stream(spark: SparkSession, path: str,
-                          max_files_per_trigger: int | None = None
-                          ) -> DataFrame:
-    """Streaming twin of ``read_otlp_logs``: a landing-directory tail
-    of OTLP/JSON LogsData files (the collector file-sink → Spark
-    ingestion shape). Same explicit schema, same flatten — the returned
-    streaming frame feeds the pipeline's streaming stage builders. The
-    flatten is stateless (explodes + projections), so any trigger mode
-    works and batch/stream outputs are row-identical for the same
-    files."""
-    reader = spark.readStream.schema(OTLP_LOGS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    return flatten_otlp_logs(reader.json(path))
-
-
 def parse_otlp_column(df: DataFrame, col: str) -> DataFrame:
     """Parse a STRING column carrying a LogsData JSON document (e.g. a
     log line that is itself an OTLP export) and flatten — the

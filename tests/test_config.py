@@ -6,8 +6,6 @@ guarantee: one config API over both formats)."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -229,10 +227,11 @@ def test_config_errors():
     with pytest.raises(ValueError, match="no \\[OUTPUT\\]"):
         spec_from_tree(parse_classic("[INPUT]\n    Name tokens\n"),
                        vocab=["a"])
-    with pytest.raises(ValueError, match="unsupported filter"):
-        spec_from_tree(parse_classic(
-            "[FILTER]\n    Name kafka\n[OUTPUT]\n    Match *\n"),
-            vocab=["a"])
+    for name in ("kafka", "gopher_quality"):
+        with pytest.raises(ValueError, match="unsupported filter"):
+            spec_from_tree(parse_classic(
+                f"[FILTER]\n    Name {name}\n[OUTPUT]\n    Match *\n"),
+                vocab=["a"])
     with pytest.raises(ValueError, match="4 fields"):
         spec_from_tree(parse_classic(
             "[FILTER]\n    Name rewrite_tag\n    Rule $k x\n"
@@ -1127,44 +1126,6 @@ pipeline:
     assert _confs(sc, "checklist")[0]["sets"] == [("hit", "yes")]
 
 
-def test_gopher_quality_filter_from_config(spark):
-    """[FILTER] gopher_quality: thresholds map onto gopher_filter;
-    Action flag stamps gq_reasons/gq_keep, Action drop removes
-    failures; config run equals the direct call."""
-    from fluent_bit_spark.functions.text import gopher_filter
-    from fluent_bit_spark.plans.pipeline import _post_parse_stages
-    base = ("[INPUT]\n    Name tokens\n"
-            "[FILTER]\n    Name gopher_quality\n    Match *\n"
-            "    Key  text\n    Min_words 5\n    Max_word_len 6\n"
-            "{extra}"
-            "[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
-    df = spark.createDataFrame(
-        [("d1", "alpha bravo carol delta echos", "s1", True),
-         ("d2", "puny doc", "s1", True),
-         ("d3", "has a reallyoverlongword in it somewhere", "s1", True)],
-        "doc_id string, text string, source string, parse_ok boolean"
-    ).withColumn("fields", F.expr("named_struct('kind', 'raw')"))
-
-    spec, _ = spec_from_tree(parse_classic(base.format(extra="")),
-                             vocab=["x"])
-    [gopher] = _confs(spec, "gopher_quality")
-    assert gopher["thresholds"]["min_words"] == 5
-    assert gopher["thresholds"]["max_word_len"] == 6
-    got = {r.doc_id: (r.gq_reasons, r.gq_keep) for r in
-           _post_parse_stages(spark, df, spec).collect()}
-    want = {r.doc_id: (r.gq_reasons, r.gq_keep) for r in
-            gopher_filter(df, col="text", min_words=5,
-                          max_word_len=6).collect()}
-    assert got == want
-    assert got["d1"][1] is True and not got["d2"][1] and not got["d3"][1]
-
-    spec_d, _ = spec_from_tree(parse_classic(base.format(
-        extra="    Action drop\n")), vocab=["x"])
-    out = _post_parse_stages(spark, df, spec_d)
-    assert {r.doc_id for r in out.collect()} == {"d1"}
-    assert "gq_keep" not in out.columns
-
-
 def test_stratified_split_filter_from_config(spark, fixture_paths):
     """[FILTER] stratified_split: repeatable Split_rate lines set
     per-group permille rates; config run equals the direct operator
@@ -1193,12 +1154,10 @@ def test_stratified_split_filter_from_config(spark, fixture_paths):
     assert got == want and len(got) == 400
 
 
-def test_gopher_split_config_errors(tmp_path):
+def test_stratified_split_config_errors(tmp_path):
     base = ("[INPUT]\n    Name tokens\n[FILTER]\n{body}\n"
             "[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
     cases = [
-        ("    Name gopher_quality\n    Action discard", "flag|drop"),
-        ("    Name gopher_quality\n    Min_distinct_pct 150", "0..100"),
         ("    Name stratified_split\n    Split_rate webonly",
          "GROUP PERMILLE"),
         ("    Name stratified_split\n    Split_rate web 2000",
@@ -1208,21 +1167,19 @@ def test_gopher_split_config_errors(tmp_path):
         with pytest.raises(ValueError, match=msg):
             spec_from_tree(parse_classic(base.format(body=body)),
                            vocab=["x"])
-    # one-per-pipeline guards
-    for flt in ("gopher_quality", "stratified_split"):
-        two = (f"[INPUT]\n    Name tokens\n"
-               f"[FILTER]\n    Name {flt}\n    Match *\n"
-               f"[FILTER]\n    Name {flt}\n    Match *\n"
-               f"[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
-        with pytest.raises(ValueError, match=f"one \\[FILTER\\] {flt}"):
-            spec_from_tree(parse_classic(two), vocab=["x"])
+    # one-per-pipeline guard
+    flt = "stratified_split"
+    two = (f"[INPUT]\n    Name tokens\n"
+           f"[FILTER]\n    Name {flt}\n    Match *\n"
+           f"[FILTER]\n    Name {flt}\n    Match *\n"
+           f"[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
+    with pytest.raises(ValueError, match=f"one \\[FILTER\\] {flt}"):
+        spec_from_tree(parse_classic(two), vocab=["x"])
 
 
-def test_gopher_split_yaml_classic_parity():
+def test_stratified_split_yaml_classic_parity():
     classic = parse_classic(
         "[INPUT]\n    Name tokens\n"
-        "[FILTER]\n    Name gopher_quality\n    Match *\n"
-        "    Min_words 10\n    Action drop\n"
         "[FILTER]\n    Name stratified_split\n    Match *\n"
         "    Split_rate web 100\n    Default_rate 10\n"
         "[OUTPUT]\n    Name file\n    Match *\n    Sink s\n")
@@ -1231,7 +1188,6 @@ pipeline:
   inputs:
     - {name: tokens}
   filters:
-    - {name: gopher_quality, match: "*", min_words: 10, action: drop}
     - name: stratified_split
       match: "*"
       split_rate: ["web 100"]
@@ -1242,7 +1198,6 @@ pipeline:
     sc, _ = spec_from_tree(classic, vocab=["x"])
     sy, _ = spec_from_tree(yaml_tree, vocab=["x"])
     assert sc == sy
-    assert _confs(sc, "gopher_quality")[0]["action"] == "drop"
     assert _confs(sc, "stratified_split")[0]["rates"] == {"web": 100}
 
 

@@ -56,11 +56,7 @@ def test_window_prefers_thin_history_over_veterans():
 
 # Queries that deliberately carry NO DuckDB oracle (the driver records a
 # rows-only check): keep this list tiny and justified per entry.
-ROWS_ONLY = {
-    # DEFLATE has no SQL oracle; the zlib ratio signal is pytest-pinned
-    # (tests/test_tokens.py) — fbee60b.
-    "compression_quality",
-}
+ROWS_ONLY: set[str] = set()
 
 
 def test_every_query_has_matching_oracle_keyset():

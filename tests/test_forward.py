@@ -334,23 +334,6 @@ def test_config_input_name_forward(tmp_path):
     assert io["input_format"] == "forward"
 
 
-def test_forward_stream_landing_dir(spark, tmp_path):
-    """Streaming twin: .fwd files dropped in a landing dir arrive as
-    decoded rows (availableNow batch drain)."""
-    df = _event_frame(spark).withColumn("tag", F.lit("t"))
-    ent = fwd.entries_column(df, "ts", FIELDS)
-    land = str(tmp_path / "land")
-    fwd.write_forward_chunks(fwd.pack_chunks(ent, "tag", "entry"), land)
-    out = []
-    q = (fwd.read_forward_files_stream(spark, land + "/*.fwd", FIELDS)
-         .writeStream.format("memory").queryName("fwd_stream")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(60)
-    rows = spark.sql("select * from fwd_stream").collect()
-    assert sorted(r["event_id"] for r in rows) == [1, 2, 3]
-    assert all(r["tag"] == "t" for r in rows)
-
-
 def test_gzip_compressed_chunks_roundtrip(spark, tmp_path):
     """CompressedPackedForward (out_forward Compress gzip): gzipped
     entry streams land smaller and decode identically."""

@@ -104,27 +104,3 @@ def test_decode_binary_column_and_missing_unit(spark):
     assert len(out) == 2
     assert out[0]["fields"]["MESSAGE"] == "b\nc"
     assert {r["tag"] for r in out} == {"systemd.unknown"}
-
-
-def test_journal_stream_landing_dir(spark, tmp_path):
-    """Streaming twin: export captures dropped in a landing dir
-    arrive as decoded, unit-tagged entries."""
-    import os
-
-    from fluent_bit_spark.sources.journal_export import (
-        read_export_stream)
-
-    land = tmp_path / "land"
-    land.mkdir()
-    buf = b"".join(py_encode_entry([
-        ("MESSAGE", f"m{i}"), ("_SYSTEMD_UNIT", f"u{i % 2}.service")])
-        for i in range(6))
-    (land / "cap1.export").write_bytes(buf)
-    q = (read_export_stream(spark, str(land) + "/*.export")
-         .writeStream.format("memory").queryName("journal_stream")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(60)
-    rows = spark.sql("select * from journal_stream").collect()
-    assert len(rows) == 6
-    assert {r["tag"] for r in rows} == {"systemd.u0.service",
-                                        "systemd.u1.service"}

@@ -175,26 +175,6 @@ def test_header_type_rejection(spark):
                                header_cols=["event_id"])
 
 
-def test_kafka_stream_landing_dir(spark, tmp_path):
-    """Streaming twin: .log batch files dropped in a landing dir
-    arrive as decoded records (availableNow batch drain)."""
-    ev = _events(spark, 60).withColumn(
-        "k", F.col("event_id").cast("string"))
-    chunks = kb.pack_record_batches(
-        ev, topic_col="topic", ts_col="ts", key_col="k",
-        value_col="payload")
-    land = str(tmp_path / "land")
-    kb.write_kafka_segments(chunks, land)
-    q = (kb.read_kafka_segments_stream(spark, land + "/*.log")
-         .writeStream.format("memory").queryName("kafka_stream")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(60)
-    rows = spark.sql("select * from kafka_stream").collect()
-    assert len(rows) == 60
-    assert sorted({r["topic"] for r in rows}) == ["t0", "t1", "t2"]
-    assert all(r["crc_ok"] for r in rows)
-
-
 def test_kafka_output_from_config(spark, tmp_path):
     """[OUTPUT] Name kafka: a config-driven run lands RecordBatch v2
     segment files whose decoded records reproduce the routed good

@@ -65,28 +65,3 @@ def test_otlp_read_plan_is_map_only(spark, tmp_path):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Generate" in plan  # the explode chain
-
-
-def test_read_otlp_logs_stream_matches_batch(spark, tmp_path):
-    """Streaming landing-dir tail over OTLP files: an availableNow pass
-    emits exactly the batch reader's rows (the flatten is stateless)."""
-    from fluent_bit_spark.sources.otlp import (read_otlp_logs,
-                                               read_otlp_logs_stream)
-    d = tmp_path / "landing"
-    d.mkdir()
-    for i in range(3):
-        recs = [{"timeUnixNano": str(10**18 + i * 10 + j),
-                 "severityNumber": 1 + j, "severityText": f"T{j}",
-                 "body": {"stringValue": f"m{i}-{j}"}}
-                for j in range(2)]
-        (d / f"part{i}.json").write_text(
-            json.dumps(_envelope(recs, service=f"svc{i}")) + "\n")
-    stream = read_otlp_logs_stream(spark, str(d))
-    q = (stream.writeStream.format("memory").queryName("otlp_mem")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {(r.ts_unix_nano, r.body, r.resource["service.name"])
-           for r in spark.table("otlp_mem").collect()}
-    want = {(r.ts_unix_nano, r.body, r.resource["service.name"])
-            for r in read_otlp_logs(spark, str(d) + "/*").collect()}
-    assert got == want and len(got) == 6

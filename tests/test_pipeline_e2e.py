@@ -248,6 +248,19 @@ def test_unknown_formats_fail_before_any_write(spark, fixture_paths,
     assert not os.path.exists(out)
 
 
+@pytest.mark.parametrize("n_slices", [0, -1])
+def test_slice_count_below_one_raises(spark, fixture_paths, tmp_path,
+                                      n_slices):
+    """A slice count below 1 cuts no slice, so the call would write
+    nothing and report success. It raises before any listing or write."""
+    out = str(tmp_path / "o")
+    with pytest.raises(ValueError, match="n_slices"):
+        run_pipeline(spark, _spec(fixture_paths), fixture_paths["tokens"],
+                     out, n_slices=n_slices)
+    assert not os.path.exists(f"{out}/sinks")
+    assert not os.path.exists(f"{out}/_checkpoints")
+
+
 @pytest.mark.parametrize("sink_format", ["parquet", "json_lines"])
 def test_sinks_match_oracle(spark, fixture_paths, golden, tmp_path,
                             sink_format):

@@ -310,34 +310,6 @@ def test_line_dedup_reuses_materialized_lines(spark, tokens_df):
     spark.catalog.clearCache()
 
 
-def test_bpe_paths_plan_shapes(spark):
-    """The BPE encode paths carry the right 100 TB shape: the Arrow
-    kernel is MAP-ONLY (no Exchange — a tokenize pass must never
-    shuffle the corpus) with exactly ONE Python boundary; the Catalyst
-    chain has no Python boundary at all. word_counts' only exchange is
-    the vocab-bounded partial-aggregated groupBy."""
-    from fluent_bit_spark.functions.bpe import (
-        bpe_apply_expr, bpe_encode_arrow, word_counts,
-    )
-    df = spark.createDataFrame(
-        [(0, "the quick brown fox")], "id long, text string")
-
-    plan = (bpe_encode_arrow(df, [("t", "h")])
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan, plan
-    assert plan.count("MapInPandas") == 1
-
-    plan = (df.select(bpe_apply_expr("text", [("t", "h")]))
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan
-    assert "Python" not in plan and "Arrow" not in plan
-
-    plan = (word_counts(df)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert plan.count("Exchange") == 1
-    assert plan.count("HashAggregate") == 2     # partial + final
-
-
 def test_cms_plans_are_bounded_and_broadcast(spark):
     """count_min_table's only wide exchange is the d×w-bounded cell
     agg; cms_estimate joins the sketch via BroadcastHashJoin; neither

@@ -318,88 +318,6 @@ def test_split_holdout_verb_matches_operator(sp, spark):
     assert {"train", "holdout"} == set(got.values())
 
 
-def test_normalize_verb_matches_operator(sp, spark):
-    """NORMALIZE STREAM:x FORM NFKC LOWER COLLAPSE == normalize_text."""
-    from fluent_bit_spark.operators.web import normalize_text
-    df = spark.createDataFrame(
-        [("a", "Café   BAR"), ("b", "ＡＢ  x")],
-        "doc_id string, text string")
-    sp.register_stream("webdocs", df)
-    got = sp.sql("NORMALIZE STREAM:webdocs FORM NFKC LOWER COLLAPSE;")
-    want = normalize_text(df, "text", form="NFKC", lower=True,
-                          collapse_ws=True)
-    g = {(r.doc_id, r.text) for r in got.collect()}
-    assert g == {(r.doc_id, r.text) for r in want.collect()}
-    assert ("a", "café bar") in g and ("b", "ab x") in g
-
-
-def test_cap_host_verb_matches_operator(sp, spark):
-    """CAP STREAM:x HOST h BEST n BY s [ID i] [SALT k] == cap_per_host
-    (salted and plain select the same rows)."""
-    from pyspark.sql import functions as F
-    from fluent_bit_spark.operators.web import cap_per_host
-    rows = [(i, "big.com" if i % 4 else "small.com", float(i % 9))
-            for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, host string, "
-                                     "score double")
-    sp.register_stream("pages", df)
-    got = sp.sql("CAP STREAM:pages HOST host BEST 3 BY score "
-                 "ID doc_id SALT 4;")
-    want = cap_per_host(df, "host", [F.desc("score"), F.col("doc_id")], 3)
-    assert sorted(r.doc_id for r in got.collect()) == \
-           sorted(r.doc_id for r in want.collect())
-
-
-def test_score_quality_verb_matches_operator(sp, spark):
-    """SCORE QUALITY STREAM:x LABEL col 'v' == nb_quality_score."""
-    from pyspark.sql import functions as F
-    from fluent_bit_spark.operators.tokens import nb_quality_score
-    docs = spark.createDataFrame(
-        [("g1", "good", "clean prose flows here"),
-         ("b1", "junk", "spam spam buy click")],
-        "doc_id string, source string, text string")
-    sp.register_stream("qdocs", docs)
-    got = sp.sql("SCORE QUALITY STREAM:qdocs LABEL source 'good';")
-    want = nb_quality_score(docs, F.col("source") == "good")
-    g = {(r.doc_id, r.llr_millinats, r.pred) for r in got.collect()}
-    assert g == {(r.doc_id, r.llr_millinats, r.pred)
-                 for r in want.collect()}
-
-
-def test_redact_pii_verb_matches_functions(sp, spark):
-    """REDACT PII STREAM:x [COL c] [NOCOUNTS] == text.redact +
-    text.pii_counts (scrub in place, <name>_hits audit columns)."""
-    from fluent_bit_spark.functions.text import pii_counts, redact
-    df = spark.createDataFrame(
-        [("a", "mail x@y.io from 10.1.2.3"), ("b", "clean")],
-        "doc_id string, text string")
-    sp.register_stream("pii", df)
-    got = sp.sql("REDACT PII STREAM:pii;")
-    want = (df.select("*", *pii_counts("text"))
-              .withColumn("text", redact("text")))
-    assert sorted(map(tuple, got.collect())) == \
-           sorted(map(tuple, want.collect()))
-    assert ("a", "mail <EMAIL> from <IP>", 1, 1, 0) in \
-           {(r.doc_id, r.text, r.email_hits, r.ipv4_hits, r.phone_hits)
-            for r in got.collect()}
-    nc = sp.sql("REDACT PII STREAM:pii NOCOUNTS;")
-    assert nc.columns == df.columns
-
-
-def test_extract_text_verb_matches_operator(sp, spark):
-    """EXTRACT TEXT STREAM:x [COL c] [AS out] == html_to_text."""
-    from fluent_bit_spark.operators.web import html_to_text
-    df = spark.createDataFrame(
-        [("a", "<p>Hi &amp; bye</p><script>x<y</script>")],
-        "doc_id string, html string")
-    sp.register_stream("pages2", df)
-    got = sp.sql("EXTRACT TEXT STREAM:pages2 COL html AS plain;")
-    want = html_to_text(df, "html", "plain")
-    assert [tuple(r) for r in got.collect()] == \
-           [tuple(r) for r in want.collect()]
-    assert got.collect()[0].plain == "Hi & bye"
-
-
 def test_score_surprisal_order2_verb(sp, spark):
     """SCORE SURPRISAL STREAM:x ORDER 2 == bigram_surprisal; the
     default stays the unigram scorer."""
@@ -507,25 +425,6 @@ def test_winnow_allocate_fuse_verbs_match_operators(sp, spark):
     want_f = {tuple(r) for r in
               rrf_fuse([la, lb], k=60, top_n=2).collect()}
     assert got_f == want_f and got_f
-
-
-def test_gate_quality_verb_matches_operator(sp, spark):
-    """GATE QUALITY == quality_ensemble with the same parameters."""
-    from fluent_bit_spark.operators.tokens import quality_ensemble
-    kv = " ".join(f"wordy{i:02d}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(1, "a", "en", kv + " " + kv),
-         (2, "a", "en", kv + " " + kv),
-         (3, "b", "xx", "tiny doc here")],
-        "doc_id long, source string, lang string, text string")
-    sp.register_stream("gdocs", docs)
-    got = {(r.doc_id, r.ens_reasons, r.keep) for r in
-           sp.sql("GATE QUALITY STREAM:gdocs LABEL lang 'en' "
-                  "NBMIN 0 BAND 8;").collect()}
-    want = {(r.doc_id, r.ens_reasons, r.keep) for r in
-            quality_ensemble(docs, F.col("lang") == "en",
-                             nb_min_millinats=0, band_max=8).collect()}
-    assert got == want and any(k for *_, k in got)
 
 
 def test_fim_verb_matches_operator(sp, spark):

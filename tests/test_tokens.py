@@ -355,58 +355,6 @@ def test_prefix_sum_hash_order_with_domain_width_matches_naive(spark):
     assert n_groups <= 64, n_groups  # uniform hashes: ~10 expected
 
 
-def test_redact_pii_edges(spark):
-    from fluent_bit_spark.functions.text import pii_counts, redact
-    cases = [
-        # two emails in one line both scrub and both count
-        ("a@b.io and c.d+e@f-g.co end", "<EMAIL> and <EMAIL> end", 2, 0, 0),
-        # digits inside an email never double-count as IP/phone
-        ("x 1.2.3.4@mail.com y", "x <EMAIL> y", 1, 0, 0),
-        ("ip 10.0.0.255 here", "ip <IP> here", 0, 1, 0),
-        # dotted decimals with >3-digit octets are not IPs
-        ("v 1.2.3.4567 w", "v 1.2.3.4567 w", 0, 0, 0),
-        ("call +1-555-123-4567 now", "call <PHONE> now", 0, 0, 1),
-        # too-short digit run is not a phone
-        ("+12-34 nope", "+12-34 nope", 0, 0, 0),
-        ("", "", 0, 0, 0),
-    ]
-    df = spark.createDataFrame([(s,) for s, *_ in cases], ["line"])
-    got = (df.select("line", redact("line").alias("r"),
-                     *pii_counts("line"))
-             .collect())
-    by_line = {r["line"]: r for r in got}
-    for line, want, em, ip, ph in cases:
-        r = by_line[line]
-        assert r["r"] == want, line
-        assert (r["email_hits"], r["ipv4_hits"], r["phone_hits"]) == \
-            (em, ip, ph), line
-
-
-def test_redact_patterns_match_in_duckdb_identically(spark):
-    """The RE2-compatibility contract: the same pattern strings produce
-    the same scrub under Spark (Java regex) and DuckDB (RE2)."""
-    import duckdb
-
-    from fluent_bit_spark.functions.text import PII_RULES, redact
-    lines = [
-        "a@b.io x 10.1.2.3 +1-555-0000042 t",
-        "no pii at all",
-        "edge a@b.c 999.999.999.999 +1-2-3",
-    ]
-    df = spark.createDataFrame([(s,) for s in lines], ["line"])
-    spark_out = [r["r"] for r in
-                 df.select(redact("line").alias("r")).collect()]
-    con = duckdb.connect()
-    duck_out = []
-    for s in lines:
-        expr = "l"
-        for _, pat, repl in PII_RULES:  # apply in rule order, innermost out
-            expr = (f"regexp_replace({expr}, '{pat}', '{repl}', 'g')")
-        duck_out.append(con.execute(
-            f"SELECT {expr} FROM (SELECT ? AS l)", [s]).fetchone()[0])
-    assert spark_out == duck_out
-
-
 def test_unigram_surprisal_matches_pure_python(spark):
     """Milli-nat surprisal sums equal a pure-python unigram model, and
     rarer tokens always score a higher per-token surprisal."""
@@ -467,35 +415,6 @@ def test_stratified_split_rates_and_determinism(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="0..1000"):
         stratified_split(df, "source", "doc_id", {"s_even": 1500})
-
-
-def test_gopher_filter_rules_and_bitmask(spark):
-    """Each rule trips its own bit; a clean doc keeps; thresholds are
-    integer-exact at the boundary (no float ratio wobble)."""
-    from fluent_bit_spark.functions.text import gopher_filter
-    rows = [
-        ("clean", " ".join(f"word{i:02d}" for i in range(40))),   # 0
-        ("short", "just a few words here"),                       # bit 1
-        ("tiny",  " ".join(["ab"] * 40)),      # mean<4 AND repeat: 2|4
-        ("longw", " ".join(f"word{i:02d}" for i in range(39))
-                  + " superduperlongword"),                       # bit 8
-    ]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    got = {r.doc_id: (r.gq_reasons, r.gq_keep)
-           for r in gopher_filter(df).collect()}
-    assert got["clean"] == (0, True)
-    assert got["short"][0] & 1 and not got["short"][1]
-    assert got["tiny"][0] & 2 and got["tiny"][0] & 4
-    assert got["longw"] == (8, False)
-    # boundary exactness: mean length exactly 4.0 passes (sc == 4*nw)
-    edge = spark.createDataFrame(
-        [("e", " ".join(["abcd"] * 30))], "doc_id string, text string")
-    r = gopher_filter(edge).collect()[0]
-    assert r.gq_reasons & 2 == 0
-    # map-only plan
-    out = gopher_filter(df)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Python" not in plan
 
 
 def test_tfidf_topk_matches_pure_python(spark):
@@ -907,19 +826,6 @@ def test_bm25_topk_matches_pure_python(spark):
     assert got == _bm25_reference(docs, queries, k=10)
 
 
-def test_bm25_topk_salted_equals_unsalted(spark):
-    docs = [(i, [f"w{(i + j) % 4}" for j in range(2 + i % 5)])
-            for i in range(60)]
-    qdf = spark.createDataFrame([(1, "w0"), (1, "w2"), (2, "w3")],
-                                "query_id long, term string")
-    ddf = spark.createDataFrame(docs, "doc_id long, tokens array<string>")
-    plain = sorted(map(tuple, TK.bm25_topk(ddf, qdf, k=5).collect()))
-    salted = sorted(map(tuple,
-                        TK.bm25_topk(ddf, qdf, k=5,
-                                     salt_buckets=7).collect()))
-    assert plain == salted and plain
-
-
 def test_bm25_topk_rejects_bad_k(spark):
     import pytest
     ddf = spark.createDataFrame([(1, ["a"])],
@@ -1111,35 +1017,6 @@ def test_token_budget_all_capped_when_budget_exceeds_capacity(spark):
     assert out["a"]["epochs_milli"] == 4000
 
 
-def test_compression_ratio_matches_zlib_replay(spark):
-    import zlib
-
-    from fluent_bit_spark.functions.text import (
-        compressed_size, compression_ratio_permille,
-    )
-    rows = [("prose", "the quick brown fox jumps over the lazy dog " * 8),
-            ("rep", "ab" * 300),
-            ("rand", "kq9x!Zr@7Lm#2Vw$8Hn%4Jd^6Tf&1Bg*5Ps(3Cy)0"),
-            ("empty", ""),
-            ("null", None),
-            ("uni", "héllo wörld ünïcode " * 10)]
-    d = spark.createDataFrame(rows, "doc_id string, text string")
-    out = {r["doc_id"]: r for r in d.select(
-        "doc_id", compressed_size("text").alias("cs"),
-        compression_ratio_permille("text").alias("pm")).collect()}
-    for doc_id, text in rows:
-        if text is None:
-            assert out[doc_id]["cs"] is None
-            assert out[doc_id]["pm"] is None
-            continue
-        cs = len(zlib.compress(text.encode("utf-8"), 6))
-        assert out[doc_id]["cs"] == cs, doc_id
-        raw = len(text.encode("utf-8"))
-        assert out[doc_id]["pm"] == (cs * 1000 // raw if raw else None)
-    # signal direction: repetition compresses far below line noise
-    assert out["rep"]["pm"] < out["prose"]["pm"] < out["rand"]["pm"]
-
-
 # ---------------------------------------------------------------------------
 # reciprocal rank fusion (Cormack et al. SIGIR'09)
 # ---------------------------------------------------------------------------
@@ -1225,64 +1102,6 @@ def test_winnow_artifact_append_is_exact(spark):
                 TK.winnow_corpus_fp(c).unionByName(
                     TK.winnow_corpus_fp(b)).collect()}
     assert rebuilt == appended
-
-
-def test_quality_ensemble_composes_its_signals(spark):
-    """quality_ensemble == the bitwise combination of its three
-    component operators computed independently (each component has its
-    own exact tests/oracle; this pins the composition), and the
-    fixture exercises the gopher, NB and surprisal bits."""
-    from pyspark.sql import functions as F
-
-    from fluent_bit_spark.functions.text import gopher_filter
-
-    # two docs sharing a 20-word vocab twice over: enough corpus mass
-    # that their tokens are NOT rare (keepers), 50% distinct (gopher
-    # bit 4 passes), 6-char words (mean-length band passes)
-    kv = " ".join(f"wordy{i:02d}" for i in range(20))
-    rows = [
-        (1, "a", "en", kv + " " + kv),
-        (2, "a", "en", kv + " " + kv),
-        # short doc → gopher bit 1
-        (3, "b", "en", "tiny doc here"),
-        # negative-class doc with its own vocab → NB bit 16
-        (4, "b", "xx", " ".join(["umlaut prefix suffix infix token"] * 8)),
-        # rare-vocab doc (40 corpus singletons) → surprisal bit 32
-        (5, "c", "en", " ".join(f"rare{i}" for i in range(40))),
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, source string, lang string, text string")
-    label = F.col("lang") == "en"
-    band_max = 8
-
-    ens = {(r.doc_id): (r.ens_reasons, r.keep) for r in
-           TK.quality_ensemble(docs, label, band_max=band_max,
-                               id_cols=("doc_id",)).collect()}
-
-    gq = {r.doc_id: r.gq_reasons for r in
-          gopher_filter(docs).collect()}
-    llr = {r.doc_id: r.llr_millinats for r in
-           TK.nb_quality_score(docs, label,
-                               id_cols=("doc_id",)).collect()}
-    sp = {r.doc_id: r.nll_millinats // r.n_tok_scored // 500 for r in
-          TK.unigram_surprisal(
-              docs.select("doc_id", F.split("text", " ").alias("t")),
-              tokens_col="t", id_cols=("doc_id",)).collect()}
-
-    for d, _, _, _ in rows:
-        want = gq[d]
-        if llr.get(d) is None or llr[d] < 0:
-            want += 16
-        if sp.get(d) is None or sp[d] > band_max:
-            want += 32
-        assert ens[d] == (want, want == 0), f"doc {d}"
-    seen = set()
-    for er, _ in ens.values():
-        for bit in (1, 2, 4, 8, 16, 32):
-            if er & bit:
-                seen.add(bit)
-    assert {1, 16, 32} <= seen
-    assert any(k for _, k in ens.values())   # at least one keeper
 
 
 # ---------------------------------------------------------------------------
@@ -1546,7 +1365,6 @@ def test_kn_matches_python_replay_and_probability_mass(spark):
     assert got["d3"][1] >= 1 and got["d3"][2] >= 1
     # probability mass: for each context, sum over the FULL vocab
     from collections import Counter
-    import itertools
     gc = Counter()
     for s in train:
         for a, b in zip(s, s[1:]):

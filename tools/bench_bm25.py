@@ -7,8 +7,7 @@ bm25_topk docstring):
   1. the broadcast query-term semi join prunes BEFORE any aggregation
      — the matched (doc, term) frame is a small fraction of the full
      explode (measured as matched-tf rows vs total corpus tokens);
-  2. output is exactly k rows per query, rank-complete, identical
-     between the salted and unsalted top-k paths;
+  2. output is exactly k rows per query, rank-complete;
   3. shuffle bytes track rows — the matched-tf agg and the per-query
      score agg are the only corpus-scale exchanges. Gate on bytes,
      not walls (NOTES.md measurement rules).
@@ -74,7 +73,7 @@ def run_size(n_docs: int, out: str) -> dict:
         "query_id long, term int")
 
     t0 = time.time()
-    bm25_topk(docs, qdf, k=K, salt_buckets=cores) \
+    bm25_topk(docs, qdf, k=K) \
         .write.mode("overwrite").parquet(f"{out}/hits")
     phase("bm25", t0)
 
@@ -152,7 +151,7 @@ def main() -> int:
             f"shuffle write; the query-term semi join kept only "
             f"{b['matched_frac']:.3%} of corpus tokens ahead of the first "
             f"exchange at both sizes; top-{K} complete and rank-exact for "
-            f"every query under the salted two-phase path.", ""]
+            f"every query.", ""]
         with open(args.md, "a") as f:
             f.write("\n".join(lines))
     return 0
